@@ -74,7 +74,7 @@ def _time_shared_materializations(spark, sf_dir: str) -> dict[str, float]:
     """Session-cached BATCH intermediates whose first consumer would
     otherwise pay the whole build (VERDICT r9 item 5: text_bpe_train
     swung 2.8x round-over-round purely from which of the bpe pair hit the
-    cold _BPE_TRAIN_CACHE first). Materialize them here, timed as their
+    cold shared BPE trainer first). Materialize them here, timed as their
     own line, so text_bpe_train / text_bpe_encode always measure marginal
     cost — attribution is deterministic regardless of query order."""
     from hive_server_spark.plans import text_pack

@@ -49,22 +49,14 @@ _DBL = lambda c: F.col(c).cast("double").alias(c)  # noqa: E731
 # mirrors that architecture and spares every order-book query a re-fold;
 # at cluster scale this is the MERGE'd state table the streaming layer
 # maintains (streaming/incremental.py), not a per-query recompute.
-from hive_server_spark.session_cache import SessionCache, unpersist_df  # noqa: E402
-
-_STATE_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
+from hive_server_spark.session_cache import shared  # noqa: E402
 
 
 def _orders_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hive_server_spark import cache_ledger
-
-    return cache_ledger.touch(
+    return shared(
         spark,
-        "gate:orders_state",
-        _STATE_CACHE.get_or_create(
-            spark,
-            (sf_dir,),
-            lambda: fold_order_events(order_events(spark, sf_dir)).persist(),
-        ),
+        ("gate:orders_state", sf_dir),
+        lambda: fold_order_events(order_events(spark, sf_dir)),
     )
 
 

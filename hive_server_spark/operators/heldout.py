@@ -70,24 +70,19 @@ def capped_heldout(
     tables without a single-column key); it drives both the slice hash
     and the deterministic cap tiebreak.
 
-    The slice is returned persist()-marked (optimization r16): every
-    consumer aggregates it at least twice (per-group thresholds + the
-    global fallback; the MAD queries four times, through the deviation
-    table), and without the cache each aggregate re-runs the full
-    upstream scan + top-k — 7 scans of `orders` in ONE
-    rel_mad_by_priority plan (plans/r16/rel_mad_by_priority_before.txt).
-    The slice is bounded by construction (≤ cap rows per group), so
-    pinning it costs O(groups × cap) memory at ANY corpus size — the one
-    kind of intermediate that is always safe to cache. Spark's
-    CacheManager dedups persist() of an identical plan, so re-invoking a
-    gate query re-uses the entry instead of stacking new ones."""
-    from hive_server_spark import cache_ledger
+    The slice is returned persist()-marked: every consumer aggregates it
+    at least twice (per-group thresholds + the global fallback; the MAD
+    queries four times, through the deviation table), and without the
+    cache each aggregate re-runs the full upstream scan + top-k (7
+    scans of `orders` in one rel_mad_by_priority plan). The slice is
+    bounded by construction (≤ cap rows per group), so pinning it costs
+    O(groups × cap) memory at ANY corpus size — the one kind of
+    intermediate that is always safe to cache. Spark's CacheManager
+    dedups persist() of an identical plan, so re-invoking a gate query
+    re-uses the entry instead of stacking new ones."""
     from hive_server_spark.operators.topk import grouped_topk
 
-    return cache_ledger.touch(
-        df.sparkSession,
-        f"heldout:{seed}",
-        grouped_topk(
+    return grouped_topk(
         df.where(F.expr(heldout_pred(key, seed, mod, "s"))).select(
             group,
             F.md5(F.expr(key).cast("string")).alias("draw_key"),
@@ -98,8 +93,7 @@ def capped_heldout(
         sort_cols=["draw_key", "_hk"],
         payload_cols=[value],
         k=cap,
-        ).persist(),
-    )
+    ).persist()
 
 
 def held_cte_d(

@@ -8,32 +8,21 @@ from hive_server_spark.catalog import load_table
 from hive_server_spark.functions import embeddings as E
 from hive_server_spark.functions.text import spread
 from hive_server_spark.registry import register
-from hive_server_spark.session_cache import SessionCache, unpersist_df
+from hive_server_spark.session_cache import shared
+
 
 # The embeddings table is every ANN query's working set, and each query
-# walks it SEVERAL times in one plan (corpus scan, coarse-codebook slice,
-# query slice, PQ sub-centroid slice, exact re-rank) — uncached, every walk
-# re-scans parquet, re-runs spread()'s rebalance, and re-pays its
-# partition-count planning round-trip (optimization r16; the plan-level
-# evidence is plans/r16/emb_ivfpq_batch_topk_before.txt: 14 separate
-# parquet scans for ONE query). Rebalance + persist once per (session,
-# sf_dir) — the same architecture statement as gate._orders_state: a
-# deployed ANN index keeps its vector table resident (that is what an
+# walks it several times in one plan (corpus scan, coarse-codebook slice,
+# query slice, PQ sub-centroid slice, exact re-rank) — unshared, every walk
+# re-scans parquet and re-runs spread()'s rebalance. Rebalance once per
+# (session, sf_dir), the same architecture statement as gate._orders_state:
+# a deployed ANN index keeps its vector table resident (that is what an
 # index IS); the per-query cost is the InMemoryTableScan, not a re-read.
-_EMB_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
-
-
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hive_server_spark import cache_ledger
-
-    return cache_ledger.touch(
+    return shared(
         spark,
-        "emb:working_set",
-        _EMB_CACHE.get_or_create(
-            spark,
-            (sf_dir,),
-            lambda: spread(load_table(spark, sf_dir, "embeddings")).persist(),
-        ),
+        ("emb:working_set", sf_dir),
+        lambda: spread(load_table(spark, sf_dir, "embeddings")),
     )
 
 

@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hive_server_spark.catalog import load_table
-from hive_server_spark import cache_ledger as _ledger
 from hive_server_spark.operators.heldout import capped_heldout, held_cte_d
 from hive_server_spark.registry import register
 
@@ -518,15 +517,10 @@ def cms_heavy_hitters(events: DataFrame, k: int = 10) -> DataFrame:
     sketch estimates. See the block comment above for the plan shape."""
     from hive_server_spark.operators.topk import global_topk
 
-    # per-user exact counts feed the sketch grid, the top-k and (twice,
-    # through the hash fan-out) the estimate probe — persist() the
-    # aggregate so events is scanned once, not four times
-    # (optimization r16; user-cardinality, MEMORY_AND_DISK spills)
-    u = _ledger.touch(
-        events.sparkSession,
-        "evt:cms_user_counts",
-        events.groupBy("user_id").agg(F.count("*").alias("cnt")).persist(),
-    )
+    # per-user exact counts feed the sketch grid, the top-k and the
+    # estimate probe. Not persisted: re-deriving this user-cardinality
+    # aggregate costs less task time than materializing it.
+    u = events.groupBy("user_id").agg(F.count("*").alias("cnt"))
     h = u.select(
         "user_id",
         "cnt",
@@ -789,17 +783,15 @@ def bloom_prune_join(events: DataFrame) -> DataFrame:
     key_s = "CAST(user_id AS STRING)"
     # persisted: the key set feeds the bit table AND the ground-truth leg —
     # uncached each re-ran the purchase aggregate from a fresh events scan
-    # (optimization r16; CacheManager dedups re-invocations). Bounded by
-    # the selectivity the bloom filter exists to exploit.
-    keys = _ledger.touch(
-        events.sparkSession,
-        "evt:bloom_keys",
+    # (CacheManager dedups re-invocations). Bounded by the selectivity the
+    # bloom filter exists to exploit.
+    keys = (
         events.where(F.col("event_type") == "purchase")
         .groupBy("user_id")
         .agg(F.sum(F.col("value").cast("decimal(18,2)")).alias("tot"))
         .where(F.col("tot") > _BLOOM_THR)
         .select("user_id")
-        .persist(),
+        .persist()
     )
     bits = (
         keys.select(
@@ -824,9 +816,9 @@ def bloom_prune_join(events: DataFrame) -> DataFrame:
     # total and ground-truth measures fold into ONE events pass: mark each
     # row's key membership with a left join (keys is user-unique — no row
     # multiplication) and split the aggregate conditionally, instead of a
-    # separate full-scan count plus a semi-joined second scan
-    # (optimization r16; the pruned leg keeps its own pass — the bloom
-    # probe chain is the thing being audited)
+    # separate full-scan count plus a semi-joined second scan (the
+    # pruned leg keeps its own pass — the bloom probe chain is the thing
+    # being audited)
     marked = events.select("event_type", "user_id", "value").join(
         keys.withColumn("_k", F.lit(1)), "user_id", "left"
     )
@@ -1147,18 +1139,10 @@ def hll_set_algebra(events: DataFrame) -> DataFrame:
     from hive_server_spark.functions.text import hash_expr
 
     # the distinct (type, user) set feeds the register build, the exact
-    # intersection self-join (twice) and the per-type totals — uncached,
-    # each consumer re-scanned events and re-ran the distinct shuffle
-    # (plans/r16/evt_hll_set_algebra_before.txt: 8 parquet scans).
-    # persist() it once (optimization r16); MEMORY_AND_DISK spills
-    # gracefully if the exact-audit side outgrows memory — the audit is
-    # inherently user-cardinality-sized, which is exactly why the sketch
-    # half of the query exists.
-    u = _ledger.touch(
-        events.sparkSession,
-        "evt:hll_distinct_set",
-        events.select("event_type", "user_id").distinct().persist(),
-    )
+    # intersection self-join (twice) and the per-type totals. Not
+    # persisted: re-running the distinct costs less task time than
+    # materializing the user-cardinality set.
+    u = events.select("event_type", "user_id").distinct()
     ranks = u.select(
         "event_type",
         F.expr(hash_expr("CAST(user_id AS STRING)", "hll", "s")).alias("hv"),
@@ -1168,7 +1152,7 @@ def hll_set_algebra(events: DataFrame) -> DataFrame:
         F.expr(_hll_rank(f"(hv DIV {_HLL_M})", "s")).alias("rank"),
     )
     # the type set is identical through u (distinct over the same rows) —
-    # deriving the grid from the cached set spares another events scan
+    # deriving the grid from the distinct set spares another events scan
     grid = (
         u.select("event_type")
         .distinct()

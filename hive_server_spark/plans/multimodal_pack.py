@@ -726,13 +726,7 @@ def multimodal_jpeg_progressive_profile(spark: SparkSession, sf_dir: str) -> Dat
 # exact hash-dedup first); the gate configuration runs uncapped, like the
 # text LSH parity queries.
 # ---------------------------------------------------------------------------
-from hive_server_spark import cache_ledger as _ledger
-from hive_server_spark.session_cache import (  # noqa: E402
-    SessionCache,
-    unpersist_df,
-)
-
-_DHASH_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
+from hive_server_spark.session_cache import shared  # noqa: E402
 
 
 # The closed-form dHash derivation (decode → grid means → bits → four
@@ -822,16 +816,10 @@ def _dhash_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded, and hashed ONCE per (session, sf_dir): the candidate self-join
     reads it twice and the Hamming verify twice more, and the decode is the
     expensive leg."""
-    return _ledger.touch(
+    return shared(
         spark,
-        "mm:dhash_bands",
-        _DHASH_CACHE.get_or_create(
-        spark,
-        (sf_dir,),
-        lambda: M.dhash_bands(
-            M.synthesize_dhash_jpeg_media(_docs_wide(spark, sf_dir))
-        ).persist(),
-    ),
+        ("mm:dhash_bands", sf_dir),
+        lambda: M.dhash_bands(M.synthesize_dhash_jpeg_media(_docs_wide(spark, sf_dir))),
     )
 
 
@@ -911,7 +899,7 @@ def multimodal_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     first half of the media corpus), then dedup the second half as a new
     batch against the persisted index — must equal the full-corpus
     occupied-band rule restricted to the batch (see block comment). The
-    decode runs once via the shared _DHASH_CACHE band table; the batch
+    decode runs once via the shared _dhash_band_table; the batch
     path itself never touches prior-corpus payloads. The index machinery
     is the modality-generic band_long / write_band_index /
     incremental_band_neardup (functions/multimodal.py) — the SAME
@@ -1001,17 +989,13 @@ FROM ham
 
 def _audio_fp_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-clip fingerprint band table, decoded ONCE per (session, sf_dir)
-    — the audio twin of _dhash_band_table, same cache."""
-    return _ledger.touch(
+    — the audio twin of _dhash_band_table."""
+    return shared(
         spark,
-        "mm:audiofp_bands",
-        _DHASH_CACHE.get_or_create(
-        spark,
-        ("audiofp", sf_dir),
+        ("mm:audiofp_bands", sf_dir),
         lambda: M.audio_fingerprint_bands(
             M.synthesize_fpwav_media(_docs_wide(spark, sf_dir))
-        ).persist(),
-    ),
+        ),
     )
 
 
@@ -1102,14 +1086,10 @@ def _avi_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthesized AVI corpus, built ONCE per (session, sf_dir): both
     the full-decode leg and the keyframe leg read it, and the per-frame
     JPEG encode is the expensive part of synthesis."""
-    return _ledger.touch(
+    return shared(
         spark,
-        "mm:avi_media",
-        _DHASH_CACHE.get_or_create(
-        spark,
-        ("avi", sf_dir),
-        lambda: M.synthesize_avi_media(_docs_wide(spark, sf_dir)).persist(),
-    ),
+        ("mm:avi_media", sf_dir),
+        lambda: M.synthesize_avi_media(_docs_wide(spark, sf_dir)),
     )
 
 
@@ -1345,17 +1325,11 @@ FROM ham
 
 def _video_fp_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-video fingerprint band table, decoded ONCE per (session,
-    sf_dir) — the video twin of _dhash_band_table, same cache."""
-    return _ledger.touch(
+    sf_dir) — the video twin of _dhash_band_table."""
+    return shared(
         spark,
-        "mm:videofp_bands",
-        _DHASH_CACHE.get_or_create(
-        spark,
-        ("videofp", sf_dir),
-        lambda: M.video_fp_bands(
-            M.synthesize_fpavi_media(_docs_wide(spark, sf_dir))
-        ).persist(),
-    ),
+        ("mm:videofp_bands", sf_dir),
+        lambda: M.video_fp_bands(M.synthesize_fpavi_media(_docs_wide(spark, sf_dir))),
     )
 
 
@@ -1620,14 +1594,10 @@ def _fpavi_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthesized fp-AVI clip corpus, cached per (session, sf_dir) —
     the curation pipeline walks payloads twice (frame stats, then keyframe
     extraction), and synthesis is the expensive leg."""
-    return _ledger.touch(
+    return shared(
         spark,
-        "mm:fpavi_media",
-        _DHASH_CACHE.get_or_create(
-        spark,
-        ("fpavi_media", sf_dir),
-        lambda: M.synthesize_fpavi_media(_docs_wide(spark, sf_dir)).persist(),
-    ),
+        ("mm:fpavi_media", sf_dir),
+        lambda: M.synthesize_fpavi_media(_docs_wide(spark, sf_dir)),
     )
 
 
@@ -1636,10 +1606,9 @@ def _kf_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     shot_id → band0..band3) — keyframes extracted and decoded ONCE per
     (session, sf_dir): the band self-join reads it twice, the Hamming
     verify twice more, and the per-clip shot count is derivable from kid
-    alone, so without the cache ONE curation plan walked every payload
-    four times through two mapInPandas legs (15 Python-eval nodes,
-    plans/r16/multimodal_video_curation_before.txt — optimization r16,
-    guide §4: decode once, reuse the 5-integer rows)."""
+    alone, so without the cache ONE curation plan walks every payload
+    four times through two mapInPandas legs (15 Python-eval nodes) —
+    decode once, reuse the 5-integer rows."""
 
     def build() -> DataFrame:
         kf = M.shot_keyframes(_fpavi_media(spark, sf_dir))
@@ -1648,13 +1617,9 @@ def _kf_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("media_id") * 16 + F.col("shot_id")).alias("media_id"),
                 F.col("frame_payload").alias("payload"),
             )
-        ).persist()
+        )
 
-    return _ledger.touch(
-        spark,
-        "mm:kf_bands",
-        _DHASH_CACHE.get_or_create(spark, ("kf_bands", sf_dir), build),
-    )
+    return shared(spark, ("mm:kf_bands", sf_dir), build)
 
 
 @register("multimodal_video_curation", _VIDEO_CURATION_ORACLE)  # flipped r12

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from hive_server_spark.catalog import load_table
 from hive_server_spark.registry import register
 from hive_server_spark.session import session_scratch
-from hive_server_spark.session_cache import SessionCache
+from hive_server_spark.session_cache import shared
 
 # microsecond-precision wire format: Spark's default JSON/CSV timestamp
 # pattern keeps millis only, which would silently truncate event times
@@ -152,13 +152,8 @@ GROUP BY date_trunc('hour', ts)
 
 # the partitioned layout is identical for every caller in a session (gate
 # hash, bench timing loops, pruning test) — land it once per (session,
-# sf_dir) like streaming_pack._LANDED, and delete evicted dirs so
+# sf_dir) like the streaming landings, and delete evicted dirs so
 # long-lived processes don't leak disk
-_PARTITIONED: SessionCache[str] = SessionCache(
-    on_evict=lambda d: shutil.rmtree(os.path.dirname(d), ignore_errors=True)
-)
-
-
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Write events hive-partitioned by event_type once per (session,
     sf_dir); callers read specific partitions back through pushed
@@ -173,7 +168,12 @@ def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
         ev.write.partitionBy("event_type").parquet(path)
         return path
 
-    return _PARTITIONED.get_or_create(spark, ("events_by_type", sf_dir), land)
+    return shared(
+        spark,
+        ("src:events_by_type", sf_dir),
+        land,
+        release=lambda d: shutil.rmtree(os.path.dirname(d), ignore_errors=True),
+    )
 
 
 @register("src_partitioned_roundtrip", _PART_ORACLE)
@@ -480,9 +480,6 @@ def layout_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the read cost is the same scan either way; the write is two
 # straight columnar dumps.
 # ---------------------------------------------------------------------------
-_EVOLVED: SessionCache[str] = SessionCache(
-    on_evict=lambda d: shutil.rmtree(d, ignore_errors=True)
-)
 
 _EVO_ORACLE = """
 WITH merged AS (
@@ -525,7 +522,12 @@ def src_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
         ).write.parquet(os.path.join(work, "v2"))
         return work
 
-    work = _EVOLVED.get_or_create(spark, ("orders_evolution", sf_dir), land)
+    work = shared(
+        spark,
+        ("src:orders_evolution", sf_dir),
+        land,
+        release=lambda d: shutil.rmtree(d, ignore_errors=True),
+    )
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(work, "v1"), os.path.join(work, "v2")
     )
@@ -793,9 +795,6 @@ _N_BUCKETS = 8
 
 # bucketed tables are session-catalog state; land them once per
 # (session, sf_dir) like the partitioned/evolved layouts above
-_BUCKETED: SessionCache[tuple] = SessionCache()
-
-
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple:
     """Write orders and customer as bucketBy(8, custkey) external tables
     under the session scratch root (once per session and sf_dir); return
@@ -838,7 +837,7 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple:
         )
         return names
 
-    return _BUCKETED.get_or_create(spark, ("bucketed", sf_dir), land)
+    return shared(spark, ("src:bucketed", sf_dir), land)
 
 
 @register("layout_bucketed_join", _BUCKETED_ORACLE)

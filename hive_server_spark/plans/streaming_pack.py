@@ -59,7 +59,9 @@ def _land_order_events(spark: SparkSession, sf_dir: str, chunks: int) -> str:
         order_events(spark, sf_dir).repartition(chunks).write.parquet(ev_dir)
         return ev_dir
 
-    return _LANDED.get_or_create(spark, ("order_events", sf_dir, chunks), land)
+    return shared(
+        spark, ("land:order_events", sf_dir, chunks), land, release=_rm_landing
+    )
 
 
 def streamed_orders_state(
@@ -114,15 +116,15 @@ HAVING epoch_us(date_trunc('hour', ts) + INTERVAL 1 HOUR)
 """
 
 
-# landed ts-ordered event files, shared across the streaming gate queries —
-# each run still gets its own checkpoint/sink dirs, but the (identical)
-# landing write happens once per (session, sf_dir); evicted landings have
-# their temp dirs deleted so long-lived processes don't leak disk
-from hive_server_spark.session_cache import SessionCache
+# landed input files, shared across the streaming gate queries — each run
+# still gets its own checkpoint/sink dirs, but the (identical) landing
+# write happens once per (session, sf_dir); evicted landings have their
+# temp dirs deleted so long-lived processes don't leak disk
+from hive_server_spark.session_cache import shared
 
-_LANDED: SessionCache[str] = SessionCache(
-    on_evict=lambda d: shutil.rmtree(os.path.dirname(d), ignore_errors=True)
-)
+
+def _rm_landing(d: str) -> None:
+    shutil.rmtree(os.path.dirname(d), ignore_errors=True)
 
 
 def _stamp_ascending_mtimes(paths: list[str]) -> None:
@@ -146,7 +148,9 @@ def _land_events_ts_ordered(spark: SparkSession, sf_dir: str, chunks: int) -> st
         _stamp_ascending_mtimes(sorted(glob.glob(os.path.join(ev_dir, "part-*.parquet"))))
         return ev_dir
 
-    return _LANDED.get_or_create(spark, ("events_ts", sf_dir, chunks), land)
+    return shared(
+        spark, ("land:events_ts", sf_dir, chunks), land, release=_rm_landing
+    )
 
 
 def _events_stream_in_ts_order(
@@ -397,7 +401,9 @@ def _land_duplicated_events(spark: SparkSession, sf_dir: str, chunks: int) -> st
         _stamp_ascending_mtimes(sorted(glob.glob(os.path.join(ev_dir, "part-*.parquet"))))
         return ev_dir
 
-    return _LANDED.get_or_create(spark, ("events_dup", sf_dir, chunks), land)
+    return shared(
+        spark, ("land:events_dup", sf_dir, chunks), land, release=_rm_landing
+    )
 
 
 def _out_dedup_rollup(
@@ -575,22 +581,19 @@ def _land_seq_slices(spark: SparkSession, sf_dir: str) -> str:
         _stamp_ascending_mtimes(dsts)
         return ev_dir
 
-    return _LANDED.get_or_create(spark, ("order_events_slices", sf_dir), land)
+    return shared(
+        spark, ("land:order_events_slices", sf_dir), land, release=_rm_landing
+    )
 
 
 # one incremental fold over the 3-slice landing, shared by the whole
 # CDC-family (orders_state_time_travel, cdc_book_snapshots,
-# orders_state_changelog) — VERDICT r04 item 3: before this cache each of
-# the three gate queries re-ran the same 3-micro-batch streaming fold
-# (~9 s + 4 s + 4 s locally); now one fold-with-CDC run serves all three.
+# orders_state_changelog) — unshared, each of the three gate queries
+# re-runs the same 3-micro-batch streaming fold (~9 s + 4 s + 4 s
+# locally); shared, one fold-with-CDC run serves all three.
 # The with-CDC variant commits the identical versioned state (same
 # partial_fold/merge/commit per batch — streaming/cdc.py adds only the
 # snapshot append), so at_version() readers are unaffected by sharing.
-_FOLDED: SessionCache[tuple] = SessionCache(
-    on_evict=lambda sc: shutil.rmtree(os.path.dirname(sc[1]), ignore_errors=True)
-)
-
-
 def fold_seq_slices(spark: SparkSession, sf_dir: str):
     """Run (once per session × sf_dir) the incremental fold + CDC over the
     deterministic 3-slice landing; returns (ParquetStateStore, cdc_dir)."""
@@ -617,7 +620,12 @@ def fold_seq_slices(spark: SparkSession, sf_dir: str):
             )
         return store, cdc_dir
 
-    return _FOLDED.get_or_create(spark, ("seq_slice_fold", sf_dir), build)
+    return shared(
+        spark,
+        ("stream:seq_slice_fold", sf_dir),
+        build,
+        release=lambda sc: shutil.rmtree(os.path.dirname(sc[1]), ignore_errors=True),
+    )
 
 
 def orders_state_at_version(
@@ -771,16 +779,16 @@ def q_evt_sliding_rollup_streaming(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Concurrent family execution (VERDICT r06 item 3 / round-5 stretch 7).
+# Concurrent family execution.
 # The six evt_* streaming gates are six DIFFERENT stateful computations, so
 # they cannot share one streaming query — but they CAN share wall clock:
 # Spark runs any number of streaming queries concurrently on one session,
 # so the first gate call starts ALL six (availableNow) and awaits them
 # together; per-session results are cached the way the CDC family caches
-# its fold (_FOLDED above). Family wall time drops from sum(6 harness
+# its fold (fold_seq_slices above). Family wall time drops from sum(6 harness
 # spin-ups) to ~max(...), with zero semantic change — each query keeps its
 # own landed input, checkpoint dir, memory sink, and oracle. The landed
-# inputs themselves were already shared via _LANDED.
+# inputs themselves are shared per session too.
 # A caller that wants ONE stream in isolation (chunk-invariance tests, a
 # user embedding a single operator) uses the streamed_* functions, which
 # still run serially standalone.
@@ -793,9 +801,6 @@ _EVT_STREAM_BUILDERS = {
     "evt_stream_static_enrich": _out_static_enrich_rollup,
     "evt_sliding_rollup_streaming": _out_sliding_rollup,
 }
-
-_EVT_RESULTS: SessionCache[dict] = SessionCache()
-
 
 def _run_sketch_stream(spark: SparkSession, starter, sf_dir: str, prefix: str):
     """Start + await one foreachBatch sketch stream (CMS/HLL/CUSUM) with
@@ -863,7 +868,7 @@ def _evt_streaming_results(spark: SparkSession, sf_dir: str) -> dict:
             results["evt_cusum_streaming"] = _cusum_final(spark, cusum_store)
         return results
 
-    return _EVT_RESULTS.get_or_create(spark, ("evt_streaming_family", sf_dir), build)
+    return shared(spark, ("stream:evt_streaming_family", sf_dir), build)
 
 
 # ---------------------------------------------------------------------------
@@ -926,7 +931,9 @@ def _land_documents(spark: SparkSession, sf_dir: str, chunks: int) -> str:
         _stamp_ascending_mtimes(sorted(glob.glob(os.path.join(d, "part-*.parquet"))))
         return d
 
-    return _LANDED.get_or_create(spark, ("documents", sf_dir, chunks), land)
+    return shared(
+        spark, ("land:documents", sf_dir, chunks), land, release=_rm_landing
+    )
 
 
 @register("docs_ingest_streaming", _DOCS_INGEST_ORACLE)
@@ -1306,7 +1313,7 @@ def start_cms_stream(
 ):
     """Start (without awaiting) the incremental CMS stream; returns
     (StreamingQuery, ParquetStateStore). The landed ts-ordered events dir
-    is shared with the rest of the evt_* family via _LANDED.
+    is shared with the rest of the evt_* family (one landing per session).
 
     `work` pins the checkpoint + state directory: a retry that passes the
     SAME work dir resumes the original checkpoint exactly-once (the
@@ -1767,7 +1774,9 @@ def _land_embeddings(spark: SparkSession, sf_dir: str, chunks: int) -> str:
         _stamp_ascending_mtimes(sorted(glob.glob(os.path.join(d, "part-*.parquet"))))
         return d
 
-    return _LANDED.get_or_create(spark, ("embeddings", sf_dir, chunks), land)
+    return shared(
+        spark, ("land:embeddings", sf_dir, chunks), land, release=_rm_landing
+    )
 
 
 def streamed_ivf_census(
@@ -2044,7 +2053,9 @@ def _land_events_by_id(spark: SparkSession, sf_dir: str, chunks: int) -> str:
         _stamp_ascending_mtimes(sorted(glob.glob(os.path.join(d, "part-*.parquet"))))
         return d
 
-    return _LANDED.get_or_create(spark, ("events_by_id", sf_dir, chunks), land)
+    return shared(
+        spark, ("land:events_by_id", sf_dir, chunks), land, release=_rm_landing
+    )
 
 
 def streamed_deletion_vectors(

@@ -37,21 +37,14 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # snapshot. Persisted per (session, sf_dir) so the pairwise verifier and the
 # connected-components pass (dedup_minhash_candidates / dedup_clusters)
 # derive it once, exactly like orders_state in gate.py.
-from hive_server_spark import cache_ledger as _ledger
-from hive_server_spark.session_cache import SessionCache, unpersist_df
-
-_CAND_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
+from hive_server_spark.session_cache import shared
 
 
 def _minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ledger.touch(
+    return shared(
         spark,
-        "text:minhash_candidates",
-        _CAND_CACHE.get_or_create(
-            spark,
-            (sf_dir,),
-            lambda: T.minhash_candidates(_docs(spark, sf_dir)).persist(),
-        ),
+        ("text:minhash_candidates", sf_dir),
+        lambda: T.minhash_candidates(_docs(spark, sf_dir)),
     )
 
 
@@ -59,21 +52,27 @@ def _minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_clusters surfaces them directly and text_leakage_safe_splits keys
 # its split assignment on them — run the components loop once per
 # (session, sf_dir), not once per query
-_COMP_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
-
-
 def _dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_server_spark.functions.clusters import dup_clusters
 
-    return _ledger.touch(
+    return shared(
         spark,
-        "text:dup_clusters",
-        _COMP_CACHE.get_or_create(
-            spark,
-            (sf_dir,),
-            lambda: dup_clusters(
-                _docs(spark, sf_dir), _minhash_candidates(spark, sf_dir)
-            ).persist(),
+        ("text:dup_clusters", sf_dir),
+        lambda: dup_clusters(
+            _docs(spark, sf_dir), _minhash_candidates(spark, sf_dir)
+        ),
+    )
+
+
+# the shingled corpus (doc_id, source, shingles[]) feeds top-ngrams,
+# decontamination, and the source-overlap matrix — materialized once per
+# (session, corpus) like the profile, instead of re-tokenizing per query
+def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return shared(
+        spark,
+        ("text:shingled", sf_dir),
+        lambda: T.with_shingles(_docs(spark, sf_dir)).select(
+            "doc_id", "source", "shingles"
         ),
     )
 
@@ -81,38 +80,9 @@ def _dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the per-document profile (tokens, lang-id, quality, fingerprints) is the
 # other shared intermediate: profile, histogram, filter, and corpus stats
 # all start from it — one CPU-heavy derivation, persisted per session
-# the shingled corpus (doc_id, source, shingles[]) feeds top-ngrams,
-# decontamination, and the source-overlap matrix — materialized once per
-# (session, corpus) like the profile, instead of re-tokenizing per query
-_SHINGLED_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
-
-
-def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ledger.touch(
-        spark,
-        "text:shingled",
-        _SHINGLED_CACHE.get_or_create(
-            spark,
-            (sf_dir,),
-            lambda: T.with_shingles(_docs(spark, sf_dir))
-            .select("doc_id", "source", "shingles")
-            .persist(),
-        ),
-    )
-
-
-_PROFILE_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
-
-
 def _profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ledger.touch(
-        spark,
-        "text:profile",
-        _PROFILE_CACHE.get_or_create(
-            spark,
-            (sf_dir,),
-            lambda: T.doc_profile(_docs(spark, sf_dir)).persist(),
-        ),
+    return shared(
+        spark, ("text:profile", sf_dir), lambda: T.doc_profile(_docs(spark, sf_dir))
     )
 
 
@@ -1108,9 +1078,6 @@ GROUP BY doc_id, gram_size
 # the per-(doc, gram-size, gram) multiplicity table is shared between the
 # repetition profile and the pretrain keep verdict — one corpus-wide
 # tokenize+explode per session, like the other cached text intermediates
-_GRAMS_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
-
-
 def _gram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         docs = _docs(spark, sf_dir).select(
@@ -1135,12 +1102,9 @@ def _gram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("doc_id", "gram_size", "gram")
             .agg(F.count("*").alias("c"))
-            .persist()
         )
 
-    return _ledger.touch(
-        spark, "text:gram_counts", _GRAMS_CACHE.get_or_create(spark, (sf_dir,), build)
-    )
+    return shared(spark, ("text:gram_counts", sf_dir), build)
 
 
 @register("text_repetition_profile", _REPETITION_ORACLE)
@@ -1208,9 +1172,6 @@ JOIN sizes sb ON sb.source = p.source_b
 """
 
 
-_SRCSET_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
-
-
 def _source_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped distinct (source, shingle) set — persisted because the
     overlap query reads it three times (sizes + both self-join sides); at
@@ -1228,11 +1189,9 @@ def _source_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("src_df") <= SRC_CUT)
             .select("shingle")
         )
-        return ss.join(keep, "shingle").persist()
+        return ss.join(keep, "shingle")
 
-    return _ledger.touch(
-        spark, "text:source_shingles", _SRCSET_CACHE.get_or_create(spark, (sf_dir,), build)
-    )
+    return shared(spark, ("text:source_shingles", sf_dir), build)
 
 
 @register("text_source_overlap", _SRC_OVERLAP_ORACLE)
@@ -1963,7 +1922,6 @@ FROM micro GROUP BY doc_id
 # sf_dir) like the other shared text intermediates; at scale this is the
 # materialized per-doc score table CCNet itself writes between its LM
 # pass and its bucketing pass (Wenzek 2019 §4)
-_NLL_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
 
 
 @register("text_bigram_nll", _NLL_PER_DOC_ORACLE)
@@ -1982,9 +1940,8 @@ def text_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram alone, so it is resolved on the DISTINCT-bigram count table
     first (c_ab ⋈ c_a — both vocabulary-sized) and the corpus-sized
     instance table joins ONCE on the bigram; joining instances through
-    both count tables (the pre-r16 shape) shuffled the instance table a
-    second time on the derived head key for no extra information
-    (optimization r16, guide §2.3/§2.4)."""
+    both count tables would shuffle the instance table a second time on
+    the derived head key for no extra information."""
 
     def build() -> DataFrame:
         inst = (
@@ -2023,11 +1980,9 @@ def text_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("m") * F.col("nll_micro"))
             .cast("bigint")
             .alias("nll_micro_total"),
-        ).persist()
+        )
 
-    return _ledger.touch(
-        spark, "text:nll_per_doc", _NLL_CACHE.get_or_create(spark, (sf_dir,), build)
-    )
+    return shared(spark, ("text:nll_per_doc", sf_dir), build)
 
 
 # ---------------------------------------------------------------------------
@@ -2358,7 +2313,6 @@ def dup_span_report(
 
 # the k-gram position table feeds both the df aggregate and the join probe
 # — persist it once per session like the other shared text intermediates
-_SPAN_POS_CACHE: SessionCache[DataFrame] = SessionCache(on_evict=unpersist_df)
 
 
 @register("text_dup_spans", _SPAN_ORACLE)
@@ -2370,11 +2324,8 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.expr(_SPAN_INJECT_SQL).alias("text")
     )
 
-    def build() -> DataFrame:
-        return _span_positions(docs, K_SPAN).persist()
-
-    pos = _ledger.touch(
-        spark, "text:span_positions", _SPAN_POS_CACHE.get_or_create(spark, (sf_dir,), build)
+    pos = shared(
+        spark, ("text:span_positions", sf_dir), lambda: _span_positions(docs, K_SPAN)
     )
     return dup_span_report(docs, positions=pos)
 
@@ -3148,15 +3099,10 @@ def source_kl_report(docs: DataFrame) -> DataFrame:
     # the (source, token) count table feeds three consumers (corpus counts,
     # per-source totals, the KL join probe) on three DIFFERENT keys, so no
     # exchange is reusable — uncached, the corpus is scanned and exploded
-    # three times (plans/r16/text_source_kl_before.txt: 4 parquet scans).
-    # persist() the vocabulary-sized aggregate instead (optimization r16);
+    # three times. persist() the vocabulary-sized aggregate instead;
     # CacheManager dedups re-invocations onto one entry. |sources| × vocab
     # rows is the same boundedness class as the cached _gram_counts table.
-    sc_ = _ledger.touch(
-        docs.sparkSession,
-        "text:source_kl_counts",
-        tok.groupBy("source", "token").agg(F.count("*").alias("c_s")).persist(),
-    )
+    sc_ = tok.groupBy("source", "token").agg(F.count("*").alias("c_s")).persist()
     cc = sc_.groupBy("token").agg(F.sum("c_s").alias("c_c"))
     ns = sc_.groupBy("source").agg(F.sum("c_s").alias("n_s"))
     nc = cc.agg(F.sum("c_c").cast("bigint").alias("n_c"))
@@ -4025,12 +3971,11 @@ def _bpe_chain_ctes(steps: int) -> list[str]:
     return parts
 
 
-_BPE_TRAIN_CACHE: SessionCache[tuple] = SessionCache()
-
-
 def _bpe_train(spark: SparkSession, sf_dir: str, steps: int = _BPE_TRAIN_STEPS):
     """Run the K-merge training loop once per (session, sf_dir); returns
-    (merge table DF, final vocab DF with token/symseq/cnt).
+    (merge table DF, final vocab DF with token/symseq/cnt). Shared because
+    text_bpe_train reads the merges while text_bpe_encode and the BPE
+    stream read the vocab, and re-training costs K collect round-trips.
 
     The 1-row argmax IS collected to the driver each step — deliberately:
     the learned merge rule is bounded trainer METADATA (K × 3 strings),
@@ -4107,7 +4052,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, steps: int = _BPE_TRAIN_STEPS):
         )
         return merges, vocab
 
-    return _BPE_TRAIN_CACHE.get_or_create(spark, ("bpe_train", sf_dir), build)
+    return shared(spark, ("text:bpe_train", sf_dir), build)
 
 
 _BPE_TRAIN_ORACLE = (
@@ -4459,9 +4404,6 @@ def _qcls_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QCLS_CACHE: SessionCache[tuple] = SessionCache()
-
-
 def _qcls_train(spark: SparkSession, sf_dir: str):
     """Run the K-step batch perceptron once per (session, sf_dir); returns
     (per-step stats DF, final weight DF (bucket, w))."""
@@ -4538,4 +4480,4 @@ def _qcls_train(spark: SparkSession, sf_dir: str):
                 out = out.unionByName(s)
         return out, w
 
-    return _QCLS_CACHE.get_or_create(spark, ("qcls", sf_dir), build)
+    return shared(spark, ("text:qcls_train", sf_dir), build)

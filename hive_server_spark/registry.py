@@ -47,33 +47,14 @@ def _ordered(d: dict) -> dict:
 
 
 def register(name: str, oracle: str | None = None):
-    """Decorator: register a gate query and (optionally) its DuckDB oracle.
-
-    The registered callable is wrapped to report the invocation to the
-    cache ledger (hive_server_spark.cache_ledger) so session-lifetime
-    caches can be unpersisted once their last consumer has run — every
-    execution path (bench, verify gate, driver oracle, tests) goes through
-    this wrapper. The wrapper is transparent: same signature, the original
-    function's result, no effect on what the query computes (the ledger
-    only ever unpersists materialized copies of lazy plans)."""
+    """Decorator: register a gate query under `name`, with its DuckDB
+    oracle if given. Returns the function unchanged."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        import functools
-
-        from hive_server_spark import cache_ledger
-
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            token = cache_ledger.enter_query(spark, name)
-            try:
-                return fn(spark, sf_dir)
-            finally:
-                cache_ledger.exit_query(token)
-
-        _SPARK_QUERIES[name] = wrapped
+        _SPARK_QUERIES[name] = fn
         if oracle is not None:
             _ORACLE_SQL[name] = oracle
-        return wrapped
+        return fn
 
     return deco
 

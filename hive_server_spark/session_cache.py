@@ -1,60 +1,58 @@
 """Session-scoped memoization for shared intermediates.
 
-Gate queries memoize expensive shared derivations (the folded orders state,
-the minhash candidate table, the landed streaming input) per SparkSession.
-Keying those memos on ``id(spark)`` is unsafe in long-lived processes: if a
-session is stopped and a new one is later allocated at a reused id(), the
-cache hands back DataFrames bound to a dead SparkContext, and the old
-entries (persisted DFs, temp dirs) are never released.
+Gate queries share expensive derivations (the folded orders state, the
+minhash candidate table, the landed streaming input) within one
+SparkSession. ``shared`` is the one cache they all go through.
 
-``SessionCache`` instead keys on ``spark.sparkContext.applicationId`` —
-stable for the lifetime of a SparkContext and fresh for every new one (it
-embeds the context start time). Only one SparkContext can be active per
-process, so any cached entry under a *different* application id belongs to
-a stopped context: those entries are evicted on the next access, with an
-optional ``on_evict`` hook to unpersist DataFrames / delete temp dirs.
+Entries are keyed on ``spark.sparkContext.applicationId``, not
+``id(spark)``: a stopped session's id() can be reused by a new one, which
+would hand back DataFrames bound to a dead SparkContext and never release
+the old entries (persisted DataFrames, temp dirs). The application id is
+stable for the life of a SparkContext and fresh for every new one, and only
+one SparkContext is active per process, so any entry under a *different*
+application id belongs to a stopped context: it is released on the next
+access.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Generic, TypeVar
+from typing import Any, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
 V = TypeVar("V")
 
-
-class SessionCache(Generic[V]):
-    def __init__(self, on_evict: Callable[[V], None] | None = None) -> None:
-        self._entries: dict[tuple, V] = {}
-        self._on_evict = on_evict
-
-    def get_or_create(
-        self, spark: SparkSession, key: tuple, builder: Callable[[], V]
-    ) -> V:
-        app = spark.sparkContext.applicationId
-        self._evict_other_apps(app)
-        full = (app, *key)
-        value = self._entries.get(full)
-        if value is None:
-            value = builder()
-            self._entries[full] = value
-        return value
-
-    def _evict_other_apps(self, live_app: str) -> None:
-        stale = [k for k in self._entries if k[0] != live_app]
-        for k in stale:
-            value = self._entries.pop(k)
-            if self._on_evict is not None:
-                try:
-                    self._on_evict(value)
-                except Exception:
-                    # the owning context is already gone; releasing its
-                    # resources is best-effort by construction
-                    pass
+# (applicationId, *key) -> (value, release hook or None)
+_ENTRIES: dict[tuple, tuple[Any, Callable[[Any], None] | None]] = {}
 
 
-def unpersist_df(df: DataFrame) -> None:
-    """Standard on_evict hook for caches of persisted DataFrames."""
-    df.unpersist()
+def shared(
+    spark: SparkSession,
+    key: tuple,
+    build: Callable[[], V],
+    release: Callable[[V], None] | None = None,
+) -> V:
+    """Return the value cached under `key` for this SparkContext, calling
+    `build()` on first use. A DataFrame result is persisted once and
+    unpersisted when its context is gone; any other value is released
+    through `release` (if given). `key` names the intermediate, so keys of
+    different call sites must not collide."""
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in _ENTRIES if k[0] != app]:
+        value, hook = _ENTRIES.pop(stale)
+        if hook is not None:
+            try:
+                hook(value)
+            except Exception:
+                # the owning context is already gone; releasing its
+                # resources is best-effort by construction
+                pass
+    full = (app, *key)
+    if full not in _ENTRIES:
+        value = build()
+        if isinstance(value, DataFrame):
+            value = value.persist()
+            release = DataFrame.unpersist
+        _ENTRIES[full] = (value, release)
+    return _ENTRIES[full][0]

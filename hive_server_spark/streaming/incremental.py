@@ -108,31 +108,21 @@ def materialize_orders(partial: DataFrame) -> DataFrame:
 
 
 class ParquetStateStore:
-    """Versioned parquet state table with TWO commit granularities:
+    """Versioned parquet state table: each batch writes the full state as
+    `v{n}`, and the pointer file flips last — never read and overwrite the
+    same files in one job. Batch ids are monotonic within one checkpoint
+    lineage, and ``already_applied`` makes re-delivered batches
+    exactly-once.
 
-    - ``commit(df, n)`` writes the FULL state as `v{n}` — atomic and
-      self-contained, but O(state) per batch (the round-14/15/16 scale
-      flaw, VERDICT r16 item 3);
-    - ``commit_delta(df, n)`` writes only this batch's PARTIAL as `d{n}` —
-      O(batch) per commit. Readers reconstruct: the state at version n is
-      ``combine(newest full v{m<=n} ∪ d{m+1} ∪ ... ∪ d{n})``, where
-      ``combine`` is the store's keyed monoid fold (constructor arg; None
-      means append-only, i.e. the state IS the union). Every state this
-      engine streams is such a monoid (the fold's max-by-seq pairs, the
-      band index's MIN semilattice, the sketch SUM/MAX grids, the flag
-      appends), so per-batch work drops from read-S + merge + write-S to
-      write-batch — the "partitioned append + periodic compaction keyed
-      on the batch id" design. ``compact()`` is the compaction: it
-      materializes the pointer state as a full `v{n}` so ``vacuum`` can
-      retire the subsumed deltas.
+    Scale note: each commit rewrites the full state — correct and atomic,
+    but O(state). The production-scale variants, in order of preference:
+    (a) a Delta/Iceberg MERGE target (transactional, row-level);
+    (b) state partitioned by pool bucket (sources/layout.py) with dynamic
+        partition overwrite, rewriting only buckets touched by the batch —
+        O(touched state), at the cost of non-atomic multi-bucket commits.
+    Plain versioned parquet keeps this repo dependency-free."""
 
-    In both cases the pointer file flips last (never read and overwrite
-    the same files in one job), batch ids are monotonic within one
-    checkpoint lineage, and the replay guard (``already_applied``) is
-    unchanged. At cluster scale the same layout maps onto a Delta/Iceberg
-    table (deltas = appended files, compact = rewrite_data_files)."""
-
-    def __init__(self, root: str, run_id: str | None = None, combine=None):
+    def __init__(self, root: str, run_id: str | None = None):
         """`run_id` (optional) binds this store handle to one streaming
         checkpoint's identity (callers pass the checkpoint dir). Batch ids
         are only monotonic WITHIN one checkpoint lineage — a fresh
@@ -140,17 +130,9 @@ class ParquetStateStore:
         already-committed store would silently skip every batch (the
         `already_applied` guard would read them all as replays). Recording
         the identity at first commit turns that mismatch into a loud
-        error instead.
-
-        `combine` (optional) folds a UNION of state partials into the
-        state: one keyed aggregate, or None for append-only stores (the
-        state IS the union). It must be a commutative/associative fold
-        whose partials carry unique keys — so combine(x) == x on any
-        already-folded frame; every merge this engine streams has that
-        form, and the chunk-invariance oracles pin the equivalence."""
+        error instead."""
         self.root = root
         self.run_id = run_id
-        self.combine = combine
         os.makedirs(root, exist_ok=True)
 
     @property
@@ -167,85 +149,43 @@ class ParquetStateStore:
         with open(self._run_file) as fh:
             return fh.read().strip()
 
-    def _ids(self, prefix: str) -> list[int]:
-        out = []
-        for name in os.listdir(self.root):
-            m = re.fullmatch(prefix + r"(\d+)", name)
-            if m is not None:
-                out.append(int(m.group(1)))
-        return sorted(out)
-
     def latest(self, spark: SparkSession) -> DataFrame | None:
         b = self.committed_version()
         if b is None:
             return None
-        return self._state_at(spark, b)
+        return spark.read.parquet(os.path.join(self.root, f"v{b}"))
 
     def at_version(self, spark: SparkSession, batch_id: int) -> DataFrame:
-        """Time travel: the state as of micro-batch `batch_id` — a full
-        `v{batch_id}` snapshot if one exists, else the newest full at or
-        below it plus the delta chain up to it (the plain-parquet form of
-        Delta/Iceberg snapshot reads). A vacuumed (or never-committed)
-        version fails loudly here, not with a deep Spark path error."""
-        return self._state_at(spark, batch_id)
-
-    def _state_at(self, spark: SparkSession, b: int) -> DataFrame:
-        fulls = [m for m in self._ids("v") if m <= b]
-        base = max(fulls) if fulls else None
-        if base == b:
-            return spark.read.parquet(os.path.join(self.root, f"v{b}"))
-        lo = 0 if base is None else base + 1
-        deltas = [i for i in self._ids("d") if lo <= i <= b]
-        missing = set(range(lo, b + 1)) - set(deltas)
-        if missing:
+        """Time travel: the state as of micro-batch `batch_id`. Every
+        commit keeps its `v{n}` directory, so any historical version stays
+        readable until vacuumed — the plain-parquet form of Delta/Iceberg
+        snapshot reads. A vacuumed (or never-committed) version fails
+        loudly here, not with a deep Spark path error."""
+        path = os.path.join(self.root, f"v{batch_id}")
+        if not os.path.isdir(path):
             raise ValueError(
-                f"state version {b} is not readable; committed "
+                f"state version {batch_id} is not readable; committed "
                 f"versions: {self.versions()} (older versions are removed "
                 "by vacuum(keep_last=...))"
             )
-        frames = [] if base is None else [os.path.join(self.root, f"v{base}")]
-        frames += [os.path.join(self.root, f"d{i}") for i in deltas]
-        df = spark.read.parquet(frames[0])
-        for path in frames[1:]:
-            df = df.unionByName(spark.read.parquet(path))
-        if len(frames) > 1 and self.combine is not None:
-            df = self.combine(df)
-        return df
+        return spark.read.parquet(path)
 
     def versions(self) -> list[int]:
-        """Committed version numbers still readable from disk, ascending
-        (full `v{n}` snapshots and `d{n}` delta commits alike)."""
-        return sorted(set(self._ids("v")) | set(self._ids("d")))
-
-    def _reconstructible(self, b: int, fulls: set[int], deltas: set[int]) -> bool:
-        """Would version `b` still read given only these dirs on disk?"""
-        base = max((m for m in fulls if m <= b), default=None)
-        if base == b:
-            return True
-        lo = 0 if base is None else base + 1
-        return not (set(range(lo, b + 1)) - deltas)
-
-    def compact(self, spark: SparkSession) -> int | None:
-        """Compaction: materialize the pointer state as a full `v{n}`
-        snapshot (idempotent — overwrite), so vacuum() can retire the
-        delta chain that produced it. Returns the compacted version."""
-        b = self.committed_version()
-        if b is None or b in self._ids("v"):
-            return b
-        state = self._state_at(spark, b)
-        state.write.mode("overwrite").parquet(os.path.join(self.root, f"v{b}"))
-        return b
+        """Committed version numbers still on disk, ascending."""
+        out = []
+        for name in os.listdir(self.root):
+            m = re.fullmatch(r"v(\d+)", name)
+            if m is not None:
+                out.append(int(m.group(1)))
+        return sorted(out)
 
     def vacuum(self, keep_last: int = 1) -> list[int]:
-        """Retention: delete version directories not needed to read the
-        newest `keep_last` versions (SCALE.md §6 — without this a
-        long-running stream accumulates state unboundedly). The pointer
-        target always survives, even if it is older than the cut (a
-        concurrent commit may not have flipped LATEST yet when the newest
-        directory appeared), and a `v{n}`/`d{n}` directory that a KEPT
-        version still reconstructs through is never removed — on a
-        delta-committed store, run compact() first to retire the chain.
-        Returns the removed version numbers."""
+        """Retention: delete all but the newest `keep_last` version
+        directories (SCALE.md §6 — without this a long-running stream
+        accumulates one full state snapshot per commit, unboundedly).
+        The pointer target always survives, even if it is older than the
+        cut (a concurrent commit may not have flipped LATEST yet when the
+        newest directory appeared). Returns the removed version numbers."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         vs = self.versions()
@@ -253,24 +193,10 @@ class ParquetStateStore:
         ptr = self.committed_version()
         if ptr is not None:
             keep.add(ptr)
-        fulls = set(self._ids("v"))
-        deltas = set(self._ids("d"))
-        removed = set()
-        # sweep DIRECTORIES oldest-first (deltas before their compacted
-        # fulls at the same id): a dir goes iff every kept version still
-        # reconstructs without it
-        for kind, v in sorted(
-            [("d", v) for v in deltas] + [("v", v) for v in fulls],
-            key=lambda kv: (kv[1], kv[0]),
-        ):
-            f2 = fulls - {v} if kind == "v" else fulls
-            d2 = deltas - {v} if kind == "d" else deltas
-            if all(self._reconstructible(k, f2, d2) for k in keep):
-                shutil.rmtree(os.path.join(self.root, f"{kind}{v}"))
-                fulls, deltas = f2, d2
-                if not (v in fulls or v in deltas):
-                    removed.add(v)
-        return sorted(removed)
+        removed = [v for v in vs if v not in keep]
+        for v in removed:
+            shutil.rmtree(os.path.join(self.root, f"v{v}"))
+        return removed
 
     def _check_lineage(self, action: str) -> None:
         """Raise if this bound handle and a COMMITTED store disagree on
@@ -293,26 +219,16 @@ class ParquetStateStore:
             )
 
     def commit(self, df: DataFrame, batch_id: int) -> None:
-        """Commit `df` as the FULL state at `batch_id` (O(state) write)."""
-        self._commit_dir(df, batch_id, "v")
-
-    def commit_delta(self, df: DataFrame, batch_id: int) -> None:
-        """Commit `df` as this batch's PARTIAL state (O(batch) write) —
-        readers fold the delta chain through `combine` (see class doc).
-        Same atomicity and replay discipline as commit(): the delta dir is
-        overwritten idempotently, the pointer flips last."""
-        self._commit_dir(df, batch_id, "d")
-
-    def _commit_dir(self, df: DataFrame, batch_id: int, kind: str) -> None:
+        """Commit `df` as the full state at `batch_id`: write `v{n}`
+        (overwrite, so a replayed torn commit is idempotent), then flip
+        the pointer."""
         # a bound handle never merges onto a foreign lineage's committed
         # state — without this, a mis-pointed stream whose batch ids run
         # AHEAD of the pointer would silently corrupt the store (the
         # already_applied guard alone only catches ids at-or-behind it)
         self._check_lineage("commit")
         version = f"v{batch_id}"
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.root, f"{kind}{batch_id}")
-        )
+        df.write.mode("overwrite").parquet(os.path.join(self.root, version))
         if self.run_id is not None and (
             self._recorded_run_id() is None or self.committed_version() is None
         ):
