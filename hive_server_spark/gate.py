@@ -1034,166 +1034,3 @@ from hive_server_spark.plans import (  # noqa: E402,F401
     streaming_pack,
     serving_pack,
 )
-
-# ---------------------------------------------------------------------------
-# Driver-visible ordering. The correctness driver hash-checks the FIRST 50
-# queries per round; set_driver_priority pins that window. Per-round
-# history lives in git (r9 cleared the r05 tail, r10 cleared r06, r11
-# cleared r07, r12 cleared r08, r13 drained 47 of the 50 r09 names, r14
-# cleared the r09 spill and drained 43 of the 50 r10 names — its
-# media_neardup_streaming flip carried NEW slice-scoped semantics at
-# registration time, ADVICE r14; r15 cleared the 7-name r10 spill and
-# drained 40 of the 50 r11 names, but the driver host's DuckDB OOM'd on
-# four of them; THIS round re-checks those four, clears the r11 spill,
-# and starts draining r12 — see VERDICT r09-r15 for the plans).
-# ---------------------------------------------------------------------------
-# Driver-visible ordering (round-16 rotation) — executes VERDICT r15
-# item 1's RECOMPOSED window: (a) the FOUR round-14-staged registrations
-# flipped this round (streaming zone maps, IVF delete maintenance, the
-# order-book serving route, the referential DQ suite), (b) the FOUR
-# text names whose r15 rows were lost to DuckDB oracle-side
-# OutOfMemoryException (Spark produced rows; all four MATCH locally —
-# their last DRIVER-green is r11, so they must re-enter the window now
-# or breach the 5-round staleness bound in r17), (c) the 10-name r11
-# spill, and (d) the FIRST 32 of the 50 r12-green names — four fewer
-# than the round-15 plan said, displaced by (b); the last 18 r12 names
-# spill to r17. After this window the staleness profile is r16:50,
-# r15:50, r14:50, r13:50 + an 18-name r12 spill (drain-oldest-first
-# absorbs the displacement; re-proven by the forward simulation,
-# tests/test_rotation.py, max staleness exactly 5 through r20).
-#
-# ROUND-17 ROTATION NOTE (single source of truth for which round flips
-# each staged registration — the per-site comments all say the round):
-# (1) the THREE round-14-staged registrations (all parity-tested +
-# 10x/100x-probed — SCALE.md round-14 staged tables; flip the commented
-# @register lines):
-#   text_bpe_streaming (plans/streaming_pack.py — flip both lines; the
-#   tokenizer family's tokenize-at-arrival leg, oracle
-#   _BPE_ENCODE_ORACLE)
-#   serving_amount_out_json (plans/serving_pack.py, oracle
-#   _AMOUNT_OUT_JSON_ORACLE — the fourth serving route, serializing the
-#   A6/A7 walk with both error branches)
-#   audio_neardup_streaming (plans/streaming_pack.py, oracle
-#   _AUDIO_NEARDUP_STREAM_ORACLE — the image ingest's audio twin,
-#   closing the last modality gap in the streaming matrix)
-# (2) then the 18-name r12 spill (the 4 displaced by this round's OOM
-# re-checks, then the 14 the round-15 plan already deferred), in
-# registration order:
-#   rel_nation_trade_flows, rel_disjunctive_bands,
-#   rel_conditional_distinct, evt_sessions, evt_trailing_hour_value,
-#   evt_cusum_drift, evt_hll_set_algebra, emb_pq_incremental,
-#   text_hash_features_score, layout_deletion_vectors,
-#   src_schema_evolution_roundtrip, layout_manifest_diff,
-#   multimodal_video_curation, multimodal_flac_profile,
-#   orders_state_streaming, evt_cms_streaming, evt_hll_streaming,
-#   evt_cusum_streaming
-# (3) then the FIRST 29 of the 50 r13-green names (computed THIS round
-# from the r01-r15 history in REGISTRY registration order; the last 21
-# spill to r18). The 50 r13 names, in registration order:
-#   rel_string_functions, rel_null_handling, rel_unpivot_measures,
-#   rel_bitwise_functions, rel_lateral_top_orders, emb_cosine_topk,
-#   emb_ivf_topk, emb_lsh_buckets, emb_lsh_neardup_topk,
-#   emb_int8_quantization, emb_ivfpq_batch_topk, emb_pq_train,
-#   text_profile, text_exact_dedup, dedup_ngram_jaccard,
-#   dedup_minhash_sigs, dedup_minhash_candidates, dedup_simhash,
-#   text_corpus_stats, text_top_ngrams, dedup_clusters,
-#   text_quality_histogram, text_deterministic_sample,
-#   text_sample_rates, text_quality_filter, text_token_shards,
-#   dedup_reachability_recursive, text_mixture_sample, text_bigram_lm,
-#   [r18 spill:] text_pack_windows, text_decontaminate,
-#   text_leakage_safe_splits, text_repetition_profile,
-#   text_source_overlap, text_pretrain_keep, text_bpe_train,
-#   text_bpe_encode, text_ccnet_buckets, src_jsonl_roundtrip,
-#   src_csv_roundtrip, src_orc_roundtrip, multimodal_inventory,
-#   multimodal_frame_inventory, multimodal_bundle_neardup,
-#   multimodal_media_fp_incremental, orders_state_stateful,
-#   orders_state_time_travel, evt_sliding_rollup_streaming,
-#   docs_neardup_streaming, serving_pool_info_json
-# 3 + 18 + 29 = 50 — clears the r12 spill entirely and starts draining
-# r13; the remaining 21 r13 names drain in r18.
-# STAGING BUDGET NOTE (round 14, re-affirmed rounds 15-16): with 214
-# registered + the remaining 3 staged flips (r17) in a 50-slot window,
-# the oldest-cohort staleness sits at EXACTLY the 5-round bound every
-# round through r20 (drain-oldest-first simulation — encoded as
-# test_rotation_forward_simulation, tests/test_rotation.py, which also
-# verified this round's 4-name displacement changes nothing). Do NOT
-# stage additional registrations for r17 without re-running the forward
-# simulation IN THE ROUND THAT STAGES THEM; new capability ships as
-# operators/tests/pipeline stages without gate registration unless the
-# simulation proves the slack exists.
-# ---------------------------------------------------------------------------
-from hive_server_spark.registry import set_driver_priority  # noqa: E402
-
-# The round whose driver run this window is composed for. The rotation
-# tests use this to tell a builder-committed tree (history through
-# DRIVER_PRIORITY_ROUND-1) from a mid-rotation snapshot (the driver has
-# already deposited CORRECTNESS_r{DRIVER_PRIORITY_ROUND}.json but the
-# next rotation has not been committed yet) — ADVICE r15 item 1.
-DRIVER_PRIORITY_ROUND = 16
-
-DRIVER_PRIORITY_R16 = [
-    # -- (a) round-16 registrations (staged r14, rotation-note order) --------
-    "layout_zonemap_streaming",
-    "emb_ivf_delete_maintenance",
-    "serving_order_book_json",
-    "dq_referential_report",
-    # -- (b) the four r15 oracle-OOM casualties (VERDICT r15 item 1): last
-    #    driver-green r11; DuckDB OOM'd on the driver host in r15 while
-    #    Spark produced rows and local verify matched ------------------------
-    "text_vocab_census",
-    "text_winnow_fingerprints",
-    "text_heaps_law",
-    "text_source_kl",
-    # -- (c) the 10-name r11 spill, registration order -----------------------
-    "text_tfidf_terms",
-    "text_dsir_weights",
-    "rag_hybrid_rrf",
-    "text_quota_sample",
-    "layout_compaction_plan",
-    "layout_zonemap_skipping",
-    "udtf_char_ngram_census",
-    "multimodal_jpeg_profile",
-    "multimodal_image_entropy",
-    "multimodal_jpeg_progressive_profile",
-    # -- (d) the first 32 r12-green names, registration order ----------------
-    "amount_out_prices",
-    "amount_out_capped",
-    "asof_trade_price",
-    "asof_nearest_price",
-    "range_price_activity",
-    "price_hourly_gapfill",
-    "rel_pricing_summary",
-    "rel_top_revenue_orders",
-    "rel_revenue_by_nation",
-    "rel_order_priority_exists",
-    "rel_parts_never_ordered",
-    "rel_nations_intersect",
-    "rel_nations_except",
-    "rel_rollup_revenue",
-    "rel_cube_status_priority",
-    "rel_window_top_customers",
-    "rel_window_running_total",
-    "rel_window_order_gaps",
-    "rel_full_outer_nation_activity",
-    "rel_distinct_suppliers_per_nation",
-    "rel_scalar_functions",
-    "rel_window_analytics",
-    "rel_datetime_functions",
-    "rel_array_functions",
-    "rel_grouping_sets",
-    "rel_union_all_parties",
-    "rel_exact_percentiles",
-    "rel_cheapest_line_per_part",
-    "rel_orders_above_cust_avg",
-    "rel_rich_idle_customers",
-    "scale_salted_cohort_rollup",
-    "rel_promo_revenue_ratio",
-]
-assert len(DRIVER_PRIORITY_R16) == 50, len(DRIVER_PRIORITY_R16)
-# A typo'd or renamed name would silently shrink the checked window
-# (registry._ordered drops unknown names); fail loudly instead.
-from hive_server_spark.registry import _SPARK_QUERIES as _REG  # noqa: E402
-
-_missing = [n for n in DRIVER_PRIORITY_R16 if n not in _REG]
-assert not _missing, f"DRIVER_PRIORITY_R16 names not registered: {_missing}"
-set_driver_priority(DRIVER_PRIORITY_R16)

@@ -510,9 +510,7 @@ def emb_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental IVF index maintenance (round-10 second pass; REGISTRATION
-# registered in the round-11 window per the rotation note in gate.py,
-# after a staged round-10 second pass). The
+# Incremental IVF index maintenance. The
 # embeddings twin of docs_neardup_incremental: the IVF index is a
 # first-class PERSISTED artifact between corpus snapshots — centroids
 # plus a per-cell census (population, posting checksum, distortion sum),
@@ -635,9 +633,7 @@ def emb_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental PQ code maintenance (round-11 second pass; REGISTRATION
-# STAGED FOR ROUND 12 — the round-11 driver window is exactly full per the
-# rotation note in gate.py; flip the commented @register). Extends the
+# Incremental PQ code maintenance. Extends the
 # emb_ivf_incremental persisted-state pattern to the PQ codes table
 # (VERDICT r10 item 5): the PQ index between corpus snapshots is TWO
 # parquet artifacts — the codebook (cid, cv) and the per-vector codes
@@ -658,7 +654,7 @@ def emb_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # refresh the cost is O(batch × m) map-side work + an append; at 100 TB
 # the prior codes table is storage, not compute.
 # ---------------------------------------------------------------------------
-@register("emb_pq_incremental", E.pq_codes_oracle())  # flipped r12
+@register("emb_pq_incremental", E.pq_codes_oracle())
 def emb_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persist the prior snapshot's PQ index (codebook + per-vector codes),
     then fold a new embedding batch in by encoding ONLY the batch against
@@ -700,8 +696,7 @@ def emb_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PQ codebook training (round-11 second-pass library; REGISTERED ROUND 13
-# per the rotation note in gate.py). One Lloyd iteration per subspace — the
+# PQ codebook training. One Lloyd iteration per subspace — the
 # training step that completes the PQ lifecycle: emb_kmeans_update trains
 # the coarse quantizer, THIS trains the sub-quantizers, emb_pq_codes
 # encodes, emb_pq_adc_topk serves, emb_pq_incremental maintains. Parity
@@ -716,17 +711,15 @@ def emb_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Two-stage IVF-PQ serving with exact re-rank (round-12 second pass;
-# REGISTRATION STAGED FOR ROUND 14 per the rotation note in gate.py;
-# flip the commented @register). The standard production ANN recipe the
-# single-stage read path stops short of: ADC ranks a bounded SHORTLIST
-# from the probed cells, then ONLY the shortlist is re-ranked by exact
-# distance — recovering exact-metric order for the price of `shortlist`
-# full-vector distance computations. Pure composition of the existing
-# lifecycle pieces (stage 1 IS emb_ivfpq_topk's machinery), so the
-# two-stage gate cannot drift from the single-stage gate; the oracle is
-# the ivfpq oracle wrapped in the same re-rank. Output carries BOTH
-# ranks, so the query itself measures what re-ranking bought.
+# Two-stage IVF-PQ serving with exact re-rank. The standard production ANN
+# recipe the single-stage read path stops short of: ADC ranks a bounded
+# SHORTLIST from the probed cells, then ONLY the shortlist is re-ranked by
+# exact distance — recovering exact-metric order for the price of
+# `shortlist` full-vector distance computations. Pure composition of the
+# existing lifecycle pieces (stage 1 IS emb_ivfpq_topk's machinery), so the
+# two-stage gate cannot drift from the single-stage gate; the oracle is the
+# ivfpq oracle wrapped in the same re-rank. Output carries BOTH ranks, so
+# the query itself measures what re-ranking bought.
 # ---------------------------------------------------------------------------
 @register("emb_ivfpq_rerank_topk", E.ivfpq_rerank_oracle())
 def emb_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -736,8 +729,7 @@ def emb_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF delete maintenance (round-14 second pass; REGISTRATION STAGED FOR
-# ROUND 16 — flip the commented @register). The lifecycle step the ANN
+# IVF delete maintenance. The lifecycle step the ANN
 # family still lacked: train (emb_kmeans_update / emb_pq_train) -> build
 # (emb_ivf_build) -> serve (emb_ivf_topk / ivfpq) -> grow
 # (emb_ivf_incremental / emb_ivf_streaming) -> and now SHRINK. A
@@ -762,7 +754,7 @@ def emb_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_DELETE_PRED = f"vec_id % 7 = 3 AND vec_id >= {_IVF_K}"
 
 
-@register(  # flipped r16 per plan
+@register(
     "emb_ivf_delete_maintenance",
     _ivf_build_oracle(where=f" WHERE NOT ({_IVF_DELETE_PRED})"),
 )

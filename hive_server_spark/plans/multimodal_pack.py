@@ -923,10 +923,7 @@ def multimodal_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Audio fingerprint near-dup (round 10; registered in the round-10 driver
-# window — one r07 filler name moved back to the r11 rotation to make the
-# slot, keeping tests/test_rotation.py's no-unchecked-registration
-# invariant). The audio member of
+# Audio fingerprint near-dup. The audio member of
 # the perceptual-dedup triad: real WAV decode -> frame energies -> 64-bit
 # fingerprint as four 16-bit bands -> band_candidates -> Hamming verify on
 # candidates only. Same summary-row shape and closed-form-oracle scheme as
@@ -1145,10 +1142,7 @@ def multimodal_video_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Hierarchical JPEG decode profile (round-10 second-pass library;
-# registered in the round-11 driver window after a staged round-10
-# second pass — oracle and parity tests predate the registration, per
-# the rotation note in gate.py). Value-gates the DHP/EXP/
+# Hierarchical JPEG decode profile. Value-gates the DHP/EXP/
 # differential machinery across ALL FOUR DCT hierarchical processes in
 # one query: doc_id % 4 rotates SOF0+SOF5 / SOF2+SOF6 / SOF9+SOF13 /
 # SOF10+SOF14, doc_id % 3 rotates the EXP axes. The constant base block
@@ -1470,9 +1464,7 @@ def multimodal_video_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# End-to-end video curation pipeline (round-11 second pass; REGISTRATION
-# STAGED FOR ROUND 12 — the round-11 driver window is exactly full per the
-# rotation note in gate.py; flip the commented @register). The video twin
+# End-to-end video curation pipeline. The video twin
 # of text_pretrain_keep (VERDICT r10 item 4): every stage LIVE in one
 # query, raw AVI corpus → shot segmentation → one keyframe per shot →
 # keyframe dHash → banded-LSH near-dup verdict → per-clip keep/drop:
@@ -1622,7 +1614,7 @@ def _kf_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared(spark, ("mm:kf_bands", sf_dir), build)
 
 
-@register("multimodal_video_curation", _VIDEO_CURATION_ORACLE)  # flipped r12
+@register("multimodal_video_curation", _VIDEO_CURATION_ORACLE)
 def multimodal_video_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw AVI corpus → shots → one keyframe per shot → keyframe-dHash
     near-dup verdict → per-clip keep/drop (see block comment). One row per
@@ -1649,9 +1641,7 @@ def multimodal_video_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# FLAC decode profile (round-11 second pass; REGISTRATION STAGED FOR
-# ROUND 12 — window full per the rotation note in gate.py; flip the
-# commented @register). Closes the audio-format boundary (VERDICT r10
+# FLAC decode profile. Closes the audio-format boundary (VERDICT r10
 # item 7): real FLAC decode — Rice-coded fixed-predictor residuals AND
 # verbatim subframes, frame CRC-8/CRC-16, whole-stream MD5 — value-gated
 # with a purely INTEGER oracle: the decoder emits integer samples, so
@@ -1683,7 +1673,7 @@ GROUP BY 1
 """
 
 
-@register("multimodal_flac_profile", _FLAC_ORACLE)  # flipped r12
+@register("multimodal_flac_profile", _FLAC_ORACLE)
 def multimodal_flac_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strict decode profile over REAL FLAC clips: one row per subframe
     kind (fixed-predictor+Rice / verbatim / order-2 LPC — all three
@@ -1710,8 +1700,7 @@ def multimodal_flac_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Fused multimodal bundle dedup (round-11 second pass; REGISTERED ROUND 13
-# with emb_pq_train per the rotation note in gate.py). A multimodal
+# Fused multimodal bundle dedup. A multimodal
 # training corpus dedups per
 # BUNDLE: a document whose text, image, OR audio member near-duplicates a
 # smaller document's is dropped, with ONE canonical partner across
@@ -1843,8 +1832,7 @@ def multimodal_bundle_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Audio + video fingerprint incremental refresh (round-12 second pass;
-# REGISTERED ROUND 13 per the rotation note in gate.py). Closes
+# Audio + video fingerprint incremental refresh. Closes
 # VERDICT r11 item 2: the modality-generic persisted band index
 # (band_long / write_band_index / incremental_band_neardup,
 # functions/multimodal.py) refreshes audio and video fingerprints with

@@ -1670,17 +1670,14 @@ def rel_lateral_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cross-table referential-integrity audit (round-14 second pass;
-# REGISTRATION STAGED FOR ROUND 16 — flip the commented @register). The
-# companion dq_lineitem_report lacked: that query validates N
-# single-table constraints in one scan; THIS validates the schema's
-# foreign-key graph — the Deequ/Great-Expectations check a training-data
-# warehouse runs before any join-based pipeline trusts its dimensions.
-# Seven checks: customer PK uniqueness, then the FK chain
-# orders→customer, lineitem→{orders, part, supplier},
-# supplier→nation, nation→region. A NULL or dangling key counts as a
-# violation (anti-join semantics — no silent pass); uniqueness counts
-# duplicate AND null keys.
+# Cross-table referential-integrity audit. The companion dq_lineitem_report
+# lacked: that query validates N single-table constraints in one scan; THIS
+# validates the schema's foreign-key graph — the Deequ/Great-Expectations
+# check a training-data warehouse runs before any join-based pipeline trusts
+# its dimensions. Seven checks: customer PK uniqueness, then the FK chain
+# orders→customer, lineitem→{orders, part, supplier}, supplier→nation,
+# nation→region. A NULL or dangling key counts as a violation (anti-join
+# semantics — no silent pass); uniqueness counts duplicate AND null keys.
 #
 # Scale: each FK check is ONE left-anti join — Catalyst broadcasts the
 # bounded dims (nation/region/part/supplier) and key-partitions the
@@ -1720,7 +1717,7 @@ _DQ_REF_ORACLE = "\nUNION ALL\n".join(
 )
 
 
-@register("dq_referential_report", _DQ_REF_ORACLE)  # flipped r16 per plan
+@register("dq_referential_report", _DQ_REF_ORACLE)
 def dq_referential_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity suite over the TPC-H schema: PK uniqueness
     plus the six-edge foreign-key chain, one report row per check (see
@@ -1730,9 +1727,8 @@ def dq_referential_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_server_spark.operators.quality import fk_suite, unique_check
 
     # group the FK edges by fact table so each fact is scanned ONCE for all
-    # of its checks (fk_suite; optimization r16) — the per-check anti-join +
-    # total-count pair scanned lineitem six times in one report
-    # (plans/r16/dq_referential_report_before.txt: 19 parquet scans)
+    # of its checks (fk_suite) — a per-check anti-join + total-count pair
+    # would scan lineitem once per edge in one report
     reports = []
     by_fact: dict[str, list] = {}
     for rule, fact, fk, dim, pk in _DQ_REF_CHECKS:

@@ -397,8 +397,7 @@ def q_orders_state_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # S10 — GET /api/pools/:address/orderbook (depth-20 book JSON), all pools
 # (reference src/api/controllers/order-book-controller.ts,
-# src/models/order-book.ts:202-349; round-14 second pass, REGISTRATION
-# STAGED FOR ROUND 16 — flip the commented @register). The third serving
+# src/models/order-book.ts:202-349). The third serving
 # route promoted from pytest-only to an oracle-backed gate query (after
 # pool-info and user-orders): one JSON document per pool with bids[]
 # (price desc) and asks[] (price asc), each level carrying the decimal
@@ -466,7 +465,7 @@ FROM sides
 )
 
 
-@register("serving_order_book_json", _ORDER_BOOK_JSON_ORACLE)  # flipped r16
+@register("serving_order_book_json", _ORDER_BOOK_JSON_ORACLE)
 def q_serving_order_book_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Depth-20 order-book JSON for every pool — the GET
     /api/pools/:address/orderbook response shape (operators/serving.py:22)
@@ -513,87 +512,6 @@ def q_serving_order_book_json(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("pool_address").alias("pool"),
                 strip(F.col("bids_r")).alias("bids"),
                 strip(F.col("asks_r")).alias("asks"),
-            )
-        ).alias("json"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# S10 — GET /api/pools/:address/get-amount-out (AmountOutResult JSON),
-# all pools (reference src/api/controllers/amount-out-controller.ts,
-# src/models/types.ts:49-54; round-14 second pass, REGISTRATION STAGED
-# FOR ROUND 17 — flip the commented @register). The fourth serving route
-# promoted to oracle-backed, and the first that serializes a COMPUTED
-# operator rather than folded state: the full A6/A7 prefix-sum walk
-# (500 quote units against the ask side) rendered per pool with both
-# error branches ("No liquidity available" for an empty opposite side,
-# "Insufficient liquidity" for a short book — Spark's to_json omits the
-# null errorMessage key on success, mirrored by the oracle's CASE).
-# DOCUMENTED DIVERGENCE (ADVICE r14): the reference embeds the unfilled
-# remainder in the message — "Insufficient liquidity (unfilled amount:
-# X)" (src/models/order-book.ts:312) — where X is a float rendered by
-# JS number formatting; this route normalizes to the bare string so the
-# message stays byte-identical cross-engine (the remainder is already
-# derivable from outputAmountMicro) — same stance as the level_cap Q6
-# note.
-# The output amount crosses the engine boundary as floor-micro units
-# (the house float rule: the walk's one division is a single-rounded
-# identical-shape double on both sides, so the floor is bit-stable —
-# the amount_out_buy gate has hash-matched the raw double for rounds);
-# touched prices stay exact decimal strings in walk order.
-#
-# Scale: the walk is the amount_out operator unchanged (level aggregate
-# + one prefix-sum window per pool); the JSON assembly is a per-pool
-# projection; the serving edge collects only response rows.
-# ---------------------------------------------------------------------------
-from hive_server_spark.operators.amount_out import amount_out_ctes  # noqa: E402
-
-_AMOUNT_OUT_JSON_ORACLE = (
-    f"WITH {ORDER_EVENTS_CTE}, {ORDER_UPDATES_CTE}, {ORDERS_STATE_CTE}"
-    + amount_out_ctes("BUY")
-    + """
-SELECT pool_address,
-       '{"pool":"' || pool_address ||
-       '","isError":' || CASE WHEN is_error THEN 'true' ELSE 'false' END ||
-       CASE WHEN n_levels = 0
-              THEN ',"errorMessage":"No liquidity available"'
-            WHEN is_error
-              THEN ',"errorMessage":"Insufficient liquidity"'
-            ELSE '' END ||
-       ',"outputAmountMicro":' ||
-       CAST(CAST(floor(output_amount * 1000000.0) AS BIGINT) AS VARCHAR) ||
-       ',"prices":' ||
-       CASE WHEN hit_prices = '' THEN '[]'
-            ELSE '["' || replace(hit_prices, ',', '","') || '"]' END ||
-       '}' AS json
-FROM amount_out_result
-"""
-)
-
-
-# round 17: @register("serving_amount_out_json", _AMOUNT_OUT_JSON_ORACLE)
-def q_serving_amount_out_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AmountOutResult JSON for a 500-quote-unit BUY against every pool —
-    the GET /api/pools/:address/get-amount-out response shape
-    (operators/serving.py:151) over the amount_out walk, with micro-unit
-    output, walk-ordered decimal price strings, and both error branches
-    (see block comment)."""
-    from hive_server_spark.operators.amount_out import amount_out
-
-    r = amount_out(_orders_state(spark, sf_dir), "BUY", 500)
-    return r.select(
-        "pool_address",
-        F.to_json(
-            F.struct(
-                F.col("pool_address").alias("pool"),
-                F.col("is_error").alias("isError"),
-                F.col("error_message").alias("errorMessage"),
-                F.floor(F.col("output_amount") * 1e6)
-                .cast("bigint")
-                .alias("outputAmountMicro"),
-                F.transform(
-                    F.col("hit_prices"), lambda p: p.cast("string")
-                ).alias("prices"),
             )
         ).alias("json"),
     )

@@ -653,12 +653,10 @@ def layout_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Snapshot expiry / orphan-file report (round-12 second pass; REGISTRATION
-# STAGED FOR ROUND 14 per the rotation note in gate.py; flip the
-# commented @register). The table-maintenance step AFTER the manifest
-# diff: a versioned table keeps a CHAIN of snapshots, each referencing a
-# set of physical files; expiring old snapshots makes every file
-# referenced ONLY by expired snapshots reclaimable (Iceberg's
+# Snapshot expiry / orphan-file report. The table-maintenance step AFTER the
+# manifest diff: a versioned table keeps a CHAIN of snapshots, each
+# referencing a set of physical files; expiring old snapshots makes every
+# file referenced ONLY by expired snapshots reclaimable (Iceberg's
 # expire_snapshots + orphan cleanup, Delta's VACUUM). Chain here:
 #   v1 = the original 512-row-file layout;
 #   v2 = layout_manifest_diff's second version (range-scoped DELETE
@@ -753,8 +751,7 @@ def layout_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bucketed-table co-located join (round-13 second pass; staged r13-r14,
-# REGISTERED ROUND 15 per the rotation note in gate.py). The one layout
+# Bucketed-table co-located join. The one layout
 # primitive this family still lacked: PRE-SHUFFLED storage. Partitioning
 # (src_partitioned_roundtrip) prunes scans; BUCKETING removes the join
 # shuffle itself — both sides are written `bucketBy(N, key)` into the

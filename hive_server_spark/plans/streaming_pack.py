@@ -1554,14 +1554,12 @@ def evt_cusum_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay). Runs in the evt_* family wave."""
     return _evt_streaming_results(spark, sf_dir)["evt_cusum_streaming"]
 # ---------------------------------------------------------------------------
-# Streaming media near-dup ingest (round-12 second pass; REGISTRATION
-# STAGED FOR ROUND 14 — the round-13 window is exactly full per the
-# rotation note in gate.py; flip the commented @register). The MEDIA twin
+# Streaming media near-dup ingest. The MEDIA twin
 # of docs_neardup_streaming, completing the ingest matrix: text has
 # batch-incremental (docs_neardup_incremental) + streaming
 # (docs_neardup_streaming) near-dup; media had only the batch-incremental
-# members (multimodal_phash_incremental, green r11; the fused audio/video
-# refresh staged this round). This is the arrival-time shape: media lands
+# members (multimodal_phash_incremental and the fused audio/video
+# refresh). This is the arrival-time shape: media lands
 # in micro-batches, each batch is decoded ONCE (the expensive leg — the
 # T.81 decode runs only on arriving payloads, never on the corpus), its
 # dHash band partials MIN-merge into the versioned parquet band index,
@@ -1735,25 +1733,22 @@ def media_neardup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming IVF census ingest (round-12 second pass; REGISTRATION STAGED
-# FOR ROUND 14 per the rotation note in gate.py; flip the commented
-# @register). Completes the incremental/streaming symmetry across the
-# three corpus families: text has docs_neardup_incremental +
+# Streaming IVF census ingest. Completes the incremental/streaming symmetry
+# across the three corpus families: text has docs_neardup_incremental +
 # docs_neardup_streaming, media has multimodal_phash_incremental (+ the
-# staged fused refresh) + media_neardup_streaming, and embeddings had
-# only the batch-incremental member (emb_ivf_incremental, green r11).
-# This is the arrival-time shape for an ANN index: embeddings land in
-# vec_id-ordered micro-batches; batch 0 freezes the coarse quantizer
-# (the vec_id < k seed convention every IVF query here uses — in a
-# deployed index the trained centroids are a bootstrap artifact exactly
-# like this); every batch assigns ONLY its own vectors against the
-# read-back centroids and folds its additive census partials (n_vecs,
-# posting_checksum, sum_d2_micro — a commutative monoid) into the
-# versioned parquet state store. The final census must equal the
+# fused refresh) + media_neardup_streaming, and embeddings had only the
+# batch-incremental member (emb_ivf_incremental). This is the arrival-time
+# shape for an ANN index: embeddings land in vec_id-ordered micro-batches;
+# batch 0 freezes the coarse quantizer (the vec_id < k seed convention every
+# IVF query here uses — in a deployed index the trained centroids are a
+# bootstrap artifact exactly like this); every batch assigns ONLY its own
+# vectors against the read-back centroids and folds its additive census
+# partials (n_vecs, posting_checksum, sum_d2_micro — a commutative monoid)
+# into the versioned parquet state store. The final census must equal the
 # full-corpus rebuild (emb_ivf_build's oracle), and chunk count must not
-# change the answer (tests/test_streaming.py). Replay: partial-census
-# merges are guarded by already_applied (sums are NOT idempotent — the
-# guard is load-bearing, same as the ingest twin's flags append).
+# change the answer (tests/test_streaming.py). Replay: partial-census merges
+# are guarded by already_applied (sums are NOT idempotent — the guard is
+# load-bearing, same as the ingest twin's flags append).
 #
 # Scale: per micro-batch the work is one broadcast-assign scan of the
 # BATCH (map-side argmin) + a k-row monoid merge; the state is k rows,
@@ -1868,8 +1863,7 @@ def emb_ivf_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming PQ-codes ingest (round-13 second pass; staged r13-r14,
-# REGISTERED ROUND 15 per the rotation note in gate.py). Completes the
+# Streaming PQ-codes ingest. Completes the
 # streaming leg of the PQ lifecycle the same way emb_ivf_streaming
 # completed it for the coarse index: train (emb_pq_train) -> encode
 # (emb_pq_codes) -> serve (emb_pq_adc_topk / ivfpq) -> maintain
@@ -1992,16 +1986,14 @@ def streamed_pq_codes(
 
 
 # ---------------------------------------------------------------------------
-# Streaming DELETE ingest into positional deletion vectors (round-13
-# second pass; staged r13-r14, REGISTERED ROUND 15 per the rotation note
-# in gate.py). Completes the lakehouse-layout family's streaming leg the way
-# the ingest twins completed text/media/embeddings: layout_zorder
-# clusters, layout_compaction compacts, layout_zonemap prunes,
-# layout_deletion_vectors mutates ONE-SHOT, layout_snapshot_expiry
-# expires — and THIS maintains the deletion vectors under arrival-time
-# ingest, the shape a CDC-fed lakehouse table actually runs (a stream
-# of row-level DELETEs folding into per-file position bitmaps without
-# rewriting data files).
+# Streaming DELETE ingest into positional deletion vectors. Completes the
+# lakehouse-layout family's streaming leg the way the ingest twins completed
+# text/media/embeddings: layout_zorder clusters, layout_compaction compacts,
+# layout_zonemap prunes, layout_deletion_vectors mutates ONE-SHOT,
+# layout_snapshot_expiry expires — and THIS maintains the deletion vectors
+# under arrival-time ingest, the shape a CDC-fed lakehouse table actually
+# runs (a stream of row-level DELETEs folding into per-file position bitmaps
+# without rewriting data files).
 #
 # Events land in event_id-ordered micro-batches. A row's deleted
 # POSITION is its rank within its 512-row file across the WHOLE table,
@@ -2201,8 +2193,7 @@ def layout_dv_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming zone-map maintenance (round-14 second pass; REGISTRATION
-# STAGED FOR ROUND 16 — flip the commented @register). The WRITE-side
+# Streaming zone-map maintenance. The WRITE-side
 # twin of layout_zonemap_skipping: that query computes the per-file
 # min/max statistics one-shot and then measures what they prune; THIS
 # maintains the same statistics under arrival-time ingest — the shape
@@ -2322,7 +2313,7 @@ def streamed_zonemaps(
     )
 
 
-@register("layout_zonemap_streaming", _ZM_STREAM_ORACLE)  # flipped r16 per plan
+@register("layout_zonemap_streaming", _ZM_STREAM_ORACLE)
 def layout_zonemap_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the events table in event_id-ordered chunks, folding each
     micro-batch's per-file COUNT/MIN/MAX partials into the versioned
@@ -2330,279 +2321,3 @@ def layout_zonemap_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the one-shot batch derivation (see block comment)."""
     return streamed_zonemaps(spark, sf_dir, chunks=2)
 
-
-# ---------------------------------------------------------------------------
-# Streaming BPE tokenization census (round-14 second pass; REGISTRATION
-# STAGED FOR ROUND 17 — flip the commented lines). Completes the
-# tokenizer family's streaming leg: text_bpe_merge_step trains one
-# merge, text_bpe_train the K-merge table, text_bpe_encode censuses the
-# corpus one-shot, text_bpe_token_stats profiles — and THIS tokenizes at
-# ARRIVAL: documents land in doc_id-ordered micro-batches, each batch's
-# per-(source, token) counts join the FROZEN tokenizer artifact (the
-# trained vocab's token -> n_syms table, persisted once and read back
-# per batch — exactly how a deployed pipeline ships a tokenizer: trained
-# offline, immutable at ingest), and the per-source additive partials
-# (n_pretokens, n_bpe_tokens — a SUM monoid) fold into the versioned
-# state store. The micro-ratio is derived at READ from the folded sums,
-# so the final census equals text_bpe_encode's full-corpus oracle row
-# for row, and chunk count cannot change the answer.
-#
-# Replay: sums are NOT idempotent — the already_applied guard is
-# load-bearing (the census twin's contract).
-#
-# Scale: per micro-batch the work is one tokenize pass over the BATCH
-# (regexp extract + explode, map-side), one broadcast join against the
-# vocab-sized artifact, and a |sources|-row monoid merge; state is
-# |sources| rows, the corpus is never rescanned, and the tokenizer
-# artifact is read, never retrained. At 100 TB the stream tokenizes at
-# arrival speed — the shape every LLM-ingest pipeline runs.
-# ---------------------------------------------------------------------------
-def streamed_bpe_census(
-    spark: SparkSession, sf_dir: str, chunks: int = 2
-) -> DataFrame:
-    """Run the BPE tokenization census over the documents corpus landed in
-    `chunks` doc_id-ordered micro-batches against the frozen trained
-    vocab; returns the final per-source census (source, n_pretokens,
-    n_bpe_tokens, syms_per_pretoken_micro), which must equal the
-    full-corpus one-shot text_bpe_encode."""
-    from hive_server_spark.functions import text as _T
-    from hive_server_spark.plans.text_pack import _bpe_train
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        await_stream_with_retry,
-    )
-
-    work = tempfile.mkdtemp(dir=session_scratch("bpe_stream"))
-    # the frozen tokenizer artifact: train once (session-cached), persist
-    # the token -> n_syms table, and read it back per batch — the
-    # prior-snapshot discipline (emb_pq_incremental), not a batch-0 freeze
-    _merges, vocab = _bpe_train(spark, sf_dir)
-    enc_path = os.path.join(work, "enc")
-    vocab.select(
-        "token", F.size(F.split("symseq", " ")).cast("bigint").alias("n_syms")
-    ).write.mode("overwrite").parquet(enc_path)
-
-    d = _land_documents(spark, sf_dir, chunks)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    ckpt = os.path.join(work, "ckpt")
-    store = ParquetStateStore(os.path.join(work, "census"), run_id=ckpt)
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no-freeze: the tokenizer artifact is persisted TRAIN metadata
-        # (token -> n_syms), shipped frozen and read back per batch — it
-        # is not derived from any batch's slice, so the batch-0
-        # commit_seed_state contract does not apply. The census sums are
-        # NOT idempotent — the already_applied guard is load-bearing.
-        if store.already_applied(batch_id):
-            return
-        ss = batch_df.sparkSession
-        enc = ss.read.parquet(enc_path)
-        part = (
-            batch_df.select(
-                "source",
-                F.explode(F.expr(_T.bpe_tokens_expr("text", "s"))).alias(
-                    "token"
-                ),
-            )
-            .groupBy("source", "token")
-            .agg(F.count("*").alias("cnt"))
-            .join(F.broadcast(enc), "token")
-            .groupBy("source")
-            .agg(
-                F.sum("cnt").cast("bigint").alias("n_pretokens"),
-                F.sum(F.col("cnt") * F.col("n_syms"))
-                .cast("bigint")
-                .alias("n_bpe_tokens"),
-            )
-        )
-        prev = store.latest(ss)
-        merged = (
-            part
-            if prev is None
-            else prev.unionByName(part)
-            .groupBy("source")
-            .agg(
-                F.sum("n_pretokens").cast("bigint").alias("n_pretokens"),
-                F.sum("n_bpe_tokens").cast("bigint").alias("n_bpe_tokens"),
-            )
-        )
-        store.commit(merged, batch_id)
-
-    with _scoped_shuffle_partitions(spark):
-        writer = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        await_stream_with_retry(writer.start)
-    out = store.latest(spark)
-    return out.select(
-        "source",
-        "n_pretokens",
-        "n_bpe_tokens",
-        F.round(
-            1000000.0 * F.col("n_bpe_tokens") / F.col("n_pretokens")
-        )
-        .cast("bigint")
-        .alias("syms_per_pretoken_micro"),
-    )
-
-
-# round 17 (flip both lines):
-# from hive_server_spark.plans.text_pack import _BPE_ENCODE_ORACLE
-# @register("text_bpe_streaming", _BPE_ENCODE_ORACLE)
-def text_bpe_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream the documents corpus in doc_id-ordered chunks, tokenize each
-    micro-batch against the frozen trained vocab, and fold the per-source
-    census partials into the versioned state store; return the final
-    census, which must equal the one-shot text_bpe_encode (see block
-    comment)."""
-    return streamed_bpe_census(spark, sf_dir, chunks=2)
-
-
-# ---------------------------------------------------------------------------
-# Streaming AUDIO-fingerprint near-dup ingest (round-14 second pass;
-# REGISTRATION STAGED FOR ROUND 17 — flip the commented @register).
-# Closes the last modality gap in the streaming ingest matrix: text,
-# image, embeddings (IVF + PQ), and layout (DV + zone maps) all have
-# arrival-time members; audio had only the batch near-dup and the fused
-# batch-incremental refresh. Same shape as the image twin
-# (streamed_media_neardup): the media-bearing corpus slice
-# (doc_id % _MEDIA_STREAM_MOD — the SAME slice; a doc's bundle carries
-# its thumbnail and its audio track together) lands in media_id-ordered
-# micro-batches, each batch synthesizes + WAV-decodes ONLY its own
-# clips, its frame-energy fingerprint band partials MIN-merge into the
-# versioned band index, and the batch flags against the post-merge
-# index. Replay: the merge is an idempotent semilattice; the flags
-# append is guarded (load-bearing). The final flags table must equal
-# the batch occupied-band rule on the same slice — the slice-scoped
-# _audio_fp_bands_ctes oracle.
-#
-# Scale: state is (band_idx, band_val, min_media_id) — bytes per clip,
-# not samples; payloads never shuffle (partition-preserving decode
-# inside the batch); at 100 TB the stream ingests at WAV-decode speed
-# and the index grows with DISTINCT band values only.
-# ---------------------------------------------------------------------------
-from hive_server_spark.plans.multimodal_pack import _audio_fp_bands_ctes  # noqa: E402
-
-_AUDIO_NEARDUP_STREAM_ORACLE = f"""
-WITH {_audio_fp_bands_ctes(
-    f"(SELECT * FROM documents WHERE doc_id % {_MEDIA_STREAM_MOD} = 0)"
-)},
-bmin AS (
-  SELECT band_idx, band_val, MIN(doc_id) AS min_id
-  FROM bands GROUP BY band_idx, band_val
-),
-j AS (
-  SELECT b.doc_id, m.min_id
-  FROM bands b
-  JOIN bmin m ON b.band_idx = m.band_idx AND b.band_val = m.band_val
-  WHERE m.min_id < b.doc_id
-)
-SELECT CAST(j.doc_id AS BIGINT)      AS media_id,
-       CAST(COUNT(*) AS BIGINT)      AS n_occupied_bands,
-       CAST(MIN(j.min_id) AS BIGINT) AS partner_media_id
-FROM j GROUP BY j.doc_id
-"""
-
-
-def streamed_audio_neardup(
-    spark: SparkSession, sf_dir: str, chunks: int = 2,
-    media_mod: int = _MEDIA_STREAM_MOD,
-) -> DataFrame:
-    """Run the incremental audio-fingerprint band index over the media
-    corpus landed in `chunks` media_id-ordered micro-batches; each batch
-    WAV-decodes ONLY its own clips. Returns the final flags table
-    (media_id, n_occupied_bands, partner_media_id); chunk count must not
-    change the answer. `media_mod` selects the media-bearing slice, as
-    in the image twin."""
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        await_stream_with_retry,
-    )
-
-    work = tempfile.mkdtemp(dir=session_scratch("audio_neardup_stream"))
-    d = _land_documents(spark, sf_dir, chunks)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    ckpt = os.path.join(work, "ckpt")
-    bands_store = ParquetStateStore(os.path.join(work, "bands"), run_id=ckpt)
-    flags_store = ParquetStateStore(os.path.join(work, "flags"), run_id=ckpt)
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no-freeze: the fingerprint band index is a MIN semilattice —
-        # no id-windowed bootstrap artifact, commit_seed_state does not
-        # apply (static audit: test_streaming). The flags append is NOT
-        # idempotent — that guard is load-bearing.
-        ss = batch_df.sparkSession
-        wide = _M.audio_fingerprint_bands(
-            _M.synthesize_fpwav_media(
-                batch_df.where(F.col("doc_id") % media_mod == 0)
-                .repartition(ss.sparkContext.defaultParallelism)
-            )
-        )
-        bands = _M.band_long(wide).persist()
-        try:
-            if not bands_store.already_applied(batch_id):
-                part = bands.groupBy("band_idx", "band_val").agg(
-                    F.min("media_id").alias("min_media_id")
-                )
-                cur = bands_store.latest(ss)
-                merged = (
-                    part
-                    if cur is None
-                    else cur.unionByName(part)
-                    .groupBy("band_idx", "band_val")
-                    .agg(F.min("min_media_id").alias("min_media_id"))
-                )
-                bands_store.commit(merged, batch_id)
-            if not flags_store.already_applied(batch_id):
-                state = bands_store.latest(ss)
-                flagged = (
-                    bands.join(state, ["band_idx", "band_val"])
-                    .where(F.col("min_media_id") < F.col("media_id"))
-                    .groupBy("media_id")
-                    .agg(
-                        F.count("*").alias("n_occupied_bands"),
-                        F.min("min_media_id").alias("partner_media_id"),
-                    )
-                )
-                prev = flags_store.latest(ss)
-                flags_store.commit(
-                    flagged if prev is None else prev.unionByName(flagged),
-                    batch_id,
-                )
-        finally:
-            bands.unpersist()
-
-    with _scoped_shuffle_partitions(spark):
-        writer = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        await_stream_with_retry(writer.start)
-    out = flags_store.latest(spark)
-    return out.select(
-        F.col("media_id").cast("bigint").alias("media_id"),
-        F.col("n_occupied_bands").cast("bigint").alias("n_occupied_bands"),
-        F.col("partner_media_id").cast("bigint").alias("partner_media_id"),
-    )
-
-
-# round 17: @register("audio_neardup_streaming", _AUDIO_NEARDUP_STREAM_ORACLE)
-def audio_neardup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream the media corpus in media_id-ordered chunks, WAV-decode each
-    micro-batch once, and maintain the audio-fingerprint band near-dup
-    index incrementally; return the flagged-media table, which must equal
-    the batch occupied-band rule on the same slice (see block comment)."""
-    return streamed_audio_neardup(spark, sf_dir, chunks=2)

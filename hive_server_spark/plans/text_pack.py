@@ -1701,15 +1701,14 @@ def line_dedup_report(docs: DataFrame, df_cut: int = LINE_DF_CUT) -> DataFrame:
     per = lines.groupBy("doc_id", F.md5("line").alias("h")).agg(
         F.count("*").alias("c"), F.max(F.length("line")).alias("ln")
     )
-    # ONE pass over the per-(doc, line) table, the oracle's own shape
-    # (optimization r16): join the full line-df table and split kept vs
-    # dropped with conditional sums in a single doc-keyed aggregate. The
-    # pre-r16 form derived three children from `per` (survivor set,
-    # dropped rollup, totals rollup) — three rebuilds of the exploded
-    # corpus (3 parquet scans in plans/r16/text_line_dedup_before.txt)
-    # plus an extra doc-keyed shuffle for the totals/dropped outer join;
-    # here both `freq` and the probe repartition `per` identically on h,
-    # so the build is shared (ReusedExchange) and the corpus explodes once.
+    # ONE pass over the per-(doc, line) table, the oracle's own shape:
+    # join the full line-df table and split kept vs dropped with
+    # conditional sums in a single doc-keyed aggregate. Deriving separate
+    # children from `per` (survivor set, dropped rollup, totals rollup)
+    # would rebuild the exploded corpus once per child and add a
+    # doc-keyed shuffle for the totals/dropped outer join; here both
+    # `freq` and the probe repartition `per` identically on h, so the
+    # build is shared (ReusedExchange) and the corpus explodes once.
     freq = per.groupBy("h").agg(F.count("*").alias("df"))
     is_dup = F.col("df") >= df_cut
     j = per.join(freq, "h").groupBy("doc_id").agg(
@@ -4170,10 +4169,12 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `quantile_cont` on identical doubles, the rel_exact_percentiles
 # precedent) because both engines see the identical capped slice.
 # Scale: per-doc scores are the text_bigram_nll plan (gram-cache folds);
-# the threshold table is |sources| rows LEFT-joined back hint-free (AQE
-# broadcasts it); the bucket rollup is a bounded-key hash agg. Docs with
-# < 2 tokens have no bigrams, no score, and no bucket — mirrored in both
-# engines.
+# the threshold table is |sources| rows LEFT-joined back under an
+# explicit broadcast (its percentile aggregate carries no size estimate,
+# so without the hint the join strategy would follow whatever else the
+# session has cached); the bucket rollup is a bounded-key hash agg.
+# Docs with < 2 tokens have no bigrams, no score, and no bucket —
+# mirrored in both engines.
 # ---------------------------------------------------------------------------
 _CCNET_HELDOUT_MOD = 3  # ~1/3 of docs reach the capped draw; raise at scale
 _CCNET_HELDOUT_CAP = 256  # exact-percentile buffer bound, per source
@@ -4246,7 +4247,7 @@ def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile(F.col("mean_micro").cast("double"), 0.66).alias("g66"),
     )
     bucketed = (
-        per_doc.join(thr, "source", "left")
+        per_doc.join(F.broadcast(thr), "source", "left")
         .crossJoin(F.broadcast(gthr))
         .select(
             "source",
@@ -4347,16 +4348,14 @@ def text_hash_features_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# LEARNED quality classifier (round 10 library; REGISTRATION DEFERRED TO
-# ROUND 11 — the round-10 driver window is exactly full, gate.py rotation
-# note). The missing half of text_hash_features_score: that query APPLIES a
-# fixed weight table; this one TRAINS the table distributedly — the
-# fastText-shaped classifier loop big curation pipelines actually fit
-# (CCNet's LM filter, LLaMA's wiki-reference classifier), reduced to its
-# Spark-first essence as a BATCH PERCEPTRON (McDonald, Hall & Mann 2010,
-# "Distributed Training Strategies for the Perceptron"): per step, score
-# every doc against the broadcast weight vector, accumulate the update
-# Σ y·x over misclassified docs as a per-bucket integer SUM (map-side
+# LEARNED quality classifier. The missing half of text_hash_features_score:
+# that query APPLIES a fixed weight table; this one TRAINS the table
+# distributedly — the fastText-shaped classifier loop big curation pipelines
+# actually fit (CCNet's LM filter, LLaMA's wiki-reference classifier),
+# reduced to its Spark-first essence as a BATCH PERCEPTRON (McDonald, Hall &
+# Mann 2010, "Distributed Training Strategies for the Perceptron"): per
+# step, score every doc against the broadcast weight vector, accumulate the
+# update Σ y·x over misclassified docs as a per-bucket integer SUM (map-side
 # combined, order-free — the entire trainer is INTEGER arithmetic, so the
 # hash gate needs no float tolerance anywhere), add it to the weights.
 #

@@ -24,7 +24,7 @@ operators the gate value-checks one by one. Stages:
                        (emb_ivf_recall_curve)
   9. maintain        - retention-delete census subtract, reconciled
                        against the tombstone count
-                       (emb_ivf_delete_maintenance, staged round 16)
+                       (emb_ivf_delete_maintenance)
   10. monitor        - cell-skew audit + distortion-ranked split plan
                        over the build census
                        (emb_ivf_rebalance_plan, round 15 — unregistered)
@@ -138,7 +138,7 @@ def main() -> None:
     # stage 9 (round 14): index maintenance under a retention DELETE —
     # the tombstoned slice's census partials subtracted from the
     # persisted build census, equal to the rebuild over survivors
-    # (emb_ivf_delete_maintenance, staged round 16). The survivor-count
+    # (emb_ivf_delete_maintenance). The survivor-count
     # reconciliation is the pipeline-level version of its gate contract.
     from hive_server_spark.plans.embedding_pack import (
         _IVF_DELETE_PRED,

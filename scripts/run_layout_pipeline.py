@@ -13,7 +13,7 @@ same operators the gate value-checks one by one. Stages:
                      state every pruning read depends on
                      (one-shot derivation, or --incremental: the
                      streaming ingest streamed_zonemaps —
-                     layout_zonemap_streaming, staged round 16)
+                     layout_zonemap_streaming)
   4. skipping audit- the read-side proof: four predicates evaluated
                      against the maps, files skipped vs rows scanned
                      (layout_zonemap_skipping)

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from hive_server_spark.session import get_spark  # noqa: E402
 
 # the composed chain, in execution order (gate-registered stages; the
-# staged bundle verdict is imported directly below)
+# bundle verdict is imported directly below)
 MEDIA_STAGES = [
     "multimodal_inventory",
     "multimodal_phash_neardup",

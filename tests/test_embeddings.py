@@ -785,7 +785,7 @@ def test_pq_incremental_equals_full_rebuild(spark):
     encode, append to prior codes) must equal emb_pq_codes' full-corpus
     rebuild row-for-row, AND the DuckDB full-rebuild oracle — the
     refresh-≡-rebuild pin the IVF census has, extended to the codes
-    table (round-12 staged registration)."""
+    table."""
     import duckdb
 
     from hive_server_spark.functions.embeddings import pq_codes_oracle
@@ -846,7 +846,7 @@ def test_pq_train_update_matches_oracle(spark):
 
 
 def test_ivfpq_rerank_topk_contract_and_oracle(spark):
-    """The (round-13/14 staged) two-stage IVF-PQ serve: the re-ranked
+    """The two-stage IVF-PQ serve: the re-ranked
     top-k must be exactly the exact-distance re-sort of the ADC
     shortlist's head, every returned row must come FROM the shortlist,
     exact_micro must be ascending, and the whole table must match the
@@ -888,7 +888,7 @@ def test_ivfpq_rerank_topk_contract_and_oracle(spark):
 
 
 def test_ivf_delete_maintenance_equals_rebuild_and_oracle(spark):
-    """The (round-16 staged) IVF delete maintenance: subtracting the
+    """The IVF delete maintenance: subtracting the
     tombstoned slice's census partials from the persisted build census
     must equal the full rebuild over the surviving corpus — row for row
     in Spark, and against the predicate-scoped DuckDB build oracle. The

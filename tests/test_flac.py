@@ -341,7 +341,7 @@ def test_flac_to_wav_composes_with_wav_consumers():
 
 
 def test_flac_profile_oracle_parity(spark, tmp_path):
-    """Full Spark-vs-DuckDB parity of the (round-12 staged) FLAC decode
+    """Full Spark-vs-DuckDB parity of the FLAC decode
     profile on a crafted corpus (incl. an empty doc — the '0' fallback and
     the verbatim degenerate) AND the sf0.001 corpus, plus a closed-form
     spot check of the integer amplitude total."""

@@ -1429,7 +1429,7 @@ def test_incremental_band_index_video_fingerprint(spark, tmp_path):
 
 
 def test_bundle_neardup_planted_and_oracle_parity(spark, tmp_path):
-    """Fused multimodal bundle dedup (round-13 staged): a byte-identical
+    """Fused multimodal bundle dedup: a byte-identical
     bundle twin flags on ALL THREE modalities with one canonical partner;
     a doc sharing only the 16-char media header flags on image+audio but
     keeps its own text verdict; a unique doc keeps. Then full
@@ -1482,10 +1482,10 @@ def test_bundle_neardup_planted_and_oracle_parity(spark, tmp_path):
 
 
 def test_media_fp_incremental_planted_and_oracle_parity(spark, tmp_path):
-    """The (round-13 staged) fused audio+video fingerprint incremental
+    """The fused audio+video fingerprint incremental
     refresh: planted cross-snapshot dups must flag in BOTH modalities
     with the prior-corpus partner and the fresh batch member must stay
-    unflagged; then full Spark-vs-DuckDB parity of the staged query on
+    unflagged; then full Spark-vs-DuckDB parity of the registered query on
     the crafted corpus AND the sf0.001 corpus (non-vacuous)."""
     import duckdb
     import pyarrow as pa

@@ -49,7 +49,11 @@ def test_no_sort_merge_join_anywhere_in_gate(spark):
     - emb_lsh_neardup_topk: bucket self-join, both sides are the corpus;
     - dedup_clusters: iterative graph joins, co-partitioned by design
       (broadcasting labels would break on billion-edge graphs);
-    - rel_full_outer_nation_activity: FULL OUTER has no broadcast form."""
+    - rel_full_outer_nation_activity: FULL OUTER has no broadcast form.
+    No query, exempt or not, may plan a CartesianProduct: an unbroadcast
+    cross join is never right. BroadcastNestedLoopJoin is allowed, for
+    bounded scalar broadcasts (a 1-row total or k-row centroid table
+    cross-joined onto every row)."""
     exempt = {
         "orders_state_streaming",
         "evt_hourly_rollup_streaming",  # runs a real stream; plan is a memory-table scan
@@ -153,14 +157,15 @@ def test_no_sort_merge_join_anywhere_in_gate(spark):
     }
     offenders = []
     for name in sorted(gate.spark_queries()):
-        if name in exempt:
-            continue
         try:
-            if "SortMergeJoin" in _plan(spark, name):
-                offenders.append(name)
+            plan = _plan(spark, name)
         except Exception as e:  # pragma: no cover
             pytest.fail(f"{name}: explain failed: {e}")
-    assert not offenders, f"sort-merge joins crept into: {offenders}"
+        if "CartesianProduct" in plan:
+            offenders.append(f"{name}: CartesianProduct")
+        if "SortMergeJoin" in plan and name not in exempt:
+            offenders.append(f"{name}: SortMergeJoin")
+    assert not offenders, f"plan-shape offenders: {offenders}"
 
 
 def test_survivor_set_joins_are_not_hint_forced(spark):
@@ -205,59 +210,3 @@ def test_packing_prefix_sum_is_two_level(spark):
         assert all("bucket" in s for s in source_only), (
             f"{name}: offset window must order by bucket subtotals: {source_only}"
         )
-
-
-def test_staged_queries_plan_preflight(spark):
-    """Every query staged behind a commented @register must already meet
-    the registered-surface plan bar BEFORE its flip round: no
-    CartesianProduct (an unbroadcast cross join is never right), and no
-    SortMergeJoin unless its exemption is pre-written in smj_exempt
-    (none among the currently staged seven; layout_bucketed_join's
-    deliberate zero-exchange SMJ registered in r15 and is exempted in
-    the registered-surface audit above).
-    BroadcastNestedLoopJoin is allowed: the registered surface uses it
-    deliberately for bounded scalar broadcasts (a 1-row total or k-row
-    centroid table cross-joined onto every row — emb_ivf_build carries
-    six), which is a map-side replicate, not a quadratic join. Catching
-    a plan regression here costs a code review; catching it at flip
-    time costs a driver round."""
-    from hive_server_spark.plans.embedding_pack import (
-        emb_ivf_delete_maintenance,
-    )
-    from hive_server_spark.plans.relational import dq_referential_report
-    from hive_server_spark.plans.serving_pack import (
-        q_serving_amount_out_json,
-        q_serving_order_book_json,
-    )
-    from hive_server_spark.plans.streaming_pack import (
-        audio_neardup_streaming,
-        layout_zonemap_streaming,
-        text_bpe_streaming,
-    )
-
-    # The r15 flips (emb_pq_streaming, layout_dv_streaming,
-    # layout_bucketed_join) registered and moved to the registered-surface
-    # audits (test_no_sort_merge_join_anywhere_in_gate + PLANS.md).
-    staged = {
-        "audio_neardup_streaming": audio_neardup_streaming,
-        "layout_zonemap_streaming": layout_zonemap_streaming,
-        "emb_ivf_delete_maintenance": emb_ivf_delete_maintenance,
-        "serving_order_book_json": q_serving_order_book_json,
-        "dq_referential_report": dq_referential_report,
-        "text_bpe_streaming": text_bpe_streaming,
-        "serving_amount_out_json": q_serving_amount_out_json,
-    }
-    smj_exempt: set[str] = set()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    offenders = []
-    for name, fn in staged.items():
-        plan = (
-            fn(spark, SF_SMALL)._jdf.queryExecution().explainString(mode)
-        )
-        if "CartesianProduct" in plan:
-            offenders.append(f"{name}: CartesianProduct")
-        if "SortMergeJoin" in plan and name not in smj_exempt:
-            offenders.append(f"{name}: unexempted SortMergeJoin")
-    assert not offenders, f"staged-query plan preflight failed: {offenders}"

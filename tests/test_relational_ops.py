@@ -245,7 +245,7 @@ def test_capped_heldout_is_partition_layout_independent(spark):
 
 
 def test_dq_referential_report_violations_and_oracle(spark, tmp_path):
-    """The (round-16 staged) referential-integrity suite. Crafted corpus:
+    """The referential-integrity suite. Crafted corpus:
     a duplicate customer key, a NULL and a dangling order FK — every
     violation class must be counted (nulls are violations, not silent
     passes). Then full DuckDB oracle parity on the sf0.001 tables."""

@@ -334,7 +334,7 @@ def test_schema_evolution_python_recompute(spark):
 
 
 def test_snapshot_expiry_python_recompute_and_oracle(spark):
-    """The (round-13/14 staged) snapshot-expiry report vs a pure-python
+    """The snapshot-expiry report vs a pure-python
     recompute of the v1→v2→v3 reference sets AND the DuckDB oracle:
     physical files are (file_id, content), reclaimable iff the last
     referencing snapshot is the expired v1, the compacted quarantine
@@ -433,7 +433,7 @@ def test_snapshot_expiry_python_recompute_and_oracle(spark):
 
 
 def test_bucketed_join_zero_exchange_and_oracle_parity(spark):
-    """The (round-15 staged) bucketed co-located join: both sides are
+    """The bucketed co-located join: both sides are
     written bucketBy(8, custkey), so the fact⋈dim SortMergeJoin must run
     with NO Exchange beneath it — the only Exchange in the whole plan is
     the final per-segment aggregate — and the rollup must match the

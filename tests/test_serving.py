@@ -131,7 +131,7 @@ def test_serving_pack_json_is_parseable(spark):
 
 
 def test_serving_order_book_json_oracle_parity_and_contract(spark):
-    """The (round-16 staged) depth-20 book JSON route: byte-identical to
+    """The depth-20 book JSON route: byte-identical to
     the DuckDB concatenation oracle at sf0.001, parseable, bids strictly
     price-descending / asks ascending, and FIFO (created_seq) order ids
     within each level — the price-time-priority contract as a string."""
@@ -173,123 +173,3 @@ def test_serving_order_book_json_oracle_parity_and_contract(spark):
                 saw_multi_order_level = True
     # the FIFO-within-level contract must actually be exercised
     assert saw_multi_order_level
-
-
-def test_serving_amount_out_json_oracle_parity_and_error_branches(spark):
-    """The (round-17 staged) amount-out JSON route: byte parity with the
-    DuckDB oracle at sf0.001 (success branch), INSUFFICIENT-branch parity
-    under an amount no book can fill (both engines re-run the walk at
-    10^9 quote units), and the NO-LIQUIDITY branch rendered from a
-    crafted one-sided book (no oracle row exists to compare — the sf
-    corpora have no empty side — so the Spark rendering contract is
-    pinned directly)."""
-    import json as _json
-
-    import duckdb
-    from pyspark.sql import functions as F
-
-    from hive_server_spark.operators.amount_out import (
-        NO_LIQUIDITY,
-        amount_out,
-        amount_out_ctes,
-    )
-    from hive_server_spark.plans.serving_pack import (
-        _AMOUNT_OUT_JSON_ORACLE,
-        _orders_state,
-        q_serving_amount_out_json,
-    )
-    from hive_server_spark.plans.serving_pack import (
-        ORDER_EVENTS_CTE,
-        ORDER_UPDATES_CTE,
-        ORDERS_STATE_CTE,
-    )
-    from tests.conftest import SF_SMALL
-
-    def render(result):
-        return result.select(
-            "pool_address",
-            F.to_json(
-                F.struct(
-                    F.col("pool_address").alias("pool"),
-                    F.col("is_error").alias("isError"),
-                    F.col("error_message").alias("errorMessage"),
-                    F.floor(F.col("output_amount") * 1e6)
-                    .cast("bigint")
-                    .alias("outputAmountMicro"),
-                    F.transform(
-                        F.col("hit_prices"), lambda p: p.cast("string")
-                    ).alias("prices"),
-                )
-            ).alias("json"),
-        )
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{SF_SMALL}/events.parquet'"
-    )
-
-    # success branch: the staged query vs its oracle, byte for byte
-    got = sorted(
-        tuple(r) for r in q_serving_amount_out_json(spark, SF_SMALL).collect()
-    )
-    orc = sorted(
-        tuple(r)
-        for r in con.execute(_AMOUNT_OUT_JSON_ORACLE).fetchall()
-    )
-    assert got == orc and len(got) > 0
-    assert any(not _json.loads(doc)["isError"] for _, doc in got)
-
-    # INSUFFICIENT branch: an amount no book fills — same oracle chain,
-    # larger amount, still byte-identical
-    big = "CAST(1000000000 AS DECIMAL(18,3))"
-    big_oracle = (
-        f"WITH {ORDER_EVENTS_CTE}, {ORDER_UPDATES_CTE}, {ORDERS_STATE_CTE}"
-        + amount_out_ctes("BUY", amount=big)
-        + """
-SELECT pool_address,
-       '{"pool":"' || pool_address ||
-       '","isError":' || CASE WHEN is_error THEN 'true' ELSE 'false' END ||
-       CASE WHEN n_levels = 0
-              THEN ',"errorMessage":"No liquidity available"'
-            WHEN is_error
-              THEN ',"errorMessage":"Insufficient liquidity"'
-            ELSE '' END ||
-       ',"outputAmountMicro":' ||
-       CAST(CAST(floor(output_amount * 1000000.0) AS BIGINT) AS VARCHAR) ||
-       ',"prices":' ||
-       CASE WHEN hit_prices = '' THEN '[]'
-            ELSE '["' || replace(hit_prices, ',', '","') || '"]' END ||
-       '}' AS json
-FROM amount_out_result
-"""
-    )
-    got_big = sorted(
-        tuple(r)
-        for r in render(
-            amount_out(_orders_state(spark, SF_SMALL), "BUY", 10**9)
-        ).collect()
-    )
-    orc_big = sorted(tuple(r) for r in con.execute(big_oracle).fetchall())
-    assert got_big == orc_big
-    parsed = [_json.loads(doc) for _, doc in got_big]
-    assert all(p["isError"] for p in parsed)
-    assert all(p["errorMessage"] == "Insufficient liquidity" for p in parsed)
-
-    # NO-LIQUIDITY branch: crafted one-sided book (BUY orders only, so a
-    # BUY walk finds an empty ask side) — rendering contract only
-    one_sided = spark.createDataFrame(
-        [("pool_x", 1, "T1", 100.0, 10.0, 0.0, "BUY", True, 1)],
-        "pool_address string, order_id long, trader string, price double, "
-        "amount double, filled double, order_type string, active boolean, "
-        "created_seq long",
-    ).select(
-        "pool_address", "order_id", "trader",
-        F.col("price").cast("decimal(12,3)").alias("price"),
-        F.col("amount").cast("decimal(18,3)").alias("amount"),
-        F.col("filled").cast("decimal(18,3)").alias("filled"),
-        "order_type", "active", "created_seq",
-    )
-    [(_, doc)] = render(amount_out(one_sided, "BUY", 500)).collect()
-    p = _json.loads(doc)
-    assert p["isError"] and p["errorMessage"] == NO_LIQUIDITY
-    assert p["outputAmountMicro"] == 0 and p["prices"] == []

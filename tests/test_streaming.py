@@ -627,7 +627,7 @@ def test_incremental_neardup_cross_snapshot_and_intra_batch(spark, tmp_path):
 
 
 def test_media_neardup_streaming_chunk_invariance_and_oracle(spark, tmp_path):
-    """The (round-13 staged) streaming MEDIA near-dup ingest: micro-batch
+    """The streaming MEDIA near-dup ingest: micro-batch
     boundary invariance (1 vs 3 media_id-ordered chunks), equality with
     the batch occupied-band rule recomputed from the full-corpus band
     table, planted cross-chunk dups, and DuckDB oracle parity on the
@@ -738,7 +738,7 @@ def test_media_neardup_streaming_chunk_invariance_and_oracle(spark, tmp_path):
 
 
 def test_emb_ivf_streaming_chunk_invariance_and_rebuild_equality(spark):
-    """The (round-13/14 staged) streaming IVF census ingest: the final
+    """The streaming IVF census ingest: the final
     census must be micro-batch-boundary invariant (1 vs 3 vec_id-ordered
     chunks), equal emb_ivf_build's full-corpus rebuild row-for-row, and
     match the DuckDB full-rebuild oracle."""
@@ -778,7 +778,7 @@ def test_emb_ivf_streaming_chunk_invariance_and_rebuild_equality(spark):
 
 
 def test_emb_pq_streaming_chunk_invariance_and_rebuild_equality(spark):
-    """The (round-15 staged) streaming PQ-codes ingest: the final codes
+    """The streaming PQ-codes ingest: the final codes
     table must be micro-batch-boundary invariant (1 vs 3 vec_id-ordered
     chunks), equal emb_pq_codes' full-corpus rebuild row-for-row, and
     match the DuckDB full-rebuild oracle."""
@@ -813,7 +813,7 @@ def test_emb_pq_streaming_chunk_invariance_and_rebuild_equality(spark):
 
 
 def test_layout_dv_streaming_chunk_invariance_and_oneshot_equality(spark):
-    """The (round-15 staged) streaming DELETE ingest: the final
+    """The streaming DELETE ingest: the final
     deletion-vector report must be micro-batch-boundary invariant (1 vs
     3 event_id-ordered chunks — 3 forces files to straddle batch
     boundaries, exercising the cross-batch position offsets), equal the
@@ -939,7 +939,7 @@ def test_every_ingest_freezes_via_helper_or_declares_no_freeze():
 
 
 def test_layout_zonemap_streaming_chunk_invariance_and_batch_equality(spark):
-    """The (round-16 staged) streaming zone-map maintenance: the final
+    """The streaming zone-map maintenance: the final
     per-file statistics must be micro-batch-boundary invariant (1 vs 3
     event_id-ordered chunks — 3 forces 512-row files to straddle batch
     boundaries, exercising the cross-batch MIN/MAX/COUNT merge), and
@@ -981,150 +981,3 @@ def test_layout_zonemap_streaming_chunk_invariance_and_batch_equality(spark):
         for r in layout_zonemap_streaming(spark, SF_SMALL).collect()
     }
     assert got == one
-
-
-def test_text_bpe_streaming_chunk_invariance_and_batch_equality(spark):
-    """The (round-17 staged) streaming BPE tokenization census: the final
-    per-source census must be micro-batch-boundary invariant (1 vs 3
-    doc_id-ordered chunks), equal the one-shot text_bpe_encode row for
-    row, and match the full-corpus DuckDB oracle."""
-    import duckdb
-
-    from hive_server_spark.plans.streaming_pack import (
-        streamed_bpe_census,
-        text_bpe_streaming,
-    )
-    from hive_server_spark.plans.text_pack import (
-        _BPE_ENCODE_ORACLE,
-        text_bpe_encode,
-    )
-    from tests.conftest import SF_SMALL
-
-    one = sorted(
-        tuple(r) for r in streamed_bpe_census(spark, SF_SMALL, chunks=1).collect()
-    )
-    three = sorted(
-        tuple(r) for r in streamed_bpe_census(spark, SF_SMALL, chunks=3).collect()
-    )
-    assert one == three and len(one) > 1
-
-    batch = sorted(tuple(r) for r in text_bpe_encode(spark, SF_SMALL).collect())
-    assert one == batch
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF_SMALL}/documents.parquet'"
-    )
-    orc = sorted(tuple(r) for r in con.execute(_BPE_ENCODE_ORACLE).fetchall())
-    assert orc == one
-
-    # registered-shape smoke
-    got = sorted(
-        tuple(r) for r in text_bpe_streaming(spark, SF_SMALL).collect()
-    )
-    assert got == one
-
-
-def test_audio_neardup_streaming_chunk_invariance_and_oracle(spark, tmp_path):
-    """The (round-17 staged) streaming AUDIO near-dup ingest: planted
-    cross-chunk exact + parity dups on a crafted corpus, micro-batch
-    boundary invariance (1 vs 3), equality with the batch occupied-band
-    rule recomputed from the slice's band table, and DuckDB oracle
-    parity on crafted AND sf corpora."""
-    import duckdb
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from hive_server_spark.functions import multimodal as M
-    from hive_server_spark.plans.multimodal_pack import _docs_wide
-    from hive_server_spark.plans.streaming_pack import (
-        _AUDIO_NEARDUP_STREAM_ORACLE,
-        _MEDIA_STREAM_MOD,
-        audio_neardup_streaming,
-        streamed_audio_neardup,
-    )
-    from tests.conftest import SF_SMALL
-    from tests.test_gate_parity import _rowset
-
-    hdr = "shared audio header streamed across chunks"
-    rows = [
-        (9, hdr),                                 # chunk 1 (odd parity)
-        (10, hdr),                                # chunk 1: NOT media-bearing
-        (12, "a chunk-1-only header, distinct.."),
-        (30, hdr),                                # later chunk: parity near-dup
-        (33, hdr),                                # later chunk: exact dup of 9
-        (45, "fresh tail header, stays unflagged"),
-    ]
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                "text": pa.array([r[1] for r in rows], pa.string()),
-                "lang": pa.array(["en"] * len(rows), pa.string()),
-                "source": pa.array(["t"] * len(rows), pa.string()),
-                "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
-            }
-        ),
-        str(tmp_path / "documents.parquet"),
-    )
-    got = {
-        r.media_id: (r.n_occupied_bands, r.partner_media_id)
-        for r in audio_neardup_streaming(spark, str(tmp_path)).collect()
-    }
-    assert got[33] == (4, 9)       # byte-identical clip vs an earlier chunk
-    assert got[30] == (3, 9)       # parity flips one band; partner holds
-    assert 12 not in got and 45 not in got
-    assert 10 not in got           # non-media doc: filtered before decode
-
-    one = sorted(
-        tuple(r) for r in streamed_audio_neardup(spark, SF_SMALL, chunks=1).collect()
-    )
-    three = sorted(
-        tuple(r) for r in streamed_audio_neardup(spark, SF_SMALL, chunks=3).collect()
-    )
-    assert one == three and len(one) > 0
-
-    # batch recompute of the occupied-band rule on the same slice
-    bands = M.band_long(
-        M.audio_fingerprint_bands(
-            M.synthesize_fpwav_media(
-                _docs_wide(spark, SF_SMALL).where(
-                    F.col("doc_id") % _MEDIA_STREAM_MOD == 0
-                )
-            )
-        )
-    )
-    bmin = bands.groupBy("band_idx", "band_val").agg(
-        F.min("media_id").alias("min_id")
-    )
-    want = sorted(
-        tuple(r)
-        for r in bands.join(bmin, ["band_idx", "band_val"])
-        .where(F.col("min_id") < F.col("media_id"))
-        .groupBy("media_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_occupied_bands"),
-            F.min("min_id").cast("bigint").alias("partner_media_id"),
-        )
-        .select(
-            F.col("media_id").cast("bigint").alias("media_id"),
-            "n_occupied_bands",
-            "partner_media_id",
-        )
-        .collect()
-    )
-    assert one == want
-
-    for sf_dir in (str(tmp_path), SF_SMALL):
-        con = duckdb.connect()
-        con.execute(
-            f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-        )
-        oracle = con.execute(_AUDIO_NEARDUP_STREAM_ORACLE)
-        o_cols = [d[0] for d in oracle.description]
-        o_rows = oracle.fetchall()
-        sdf = audio_neardup_streaming(spark, sf_dir)
-        s_rows = [tuple(r) for r in sdf.collect()]
-        assert len(s_rows) == len(o_rows) > 0, sf_dir
-        assert _rowset(sdf.columns, s_rows) == _rowset(o_cols, o_rows), sf_dir

@@ -461,7 +461,7 @@ def test_avi_strf_before_strh_still_checked():
 
 
 def test_video_curation_planted_dups_and_oracle_parity(spark, tmp_path):
-    """End-to-end pipeline contract of the (round-12 staged)
+    """End-to-end pipeline contract of the
     multimodal_video_curation query on a crafted corpus: a clip
     byte-identical to a smaller clip is dropped with that partner; a clip
     at planted keyframe-Hamming-1 is dropped against the same canonical
