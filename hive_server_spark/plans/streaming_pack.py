@@ -25,10 +25,15 @@ from hive_server_spark.sources.synthetic import (
     ORDER_EVENTS_SQL,
     order_events,
 )
+from hive_server_spark.streaming.cdc import run_incremental_fold_with_cdc
 from hive_server_spark.streaming.incremental import (
+    ParquetStateStore,
     _await_bounded,
+    commit_seed_state,
+    file_stream,
     materialize_orders,
     run_incremental_fold,
+    run_stream,
 )
 from hive_server_spark.streaming.windows import hourly_rollup_stream, session_stream
 
@@ -75,17 +80,10 @@ def streamed_orders_state(
     (maxFilesPerTrigger=1 → one micro-batch per file), return the
     materialized orders state."""
     work = tempfile.mkdtemp(dir=session_scratch("stream"))
-    ev_dir = _land_order_events(spark, sf_dir, chunks)
-    schema = spark.read.parquet(ev_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
     with _scoped_shuffle_partitions(spark):
         store = run_incremental_fold(
             spark,
-            stream,
+            file_stream(spark, _land_order_events(spark, sf_dir, chunks)),
             state_dir=os.path.join(work, "state"),
             checkpoint_dir=os.path.join(work, "ckpt"),
         )
@@ -169,15 +167,8 @@ def _events_stream_in_ts_order(
     state still creates state and emits — verified with a newest-half-first
     landing). A drop-policy oracle is therefore unspecifiable; only in-order
     landings give the streaming gates a deterministic answer."""
-    ev_dir = _land_events_ts_ordered(spark, sf_dir, chunks)
-    work = tempfile.mkdtemp(dir=session_scratch("stream"))
-    schema = spark.read.parquet(ev_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
-    return stream, work
+    stream = file_stream(spark, _land_events_ts_ordered(spark, sf_dir, chunks))
+    return stream, tempfile.mkdtemp(dir=session_scratch("stream"))
 
 
 def _start_append_stream(spark: SparkSession, out: DataFrame, work: str):
@@ -311,13 +302,7 @@ def _out_band_join(
     stream_a, work = _events_stream_in_ts_order(spark, sf_dir, chunks)
     # second reader over the same landed files: both sides replay the same
     # micro-batch sequence, so their watermarks advance in lockstep
-    ev_dir = _land_events_ts_ordered(spark, sf_dir, chunks)
-    schema = spark.read.parquet(ev_dir).schema
-    stream_b = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
+    stream_b = file_stream(spark, _land_events_ts_ordered(spark, sf_dir, chunks))
     a = (
         stream_a.where(F.col("event_id") % 2 == 0)
         .select(
@@ -410,13 +395,7 @@ def _out_dedup_rollup(
     spark: SparkSession, sf_dir: str, chunks: int = 2
 ) -> tuple[DataFrame, str]:
     work = tempfile.mkdtemp(dir=session_scratch("dedup"))
-    ev_dir = _land_duplicated_events(spark, sf_dir, chunks)
-    schema = spark.read.parquet(ev_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
+    stream = file_stream(spark, _land_duplicated_events(spark, sf_dir, chunks))
     out = (
         stream.withWatermark("ts", "1 second")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -599,20 +578,11 @@ def fold_seq_slices(spark: SparkSession, sf_dir: str):
     deterministic 3-slice landing; returns (ParquetStateStore, cdc_dir)."""
 
     def build():
-        from hive_server_spark.streaming.cdc import run_incremental_fold_with_cdc
-
         work = tempfile.mkdtemp(dir=session_scratch("ttfold"))
-        ev_dir = _land_seq_slices(spark, sf_dir)
-        schema = spark.read.parquet(ev_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ev_dir)
-        )
         with _scoped_shuffle_partitions(spark):
             store, cdc_dir = run_incremental_fold_with_cdc(
                 spark,
-                stream,
+                file_stream(spark, _land_seq_slices(spark, sf_dir)),
                 state_dir=os.path.join(work, "state"),
                 checkpoint_dir=os.path.join(work, "ckpt"),
                 cdc_dir=os.path.join(work, "cdc"),
@@ -665,13 +635,7 @@ def stateful_orders_state(
     from hive_server_spark.streaming.stateful import stateful_orders_stream
 
     work = tempfile.mkdtemp(dir=session_scratch("stateful"))
-    ev_dir = _land_order_events(spark, sf_dir, chunks)
-    schema = spark.read.parquet(ev_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
+    stream = file_stream(spark, _land_order_events(spark, sf_dir, chunks))
     sink = f"stateful_{uuid.uuid4().hex[:8]}"
     with _scoped_shuffle_partitions(spark):
         q = (
@@ -802,26 +766,6 @@ _EVT_STREAM_BUILDERS = {
     "evt_sliding_rollup_streaming": _out_sliding_rollup,
 }
 
-def _run_sketch_stream(spark: SparkSession, starter, sf_dir: str, prefix: str):
-    """Start + await one foreachBatch sketch stream (CMS/HLL/CUSUM) with
-    the initial start INSIDE the transient-py4j retry — starting a
-    foreachBatch stream is itself a py4j round-trip (ADVICE r8). The work
-    dir is minted once and pinned across attempts, so a retry resumes the
-    SAME checkpoint + state exactly-once; returns the state store every
-    attempt wrote through (same pinned dir → same store)."""
-    from hive_server_spark.streaming.incremental import await_stream_with_retry
-
-    work = tempfile.mkdtemp(dir=session_scratch(prefix.strip("_").removeprefix("hss_")))
-    stores: list = []
-
-    def thunk():
-        q, store = starter(spark, sf_dir, work=work)
-        stores.append(store)
-        return q
-
-    await_stream_with_retry(thunk, attempts=3)
-    return stores[-1]
-
 
 def _evt_streaming_results(spark: SparkSession, sf_dir: str) -> dict:
     """Run the whole evt_* streaming family concurrently once per
@@ -839,40 +783,23 @@ def _evt_streaming_results(spark: SparkSession, sf_dir: str) -> dict:
             # streams DO (each micro-batch invokes a Python function over
             # py4j's callback channel), which flakes transiently under load
             # (see streaming/incremental.py::_TRANSIENT_PY4J). Policy: at
-            # most ONE Python-callback stream in flight (cms rides the
-            # append wave, hll starts after cms terminates), and each is
-            # awaited through the checkpoint-resuming retry — the replay
-            # guard makes re-delivered batches exactly-once.
-            # Pinned work dirs: a transient py4j failure retries the SAME
-            # checkpoint + state dir, so the resumed stream keeps committed
-            # progress and the store handle the results are built from IS
-            # the store the retry wrote to (a fresh dir per attempt would
-            # leave the original store holding only pre-crash batches).
-            # The INITIAL start call sits inside the retry too (ADVICE r8):
-            # starting a foreachBatch stream is itself a py4j round-trip
-            # and can fail just as transiently as a mid-stream batch.
-            # CMS still rides the append wave: its start+await runs first,
-            # while the memory-sink streams (already started above) drain
-            # concurrently in the background.
-            results = {}
-            cms_store = _run_sketch_stream(spark, start_cms_stream, sf_dir, "hss_cms_")
+            # most ONE Python-callback stream in flight, each driven by
+            # run_stream's checkpoint-resuming retry. CMS runs first, while
+            # the memory-sink streams (already started above) drain
+            # concurrently in the background; HLL and CUSUM follow.
+            results = {"evt_cms_streaming": streamed_cms(spark, sf_dir)}
             for name, q, sink in running:
                 _await_bounded(q)  # stall-windowed (see _run_append_stream)
                 results[name] = spark.table(sink)
-            results["evt_cms_streaming"] = _cms_final(spark, cms_store)
-            hll_store = _run_sketch_stream(spark, start_hll_stream, sf_dir, "hss_hll_")
-            results["evt_hll_streaming"] = _hll_final(spark, hll_store)
-            cusum_store = _run_sketch_stream(
-                spark, start_cusum_stream, sf_dir, "hss_cusum_"
-            )
-            results["evt_cusum_streaming"] = _cusum_final(spark, cusum_store)
+            results["evt_hll_streaming"] = streamed_hll(spark, sf_dir)
+            results["evt_cusum_streaming"] = streamed_cusum(spark, sf_dir)
         return results
 
     return shared(spark, ("stream:evt_streaming_family", sf_dir), build)
 
 
 # ---------------------------------------------------------------------------
-# Streaming corpus ingest (round 6): the LLM-pipeline × streaming
+# Streaming corpus ingest: the LLM-pipeline × streaming
 # intersection — a continuously-crawled corpus arrives in batches, and the
 # exact-dedup index (per content fingerprint: canonical doc, group size,
 # token mass) is maintained INCREMENTALLY, not recomputed. The per-batch
@@ -942,44 +869,16 @@ def docs_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     file) and maintain the exact-dedup index incrementally in a versioned
     parquet state store; return the final index, which must equal the
     batch GROUP BY."""
-    from hive_server_spark.streaming.incremental import ParquetStateStore
-
-    chunks = 2
     work = tempfile.mkdtemp(dir=session_scratch("docs_stream"))
-    d = _land_documents(spark, sf_dir, chunks)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    store = ParquetStateStore(os.path.join(work, "state"))
+    stream = file_stream(spark, _land_documents(spark, sf_dir, chunks=2))
+    ckpt = os.path.join(work, "ckpt")
+    store = ParquetStateStore(os.path.join(work, "state"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no-freeze: exact-dedup ingest state is a pure content-derived
-        # monoid — there is no batch-0 bootstrap artifact to freeze, so
-        # commit_seed_state does not apply (static audit: test_streaming).
-        # exactly-once over at-least-once replay: a crash between
-        # store.commit and the checkpoint commit re-delivers this batch_id;
-        # merging it twice would double-count group_size/total_tokens
-        if store.already_applied(batch_id):
-            return
-        part = _docs_ingest_partial(batch_df)
-        cur = store.latest(batch_df.sparkSession)
-        merged = part if cur is None else _docs_ingest_merge(cur, part)
-        store.commit(merged, batch_id)
+        store.apply(batch_id, _docs_ingest_partial(batch_df), _docs_ingest_merge)
 
     with _scoped_shuffle_partitions(spark):
-        from hive_server_spark.streaming.incremental import (
-            await_stream_with_retry,
-        )
-
-        writer = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-        )
-        await_stream_with_retry(writer.start)
+        run_stream(stream, ckpt, on_batch)
     out = store.latest(spark)
     return out.select(
         "fingerprint_md5",
@@ -990,7 +889,7 @@ def docs_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming NEAR-dup index (round 9, VERDICT r8 item 3): the operator a
+# Streaming NEAR-dup index: the operator a
 # continuous crawl pipeline runs next to the exact-dedup ingest index —
 # maintain the MinHash LSH band buckets incrementally and flag each newly
 # ingested document that lands in a band already occupied by an earlier
@@ -998,9 +897,9 @@ def docs_ingest_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 #   band state  — band_key → MIN(doc_id). A MIN semilattice (idempotent,
 #     commutative, associative — like the HLL registers), so re-merging a
-#     replayed batch could never change it; the replay guard still skips
-#     replays so the flags table (which is append-shaped, NOT idempotent)
-#     stays exactly-once.
+#     replayed batch could never change it; the flags table is
+#     append-shaped, NOT idempotent, so its exactly-once rests on the
+#     replay guard of ParquetStateStore.apply.
 #   flags       — per flagged doc: how many of its bands were occupied
 #     and the smallest earlier doc sharing a band (its canonical
 #     near-dup partner). Appended per batch AFTER the batch's own bands
@@ -1070,74 +969,37 @@ def streamed_docs_neardup(
     `chunks` doc_id-ordered micro-batches; returns the final flags table
     (doc_id, n_occupied_bands, partner_doc_id). Chunk count must not
     change the answer (tests/test_streaming.py)."""
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        await_stream_with_retry,
-    )
-
     work = tempfile.mkdtemp(dir=session_scratch("neardup_stream"))
-    d = _land_documents(spark, sf_dir, chunks)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    stream = file_stream(spark, _land_documents(spark, sf_dir, chunks))
     ckpt = os.path.join(work, "ckpt")
-    bands_store = ParquetStateStore(os.path.join(work, "bands"), run_id=ckpt)
-    flags_store = ParquetStateStore(os.path.join(work, "flags"), run_id=ckpt)
+    bands_store = ParquetStateStore(os.path.join(work, "bands"), ckpt)
+    flags_store = ParquetStateStore(os.path.join(work, "flags"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no-freeze: the band index is a MIN semilattice over content
-        # hashes — no id-windowed bootstrap artifact exists, so
-        # commit_seed_state does not apply (static audit: test_streaming).
-        ss = batch_df.sparkSession
         bands = _doc_bands(batch_df)
-        # 1. merge the batch into the band index (MIN semilattice). The
-        #    guard is belt-and-braces here (min-merge is idempotent) but
-        #    keeps replays from re-running the work.
-        if not bands_store.already_applied(batch_id):
-            part = bands.groupBy("band_key").agg(
-                F.min("doc_id").alias("min_doc_id")
-            )
-            cur = bands_store.latest(ss)
-            merged = (
-                part
-                if cur is None
-                else cur.unionByName(part)
-                .groupBy("band_key")
-                .agg(F.min("min_doc_id").alias("min_doc_id"))
-            )
-            bands_store.commit(merged, batch_id)
+        # 1. merge the batch into the band index (MIN semilattice)
+        bands_store.apply(
+            batch_id,
+            bands.groupBy("band_key").agg(F.min("doc_id").alias("min_doc_id")),
+            lambda cur, part: cur.unionByName(part)
+            .groupBy("band_key")
+            .agg(F.min("min_doc_id").alias("min_doc_id")),
+        )
         # 2. flag this batch's docs against the POST-merge index: a doc is
-        #    a near-dup iff some band's committed min is a smaller doc_id.
-        #    Appends are NOT idempotent — this guard is load-bearing. A
-        #    crash between the two commits replays into a bands-skip +
-        #    flags-commit, which reads the identical post-merge state.
-        if not flags_store.already_applied(batch_id):
-            state = bands_store.latest(ss)
-            flagged = (
-                bands.join(state, "band_key")
-                .where(F.col("min_doc_id") < F.col("doc_id"))
-                .groupBy("doc_id")
-                .agg(
-                    F.count("*").alias("n_occupied_bands"),
-                    F.min("min_doc_id").alias("partner_doc_id"),
-                )
+        #    a near-dup iff some band's committed min is a smaller doc_id
+        flagged = (
+            bands.join(bands_store.latest(batch_df.sparkSession), "band_key")
+            .where(F.col("min_doc_id") < F.col("doc_id"))
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").alias("n_occupied_bands"),
+                F.min("min_doc_id").alias("partner_doc_id"),
             )
-            prev = flags_store.latest(ss)
-            flags_store.commit(
-                flagged if prev is None else prev.unionByName(flagged),
-                batch_id,
-            )
+        )
+        flags_store.apply(batch_id, flagged, DataFrame.unionByName)
 
     with _scoped_shuffle_partitions(spark):
-        writer = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        await_stream_with_retry(writer.start)
+        run_stream(stream, ckpt, on_batch)
     out = flags_store.latest(spark)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1156,7 +1018,7 @@ def docs_neardup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cross-snapshot incremental dedup (round 10, VERDICT r9 item 4): the BATCH
+# Cross-snapshot incremental dedup: the BATCH
 # twin of docs_neardup_streaming — the nightly-pipeline shape, where the
 # band index is a first-class PERSISTED TABLE between corpus snapshots, not
 # in-flight stream state. A new document batch is deduped against the index
@@ -1210,13 +1072,12 @@ GROUP BY j.doc_id
 
 
 def incremental_docs_neardup(
-    spark: SparkSession, docs: DataFrame, index_path: str, batch: DataFrame
+    spark: SparkSession, index_path: str, batch: DataFrame
 ) -> DataFrame:
     """Dedup `batch` against the persisted band index at `index_path`
     (band_key, min_doc_id parquet), merging the batch's own bands in
     first. Returns the flags table (doc_id, n_occupied_bands,
-    partner_doc_id). `docs` is unused except to share the caller's session
-    conventions; kept for signature symmetry with the streaming twin."""
+    partner_doc_id)."""
     batch_bands = _doc_bands(batch)
     prior_index = spark.read.parquet(index_path)
     batch_part = batch_bands.groupBy("band_key").agg(
@@ -1264,12 +1125,12 @@ def docs_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(index_path)
     )
     return incremental_docs_neardup(
-        spark, docs, index_path, docs.where(F.col("doc_id") >= thr)
+        spark, index_path, docs.where(F.col("doc_id") >= thr)
     )
 
 
 # ---------------------------------------------------------------------------
-# Streaming count-min sketch (round 7): the sketch-monoid × streaming
+# Streaming count-min sketch: the sketch-monoid × streaming
 # intersection — the evt_cms_heavy_hitters grid, maintained INCREMENTALLY
 # over the event stream. Each micro-batch folds to its own d×w partial
 # (batch → per-user counts → ×d fan-out → (r, bucket) cells) and
@@ -1277,8 +1138,8 @@ def docs_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # monoid, so micro-batch boundaries can never change the final grid, the
 # state is BOUNDED (≤ d·w rows regardless of stream length — the whole
 # point of sketching a 100 TB stream), and the oracle is the plain batch
-# sketch. Replay-guarded like docs_ingest_streaming (skip already-applied
-# batch ids), versioned in the same vacuumable ParquetStateStore.
+# sketch. Folded through ParquetStateStore.apply like docs_ingest_streaming,
+# versioned in the same vacuumable store.
 # ---------------------------------------------------------------------------
 from hive_server_spark.plans.events_pack import _cms_hash, _CMS_D  # noqa: E402
 
@@ -1308,53 +1169,25 @@ def _cms_partial(batch: DataFrame) -> DataFrame:
     )
 
 
-def start_cms_stream(
-    spark: SparkSession, sf_dir: str, chunks: int = 2, work: str | None = None
-):
-    """Start (without awaiting) the incremental CMS stream; returns
-    (StreamingQuery, ParquetStateStore). The landed ts-ordered events dir
-    is shared with the rest of the evt_* family (one landing per session).
-
-    `work` pins the checkpoint + state directory: a retry that passes the
-    SAME work dir resumes the original checkpoint exactly-once (the
-    store's replay guard absorbs re-delivered batches). Omitting it mints
-    a fresh run — never do that inside a retry loop, the fresh store
-    would start empty while the caller still reads the original one."""
-    from hive_server_spark.streaming.incremental import ParquetStateStore
-
-    stream, fresh_work = _events_stream_in_ts_order(spark, sf_dir, chunks)
-    work = work or fresh_work
+def streamed_cms(spark: SparkSession, sf_dir: str, chunks: int = 2) -> DataFrame:
+    """Run the incremental CMS stream over the ts-ordered events landing
+    (shared with the rest of the evt_* family); returns the final grid
+    (r, bucket, cell)."""
+    stream, work = _events_stream_in_ts_order(spark, sf_dir, chunks)
     ckpt = os.path.join(work, "ckpt")
-    store = ParquetStateStore(os.path.join(work, "state"), run_id=ckpt)
+    store = ParquetStateStore(os.path.join(work, "state"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no-freeze: the CMS sketch is a counter-matrix SUM monoid — no
-        # batch-0 seed artifact, commit_seed_state does not apply.
-        if store.already_applied(batch_id):
-            return
-        part = _cms_partial(batch_df)
-        cur = store.latest(batch_df.sparkSession)
-        merged = (
-            part
-            if cur is None
-            else cur.unionByName(part)
+        store.apply(
+            batch_id,
+            _cms_partial(batch_df),
+            lambda cur, part: cur.unionByName(part)
             .groupBy("r", "bucket")
-            .agg(F.sum("cell").alias("cell"))
+            .agg(F.sum("cell").alias("cell")),
         )
-        store.commit(merged, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, store
-
-
-def _cms_final(spark: SparkSession, store) -> DataFrame:
-    out = store.latest(spark)
-    return out.select(
+    run_stream(stream, ckpt, on_batch)
+    return store.latest(spark).select(
         F.col("r").cast("bigint").alias("r"),
         F.col("bucket").cast("bigint").alias("bucket"),
         F.col("cell").cast("bigint").alias("cell"),
@@ -1371,7 +1204,7 @@ def evt_cms_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming HyperLogLog registers (round 7): the MAX-merge twin of the
+# Streaming HyperLogLog registers: the MAX-merge twin of the
 # SUM-merge CMS grid above. Each micro-batch folds its distinct
 # (event_type, user) hashes to per-(type, bucket) rank maxima; cross-batch
 # merge is cell-wise MAX — registers are a bounded join-semilattice
@@ -1415,48 +1248,24 @@ def _hll_partial(batch: DataFrame) -> DataFrame:
     )
 
 
-def start_hll_stream(
-    spark: SparkSession, sf_dir: str, chunks: int = 2, work: str | None = None
-):
-    """Start (without awaiting) the incremental HLL-register stream;
-    returns (StreamingQuery, ParquetStateStore). Shares the landed
-    ts-ordered events dir with the rest of the evt_* family. `work` pins
-    the checkpoint + state dir across retries (see start_cms_stream)."""
-    from hive_server_spark.streaming.incremental import ParquetStateStore
-
-    stream, fresh_work = _events_stream_in_ts_order(spark, sf_dir, chunks)
-    work = work or fresh_work
-    ckpt = os.path.join(work, "hll_ckpt")
-    store = ParquetStateStore(os.path.join(work, "hll_state"), run_id=ckpt)
+def streamed_hll(spark: SparkSession, sf_dir: str, chunks: int = 2) -> DataFrame:
+    """Run the incremental HLL-register stream over the ts-ordered events
+    landing; returns the final register table (event_type, bucket, reg)."""
+    stream, work = _events_stream_in_ts_order(spark, sf_dir, chunks)
+    ckpt = os.path.join(work, "ckpt")
+    store = ParquetStateStore(os.path.join(work, "state"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no-freeze: the HLL register state is a MAX semilattice — no
-        # batch-0 seed artifact, commit_seed_state does not apply.
-        if store.already_applied(batch_id):
-            return
-        part = _hll_partial(batch_df)
-        cur = store.latest(batch_df.sparkSession)
-        merged = (
-            part
-            if cur is None
-            else cur.unionByName(part)
+        store.apply(
+            batch_id,
+            _hll_partial(batch_df),
+            lambda cur, part: cur.unionByName(part)
             .groupBy("event_type", "bucket")
-            .agg(F.max("reg").alias("reg"))
+            .agg(F.max("reg").alias("reg")),
         )
-        store.commit(merged, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, store
-
-
-def _hll_final(spark: SparkSession, store) -> DataFrame:
-    out = store.latest(spark)
-    return out.select(
+    run_stream(stream, ckpt, on_batch)
+    return store.latest(spark).select(
         "event_type",
         F.col("bucket").cast("bigint").alias("bucket"),
         F.col("reg").cast("bigint").alias("reg"),
@@ -1473,14 +1282,14 @@ def evt_hll_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming CUSUM drift monitor (round 8, VERDICT r07 item 7): the
+# Streaming CUSUM drift monitor: the
 # operational twin of the batch evt_cusum_drift — drift detection is a
 # continuously-running job in practice, not a nightly batch. Split of
 # labor: the UNBOUNDED part (per-(type, hour) event counts) is maintained
 # incrementally — per micro-batch one map-side-combined hash agg, merged
 # into the versioned state store by cell-wise SUM (a monoid: micro-batch
 # boundaries can never change the hourly table, re-delivered batches are
-# absorbed by the replay guard). The BOUNDED part (the two-sided CUSUM
+# absorbed by ParquetStateStore.apply). The BOUNDED part (the two-sided CUSUM
 # fold over the last 512 hourly rates per type) runs at read time on the
 # final state via the SAME cusum_from_hourly the batch query uses — so
 # the oracle is the batch oracle, verbatim. State is time-bounded
@@ -1499,46 +1308,24 @@ def _cusum_partial(batch: DataFrame) -> DataFrame:
     ).agg(F.count("*").alias("cnt"))
 
 
-def start_cusum_stream(
-    spark: SparkSession, sf_dir: str, chunks: int = 2, work: str | None = None
-):
-    """Start (without awaiting) the incremental hourly-rate stream behind
-    the CUSUM monitor; returns (StreamingQuery, ParquetStateStore).
-    `work` pins the checkpoint + state dir across retries (see
-    start_cms_stream)."""
-    from hive_server_spark.streaming.incremental import ParquetStateStore
-
-    stream, fresh_work = _events_stream_in_ts_order(spark, sf_dir, chunks)
-    work = work or fresh_work
-    ckpt = os.path.join(work, "cusum_ckpt")
-    store = ParquetStateStore(os.path.join(work, "cusum_state"), run_id=ckpt)
+def streamed_cusum(spark: SparkSession, sf_dir: str, chunks: int = 2) -> DataFrame:
+    """Run the incremental hourly-rate stream behind the CUSUM monitor
+    over the ts-ordered events landing; returns the drift maxima folded
+    from the final hourly table."""
+    stream, work = _events_stream_in_ts_order(spark, sf_dir, chunks)
+    ckpt = os.path.join(work, "ckpt")
+    store = ParquetStateStore(os.path.join(work, "state"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no-freeze: the CUSUM partials fold as an ordered-segment monoid
-        # — no batch-0 seed artifact, commit_seed_state does not apply.
-        if store.already_applied(batch_id):
-            return
-        part = _cusum_partial(batch_df)
-        cur = store.latest(batch_df.sparkSession)
-        merged = (
-            part
-            if cur is None
-            else cur.unionByName(part)
+        store.apply(
+            batch_id,
+            _cusum_partial(batch_df),
+            lambda cur, part: cur.unionByName(part)
             .groupBy("event_type", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
+            .agg(F.sum("cnt").alias("cnt")),
         )
-        store.commit(merged, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, store
-
-
-def _cusum_final(spark: SparkSession, store) -> DataFrame:
+    run_stream(stream, ckpt, on_batch)
     hourly = store.latest(spark).select(
         "event_type", "bucket", F.col("cnt").cast("double").alias("cnt")
     )
@@ -1553,6 +1340,8 @@ def evt_cusum_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment; SUM-monoid state, bounded read-side fold, exactly-once under
     replay). Runs in the evt_* family wave."""
     return _evt_streaming_results(spark, sf_dir)["evt_cusum_streaming"]
+
+
 # ---------------------------------------------------------------------------
 # Streaming media near-dup ingest. The MEDIA twin
 # of docs_neardup_streaming, completing the ingest matrix: text has
@@ -1572,9 +1361,8 @@ def evt_cusum_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rule, which is the oracle below (_PHASH_BANDS_CTES + the bmin/j chain,
 # unrestricted). Chunk count must not change the answer (pinned by
 # tests/test_streaming.py). Crash/replay: the band merge is an idempotent
-# semilattice; the flags append is guarded by already_applied — a crash
-# between the two commits replays into a bands-skip + flags-commit that
-# reads identical post-merge state.
+# semilattice; the flags append is exactly-once through
+# ParquetStateStore.apply.
 #
 # Scale: state is (band_idx, band_val, min_media_id) — bytes per image,
 # not pixels; payloads never shuffle (partition-preserving mapInPandas
@@ -1590,9 +1378,9 @@ from hive_server_spark.plans.multimodal_pack import _phash_bands_ctes  # noqa: E
 # reasons: (a) a media stream is naturally sparser than the text corpus it
 # rides with (not every document has media), and (b) it bounds the
 # decode-dominated bench cost of the ONLY query that cold-decodes the
-# whole corpus per run (VERDICT r13 item 2: 28.7 s at sf0.1 unsliced —
-# the batch near-dup queries amortize one shared decode across the
-# family, the arrival-time ingest by design cannot). The slice predicate
+# whole corpus per run (28.7 s at sf0.1 unsliced — the batch near-dup
+# queries amortize one shared decode across the family, the arrival-time
+# ingest by design cannot). The slice predicate
 # appears identically in the Spark batch filter and the oracle `src`, so
 # the gate still hash-checks every derived value end-to-end.
 _MEDIA_STREAM_MOD = 3
@@ -1631,31 +1419,17 @@ def streamed_media_neardup(
     uses the default (see the corpus contract above), the media pipeline's
     --incremental proof passes 1 so the streaming ingest covers the same
     full corpus as the batch rule it must equal."""
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        await_stream_with_retry,
-    )
-
     # checkpoint + state dirs must be FRESH per run (reusing a checkpoint
     # would replay the finished stream into a no-op), so mkdtemp — but
     # anchored under the per-process scratch root so interpreter exit
-    # reaps them (the ADVICE r11 /tmp-accumulation fix)
+    # reaps them
     work = tempfile.mkdtemp(dir=session_scratch("media_neardup_stream"))
-    d = _land_documents(spark, sf_dir, chunks)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    stream = file_stream(spark, _land_documents(spark, sf_dir, chunks))
     ckpt = os.path.join(work, "ckpt")
-    bands_store = ParquetStateStore(os.path.join(work, "bands"), run_id=ckpt)
-    flags_store = ParquetStateStore(os.path.join(work, "flags"), run_id=ckpt)
+    bands_store = ParquetStateStore(os.path.join(work, "bands"), ckpt)
+    flags_store = ParquetStateStore(os.path.join(work, "flags"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no-freeze: the dHash band index is a MIN semilattice — no
-        # id-windowed bootstrap artifact, commit_seed_state does not
-        # apply (static audit: test_streaming).
         ss = batch_df.sparkSession
         # decode THIS batch only — and only the media-bearing slice (the
         # doc_id % _MEDIA_STREAM_MOD corpus contract above, mirrored in
@@ -1663,7 +1437,7 @@ def streamed_media_neardup(
         # parallelism (the landed chunk is one file = one partition).
         # persist(): the merge commit and the flags commit are two Spark
         # actions — without the cache each would re-run the mapInPandas
-        # decode, doubling the expensive leg (round-12 review)
+        # decode, doubling the expensive leg
         wide = _M.dhash_bands(
             _M.synthesize_dhash_jpeg_media(
                 batch_df.where(F.col("doc_id") % media_mod == 0)
@@ -1673,48 +1447,31 @@ def streamed_media_neardup(
         bands = _M.band_long(wide).persist()
         try:
             # 1. MIN-merge the batch's band partials into the index
-            #    (idempotent semilattice; the guard just skips replay work)
-            if not bands_store.already_applied(batch_id):
-                part = bands.groupBy("band_idx", "band_val").agg(
+            bands_store.apply(
+                batch_id,
+                bands.groupBy("band_idx", "band_val").agg(
                     F.min("media_id").alias("min_media_id")
+                ),
+                lambda cur, part: cur.unionByName(part)
+                .groupBy("band_idx", "band_val")
+                .agg(F.min("min_media_id").alias("min_media_id")),
+            )
+            # 2. flag this batch against the POST-merge index
+            flagged = (
+                bands.join(bands_store.latest(ss), ["band_idx", "band_val"])
+                .where(F.col("min_media_id") < F.col("media_id"))
+                .groupBy("media_id")
+                .agg(
+                    F.count("*").alias("n_occupied_bands"),
+                    F.min("min_media_id").alias("partner_media_id"),
                 )
-                cur = bands_store.latest(ss)
-                merged = (
-                    part
-                    if cur is None
-                    else cur.unionByName(part)
-                    .groupBy("band_idx", "band_val")
-                    .agg(F.min("min_media_id").alias("min_media_id"))
-                )
-                bands_store.commit(merged, batch_id)
-            # 2. flag this batch against the POST-merge index. Appends are
-            #    NOT idempotent — this guard is load-bearing (see docs twin).
-            if not flags_store.already_applied(batch_id):
-                state = bands_store.latest(ss)
-                flagged = (
-                    bands.join(state, ["band_idx", "band_val"])
-                    .where(F.col("min_media_id") < F.col("media_id"))
-                    .groupBy("media_id")
-                    .agg(
-                        F.count("*").alias("n_occupied_bands"),
-                        F.min("min_media_id").alias("partner_media_id"),
-                    )
-                )
-                prev = flags_store.latest(ss)
-                flags_store.commit(
-                    flagged if prev is None else prev.unionByName(flagged),
-                    batch_id,
-                )
+            )
+            flags_store.apply(batch_id, flagged, DataFrame.unionByName)
         finally:
             bands.unpersist()
 
     with _scoped_shuffle_partitions(spark):
-        writer = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        await_stream_with_retry(writer.start)
+        run_stream(stream, ckpt, on_batch)
     out = flags_store.latest(spark)
     return out.select(
         F.col("media_id").cast("bigint").alias("media_id"),
@@ -1746,9 +1503,8 @@ def media_neardup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partials (n_vecs, posting_checksum, sum_d2_micro — a commutative monoid)
 # into the versioned parquet state store. The final census must equal the
 # full-corpus rebuild (emb_ivf_build's oracle), and chunk count must not
-# change the answer (tests/test_streaming.py). Replay: partial-census merges
-# are guarded by already_applied (sums are NOT idempotent — the guard is
-# load-bearing, same as the ingest twin's flags append).
+# change the answer (tests/test_streaming.py). Replay: partial-census sums
+# are NOT idempotent; ParquetStateStore.apply keeps them exactly-once.
 #
 # Scale: per micro-batch the work is one broadcast-assign scan of the
 # BATCH (map-side argmin) + a k-row monoid merge; the state is k rows,
@@ -1788,64 +1544,40 @@ def streamed_ivf_census(
         _ivf_partial_census,
         _merge_census,
     )
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        await_stream_with_retry,
-        commit_seed_state,
-    )
 
     work = tempfile.mkdtemp(dir=session_scratch("ivf_stream"))
-    d = _land_embeddings(spark, sf_dir, chunks)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    stream = file_stream(spark, _land_embeddings(spark, sf_dir, chunks))
     ckpt = os.path.join(work, "ckpt")
-    cent_store = ParquetStateStore(os.path.join(work, "centroids"), run_id=ckpt)
-    census_store = ParquetStateStore(os.path.join(work, "census"), run_id=ckpt)
+    cent_store = ParquetStateStore(os.path.join(work, "centroids"), ckpt)
+    census_store = ParquetStateStore(os.path.join(work, "census"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
         vec = _E._vecs(batch_df).select("vec_id", "v")
         # batch 0 freezes the coarse quantizer (vec_id-ordered landing
         # guarantees the seed ids arrive first); later batches read it
-        # back — never re-derive seeds from their own slice
+        # back — never re-derive seeds from their own slice. The freeze
+        # assumes ALL k seed ids landed in batch 0; the helper counts the
+        # seed rows BEFORE committing, so an incomplete quantizer is never
+        # persisted and every replay re-hits the completeness check.
         if cent_store.latest(ss) is None:
-            if not cent_store.already_applied(batch_id):
-                # ADVICE r12: the freeze assumes ALL k seed ids landed in
-                # batch 0 (vec_id-ordered landing); the helper counts the
-                # seed rows BEFORE committing (ADVICE r13), so an
-                # incomplete quantizer is never persisted and every
-                # replay re-hits the completeness check.
-                commit_seed_state(
-                    cent_store,
-                    batch_id,
-                    vec.where(F.col("vec_id") < _IVF_K).select(
-                        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-                    ),
-                    _IVF_K,
-                    f"IVF (vec_id < {_IVF_K})",
-                )
-        cent = cent_store.latest(ss)
-        # additive census fold: sums are not idempotent — the guard is
-        # load-bearing on replay
-        if not census_store.already_applied(batch_id):
-            part = _ivf_partial_census(vec, cent)
-            prev = census_store.latest(ss)
-            merged = (
-                part if prev is None else _merge_census(prev.unionByName(part))
+            commit_seed_state(
+                cent_store,
+                batch_id,
+                vec.where(F.col("vec_id") < _IVF_K).select(
+                    F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+                ),
+                _IVF_K,
+                f"IVF (vec_id < {_IVF_K})",
             )
-            census_store.commit(merged, batch_id)
+        census_store.apply(
+            batch_id,
+            _ivf_partial_census(vec, cent_store.latest(ss)),
+            lambda prev, part: _merge_census(prev.unionByName(part)),
+        )
 
     with _scoped_shuffle_partitions(spark):
-        writer = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        await_stream_with_retry(writer.start)
+        run_stream(stream, ckpt, on_batch)
     return _census_report(census_store.latest(spark))
 
 
@@ -1871,7 +1603,7 @@ def emb_ivf_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ARRIVAL-TIME ingest. Embeddings land in vec_id-ordered micro-batches;
 # batch 0 freezes the sub-quantizer codebook (the vec_id < ksub seed
 # convention every PQ query here uses, guarded to fail loudly if the
-# seed batch is short — the emb_ivf_streaming ADVICE r12 contract);
+# seed batch is short — the emb_ivf_streaming contract);
 # every batch encodes ONLY its own vectors against the read-back
 # codebook and APPENDS its codes to the versioned parquet state store.
 #
@@ -1881,20 +1613,20 @@ def emb_ivf_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly pq_codes_from_vecs — so batch-encoded rows are bit-identical
 # to full-rebuild rows, and the union of disjoint per-vector row sets
 # IS the merge. Final codes table ≡ the full-corpus rebuild, which is
-# emb_pq_codes' DuckDB oracle. Replay: the append is NOT idempotent, so
-# the already_applied guard is load-bearing (same as the docs/media
-# ingest twins' flags append); the codebook freeze is idempotent but
-# guarded anyway to skip replay work.
+# emb_pq_codes' DuckDB oracle. Replay: the append is NOT idempotent;
+# ParquetStateStore.apply keeps it exactly-once (same as the docs/media
+# ingest twins' flags append); the codebook freeze runs only while the
+# codebook store is empty.
 #
 # Scale: per micro-batch the work is a broadcast of the ksub×m
 # sub-codebook + one map-side-combined hash aggregate over the BATCH
 # (bounded m-row explode per vector, no corpus rescan, no self-join);
 # state grows by exactly the batch's row count — codes are storage, not
 # compute. At 100 TB the stream encodes at arrival speed; the prior
-# codes are never RE-ENCODED, though ParquetStateStore.commit does
+# codes are never RE-ENCODED, though ParquetStateStore.apply does
 # physically rewrite the state file per batch — O(state), with the
 # production fixes (Delta/Iceberg MERGE; bucket-partial overwrite)
-# noted at streaming/incremental.py:114-120.
+# noted in the ParquetStateStore docstring (streaming/incremental.py).
 # ---------------------------------------------------------------------------
 from hive_server_spark.functions.embeddings import pq_codes_oracle
 
@@ -1917,65 +1649,42 @@ def streamed_pq_codes(
     (vec_id, pq_code, distortion_micro, n_subspaces), which must equal
     the full-corpus rebuild."""
     from hive_server_spark.functions import embeddings as _E
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        await_stream_with_retry,
-        commit_seed_state,
-    )
 
     work = tempfile.mkdtemp(dir=session_scratch("pq_stream"))
-    d = _land_embeddings(spark, sf_dir, chunks)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    stream = file_stream(spark, _land_embeddings(spark, sf_dir, chunks))
     ckpt = os.path.join(work, "ckpt")
-    cb_store = ParquetStateStore(os.path.join(work, "codebook"), run_id=ckpt)
-    codes_store = ParquetStateStore(os.path.join(work, "codes"), run_id=ckpt)
+    cb_store = ParquetStateStore(os.path.join(work, "codebook"), ckpt)
+    codes_store = ParquetStateStore(os.path.join(work, "codes"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         ss = batch_df.sparkSession
         vec = _E._vecs(batch_df).select("vec_id", "v")
         # batch 0 freezes the sub-quantizer codebook (vec_id-ordered
         # landing guarantees the seed ids arrive first); later batches
-        # read it back — never re-derive seeds from their own slice
+        # read it back — never re-derive seeds from their own slice. A
+        # short seed batch would freeze an incomplete codebook and
+        # silently diverge from the rebuild; the helper counts the seed
+        # rows BEFORE committing, so every replay re-hits the check.
         if cb_store.latest(ss) is None:
-            if not cb_store.already_applied(batch_id):
-                # a short seed batch would freeze an incomplete codebook
-                # and silently diverge from the rebuild; the helper
-                # counts the seed rows BEFORE committing (ADVICE r13) so
-                # an incomplete codebook is never persisted and every
-                # replay re-hits the check
-                commit_seed_state(
-                    cb_store,
-                    batch_id,
-                    vec.where(F.col("vec_id") < _E.PQ_KSUB).select(
-                        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-                    ),
-                    _E.PQ_KSUB,
-                    f"PQ (vec_id < {_E.PQ_KSUB})",
-                )
-        cb = cb_store.latest(ss)
-        # encode THIS batch only and append: per-vector rows are
-        # disjoint across batches, so the union IS the merge. Appends
-        # are NOT idempotent — the guard is load-bearing on replay.
-        if not codes_store.already_applied(batch_id):
-            batch_codes = _E.pq_codes_from_vecs(vec, cent=cb)
-            prev = codes_store.latest(ss)
-            codes_store.commit(
-                batch_codes if prev is None else prev.unionByName(batch_codes),
+            commit_seed_state(
+                cb_store,
                 batch_id,
+                vec.where(F.col("vec_id") < _E.PQ_KSUB).select(
+                    F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+                ),
+                _E.PQ_KSUB,
+                f"PQ (vec_id < {_E.PQ_KSUB})",
             )
+        # encode THIS batch only and append: per-vector rows are
+        # disjoint across batches, so the union IS the merge
+        codes_store.apply(
+            batch_id,
+            _E.pq_codes_from_vecs(vec, cent=cb_store.latest(ss)),
+            DataFrame.unionByName,
+        )
 
     with _scoped_shuffle_partitions(spark):
-        writer = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        await_stream_with_retry(writer.start)
+        run_stream(stream, ckpt, on_batch)
     out = codes_store.latest(spark)
     return out.select(
         F.col("vec_id").cast("bigint").alias("vec_id"),
@@ -2008,13 +1717,11 @@ def streamed_pq_codes(
 # equal layout_deletion_vectors' one-shot DELETE row for row, which is
 # why it shares that query's DuckDB oracle.
 #
-# Replay discipline: BOTH commits are guarded, and the delpos append
-# commits FIRST — it is computed from the PRE-merge offsets, so a crash
-# between the two commits replays into delpos-skip + counts-recompute
-# against the still-unmerged counts state (same offsets, same result).
-# Committing counts first would poison a replay: the recomputed offsets
-# would include the batch's own rows. Sums and appends are not
-# idempotent; the guards are load-bearing.
+# Commit order: the delpos append commits FIRST — it is computed from
+# the PRE-merge offsets, so a crash between the two commits replays into
+# delpos-skip + counts-recompute against the still-unmerged counts state
+# (same offsets, same result). Committing counts first would poison a
+# replay: the recomputed offsets would include the batch's own rows.
 #
 # Scale: per batch the work is one local row_number window (partitioned
 # by file_id WITHIN the batch — bounded by batch size, never the
@@ -2060,28 +1767,13 @@ def streamed_deletion_vectors(
     must equal the one-shot layout_deletion_vectors."""
     from pyspark.sql import Window
 
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        await_stream_with_retry,
-    )
-
     work = tempfile.mkdtemp(dir=session_scratch("dv_stream"))
-    d = _land_events_by_id(spark, sf_dir, chunks)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    stream = file_stream(spark, _land_events_by_id(spark, sf_dir, chunks))
     ckpt = os.path.join(work, "ckpt")
-    counts_store = ParquetStateStore(os.path.join(work, "counts"), run_id=ckpt)
-    delpos_store = ParquetStateStore(os.path.join(work, "delpos"), run_id=ckpt)
+    counts_store = ParquetStateStore(os.path.join(work, "counts"), ckpt)
+    delpos_store = ParquetStateStore(os.path.join(work, "delpos"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no-freeze: per-file counts are a SUM monoid with the offset
-        # discipline below — no batch-0 seed artifact,
-        # commit_seed_state does not apply.
-        ss = batch_df.sparkSession
         ev = batch_df.select(
             F.expr(f"event_id DIV {_ZM_FILE_ROWS}").alias("file_id"),
             "event_id",
@@ -2089,7 +1781,7 @@ def streamed_deletion_vectors(
         )
         w = Window.partitionBy("file_id").orderBy("event_id")
         loc = ev.withColumn("rn", F.row_number().over(w))
-        prior = counts_store.latest(ss)
+        prior = counts_store.latest(batch_df.sparkSession)
         if prior is None:
             pos = loc.withColumn("pos", F.col("rn").cast("bigint"))
         else:
@@ -2109,53 +1801,42 @@ def streamed_deletion_vectors(
         pos = pos.persist()
         try:
             # 1. append this batch's deleted positions (PRE-merge offsets;
-            #    see the replay-discipline block comment — this MUST
-            #    commit before the counts merge)
-            if not delpos_store.already_applied(batch_id):
-                dels = pos.where("deleted").select("file_id", "pos")
-                prev = delpos_store.latest(ss)
-                delpos_store.commit(
-                    dels if prev is None else prev.unionByName(dels), batch_id
-                )
+            #    see the commit-order block comment — this MUST commit
+            #    before the counts merge)
+            delpos_store.apply(
+                batch_id,
+                pos.where("deleted").select("file_id", "pos"),
+                DataFrame.unionByName,
+            )
             # 2. fold the batch's per-file counters into the SUM monoid
-            if not counts_store.already_applied(batch_id):
-                part = pos.groupBy("file_id").agg(
-                    F.count("*").cast("bigint").alias("n_rows"),
-                    F.sum(F.when(F.col("deleted"), 1).otherwise(0))
-                    .cast("bigint")
-                    .alias("n_deleted"),
-                    F.coalesce(
-                        F.sum(F.when(F.col("deleted"), F.col("pos"))),
-                        F.lit(0),
-                    )
-                    .cast("bigint")
-                    .alias("pos_checksum"),
+            part = pos.groupBy("file_id").agg(
+                F.count("*").cast("bigint").alias("n_rows"),
+                F.sum(F.when(F.col("deleted"), 1).otherwise(0))
+                .cast("bigint")
+                .alias("n_deleted"),
+                F.coalesce(
+                    F.sum(F.when(F.col("deleted"), F.col("pos"))),
+                    F.lit(0),
                 )
-                cur = counts_store.latest(ss)
-                merged = (
-                    part
-                    if cur is None
-                    else cur.unionByName(part)
-                    .groupBy("file_id")
-                    .agg(
-                        F.sum("n_rows").cast("bigint").alias("n_rows"),
-                        F.sum("n_deleted").cast("bigint").alias("n_deleted"),
-                        F.sum("pos_checksum")
-                        .cast("bigint")
-                        .alias("pos_checksum"),
-                    )
-                )
-                counts_store.commit(merged, batch_id)
+                .cast("bigint")
+                .alias("pos_checksum"),
+            )
+            counts_store.apply(
+                batch_id,
+                part,
+                lambda cur, part: cur.unionByName(part)
+                .groupBy("file_id")
+                .agg(
+                    F.sum("n_rows").cast("bigint").alias("n_rows"),
+                    F.sum("n_deleted").cast("bigint").alias("n_deleted"),
+                    F.sum("pos_checksum").cast("bigint").alias("pos_checksum"),
+                ),
+            )
         finally:
             pos.unpersist()
 
     with _scoped_shuffle_partitions(spark):
-        writer = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        await_stream_with_retry(writer.start)
+        run_stream(stream, ckpt, on_batch)
 
     counts = counts_store.latest(spark)
     delpos = delpos_store.latest(spark)
@@ -2208,8 +1889,8 @@ def layout_dv_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 # must equal the batch derivation — the `files` CTE of
 # layout_zonemap_skipping's oracle, verbatim.
 #
-# Replay: MIN/MAX legs are idempotent, but n_rows is a SUM — the
-# already_applied guard is load-bearing (same as the census twin).
+# Replay: MIN/MAX legs are idempotent, but n_rows is a SUM — exactly-once
+# rests on ParquetStateStore.apply (same as the census twin).
 # Timestamps cross the engine boundary as integer microseconds
 # (unix_micros ≡ DuckDB epoch_us — the events_pack convention).
 #
@@ -2239,30 +1920,12 @@ def streamed_zonemaps(
     `chunks` event_id-ordered micro-batches; returns the final per-file
     statistics table (file_id, n_rows, min/max ts-micros, value, type),
     which must equal the one-shot batch derivation."""
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        await_stream_with_retry,
-    )
-
     work = tempfile.mkdtemp(dir=session_scratch("zm_stream"))
-    d = _land_events_by_id(spark, sf_dir, chunks)
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    stream = file_stream(spark, _land_events_by_id(spark, sf_dir, chunks))
     ckpt = os.path.join(work, "ckpt")
-    store = ParquetStateStore(os.path.join(work, "zonemaps"), run_id=ckpt)
+    store = ParquetStateStore(os.path.join(work, "zonemaps"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # no-freeze: zone-map state is a MIN/MAX semilattice plus a COUNT
-        # sum — no batch-0 seed artifact, commit_seed_state does not
-        # apply. The n_rows sum makes replay non-idempotent, so the
-        # already_applied guard is load-bearing.
-        if store.already_applied(batch_id):
-            return
-        ss = batch_df.sparkSession
         part = batch_df.groupBy(
             F.expr(f"event_id DIV {_ZM_FILE_ROWS}").cast("bigint").alias(
                 "file_id"
@@ -2276,11 +1939,10 @@ def streamed_zonemaps(
             F.min("event_type").alias("min_type"),
             F.max("event_type").alias("max_type"),
         )
-        prev = store.latest(ss)
-        merged = (
-            part
-            if prev is None
-            else prev.unionByName(part)
+        store.apply(
+            batch_id,
+            part,
+            lambda prev, part: prev.unionByName(part)
             .groupBy("file_id")
             .agg(
                 F.sum("n_rows").cast("bigint").alias("n_rows"),
@@ -2290,17 +1952,11 @@ def streamed_zonemaps(
                 F.max("max_value").cast("double").alias("max_value"),
                 F.min("min_type").alias("min_type"),
                 F.max("max_type").alias("max_type"),
-            )
+            ),
         )
-        store.commit(merged, batch_id)
 
     with _scoped_shuffle_partitions(spark):
-        writer = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        await_stream_with_retry(writer.start)
+        run_stream(stream, ckpt, on_batch)
     return store.latest(spark).select(
         "file_id",
         "n_rows",

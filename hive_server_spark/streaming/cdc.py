@@ -26,6 +26,7 @@ from hive_server_spark.streaming.incremental import (
     materialize_orders,
     merge_partials,
     partial_fold,
+    run_stream,
 )
 
 
@@ -54,29 +55,16 @@ def run_incremental_fold_with_cdc(
     """Incremental fold + CDC: each micro-batch merges the orders state and
     appends depth-k snapshots for the touched pools, versioned by batch id.
     Returns (state store, cdc output path)."""
-    store = ParquetStateStore(state_dir)
+    store = ParquetStateStore(state_dir, checkpoint_dir)
     os.makedirs(cdc_dir, exist_ok=True)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        # exactly-once state over at-least-once replay: a crash between the
-        # state commit and the checkpoint commit re-delivers this batch_id;
-        # re-merging it would double-count. The snapshot write below still
-        # runs on replay — it is an idempotent partition overwrite, and the
-        # crash may have happened before it landed.
-        if not store.already_applied(batch_id):
-            batch_state = partial_fold(batch_df)
-            current = store.latest(sess)
-            merged = (
-                batch_state
-                if current is None
-                else merge_partials(current, batch_state)
-            )
-            store.commit(merged, batch_id)
-
+        # the snapshot write below still runs on a replayed batch: the
+        # crash may have happened before it landed
+        store.apply(batch_id, partial_fold(batch_df), merge_partials)
         touched = batch_df.select("pool_address").distinct()
         snaps = book_snapshots(
-            materialize_orders(store.latest(sess)), touched, depth
+            materialize_orders(store.latest(batch_df.sparkSession)), touched, depth
         )
         # exactly-once under foreachBatch retries: a plain append would
         # duplicate this batch's snapshots if the job dies between the write
@@ -88,15 +76,5 @@ def run_incremental_fold_with_cdc(
             os.path.join(cdc_dir, f"cdc_version={batch_id}")
         )
 
-    from hive_server_spark.streaming.incremental import await_stream_with_retry
-
-    writer = (
-        events_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    # retry policy: see incremental.py::_TRANSIENT_PY4J — the CDC write is
-    # already idempotent per batch (partition-overwrite above), so a
-    # checkpoint-resumed retry is exactly-once here too.
-    await_stream_with_retry(writer.start)
+    run_stream(events_stream, checkpoint_dir, on_batch)
     return store, cdc_dir

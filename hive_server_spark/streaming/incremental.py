@@ -111,8 +111,7 @@ class ParquetStateStore:
     """Versioned parquet state table: each batch writes the full state as
     `v{n}`, and the pointer file flips last — never read and overwrite the
     same files in one job. Batch ids are monotonic within one checkpoint
-    lineage, and ``already_applied`` makes re-delivered batches
-    exactly-once.
+    lineage, and ``apply`` makes re-delivered batches exactly-once.
 
     Scale note: each commit rewrites the full state — correct and atomic,
     but O(state). The production-scale variants, in order of preference:
@@ -122,18 +121,19 @@ class ParquetStateStore:
         O(touched state), at the cost of non-atomic multi-bucket commits.
     Plain versioned parquet keeps this repo dependency-free."""
 
-    def __init__(self, root: str, run_id: str | None = None):
-        """`run_id` (optional) binds this store handle to one streaming
-        checkpoint's identity (callers pass the checkpoint dir). Batch ids
-        are only monotonic WITHIN one checkpoint lineage — a fresh
-        checkpoint restarts them at 0, so replaying a fresh stream onto an
+    def __init__(self, root: str, run_id: str):
+        """`run_id` binds this store handle to one streaming checkpoint's
+        identity (callers pass the checkpoint dir). Batch ids are only
+        monotonic WITHIN one checkpoint lineage — a fresh checkpoint
+        restarts them at 0, so replaying a fresh stream onto an
         already-committed store would silently skip every batch (the
-        `already_applied` guard would read them all as replays). Recording
-        the identity at first commit turns that mismatch into a loud
-        error instead."""
+        `already_applied` guard would read them all as replays). The first
+        commit records the identity; a handle bound to another lineage is
+        refused here, before its stream starts, and again on every touch."""
         self.root = root
         self.run_id = run_id
         os.makedirs(root, exist_ok=True)
+        self._check_lineage("open")
 
     @property
     def _ptr(self) -> str:
@@ -199,14 +199,13 @@ class ParquetStateStore:
         return removed
 
     def _check_lineage(self, action: str) -> None:
-        """Raise if this bound handle and a COMMITTED store disagree on
+        """Raise if this handle and a COMMITTED store disagree on
         lineage. Only the pointer makes a store owned: a torn first
         commit (v0 + RUN_ID written, LATEST never flipped) is logically
         empty and a new lineage may take it over."""
         recorded = self._recorded_run_id()
         if (
-            self.run_id is not None
-            and recorded is not None
+            recorded is not None
             and recorded != self.run_id
             and self.committed_version() is not None
         ):
@@ -222,16 +221,14 @@ class ParquetStateStore:
         """Commit `df` as the full state at `batch_id`: write `v{n}`
         (overwrite, so a replayed torn commit is idempotent), then flip
         the pointer."""
-        # a bound handle never merges onto a foreign lineage's committed
+        # a handle never merges onto a foreign lineage's committed
         # state — without this, a mis-pointed stream whose batch ids run
         # AHEAD of the pointer would silently corrupt the store (the
         # already_applied guard alone only catches ids at-or-behind it)
         self._check_lineage("commit")
         version = f"v{batch_id}"
         df.write.mode("overwrite").parquet(os.path.join(self.root, version))
-        if self.run_id is not None and (
-            self._recorded_run_id() is None or self.committed_version() is None
-        ):
+        if self._recorded_run_id() is None or self.committed_version() is None:
             # claim (or re-claim after a torn first commit) the store
             rtmp = self._run_file + ".tmp"
             with open(rtmp, "w") as fh:
@@ -252,48 +249,42 @@ class ParquetStateStore:
             return int(fh.read().strip().lstrip("v"))
 
     def already_applied(self, batch_id: int) -> bool:
-        """Replay guard (exactly-once over at-least-once foreachBatch):
-        True iff the committed state already reflects `batch_id`. A
-        foreachBatch job that dies AFTER store.commit() but BEFORE the
-        streaming checkpoint commits gets the same batch re-delivered on
-        restart with the same batch_id (the Structured Streaming replay
-        contract); merging it again would double-count. Batch ids are
-        monotonic, so pointer >= batch_id means this batch (and everything
-        before it) is in. A torn commit — `v{batch_id}` written, pointer
-        not flipped — returns False so the replay re-merges off the old
-        pointer and rewrites the directory (write mode is overwrite).
+        """Replay guard: True iff the committed state already reflects
+        `batch_id`. Batch ids are monotonic, so pointer >= batch_id means
+        this batch (and everything before it) is in. A torn commit —
+        `v{batch_id}` written, pointer not flipped — returns False so the
+        replay re-merges off the old pointer and rewrites the directory
+        (write mode is overwrite).
 
         The pointer-vs-batch-id comparison is only sound within ONE
-        checkpoint lineage: a FRESH checkpoint restarts batch ids at 0, so
-        a committed store fed by a new stream would read every batch as a
-        replay and silently return stale state. When both this handle and
-        a COMMITTED store carry a run id (see __init__) and they disagree,
-        raise instead of proceeding — regardless of whether the incoming
-        batch id is behind the pointer (would silently skip) or ahead of
-        it (commit would silently merge across lineages; the commit path
-        re-checks too)."""
+        checkpoint lineage, so a handle whose run id disagrees with a
+        COMMITTED store's raises instead — whether the incoming batch id
+        is behind the pointer (would silently skip) or ahead of it (commit
+        would silently merge across lineages; the commit path re-checks
+        too)."""
         self._check_lineage("touch")
         last = self.committed_version()
         return last is not None and last >= batch_id
 
+    def apply(self, batch_id: int, part: DataFrame, merge) -> None:
+        """Fold micro-batch `batch_id`'s partial state `part` into the
+        store — the one exactly-once step of every foreachBatch state
+        store: commit `part` on the first batch and ``merge(prev, part)``
+        after that. An append store passes ``DataFrame.unionByName``.
 
-def make_fold_on_batch(store: ParquetStateStore, retain_versions: int | None = None):
-    """The foreachBatch body for the incremental order fold, factored out
-    so the replay path is unit-testable: guarded by
-    ``store.already_applied`` (skip re-delivered batches), then
-    partial-fold → merge → commit → optional vacuum."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if store.already_applied(batch_id):
+        Replay discipline: foreachBatch is at-least-once. A job that dies
+        AFTER the commit but BEFORE the streaming checkpoint commits gets
+        the same batch re-delivered on restart with the same batch_id (the
+        Structured Streaming replay contract); merging it again would
+        double-count sums and duplicate appends, so a batch the pointer
+        already covers is skipped. A batch feeding two stores applies
+        each in turn: a crash between the two commits replays into a skip
+        of the first and a fresh commit of the second, from the same
+        inputs."""
+        if self.already_applied(batch_id):
             return
-        batch_state = partial_fold(batch_df)
-        current = store.latest(batch_df.sparkSession)
-        merged = batch_state if current is None else merge_partials(current, batch_state)
-        store.commit(merged, batch_id)
-        if retain_versions is not None:
-            store.vacuum(keep_last=retain_versions)
-
-    return on_batch
+        prev = self.latest(part.sparkSession)
+        self.commit(part if prev is None else merge(prev, part), batch_id)
 
 
 # py4j's CALLBACK channel (the JVM→Python path every foreachBatch batch
@@ -302,9 +293,9 @@ def make_fold_on_batch(store: ParquetStateStore, retain_versions: int | None = N
 # command" / "Connection reset" wrapped in FOREACH_BATCH_USER_FUNCTION_
 # ERROR. It is an infrastructure flake, not a data error, and every
 # foreachBatch in this repo is built to survive a restart anyway: the
-# checkpoint resumes the stream and the state store's replay guard
-# (`already_applied`, torn-commit re-merge) makes re-delivered batches
-# exactly-once. So the house policy is: retry the stream, never the data.
+# checkpoint resumes the stream and `ParquetStateStore.apply` (replay
+# guard, torn-commit re-merge) makes re-delivered batches exactly-once.
+# So the house policy is: retry the stream, never the data.
 _TRANSIENT_PY4J = (
     "Error while sending a command",
     "Received empty command",
@@ -408,10 +399,9 @@ def await_stream_with_retry(start_query, attempts: int = 3, backoff_s: float = 2
     round-trip, so the start call sits INSIDE the retry.
 
     Exactly-once across retries holds only if the thunk re-uses the SAME
-    checkpoint (and state) directory on every call — writer.start-style
-    thunks and the work=-pinned sketch starters do; a thunk that mints a
-    fresh checkpoint per call would recompute from scratch and must not
-    be passed here."""
+    checkpoint (and state) directory on every call — `writer.start` (see
+    `run_stream`) does; a thunk that mints a fresh checkpoint per call
+    would recompute from scratch and must not be passed here."""
     import sys as _sys
     import time as _time
 
@@ -425,9 +415,9 @@ def await_stream_with_retry(start_query, attempts: int = 3, backoff_s: float = 2
             last = e
             # every swallowed recovery prints: a bench wave or verify run
             # that paid a stall window must say so in its log, or the
-            # next timing disposition is guesswork (SCALE.md r15). On the
-            # final attempt no retry follows — say so, and skip the
-            # pointless backoff sleep before the re-raise (ADVICE r15).
+            # next timing disposition is guesswork. On the final attempt
+            # no retry follows — say so, and skip the pointless backoff
+            # sleep before the re-raise.
             if attempt == attempts - 1:
                 print(
                     f"await_stream_with_retry: attempt {attempt + 1}/"
@@ -481,15 +471,14 @@ def commit_seed_state(
     verifying completeness BEFORE the commit.
 
     The count must run on the un-committed seed DataFrame: counting the
-    store AFTER commit (the original guard shape, ADVICE r13) leaves a
-    hole — a transient py4j failure between the commit and the count
-    replays batch 0, `latest()` is no longer None, the freeze branch is
-    skipped, and the run proceeds on the committed incomplete codebook
-    with no error. Raising pre-commit means an incomplete seed state is
-    never persisted, so every replay re-derives the seed set and re-hits
-    this check. Every streaming ingest that freezes batch-0 state MUST go
-    through this helper (or carry a written no-freeze note) —
-    tests/test_streaming.py audits the foreachBatch sites statically."""
+    store AFTER commit leaves a hole — a transient py4j failure between
+    the commit and the count replays batch 0, `latest()` is no longer
+    None, the freeze branch is skipped, and the run proceeds on the
+    committed incomplete codebook with no error. Raising pre-commit means
+    an incomplete seed state is never persisted, so every replay
+    re-derives the seed set and re-hits this check. A batch-0 freeze goes
+    through this helper, never through `apply` — tests/test_streaming.py
+    audits plans/streaming_pack.py for it."""
     n_seed = seed_df.count()
     if n_seed != expected_rows:
         raise ValueError(
@@ -498,6 +487,32 @@ def commit_seed_state(
             f"reduce chunks"
         )
     store.commit(seed_df, batch_id)
+
+
+def file_stream(spark: SparkSession, path: str) -> DataFrame:
+    """A file stream over the landed parquet directory `path`, one
+    micro-batch per file (maxFilesPerTrigger=1, in file mtime order),
+    with the schema of the landed files."""
+    return (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
+
+
+def run_stream(stream: DataFrame, checkpoint_dir: str, on_batch) -> None:
+    """Drive `stream` to completion (availableNow) through
+    ``on_batch(batch_df, batch_id)`` — the package's one foreachBatch.
+    `on_batch` changes its stores (each bound to `checkpoint_dir`) only
+    through ``ParquetStateStore.apply`` or ``commit_seed_state``, so the
+    checkpoint-resuming retry is exactly-once. ``writer.start`` is looked
+    up here, at call time, and the retry calls it again on a restart."""
+    writer = (
+        stream.writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+    await_stream_with_retry(writer.start)
 
 
 def run_incremental_fold(
@@ -512,15 +527,15 @@ def run_incremental_fold(
 
     `events_stream` must be a *streaming* DataFrame with order_events shape.
     `retain_versions=N` applies the vacuum retention policy after every
-    commit (keep the newest N snapshots) — the long-running-stream setting;
+    batch (keep the newest N snapshots) — the long-running-stream setting;
     the default None keeps full history for time travel.
     """
-    store = ParquetStateStore(state_dir, run_id=checkpoint_dir)
-    on_batch = make_fold_on_batch(store, retain_versions=retain_versions)
-    writer = (
-        events_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    await_stream_with_retry(writer.start)
+    store = ParquetStateStore(state_dir, checkpoint_dir)
+
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+        store.apply(batch_id, partial_fold(batch_df), merge_partials)
+        if retain_versions is not None:
+            store.vacuum(keep_last=retain_versions)
+
+    run_stream(events_stream, checkpoint_dir, on_batch)
     return store

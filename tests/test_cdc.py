@@ -6,12 +6,14 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from hive_server_spark.operators.fold import fold_order_events
 from hive_server_spark.operators.orderbook import price_levels, top_levels
 from hive_server_spark.sources.synthetic import order_events
 from hive_server_spark.streaming.cdc import run_incremental_fold_with_cdc
+from hive_server_spark.streaming.incremental import file_stream
 from tests.conftest import SF_SMALL
 
 
@@ -20,13 +22,9 @@ def test_cdc_final_snapshot_matches_batch_book(spark):
     work = tempfile.mkdtemp(prefix="hss_cdc_")
     ev_dir = os.path.join(work, "events")
     ev.repartition(3).write.parquet(ev_dir)
-    schema = spark.read.parquet(ev_dir).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(ev_dir)
-    )
     _, cdc_dir = run_incremental_fold_with_cdc(
         spark,
-        stream,
+        file_stream(spark, ev_dir),
         state_dir=os.path.join(work, "state"),
         checkpoint_dir=os.path.join(work, "ckpt"),
         cdc_dir=os.path.join(work, "cdc"),
@@ -54,3 +52,26 @@ def test_cdc_final_snapshot_matches_batch_book(spark):
         .collect()
     )
     assert all(1 <= r.n <= n_pools for r in per_version)
+
+
+def test_cdc_fold_refuses_committed_state_of_another_checkpoint(spark):
+    """A fresh checkpoint restarts batch ids at 0. Re-running the CDC fold
+    on a committed state_dir under a new checkpoint must fail loudly —
+    not read every batch as a replay, keep the old state and write CDC
+    snapshots from it."""
+    work = tempfile.mkdtemp(prefix="hss_cdc_lineage_")
+    ev_dir = os.path.join(work, "events")
+    order_events(spark, SF_SMALL).repartition(2).write.parquet(ev_dir)
+
+    def run(ckpt):
+        return run_incremental_fold_with_cdc(
+            spark,
+            file_stream(spark, ev_dir),
+            state_dir=os.path.join(work, "state"),
+            checkpoint_dir=os.path.join(work, ckpt),
+            cdc_dir=os.path.join(work, "cdc"),
+        )
+
+    run("ckpt_a")
+    with pytest.raises(RuntimeError, match="different streaming checkpoint"):
+        run("ckpt_b")

@@ -86,7 +86,10 @@ def test_checkpoint_restart_exactly_once(spark):
 
     from pyspark.sql import functions as F
 
-    from hive_server_spark.streaming.incremental import run_incremental_fold
+    from hive_server_spark.streaming.incremental import (
+        file_stream,
+        run_incremental_fold,
+    )
 
     ev = order_events(spark, SF_SMALL).cache()
     half_a = ev.where(F.col("seq") % 2 == 0)
@@ -98,13 +101,7 @@ def test_checkpoint_restart_exactly_once(spark):
     ckpt = os.path.join(work, "ckpt")
 
     def run():
-        schema = spark.read.parquet(ev_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ev_dir)
-        )
-        return run_incremental_fold(spark, stream, state_dir, ckpt)
+        return run_incremental_fold(spark, file_stream(spark, ev_dir), state_dir, ckpt)
 
     # session 1: only the first half exists
     half_a.coalesce(1).write.mode("overwrite").parquet(ev_dir)
@@ -151,7 +148,7 @@ def test_state_store_vacuum_retention(spark):
     )
 
     ev = order_events(spark, SF_SMALL)
-    store = ParquetStateStore(tempfile.mkdtemp(prefix="hss_vacuum_"))
+    store = ParquetStateStore(tempfile.mkdtemp(prefix="hss_vacuum_"), "/ckpt/vacuum")
     for batch_id in range(4):
         store.commit(partial_fold(ev.where(F.col("seq") % 4 == batch_id)), batch_id)
     assert store.versions() == [0, 1, 2, 3]
@@ -188,7 +185,10 @@ def test_incremental_fold_with_retention(spark):
 
     from pyspark.sql import functions as F
 
-    from hive_server_spark.streaming.incremental import run_incremental_fold
+    from hive_server_spark.streaming.incremental import (
+        file_stream,
+        run_incremental_fold,
+    )
 
     ev = order_events(spark, SF_SMALL).cache()
     work = tempfile.mkdtemp(prefix="hss_retain_")
@@ -196,14 +196,11 @@ def test_incremental_fold_with_retention(spark):
     ev.withColumn("half", (F.col("seq") % 2).cast("int")).write.partitionBy(
         "half"
     ).parquet(ev_dir)
-    schema = spark.read.parquet(ev_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
     store = run_incremental_fold(
-        spark, stream, os.path.join(work, "state"), os.path.join(work, "ckpt"),
+        spark,
+        file_stream(spark, ev_dir),
+        os.path.join(work, "state"),
+        os.path.join(work, "ckpt"),
         retain_versions=1,
     )
     assert len(store.versions()) == 1
@@ -212,41 +209,42 @@ def test_incremental_fold_with_retention(spark):
     assert _rows(got) == _rows(want)
 
 
+def _docs_ingest(spark, src_dir, work):
+    """Run the production docs-ingest fold (partial, merge, apply, runner)
+    over the landed `src_dir` with its checkpoint and state under `work`;
+    returns the store."""
+    import os
+
+    from hive_server_spark.plans import streaming_pack as sp
+    from hive_server_spark.streaming.incremental import (
+        ParquetStateStore,
+        file_stream,
+        run_stream,
+    )
+
+    ckpt = os.path.join(work, "ckpt")
+    store = ParquetStateStore(os.path.join(work, "state"), ckpt)
+
+    def on_batch(bdf, bid):
+        store.apply(bid, sp._docs_ingest_partial(bdf), sp._docs_ingest_merge)
+
+    run_stream(file_stream(spark, src_dir), ckpt, on_batch)
+    return store
+
+
 def test_docs_ingest_chunk_invariance(spark):
     """The incremental dedup index is a monoid fold: 1-chunk and 3-chunk
     ingests must produce identical index contents."""
+    import tempfile
+
     from hive_server_spark.plans import streaming_pack as sp
-    from tests.conftest import SF_SMALL
 
     def run(chunks):
-        import os
-        import tempfile
-
-        from hive_server_spark.streaming.incremental import ParquetStateStore
-
-        work = tempfile.mkdtemp(prefix="hss_docs_inv_")
-        d = sp._land_documents(spark, SF_SMALL, chunks)
-        schema = spark.read.parquet(d).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(d)
+        store = _docs_ingest(
+            spark,
+            sp._land_documents(spark, SF_SMALL, chunks),
+            tempfile.mkdtemp(prefix="hss_docs_inv_"),
         )
-        store = ParquetStateStore(os.path.join(work, "state"))
-
-        def on_batch(bdf, bid):
-            part = sp._docs_ingest_partial(bdf)
-            cur = store.latest(bdf.sparkSession)
-            merged = part if cur is None else sp._docs_ingest_merge(cur, part)
-            store.commit(merged, bid)
-
-        q = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return {
             (r.fingerprint_md5, r.canonical_doc_id, r.group_size, r.total_tokens)
             for r in store.latest(spark).collect()
@@ -270,9 +268,6 @@ def test_docs_ingest_resumes_from_checkpoint(spark):
     from pyspark.sql import functions as F
 
     from hive_server_spark.catalog import load_table
-    from hive_server_spark.plans import streaming_pack as sp
-    from hive_server_spark.streaming.incremental import ParquetStateStore
-    from tests.conftest import SF_SMALL
 
     work = tempfile.mkdtemp(prefix="hss_docs_resume_")
     src_dir = os.path.join(work, "docs")
@@ -280,31 +275,8 @@ def test_docs_ingest_resumes_from_checkpoint(spark):
     half_a = docs.where(F.col("doc_id") % 2 == 0)
     half_b = docs.where(F.col("doc_id") % 2 == 1)
     half_a.coalesce(1).write.parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    store = ParquetStateStore(os.path.join(work, "state"))
-    ckpt = os.path.join(work, "ckpt")
 
-    def on_batch(bdf, bid):
-        part = sp._docs_ingest_partial(bdf)
-        cur = store.latest(bdf.sparkSession)
-        merged = part if cur is None else sp._docs_ingest_merge(cur, part)
-        store.commit(merged, bid)
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()
+    store = _docs_ingest(spark, src_dir, work)
     n_after_first = (
         store.latest(spark).agg(F.sum("group_size")).collect()[0][0]
     )
@@ -316,7 +288,7 @@ def test_docs_ingest_resumes_from_checkpoint(spark):
     for f in os.listdir(tmp_b):
         if f.startswith("part-"):
             shutil.copy(os.path.join(tmp_b, f), os.path.join(src_dir, f))
-    run_once()
+    store = _docs_ingest(spark, src_dir, work)
 
     final = {
         (r.fingerprint_md5, r.canonical_doc_id, r.group_size, r.total_tokens)
@@ -338,27 +310,26 @@ def test_docs_ingest_resumes_from_checkpoint(spark):
 def test_replay_guard_batch_is_exactly_once(spark):
     """foreachBatch is at-least-once: a crash after store.commit() but
     before the streaming checkpoint commit re-delivers the same batch_id
-    on restart (ADVICE r06). Re-applying the batch must be a no-op — the
-    guarded on_batch skips it — otherwise the merge double-counts. A torn
-    commit (v{n} directory written, pointer NOT flipped) must NOT be
-    treated as applied: the replay re-merges off the old pointer."""
+    on restart. Re-applying the batch must be a no-op — store.apply skips
+    it — otherwise the merge double-counts. A torn commit (v{n} directory
+    written, pointer NOT flipped) must NOT be treated as applied: the
+    replay re-merges off the old pointer."""
     import os
     import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        make_fold_on_batch,
-    )
+    from hive_server_spark.streaming.incremental import ParquetStateStore
 
     ev = order_events(spark, SF_SMALL)
     b0 = ev.where(F.col("seq") % 2 == 0)
     b1 = ev.where(F.col("seq") % 2 == 1)
 
-    store = ParquetStateStore(tempfile.mkdtemp(prefix="hss_replay_"))
-    on_batch = make_fold_on_batch(store)
+    store = ParquetStateStore(tempfile.mkdtemp(prefix="hss_replay_"), "/ckpt/replay")
+
+    def on_batch(df, batch_id):
+        store.apply(batch_id, partial_fold(df), merge_partials)
 
     assert not store.already_applied(0)  # empty store: nothing applied
     on_batch(b0, 0)
@@ -392,15 +363,9 @@ def test_cms_stream_equals_batch_sketch(spark, chunks):
     from pyspark.sql import functions as F
 
     from hive_server_spark.catalog import load_table
-    from hive_server_spark.plans.streaming_pack import (
-        _cms_final,
-        _cms_partial,
-        start_cms_stream,
-    )
+    from hive_server_spark.plans.streaming_pack import _cms_partial, streamed_cms
 
-    q, store = start_cms_stream(spark, SF_SMALL, chunks=chunks)
-    q.awaitTermination()
-    streamed = _cms_final(spark, store)
+    streamed = streamed_cms(spark, SF_SMALL, chunks=chunks)
     batch = _cms_partial(load_table(spark, SF_SMALL, "events")).select(
         F.col("r").cast("bigint"),
         F.col("bucket").cast("bigint"),
@@ -417,15 +382,9 @@ def test_hll_stream_equals_batch_registers(spark, chunks):
     from pyspark.sql import functions as F
 
     from hive_server_spark.catalog import load_table
-    from hive_server_spark.plans.streaming_pack import (
-        _hll_final,
-        _hll_partial,
-        start_hll_stream,
-    )
+    from hive_server_spark.plans.streaming_pack import _hll_partial, streamed_hll
 
-    q, store = start_hll_stream(spark, SF_SMALL, chunks=chunks)
-    q.awaitTermination()
-    streamed = _hll_final(spark, store)
+    streamed = streamed_hll(spark, SF_SMALL, chunks=chunks)
     batch = _hll_partial(load_table(spark, SF_SMALL, "events")).select(
         "event_type",
         F.col("bucket").cast("bigint"),
@@ -440,26 +399,21 @@ def test_cusum_stream_equals_batch_drift(spark, chunks):
     under any micro-batch chunking — the maintained hourly table is a
     SUM monoid, and the read-side fold is the shared cusum_from_hourly."""
     from hive_server_spark.plans.events_pack import evt_cusum_drift
-    from hive_server_spark.plans.streaming_pack import (
-        _cusum_final,
-        start_cusum_stream,
-    )
+    from hive_server_spark.plans.streaming_pack import streamed_cusum
 
-    q, store = start_cusum_stream(spark, SF_SMALL, chunks=chunks)
-    q.awaitTermination()
-    streamed = _cusum_final(spark, store)
+    streamed = streamed_cusum(spark, SF_SMALL, chunks=chunks)
     batch = evt_cusum_drift(spark, SF_SMALL)
     assert _rows(streamed) == _rows(batch)
 
 
 def test_state_store_run_id_guard(spark):
-    """ADVICE r07 + review r08: batch ids are monotonic only within ONE
-    checkpoint lineage. A COMMITTED store touched by a different-lineage
-    handle must raise — on ids behind the pointer (silent skip) AND on
-    ids ahead of it (commit would silently merge foreign partials onto
-    the state). A torn FIRST commit (RUN_ID written, pointer never
-    flipped) leaves the store logically empty and reclaimable. Unbound
-    handles (no run_id) keep the legacy within-lineage behavior."""
+    """Batch ids are monotonic only within ONE checkpoint lineage. A
+    COMMITTED store must refuse a handle of a different lineage: when it
+    is opened, and on every touch of a handle opened before the foreign
+    commit — on ids behind the pointer (silent skip) AND on ids ahead of
+    it (commit would silently merge foreign partials onto the state). A
+    torn FIRST commit (RUN_ID written, pointer never flipped) leaves the
+    store logically empty and reclaimable."""
     import os
     import tempfile
 
@@ -469,6 +423,8 @@ def test_state_store_run_id_guard(spark):
     df = spark.range(3)
 
     s1 = ParquetStateStore(root, run_id="/ckpt/run-A")
+    # a DIFFERENT checkpoint's handle, opened while nothing is committed
+    s2 = ParquetStateStore(root, run_id="/ckpt/run-B")
     assert not s1.already_applied(0)
     s1.commit(df, 0)
     assert s1.already_applied(0)  # same lineage: normal replay detection
@@ -478,19 +434,17 @@ def test_state_store_run_id_guard(spark):
     s1b = ParquetStateStore(root, run_id="/ckpt/run-A")
     assert s1b.already_applied(0)
 
-    # same state dir under a DIFFERENT checkpoint: every touch raises —
-    # behind the pointer (skip hazard) and ahead of it (merge hazard)
-    s2 = ParquetStateStore(root, run_id="/ckpt/run-B")
+    # same state dir under a DIFFERENT checkpoint: opening it raises, and
+    # every touch of the earlier handle raises — behind the pointer (skip
+    # hazard) and ahead of it (merge hazard)
+    with pytest.raises(RuntimeError, match="different streaming checkpoint"):
+        ParquetStateStore(root, run_id="/ckpt/run-B")
     with pytest.raises(RuntimeError, match="different streaming checkpoint"):
         s2.already_applied(0)
     with pytest.raises(RuntimeError, match="different streaming checkpoint"):
         s2.already_applied(5)
     with pytest.raises(RuntimeError, match="different streaming checkpoint"):
         s2.commit(df, 5)
-
-    # unbound handle: legacy behavior (no identity to compare)
-    s3 = ParquetStateStore(root)
-    assert s3.already_applied(0)
 
     # torn FIRST commit: RUN_ID recorded but LATEST never flipped — the
     # store is logically empty, so a new lineage may claim it (and its
@@ -853,7 +807,7 @@ def test_layout_dv_streaming_chunk_invariance_and_oneshot_equality(spark):
 
 
 def test_commit_seed_state_raises_before_commit(spark, tmp_path):
-    """The shared batch-0 freeze helper (ADVICE r13): an incomplete seed
+    """The shared batch-0 freeze helper: an incomplete seed
     set must raise WITHOUT persisting anything — latest() stays None, so
     a replayed batch 0 re-derives the seeds and re-hits the check instead
     of silently proceeding on a committed partial codebook — and a
@@ -865,7 +819,7 @@ def test_commit_seed_state_raises_before_commit(spark, tmp_path):
         commit_seed_state,
     )
 
-    store = ParquetStateStore(str(tmp_path / "seed"))
+    store = ParquetStateStore(str(tmp_path / "seed"), str(tmp_path / "ckpt"))
     seeds = spark.range(3).selectExpr("id AS cid", "CAST(id AS DOUBLE) AS cv")
 
     with pytest.raises(ValueError, match="seed batch incomplete"):
@@ -880,62 +834,55 @@ def test_commit_seed_state_raises_before_commit(spark, tmp_path):
     assert store.latest(spark).count() == 3
 
 
-def test_every_ingest_freezes_via_helper_or_declares_no_freeze():
-    """Static audit of the batch-0-freeze bug class (VERDICT r13 item 5):
-    every foreachBatch ingest in streaming_pack.py must either route its
-    batch-0 bootstrap artifact through commit_seed_state (which counts
-    the seed rows BEFORE committing) or carry an explicit `no-freeze:`
-    note explaining why no such artifact exists. A new streaming ingest
-    that freezes state ad hoc — or silently skips the question — fails
-    here, not in production."""
-    import inspect
+def test_every_ingest_commits_through_apply_or_seed_helper():
+    """Structural audit of the foreachBatch state stores: the package has
+    one foreachBatch (streaming/incremental.py::run_stream) and one
+    commit path. streaming_pack.py never commits or replay-guards a store
+    by hand; a batch-0 freeze — a store written inside a
+    `latest(...) is None` bootstrap branch — goes through
+    commit_seed_state (which counts the seed rows BEFORE committing),
+    never through apply/commit; and at least 10 ingests drive their
+    stream through run_stream."""
+    import pathlib
     import re
 
+    import hive_server_spark
     from hive_server_spark.plans import streaming_pack
 
-    src = inspect.getsource(streaming_pack)
-    # split into top-level function bodies; audit every one that drives a
-    # foreachBatch callback
-    chunks = re.split(r"(?m)^(?=def |@|#)", src)
-    bodies = [c for c in chunks if "def on_batch" in c]
-    assert len(bodies) >= 9, "foreachBatch ingests went missing"
-    for body in bodies:
-        name = re.search(r"def (\w+)", body).group(1)
-        assert ("commit_seed_state(" in body) or ("no-freeze:" in body), (
-            f"{name}: foreachBatch ingest neither uses commit_seed_state "
-            f"nor declares a `no-freeze:` justification"
-        )
-        # the helper and an ad-hoc freeze must not coexist half-and-half:
-        # a body using the helper must not also hand-commit a *seed*
-        # store before the guard (heuristic: no `.count()` on a store
-        # readback inside the freeze branch)
-        if "commit_seed_state(" in body:
-            assert not re.search(r"latest\(ss\)\.count\(\)", body), (
-                f"{name}: post-commit seed count survived the ADVICE r13 fix"
+    pkg = pathlib.Path(hive_server_spark.__file__).parent
+    home = pkg / "streaming" / "incremental.py"
+    for path in sorted(pkg.rglob("*.py")):
+        if path == home:
+            continue
+        text = path.read_text()
+        for call in ("foreachBatch(", "already_applied(", ".commit("):
+            assert call not in text, (
+                f"{path.relative_to(pkg)}: `{call}` outside "
+                "streaming/incremental.py — fold state through "
+                "ParquetStateStore.apply / commit_seed_state and run_stream"
             )
-        else:
-            # ADVICE r14: a `no-freeze:` note is a convention, not proof —
-            # back it structurally: a body claiming no frozen bootstrap
-            # artifact must not COMMIT a store inside a
-            # `latest(...) is None` bootstrap branch (that IS a batch-0
-            # freeze, whatever the comment says). Indent-aware: collect
-            # each such branch's block and scan it for .commit( calls.
-            lines = body.splitlines()
-            for i, line in enumerate(lines):
-                if not re.search(r"latest\([^)]*\)\s+is\s+None", line):
-                    continue
-                indent = len(line) - len(line.lstrip())
-                block = []
-                for nxt in lines[i + 1:]:
-                    if nxt.strip() and (len(nxt) - len(nxt.lstrip())) <= indent:
-                        break
-                    block.append(nxt)
-                assert not any(".commit(" in b for b in block), (
-                    f"{name}: declares `no-freeze:` but commits a store "
-                    "inside a `latest(...) is None` bootstrap branch — "
-                    "that is a batch-0 freeze; route it through "
-                    "commit_seed_state"
-                )
+
+    src = pathlib.Path(streaming_pack.__file__).read_text()
+    # the seed count runs BEFORE the commit (commit_seed_state), never on
+    # a store readback after it
+    assert not re.search(r"latest\([^)]*\)\.count\(\)", src)
+    lines = src.splitlines()
+    for i, line in enumerate(lines):
+        if not re.search(r"latest\([^)]*\)\s+is\s+None", line):
+            continue
+        # the branch body: every following line indented deeper than `if`
+        indent = len(line) - len(line.lstrip())
+        for nxt in lines[i + 1:]:
+            if nxt.strip() and (len(nxt) - len(nxt.lstrip())) <= indent:
+                break
+            assert ".apply(" not in nxt and ".commit(" not in nxt, (
+                f"streaming_pack.py:{i + 1}: a store is written inside a "
+                "`latest(...) is None` bootstrap branch — that is a batch-0 "
+                "freeze; route it through commit_seed_state"
+            )
+
+    n_runs = sum(bool(re.search(r"\brun_stream\(", ln)) for ln in lines)
+    assert n_runs >= 10, f"foreachBatch ingests went missing: {n_runs} run_stream calls"
 
 
 def test_layout_zonemap_streaming_chunk_invariance_and_batch_equality(spark):

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from hive_server_spark.catalog import load_table
 from hive_server_spark.operators.fold import fold_order_events
 from hive_server_spark.sources.synthetic import order_events
+from hive_server_spark.streaming.incremental import file_stream
 from hive_server_spark.streaming.stateful import stateful_orders_stream
 from hive_server_spark.streaming.windows import hourly_rollup_stream, session_stream
 from tests.conftest import SF_SMALL
@@ -40,11 +41,7 @@ def _run_to_memory(spark, out_df, name: str, ckpt: str, mode: str):
 def test_stateful_fold_matches_batch(spark):
     ev = order_events(spark, SF_SMALL)
     work, path = _stream_dir(spark, ev, chunks=3)
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
-    )
-    out = stateful_orders_stream(stream)
+    out = stateful_orders_stream(file_stream(spark, path))
     tbl = _run_to_memory(
         spark, out, "stateful_orders", os.path.join(work, "ckpt"), "update"
     )
