@@ -29,6 +29,7 @@ from hive_server_spark.operators.fold import (
     fold_order_events,
 )
 from hive_server_spark.operators.orderbook import price_levels, top_levels
+from hive_server_spark.operators.serving import POOLS_CTE, pools_dim
 from hive_server_spark.operators.trades import (
     latest_price,
     market_orders,
@@ -571,24 +572,13 @@ def q_amount_out_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # The reference enriches every response with token metadata fetched once per
 # pool over RPC (reference src/services/hive-listener.ts:54-111) and rescales
-# uint256 amounts by 10^decimals (P2, :239-241). Our pools dim is derived
-# deterministically from the pool address (md5-seeded decimals / symbols) and
-# broadcast-joined; the rescale is a single double division.
+# uint256 amounts by 10^decimals (P2, :239-241). The pools dim is the serving
+# edge's `pools_dim` (md5-seeded decimals / symbols, broadcast-joined); the
+# rescale is a single double division.
 @register(
     "pool_info_enriched",
-    f"WITH {ORDER_EVENTS_CTE}\n"
+    f"WITH {ORDER_EVENTS_CTE}, {POOLS_CTE}"
     + """
-, pools AS (
-  SELECT pool_address,
-         CAST(14 + ('0x'||substr(md5(pool_address),1,2))::BIGINT % 5 AS BIGINT)
-           AS base_decimals,
-         concat('TK', upper(substr(pool_address, 6, 1)))  AS base_symbol,
-         'USDQ'                                           AS quote_symbol
-  FROM (SELECT DISTINCT pool_address FROM order_events)
-), lp AS (
-  SELECT pool_address, max_by(price, seq) AS latest_price
-  FROM order_events WHERE event_type = 'LatestPrice' GROUP BY pool_address
-)
 SELECT p.pool_address, p.base_decimals, p.base_symbol, p.quote_symbol,
        CAST(lp.latest_price AS DOUBLE) AS latest_price,
        CAST(lp.latest_price AS DOUBLE) / power(10.0, CAST(p.base_decimals AS DOUBLE))
@@ -597,22 +587,7 @@ FROM pools p LEFT JOIN lp ON p.pool_address = lp.pool_address
 """,
 )
 def q_pool_info_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = order_events(spark, sf_dir)
-    pools = ev.select("pool_address").distinct().select(
-        "pool_address",
-        (
-            F.lit(14)
-            + F.expr("CAST(conv(substring(md5(pool_address),1,2),16,10) AS BIGINT)") % 5
-        )
-        .cast("bigint")
-        .alias("base_decimals"),
-        F.concat(F.lit("TK"), F.upper(F.substring("pool_address", 6, 1))).alias(
-            "base_symbol"
-        ),
-        F.lit("USDQ").alias("quote_symbol"),
-    )
-    lp = latest_price(ev)
-    return F.broadcast(pools).join(lp, "pool_address", "left").select(
+    return pools_dim(order_events(spark, sf_dir)).select(
         "pool_address",
         "base_decimals",
         "base_symbol",

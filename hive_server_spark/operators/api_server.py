@@ -1,5 +1,4 @@
-"""Live JSON API daemon over the serving surface (SURVEY S10, the last
-"missing" row of VERDICT r03).
+"""Live JSON API daemon over the serving surface (SURVEY S9/S10).
 
 The reference serves these routes from Express over in-memory listener state
 (reference src/api/server.ts:26-51, src/api/routes.ts:11-17):
@@ -14,39 +13,45 @@ The reference serves these routes from Express over in-memory listener state
 
 Spark-first equivalent: the daemon holds the *persisted* folded state (the
 table the streaming layer maintains via MERGE at cluster scale) plus the
-broadcastable pools dim, and each request is a filter + tiny collect over
-those cached DataFrames — response rendering is the same JVM-side `to_json`
-path the oracle-checked serving gate queries pin byte-exactly
-(plans/serving_pack.py). No route ever collects more than its response.
+broadcastable pools dim (`serving.pools_dim`), and each request is a filter
++ tiny collect over those cached DataFrames. Every response is rendered by
+operators/serving.py, the same renders the oracle-checked serving gate
+queries (plans/serving_pack.py) call. No route ever collects more than its
+response.
 
-The reference's Socket.io orderbook push (server.ts:43-51, rooms per pool
-at :43-51) maps to the CDC table (streaming/cdc.py) plus two transports:
+The reference's Socket.io orderbook push (server.ts:43-51, one room per
+pool) maps to the CDC table (streaming/cdc.py) plus three transports:
 
     GET /api/cdc/:address?since=<version>       (pull: one-shot tail)
     GET /api/cdc/:address/stream?since=&timeout= (push: SSE subscription)
     GET /api/cdc/:address/ws?since=&timeout=     (push: RFC 6455 WebSocket)
 
-The SSE endpoint is the actual push bridge — the `io.to(room).emit`
-analogue: a subscriber receives every existing snapshot version for its
-pool in order, then stays subscribed; new `cdc_version=N` partitions
-landed by the streaming fold are pushed as they appear (the handler polls
-the partition directory listing — cheap: names only — and reads only new
-versions, gated on Spark's _SUCCESS marker so a half-written partition is
-never served). One SSE event per version, `id:` = version, so clients
-resume with Last-Event-ID semantics via ?since=. Zero non-stdlib
-dependencies (http.server), threads share the one SparkSession (Spark
-reads are thread-safe).
+All three read the committed `cdc_version=N` partitions from the directory
+listing (names only), gated on Spark's _SUCCESS marker so a half-written
+partition is never served, and serve each version from one render-once
+cache: one Spark job renders a version for every pool. The pull tail
+returns the level rows of every version after `since`, in version order.
+The push transports replay those versions, then stay subscribed and push
+each version the streaming fold lands, one event/frame per version (SSE
+`id:` = version, so clients resume with Last-Event-ID semantics via
+?since=). Zero non-stdlib dependencies (http.server); threads share the one
+SparkSession (Spark reads are thread-safe).
 """
 
 from __future__ import annotations
 
+import base64
+import hashlib
 import json
 import os
 import re
+import struct
 import sys
 import threading
 import time
+import traceback
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import Callable, Iterable
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +73,14 @@ def _parse_int(raw: str | None) -> int | None:
         return None
 
 
+class _Refused(Exception):
+    """A request refused before any byte of its reply is written."""
+
+    def __init__(self, status: int, body: str) -> None:
+        super().__init__(body)
+        self.status, self.body = status, body
+
+
 def _plain(handler: BaseHTTPRequestHandler, status: int, body: str) -> None:
     payload = body.encode()
     handler.send_response(status)
@@ -77,10 +90,14 @@ def _plain(handler: BaseHTTPRequestHandler, status: int, body: str) -> None:
     handler.wfile.write(payload)
 
 
+def _json_array(elements: Iterable[str]) -> str:
+    """Join rendered JSON documents into one JSON array, byte-exact per
+    element (no re-parse/re-serialize round trip)."""
+    return "[" + ",".join(elements) + "]"
+
+
 def _json_rows(df: DataFrame) -> str:
-    """Concatenate a `json`-column DataFrame into one JSON array, byte-exact
-    per element (no re-parse/re-serialize round trip)."""
-    return "[" + ",".join(r.json for r in df.collect()) + "]"
+    return _json_array(r.json for r in df.collect())
 
 
 class HiveApiServer:
@@ -107,50 +124,20 @@ class HiveApiServer:
         # the serving-time analogue of the reference holding books in memory
         self.events = ev.persist()
         self.orders = fold_order_events(ev).persist()
-        self.pools = (
-            ev.select("pool_address")
-            .distinct()
-            .select(
-                "pool_address",
-                (
-                    F.lit(14)
-                    + F.expr(
-                        "CAST(conv(substring(md5(pool_address),1,2),16,10) AS BIGINT)"
-                    )
-                    % 5
-                )
-                .cast("bigint")
-                .alias("base_decimals"),
-                F.concat(F.lit("TK"), F.upper(F.substring("pool_address", 6, 1))).alias(
-                    "base_symbol"
-                ),
-                F.lit("USDQ").alias("quote_symbol"),
-            )
-            .join(
-                ev.where(F.col("event_type") == "LatestPrice")
-                .groupBy("pool_address")
-                .agg(F.max_by("price", "seq").alias("latest_price")),
-                "pool_address",
-                "left",
-            )
-            .persist()
-        )
+        self.pools = serving.pools_dim(ev).persist()
         self.pools.count()  # materialize eagerly; requests only filter
         self.cdc_root = cdc_dir
-        self.cdc = (
-            spark.read.parquet(cdc_dir).persist() if cdc_dir is not None else None
-        )
-        # SSE render-once cache (VERDICT r05 "What's wrong" item 1): each
-        # landed CDC version is rendered ONCE — one Spark job producing the
-        # JSON payload for EVERY pool — and served to all subscribers from
-        # memory, the io.to(room).emit shape of the reference
-        # (src/api/server.ts:43-51: one book per room, broadcast). Without
-        # this, S subscribers x P pools meant S*P Spark jobs per version.
-        # entries are (success_mtime, {pool: payload}): the _SUCCESS marker
-        # mtime invalidates the cache when a cdc_version dir is REWRITTEN
-        # (foreachBatch replay after checkpoint restart overwrites whole
-        # version dirs) — a stale render must not outlive the data
-        self._snapshot_cache: dict[int, tuple[float, dict[str, str]]] = {}
+        # render-once cache: each landed CDC version is rendered ONCE — one
+        # Spark job producing the level rows of EVERY pool — and served to
+        # every tail read and subscriber from memory, the io.to(room).emit
+        # shape of the reference (src/api/server.ts:43-51: one book per room,
+        # broadcast). Without it, S subscribers x P pools would cost S*P
+        # Spark jobs per version.
+        # entries are (success_mtime, {pool: [level json, ...]}): the _SUCCESS
+        # marker mtime invalidates the cache when a cdc_version dir is
+        # REWRITTEN (foreachBatch replay after checkpoint restart overwrites
+        # whole version dirs) — a stale render must not outlive the data
+        self._snapshot_cache: dict[int, tuple[float, dict[str, list[str]]]] = {}
         self._snapshot_lock = threading.Lock()  # guards the two dicts only
         self._version_locks: dict[int, threading.Lock] = {}
         self.snapshot_materializations = 0  # test-visible Spark-job count
@@ -169,10 +156,7 @@ class HiveApiServer:
         if len(parts) < 2 or parts[0] != "api":
             return 404, '{"error":"not found"}'
         if parts[1] == "cdc" and len(parts) == 3:
-            since = _parse_int(q.get("since", ["-1"])[0])
-            if since is None:
-                return 400, '{"error":"since must be an integer"}'
-            return self._cdc_tail(parts[2], since)
+            return self._cdc_tail(parts[2], q)
         if parts[1] != "pools":
             return 404, '{"error":"not found"}'
         if len(parts) == 2:
@@ -185,9 +169,8 @@ class HiveApiServer:
             rows = serving.order_book_json(self.orders, addr).collect()
             return (200, rows[0].json) if rows else (404, '{"error":"unknown pool"}')
         if len(parts) == 4 and parts[3] == "get-amount-out":
-            # reference param is `orderType` (order-book-controller.ts:14);
-            # `side` kept as an alias for earlier clients of this daemon
-            raw_side = q.get("orderType", q.get("side", [None]))[0]
+            # reference param is `orderType` (order-book-controller.ts:14)
+            raw_side = q.get("orderType", [None])[0]
             raw_amt = q.get("amount", [None])[0]
             if raw_side is None or raw_side.upper() not in ("BUY", "SELL"):
                 return 400, '{"error":"orderType must be BUY or SELL"}'
@@ -210,7 +193,7 @@ class HiveApiServer:
             return 200, _json_rows(serving.market_orders_json(self.events, addr, parts[3]))
         return 404, '{"error":"not found"}'
 
-    # -- SSE push bridge (the reference's io.to(room).emit analogue) --------
+    # -- CDC edge: committed versions, rendered once ------------------------
     def _cdc_versions_on_disk(self) -> list[int]:
         """Committed snapshot versions, from the partition directory NAMES —
         no data read; Spark's _SUCCESS marker gates half-written partitions
@@ -222,16 +205,16 @@ class HiveApiServer:
                 out.append(int(m.group(1)))
         return sorted(out)
 
-    def _rendered_version(self, version: int) -> dict[str, str]:
-        """The JSON payload of EVERY pool's book at `version`, rendered by
-        at most one Spark job per on-disk incarnation of the version,
-        regardless of subscriber count. Locking: the global lock guards
-        only dict lookups; the render itself runs under a per-version lock,
-        so a slow render of version N never blocks subscribers reading
-        already-cached versions or rendering a different version. The cache
-        entry is stamped with the _SUCCESS mtime — a rewritten version dir
-        (foreachBatch replay after restart) re-renders instead of serving
-        the pre-rewrite book."""
+    def _rendered_version(self, version: int) -> dict[str, list[str]]:
+        """The level rows of EVERY pool's book at `version`
+        (`serving.cdc_levels_json`), rendered by at most one Spark job per
+        on-disk incarnation of the version, regardless of reader count.
+        Locking: the global lock guards only dict lookups; the render itself
+        runs under a per-version lock, so a slow render of version N never
+        blocks readers of already-cached versions or the render of a
+        different version. The cache entry is stamped with the _SUCCESS
+        mtime — a rewritten version dir (foreachBatch replay after restart)
+        re-renders instead of serving the pre-rewrite book."""
         stamp = os.path.getmtime(
             os.path.join(self.cdc_root, f"cdc_version={version}", "_SUCCESS")
         )
@@ -245,39 +228,13 @@ class HiveApiServer:
                 hit = self._snapshot_cache.get(version)
                 if hit is not None and hit[0] == stamp:
                     return hit[1]
-            df = self.spark.read.parquet(
+            snapshot = self.spark.read.parquet(
                 os.path.join(self.cdc_root, f"cdc_version={version}")
             )
-            row_j = F.struct(
-                # sort keys first: array_sort orders struct fields in
-                # declaration order, making payload row order deterministic
-                F.col("order_type"),
-                F.col("level_rank").cast("long").alias("level_rank"),
-                F.to_json(
-                    F.struct(
-                        F.lit(version).cast("long").alias("version"),
-                        F.col("order_type").alias("side"),
-                        F.col("price").cast("string").alias("price"),
-                        F.col("total_volume").cast("string").alias("totalVolume"),
-                        F.col("order_count").cast("long").alias("orderCount"),
-                        F.col("level_rank").cast("long").alias("levelRank"),
-                    )
-                ).alias("json"),
-            )
-            rows = (
-                df.groupBy("pool_address")
-                .agg(F.array_sort(F.collect_list(row_j)).alias("levels"))
-                .select(
-                    "pool_address",
-                    F.concat(
-                        F.lit("["),
-                        F.array_join(F.expr("transform(levels, x -> x.json)"), ","),
-                        F.lit("]"),
-                    ).alias("payload"),
-                )
-                .collect()
-            )
-            rendered = {r.pool_address: r.payload for r in rows}
+            rendered = {
+                r.pool_address: r.levels
+                for r in serving.cdc_levels_json(snapshot, version).collect()
+            }
             with self._snapshot_lock:
                 self.snapshot_materializations += 1
                 self._snapshot_cache[version] = (stamp, rendered)
@@ -287,77 +244,91 @@ class HiveApiServer:
                     self._version_locks.pop(evicted, None)
             return rendered
 
-    def _snapshot_event(self, version: int, addr: str) -> bytes:
-        """One SSE event: every level row of `addr`'s depth-k book at
-        `version`, as the same JSON shape the pull tail serves — read from
-        the per-version render-once cache, never a per-subscriber job."""
-        payload = self._rendered_version(version).get(addr, "[]")
-        return f"id: {version}\nevent: book\ndata: {payload}\n\n".encode()
-
-    # longest SSE subscription a single request may hold (the reference's
+    # longest subscription a single request may hold (the reference's
     # Socket.io rooms are server-managed; here each subscription pins one
     # handler thread, so an unbounded client-supplied timeout would let a
     # handful of requests accumulate threads + per-version Spark jobs forever)
     SSE_MAX_TIMEOUT_S = 300
 
-    def _cdc_stream_sse(self, handler, addr: str, q: dict[str, list[str]]) -> None:
-        """Server-Sent Events subscription: replay committed versions after
-        `since` in order, then keep pushing new ones as the streaming fold
-        lands them, until `timeout` seconds pass or the client disconnects.
-        `id:` carries the version; a reconnecting EventSource resumes from
-        its `Last-Event-ID` header (standard SSE), or via ?since=<v> for
-        plain HTTP clients — the header wins when both are present, because
-        that is what the browser auto-reconnect sends."""
-        since = _parse_int(q.get("since", ["-1"])[0])
-        last_event_id = _parse_int(handler.headers.get("Last-Event-ID") or "")
-        if last_event_id is not None:
-            # an unusable Last-Event-ID falls back to ?since= (per SSE
-            # convention a bad id is ignored, never a fatal non-200 — an
-            # EventSource treats any error status as stop-reconnecting)
-            since = last_event_id
-        timeout_s = _parse_int(q.get("timeout", ["30"])[0])
+    def _cdc_args(
+        self, q: dict[str, list[str]], last_event_id: int | None = None
+    ) -> tuple[int, int]:
+        """`(since, timeout_s)` of a CDC request, or `_Refused`. A usable
+        `last_event_id` replaces ?since=."""
         if self.cdc_root is None:
-            _plain(handler, 404, '{"error":"cdc table not configured"}')
-            return
+            raise _Refused(404, '{"error":"cdc table not configured"}')
+        since = last_event_id
+        if since is None:
+            since = _parse_int(q.get("since", ["-1"])[0])
+        timeout_s = _parse_int(q.get("timeout", ["30"])[0])
         if since is None or timeout_s is None:
-            _plain(handler, 400, '{"error":"since/timeout must be integers"}')
-            return
-        timeout_s = min(timeout_s, self.SSE_MAX_TIMEOUT_S)
+            raise _Refused(400, '{"error":"since/timeout must be integers"}')
+        return since, min(timeout_s, self.SSE_MAX_TIMEOUT_S)
+
+    def _cdc_tail(self, addr: str, q: dict[str, list[str]]) -> tuple[int, str]:
+        """Pull tail: `addr`'s level rows of every committed version after
+        ?since=, in version order."""
+        since, _timeout_s = self._cdc_args(q)
+        return 200, _json_array(
+            level
+            for version in self._cdc_versions_on_disk()
+            if version > since
+            for level in self._rendered_version(version).get(addr, [])
+        )
+
+    def _subscribe(
+        self, addr: str, since: int, timeout_s: int, send: Callable[[int, str], None]
+    ) -> None:
+        """The push transports' one loop: replay the committed versions after
+        `since` in order, then push each new one the streaming fold lands,
+        until `timeout_s` passes. `send(version, payload)` frames one
+        version's JSON array of `addr`'s level rows for its transport; a
+        client that goes away surfaces as a broken pipe out of `send`."""
+        last = since
+        deadline = time.monotonic() + timeout_s
+        while time.monotonic() < deadline:
+            for version in self._cdc_versions_on_disk():
+                if version > last:
+                    send(version, _json_array(self._rendered_version(version).get(addr, [])))
+                    last = version
+            time.sleep(0.2)
+
+    def _cdc_stream_sse(self, handler, addr: str, q: dict[str, list[str]]) -> None:
+        """Server-Sent Events subscription: one `book` event per version,
+        `id:` = version. A reconnecting EventSource resumes from its
+        `Last-Event-ID` header (standard SSE), plain HTTP clients via
+        ?since=<v> — the header wins when both are present, because that is
+        what the browser auto-reconnect sends. An unusable Last-Event-ID
+        falls back to ?since= (per SSE convention a bad id is ignored, never
+        a fatal non-200 — an EventSource treats any error status as
+        stop-reconnecting)."""
+        last_event_id = _parse_int(handler.headers.get("Last-Event-ID") or "")
+        since, timeout_s = self._cdc_args(q, last_event_id)
         handler.send_response(200)
         handler.send_header("Content-Type", "text/event-stream")
         handler.send_header("Cache-Control", "no-cache")
         handler.end_headers()
-        last = since
-        deadline = time.monotonic() + timeout_s
-        try:
-            while time.monotonic() < deadline:
-                for version in self._cdc_versions_on_disk():
-                    if version <= last:
-                        continue
-                    handler.wfile.write(self._snapshot_event(version, addr))
-                    handler.wfile.flush()
-                    last = version
-                time.sleep(0.2)
-        except (BrokenPipeError, ConnectionResetError):
-            pass  # subscriber went away; nothing to clean up
+
+        def send(version: int, payload: str) -> None:
+            handler.wfile.write(f"id: {version}\nevent: book\ndata: {payload}\n\n".encode())
+            handler.wfile.flush()
+
+        self._subscribe(addr, since, timeout_s, send)
 
     # -- WebSocket push bridge (RFC 6455, stdlib-only) ----------------------
     # The reference pushes books over Socket.io rooms (reference
     # src/api/server.ts:26-51); Socket.io's browser transport is WebSocket.
     # This endpoint speaks actual RFC 6455: handshake (SHA-1 + base64
     # accept key), then unmasked server→client text frames, one per landed
-    # CDC version, from the same render-once cache as the SSE bridge.
-    # Send-only by design: the server never reads client frames after the
-    # handshake (no ping/pong — a client close surfaces as a broken pipe on
-    # the next push, exactly like an SSE disconnect), which keeps the
-    # handler loop identical to SSE's and the whole transport dependency-free.
+    # CDC version. Send-only by design: the server never reads client
+    # frames after the handshake (no ping/pong — a client close surfaces as
+    # a broken pipe on the next push, exactly like an SSE disconnect), which
+    # keeps the transport on the shared subscription loop and dependency-free.
     _WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 
     @staticmethod
     def _ws_frame(payload: bytes, opcode: int = 0x1) -> bytes:
         """One unmasked server frame (FIN set): text by default, 0x8 close."""
-        import struct
-
         head = bytes([0x80 | opcode])
         n = len(payload)
         if n < 126:
@@ -369,27 +340,14 @@ class HiveApiServer:
         return head + payload
 
     def _cdc_stream_ws(self, handler, addr: str, q: dict[str, list[str]]) -> None:
-        """WebSocket subscription: same replay-then-push contract as the SSE
-        bridge (?since=, ?timeout=), each version delivered as one text
-        frame `{"version": N, "data": [...]}`; a clean close frame ends the
+        """WebSocket subscription: each version delivered as one text frame
+        `{"version": N, "data": [...]}`; a clean close frame ends the
         subscription at the timeout."""
-        import base64
-        import hashlib
-
-        if self.cdc_root is None:
-            _plain(handler, 404, '{"error":"cdc table not configured"}')
-            return
+        since, timeout_s = self._cdc_args(q)
         upgrade = (handler.headers.get("Upgrade") or "").lower()
         key = handler.headers.get("Sec-WebSocket-Key")
         if upgrade != "websocket" or not key:
-            _plain(handler, 400, '{"error":"websocket upgrade required"}')
-            return
-        since = _parse_int(q.get("since", ["-1"])[0])
-        timeout_s = _parse_int(q.get("timeout", ["30"])[0])
-        if since is None or timeout_s is None:
-            _plain(handler, 400, '{"error":"since/timeout must be integers"}')
-            return
-        timeout_s = min(timeout_s, self.SSE_MAX_TIMEOUT_S)
+            raise _Refused(400, '{"error":"websocket upgrade required"}')
         accept = base64.b64encode(
             hashlib.sha1((key + self._WS_GUID).encode()).digest()
         ).decode()
@@ -405,42 +363,15 @@ class HiveApiServer:
         # http.server would try to read another request off this socket
         # after do_GET returns — the connection is a WS stream now
         handler.close_connection = True
-        last = since
-        deadline = time.monotonic() + timeout_s
-        try:
-            while time.monotonic() < deadline:
-                for version in self._cdc_versions_on_disk():
-                    if version <= last:
-                        continue
-                    payload = self._rendered_version(version).get(addr, "[]")
-                    msg = f'{{"version":{version},"data":{payload}}}'
-                    handler.wfile.write(self._ws_frame(msg.encode()))
-                    handler.wfile.flush()
-                    last = version
-                time.sleep(0.2)
-            handler.wfile.write(self._ws_frame(b"", opcode=0x8))
-            handler.wfile.flush()
-        except (BrokenPipeError, ConnectionResetError):
-            pass  # subscriber went away; nothing to clean up
 
-    def _cdc_tail(self, addr: str, since: int) -> tuple[int, str]:
-        if self.cdc is None:
-            return 404, '{"error":"cdc table not configured"}'
-        snaps = self.cdc.where(
-            (F.col("pool_address") == addr) & (F.col("cdc_version") > since)
-        ).select(
-            F.to_json(
-                F.struct(
-                    F.col("cdc_version").cast("long").alias("version"),
-                    F.col("order_type").alias("side"),
-                    F.col("price").cast("string").alias("price"),
-                    F.col("total_volume").cast("string").alias("totalVolume"),
-                    F.col("order_count").cast("long").alias("orderCount"),
-                    F.col("level_rank").cast("long").alias("levelRank"),
-                )
-            ).alias("json")
-        )
-        return 200, _json_rows(snaps)
+        def send(version: int, payload: str) -> None:
+            msg = f'{{"version":{version},"data":{payload}}}'
+            handler.wfile.write(self._ws_frame(msg.encode()))
+            handler.wfile.flush()
+
+        self._subscribe(addr, since, timeout_s, send)
+        handler.wfile.write(self._ws_frame(b"", opcode=0x8))
+        handler.wfile.flush()
 
     # -- http plumbing ------------------------------------------------------
     def _make_handler(self):
@@ -451,32 +382,28 @@ class HiveApiServer:
                 u = urlparse(self.path)
                 q = parse_qs(u.query)
                 parts = [p for p in u.path.split("/") if p]
-                if (
-                    len(parts) == 4
-                    and parts[:2] == ["api", "cdc"]
-                    and parts[3] in ("stream", "ws")
-                ):
-                    push = (
-                        outer._cdc_stream_sse
-                        if parts[3] == "stream"
-                        else outer._cdc_stream_ws
+                push = None
+                if len(parts) == 4 and parts[:2] == ["api", "cdc"]:
+                    push = {"stream": outer._cdc_stream_sse, "ws": outer._cdc_stream_ws}.get(
+                        parts[3]
                     )
-                    try:
+                try:
+                    if push is not None:
                         push(self, parts[2], q)
-                    except (BrokenPipeError, ConnectionResetError):
-                        pass  # subscriber went away mid-stream
-                    except Exception:
+                        return
+                    status, body = outer._route(u.path, q)
+                except _Refused as r:
+                    status, body = r.status, r.body
+                except (BrokenPipeError, ConnectionResetError):
+                    return  # subscriber went away mid-stream
+                except Exception as e:
+                    if push is not None:
                         # stream headers may already be on the wire, so no
                         # 500 response is possible — but never swallow
                         # silently: a mid-stream bug must be visible in logs
-                        import traceback
-
                         traceback.print_exc(file=sys.stderr)
-                    return
-                try:
-                    status, body = outer._route(u.path, q)
-                except Exception as e:  # surface engine errors as 500 JSON
-                    status, body = 500, json.dumps({"error": str(e)})
+                        return
+                    status, body = 500, json.dumps({"error": str(e)})  # engine errors
                 _plain(self, status, body)
 
             def log_message(self, *a) -> None:  # quiet test output
@@ -494,6 +421,5 @@ class HiveApiServer:
         self._httpd.server_close()
         if self._thread is not None:
             self._thread.join(timeout=5)
-        for df in (self.events, self.orders, self.pools, self.cdc):
-            if df is not None:
-                df.unpersist()
+        for df in (self.events, self.orders, self.pools):
+            df.unpersist()

@@ -1,17 +1,17 @@
-"""Order-book read side: price levels, top-k bids/asks, book assembly.
+"""Order-book read side: price levels and top-k bids/asks.
 
 Mirrors reference src/models/order-book.ts:202-349 (getBuyLevels /
 getSellLevels / getOrderBook): per (pool, side, price) level with
 `total_volume = Σ(amount − filled)` over ACTIVE orders (A2), per-level order
 lists in seq order — price-time priority (A3) — bids sorted desc / asks asc,
-top `depth` levels per side (T1/T2).
+top `depth` levels per side (T1/T2). The book document itself is assembled
+from these by `serving.order_book_rows`.
 
 Spark-first: the reference's Redis index fan-out (N+1 point gets per level,
-src/models/order-book.ts:209-213) collapses into one hash aggregate; the
-sort+slice becomes `orderBy().limit()` which Spark plans as
-TakeOrderedAndProject (no full sort at scale). Per-pool top-k across MANY
-pools uses a rank-over-window instead, with partial aggregation before the
-single shuffle on (pool, side, price).
+src/models/order-book.ts:209-213) collapses into one hash aggregate, with
+partial aggregation before the single shuffle on (pool, side, price); the
+per-side sort+slice becomes a rank-over-window, so one job covers every
+pool.
 
 FIFO within a level (A3) is enforced by sorting collected structs by seq —
 never by arrival order (collect_list is otherwise non-deterministic under
@@ -71,26 +71,3 @@ def top_levels(levels: DataFrame, depth: int = 20) -> DataFrame:
     )
     return ranked.where(F.col("level_rank") <= depth)
 
-
-def order_book(orders: DataFrame, pool_address: str, depth: int = 20) -> DataFrame:
-    """Assemble one pool's book: a single-row DataFrame with bids[], asks[]
-    and the level structs — ≙ OrderBook (reference src/models/types.ts:21-33).
-
-    The pool filter lands on the scan (partition-prunable when the state
-    table is written partitioned by pool bucket).
-    """
-    lv = top_levels(
-        price_levels(orders.where(F.col("pool_address") == pool_address)), depth
-    )
-    level_struct = F.struct(
-        F.col("price"), F.col("total_volume"), F.col("order_count"), F.col("order_ids")
-    )
-    per_side = lv.groupBy("pool_address").agg(
-        F.sort_array(
-            F.collect_list(F.when(F.col("order_type") == "BUY", level_struct)), asc=False
-        ).alias("bids"),
-        F.sort_array(
-            F.collect_list(F.when(F.col("order_type") == "SELL", level_struct))
-        ).alias("asks"),
-    )
-    return per_side

@@ -1,15 +1,15 @@
 """Oracle-backed gate queries for the serving and CDC edges (SURVEY S9/S10).
 
-Until round 3 these two surfaces were pytest-only ("edge" rows in the
-verdict's coverage table): the JSON serving shapes (operators/serving.py,
-reference src/api/routes.ts:11-17) and the CDC snapshot push
-(streaming/cdc.py, reference src/services/hive-listener.ts:212-221). This
-pack gives each a rows+schema+value-hash oracle:
+This pack gives the JSON serving shapes (operators/serving.py, reference
+src/api/routes.ts:11-17) and the CDC snapshot push (streaming/cdc.py,
+reference src/services/hive-listener.ts:212-221) a rows+schema+value-hash
+oracle each:
 
-* serving JSON — the Spark side renders responses with `to_json` (JVM-side,
-  per row); the DuckDB oracle builds the byte-identical JSON string by
-  explicit concatenation. Any drift in field order, decimal rendering,
-  boolean casing, or null-key omission breaks the hash.
+* serving JSON — each gate query calls the all-pools render of its route in
+  operators/serving.py, the same render the API server serves (`to_json`,
+  JVM-side, per row); the DuckDB oracle builds the byte-identical JSON
+  string by explicit concatenation. Any drift in field order, decimal
+  rendering, boolean casing, or null-key omission breaks the hash.
 * CDC — the streaming fold runs over the same deterministic 3-slice landing
   as `orders_state_time_travel`, so each micro-batch has an exact seq-range
   definition; the oracle recomputes every version's depth-k book for the
@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_server_spark.operators import serving
 from hive_server_spark.operators.fold import ORDER_UPDATES_CTE, ORDERS_STATE_CTE
 from hive_server_spark.registry import register
 from hive_server_spark.sources.synthetic import ORDER_EVENTS_CTE, order_events
@@ -42,19 +43,8 @@ def _orders_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (reference src/api/controllers/pool-controller.ts, src/models/types.ts:35-40)
 # ---------------------------------------------------------------------------
 _POOL_INFO_JSON_ORACLE = (
-    f"WITH {ORDER_EVENTS_CTE}\n"
+    f"WITH {ORDER_EVENTS_CTE}, {serving.POOLS_CTE}"
     + """
-, pools AS (
-  SELECT pool_address,
-         CAST(14 + ('0x'||substr(md5(pool_address),1,2))::BIGINT % 5 AS BIGINT)
-           AS base_decimals,
-         concat('TK', upper(substr(pool_address, 6, 1)))  AS base_symbol,
-         'USDQ'                                           AS quote_symbol
-  FROM (SELECT DISTINCT pool_address FROM order_events)
-), lp AS (
-  SELECT pool_address, max_by(price, seq) AS latest_price
-  FROM order_events WHERE event_type = 'LatestPrice' GROUP BY pool_address
-)
 SELECT p.pool_address,
        '{"address":"' || p.pool_address ||
        '","baseToken":{"symbol":"' || p.base_symbol ||
@@ -70,51 +60,16 @@ FROM pools p LEFT JOIN lp ON p.pool_address = lp.pool_address
 
 @register("serving_pool_info_json", _POOL_INFO_JSON_ORACLE)
 def q_serving_pool_info_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PoolInfo JSON for every pool — the GET /api/pools/:address response
-    shape rendered JVM-side with to_json (operators/serving.py:108). Spark's
-    to_json omits null keys, which the oracle mirrors with a CASE; the
-    whole string is hash-compared, so decimal rendering ("112.000"), field
-    order, and null-key omission are all pinned."""
-    ev = order_events(spark, sf_dir)
-    pools = ev.select("pool_address").distinct().select(
-        "pool_address",
-        (
-            F.lit(14)
-            + F.expr("CAST(conv(substring(md5(pool_address),1,2),16,10) AS BIGINT)") % 5
-        )
-        .cast("bigint")
-        .alias("base_decimals"),
-        F.concat(F.lit("TK"), F.upper(F.substring("pool_address", 6, 1))).alias(
-            "base_symbol"
-        ),
-    )
-    lp = (
-        ev.where(F.col("event_type") == "LatestPrice")
-        .groupBy("pool_address")
-        .agg(F.max_by("price", "seq").alias("latest_price"))
-    )
-    joined = F.broadcast(pools).join(lp, "pool_address", "left")
-    return joined.select(
-        "pool_address",
-        F.to_json(
-            F.struct(
-                F.col("pool_address").alias("address"),
-                F.struct(
-                    F.col("base_symbol").alias("symbol"),
-                    F.col("base_decimals").alias("decimals"),
-                ).alias("baseToken"),
-                F.struct(
-                    F.lit("USDQ").alias("symbol"),
-                    F.lit(6).alias("decimals"),
-                ).alias("quoteToken"),
-                F.col("latest_price").cast("string").alias("latestPrice"),
-            )
-        ).alias("json"),
-    )
+    """PoolInfo JSON for every pool — the GET /api/pools/:address render
+    (`serving.pool_info_rows`) over the pools dim. Spark's to_json omits
+    null keys, which the oracle mirrors with a CASE; the whole string is
+    hash-compared, so decimal rendering ("112.000"), field order, and
+    null-key omission are all pinned."""
+    return serving.pool_info_rows(serving.pools_dim(order_events(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
-# S10 — GET /api/pools/:address/orders?trader=T1 (per-order JSON rows)
+# S10 — GET /api/pools/:address/T1/orders (per-order JSON rows), all pools
 # (reference src/api/controllers/order-controller.ts; Q7 tombstones included)
 # ---------------------------------------------------------------------------
 _USER_ORDERS_JSON_ORACLE = (
@@ -135,35 +90,21 @@ FROM orders_state WHERE trader = 'T1'
 
 @register("serving_user_orders_json", _USER_ORDERS_JSON_ORACLE)
 def q_serving_user_orders_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trader T1's orders as serving JSON rows (active AND tombstoned — Q7),
-    the operators/serving.py:67 response shape over the folded state. Every
-    field of a created order is non-null, so no key-omission branch is
-    needed; decimals render to full scale identically in both engines."""
-    orders = _orders_state(spark, sf_dir).where(F.col("trader") == "T1")
-    return orders.select(
-        "pool_address",
-        "order_id",
-        F.to_json(
-            F.struct(
-                F.col("pool_address").alias("pool"),
-                F.col("order_id").alias("id"),
-                F.col("price").cast("string").alias("price"),
-                F.col("amount").cast("string").alias("amount"),
-                F.col("order_type").alias("type"),
-                F.col("active"),
-            )
-        ).alias("json"),
-    )
+    """Trader T1's orders in every pool as serving JSON rows (active AND
+    tombstoned — Q7): the GET /api/pools/:address/:trader/orders render
+    (`serving.user_orders_json`) over the folded state; decimals render to
+    full scale identically in both engines."""
+    return serving.user_orders_json(_orders_state(spark, sf_dir), "T1")
 
 
 # ---------------------------------------------------------------------------
 # S9/ST5 — CDC re-emit: versioned depth-k book snapshots per touched pool
 # ---------------------------------------------------------------------------
-def _cdc_oracle() -> str:
-    """Version-aware fold oracle: replicate order_events per CDC version
-    (cumulative seq cutoffs at ⌊max/3⌋ / 2·⌊max/3⌋ / all — the same slice
-    definition as the time-travel landing), fold per (version, pool, order),
-    then rank the book levels of each version's *touched* pools.
+def _versioned_fold_ctes() -> str:
+    """The CTE prefix both versioned oracles share: order_events replicated
+    per CDC version (cumulative seq cutoffs at ⌊max/3⌋ / 2·⌊max/3⌋ / all —
+    the same slice definition as the time-travel landing), then folded per
+    (cdc_version, pool, order) into `orders_state`.
 
     The updates/state CTEs are the canonical fold fragments from
     operators/fold.py with the version key string-spliced into the
@@ -181,11 +122,11 @@ def _cdc_oracle() -> str:
     )
     assert "cdc_version" in v_updates and "FROM ve" in v_updates, (
         "fold CTE splice failed for updates: operators/fold.py text changed; "
-        "update the replace() targets in plans/serving_pack._cdc_oracle"
+        "update the replace() targets in plans/serving_pack._versioned_fold_ctes"
     )
     assert v_state.count("cdc_version") == 2, (
         "fold CTE splice failed for state: operators/fold.py text changed; "
-        "update the replace() targets in plans/serving_pack._cdc_oracle"
+        "update the replace() targets in plans/serving_pack._versioned_fold_ctes"
     )
     return (
         f"WITH {ORDER_EVENTS_CTE},\n"
@@ -203,20 +144,27 @@ ve AS (
                   WHEN 1 THEN (SELECT c2 FROM cut)
                   ELSE e.seq END
 ),
-touched AS (
+"""
+        + v_updates
+        + ",\n"
+        + v_state
+    )
+
+
+def _cdc_oracle() -> str:
+    """Version-aware fold oracle: the versioned fold, then the ranked book
+    levels of each version's *touched* pools."""
+    return (
+        _versioned_fold_ctes()
+        + """
+, touched AS (
   SELECT DISTINCT
          CASE WHEN seq <= (SELECT c1 FROM cut) THEN 0
               WHEN seq <= (SELECT c2 FROM cut) THEN 1
               ELSE 2 END AS cdc_version,
          pool_address
   FROM order_events
-),
-"""
-        + v_updates
-        + ",\n"
-        + v_state
-        + """
-, levels AS (
+), levels AS (
   SELECT s.cdc_version, s.pool_address, s.order_type, s.price,
          SUM(s.amount - s.filled) AS total_volume,
          COUNT(*) AS order_count
@@ -252,11 +200,9 @@ def q_cdc_book_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     all three CDC versions. The oracle recomputes each version's book from
     the events visible at that version's cutoff — so batch sequencing,
     touched-pool selection, idempotent partition overwrite, and the book
-    recompute are all value-checked, closing the last oracle-less operator
-    (VERDICT r03 item 8). The fold is the session-shared run
-    (streaming_pack.fold_seq_slices, VERDICT r04 item 3): one 3-micro-batch
-    fold+CDC serves this query, orders_state_changelog, and
-    orders_state_time_travel."""
+    recompute are all value-checked. The fold is the session-shared run
+    (streaming_pack.fold_seq_slices): one 3-micro-batch fold+CDC serves this
+    query, orders_state_changelog, and orders_state_time_travel."""
     from hive_server_spark.plans.streaming_pack import fold_seq_slices
 
     _store, cdc_dir = fold_seq_slices(spark, sf_dir)
@@ -281,20 +227,9 @@ def q_cdc_book_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (SURVEY Q7): every change is an insert or an update.
 # ---------------------------------------------------------------------------
 def _changelog_oracle() -> str:
-    """Versioned fold (same splice as the CDC oracle) self-joined at
-    consecutive versions; a row appears iff it has no predecessor (insert)
-    or any field differs null-safely (update)."""
-    v_updates = ORDER_UPDATES_CTE.replace(
-        "SELECT\n    pool_address, order_id, seq,",
-        "SELECT\n    cdc_version, pool_address, order_id, seq,",
-    ).replace("FROM order_events", "FROM ve")
-    v_state = ORDERS_STATE_CTE.replace(
-        "SELECT\n    pool_address, order_id,",
-        "SELECT\n    cdc_version, pool_address, order_id,",
-    ).replace(
-        "GROUP BY pool_address, order_id",
-        "GROUP BY cdc_version, pool_address, order_id",
-    )
+    """The versioned fold self-joined at consecutive versions; a row appears
+    iff it has no predecessor (insert) or any field differs null-safely
+    (update)."""
     same = " AND ".join(
         f"v.{c} IS NOT DISTINCT FROM p.{c}"
         for c in (
@@ -303,25 +238,7 @@ def _changelog_oracle() -> str:
         )
     )
     return (
-        f"WITH {ORDER_EVENTS_CTE},\n"
-        + """
-cut AS (
-  SELECT (SELECT max(event_id) FROM events)//3     AS c1,
-         2*((SELECT max(event_id) FROM events)//3) AS c2
-),
-vers AS (SELECT 0 AS cdc_version UNION ALL SELECT 1 UNION ALL SELECT 2),
-ve AS (
-  SELECT v.cdc_version, e.*
-  FROM order_events e JOIN vers v
-    ON e.seq <= CASE v.cdc_version
-                  WHEN 0 THEN (SELECT c1 FROM cut)
-                  WHEN 1 THEN (SELECT c2 FROM cut)
-                  ELSE e.seq END
-),
-"""
-        + v_updates
-        + ",\n"
-        + v_state
+        _versioned_fold_ctes()
         + f"""
 SELECT v.cdc_version AS version, v.pool_address, v.order_id,
        CASE WHEN p.order_id IS NULL THEN 'insert' ELSE 'update' END AS change_type,
@@ -397,33 +314,14 @@ def q_orders_state_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # S10 — GET /api/pools/:address/orderbook (depth-20 book JSON), all pools
 # (reference src/api/controllers/order-book-controller.ts,
-# src/models/order-book.ts:202-349). The third serving
-# route promoted from pytest-only to an oracle-backed gate query (after
-# pool-info and user-orders): one JSON document per pool with bids[]
+# src/models/order-book.ts:202-349): one JSON document per pool with bids[]
 # (price desc) and asks[] (price asc), each level carrying the decimal
-# price/volume strings and the FIFO order-id list — so the hash pins
-# field order, decimal rendering, array ordering, price-time priority,
-# AND empty-side rendering ("bids":[]) in one string. Spark renders
-# JVM-side with to_json over the same price_levels/top_levels operators
-# the book queries serve; the oracle builds the byte-identical string by
-# explicit concatenation over the canonical fold CTEs.
-#
-# DOCUMENTED DIVERGENCE from the reference response shape (ADVICE r14):
-# the reference PriceLevel is {price, orders: Order[], totalVolume} —
-# FULL order objects, orders before totalVolume — wrapped in an
-# OrderBook carrying baseToken/quoteToken/latestPrice
-# (src/models/types.ts, order-book-controller.ts). This route renders
-# {price, totalVolume, orders: id[]} with no wrapper: order IDS instead
-# of objects (the id list pins the same FIFO price-time priority without
-# re-serializing every order field the user_orders route already
-# serves), and to_json's struct-declaration field order. The shape
-# matches this repo's operators/serving.py route and is normalized for
-# cross-engine byte parity — same stance as the level_cap Q6 note.
-#
-# Scale: the levels aggregate is ONE map-side-combined shuffle of active
-# orders (level cardinality ≪ orders), the per-side top-20 is
-# rank-over-window on the tiny level table, and the JSON assembly is a
-# per-pool projection — the serving edge collects only response rows.
+# price/volume strings and the FIFO order-id list — so the hash pins field
+# order, decimal rendering, array ordering, price-time priority, AND
+# empty-side rendering ("bids":[]) in one string. The oracle builds the
+# byte-identical string by explicit concatenation over the canonical fold
+# CTEs. The shape's divergence from the reference's PriceLevel is
+# documented on `serving.order_book_rows`.
 # ---------------------------------------------------------------------------
 _ORDER_BOOK_JSON_ORACLE = (
     f"WITH {ORDER_EVENTS_CTE}, {ORDER_UPDATES_CTE}, {ORDERS_STATE_CTE}"
@@ -468,50 +366,6 @@ FROM sides
 @register("serving_order_book_json", _ORDER_BOOK_JSON_ORACLE)
 def q_serving_order_book_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Depth-20 order-book JSON for every pool — the GET
-    /api/pools/:address/orderbook response shape (operators/serving.py:22)
-    rendered JVM-side over the shared price_levels/top_levels operators.
-    sort_array on the rank-headed level structs makes the array order
-    deterministic; collect_list drops the other side's NULLs, so each
-    side assembles in one aggregate without a self-join."""
-    from hive_server_spark.operators.orderbook import price_levels, top_levels
-
-    lv = top_levels(price_levels(_orders_state(spark, sf_dir)), depth=20)
-    tagged = lv.select(
-        "pool_address",
-        "order_type",
-        F.struct(
-            F.col("level_rank").cast("int").alias("rk"),
-            F.col("price").cast("string").alias("price"),
-            F.col("total_volume").cast("string").alias("totalVolume"),
-            F.col("order_ids").alias("orders"),
-        ).alias("lvl"),
-    )
-    assembled = tagged.groupBy("pool_address").agg(
-        F.sort_array(
-            F.collect_list(F.when(F.col("order_type") == "BUY", F.col("lvl")))
-        ).alias("bids_r"),
-        F.sort_array(
-            F.collect_list(F.when(F.col("order_type") == "SELL", F.col("lvl")))
-        ).alias("asks_r"),
-    )
-
-    def strip(c):
-        return F.transform(
-            c,
-            lambda s: F.struct(
-                s["price"].alias("price"),
-                s["totalVolume"].alias("totalVolume"),
-                s["orders"].alias("orders"),
-            ),
-        )
-
-    return assembled.select(
-        "pool_address",
-        F.to_json(
-            F.struct(
-                F.col("pool_address").alias("pool"),
-                strip(F.col("bids_r")).alias("bids"),
-                strip(F.col("asks_r")).alias("asks"),
-            )
-        ).alias("json"),
-    )
+    /api/pools/:address/orderbook render (`serving.order_book_rows`) over
+    the folded state."""
+    return serving.order_book_rows(_orders_state(spark, sf_dir), depth=20)

@@ -3,8 +3,9 @@
     python scripts/serve_api.py [--port 8080] [--sf-dir /root/testdata/sf0.01] [--with-cdc]
 
 Serves the seven reference routes (reference src/api/routes.ts:11-17) plus
-the CDC tail endpoint and the SSE push bridge
-(GET /api/cdc/:address/stream?since=&timeout=). Ctrl-C to stop."""
+the CDC tail endpoint and the two push bridges, SSE
+(GET /api/cdc/:address/stream?since=&timeout=) and WebSocket
+(GET /api/cdc/:address/ws?since=&timeout=). Ctrl-C to stop."""
 
 from __future__ import annotations
 

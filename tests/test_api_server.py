@@ -24,9 +24,23 @@ def server(spark):
     srv.stop()
 
 
-def _get(srv: HiveApiServer, path: str):
+def _body(srv: HiveApiServer, path: str) -> str:
     with urllib.request.urlopen(f"http://127.0.0.1:{srv.port}{path}") as r:
-        return json.loads(r.read())
+        return r.read().decode()
+
+
+def _get(srv: HiveApiServer, path: str):
+    return json.loads(_body(srv, path))
+
+
+def _elements(body: str) -> list[str]:
+    """The elements of a JSON array body, each as its exact bytes."""
+    dec, out, i = json.JSONDecoder(), [], 1
+    while body[i] != "]":
+        _, j = dec.raw_decode(body, i)
+        out.append(body[i:j])
+        i = j + (body[j] == ",")
+    return out
 
 
 def test_all_pools(server):
@@ -86,10 +100,6 @@ def test_amount_out(server):
     assert set(res) <= {"isError", "errorMessage", "outputAmount", "prices"}
     sell = _get(server, "/api/pools/pool_0/get-amount-out?amount=500&orderType=SELL")
     assert sell is not None and sell != res, "orderType=SELL must not alias BUY"
-    # legacy `side` alias still honored
-    assert (
-        _get(server, "/api/pools/pool_0/get-amount-out?amount=500&side=SELL") == sell
-    )
     for bad in (
         "?orderType=LIMIT&amount=500",  # bad side
         "?amount=500",  # missing orderType
@@ -100,6 +110,31 @@ def test_amount_out(server):
         with pytest.raises(urllib.error.HTTPError) as e:
             _get(server, f"/api/pools/pool_0/get-amount-out{bad}")
         assert e.value.code == 400, bad
+
+
+def test_rest_bodies_are_the_gate_renders(server, spark):
+    """The bytes each oracle-checked route serves are its gate query's rows:
+    for every pool, /api/pools/:addr, /api/pools/:addr/orderbook and
+    /api/pools/:addr/T1/orders equal that pool's rows of
+    serving_pool_info_json, serving_order_book_json and
+    serving_user_orders_json byte for byte (the list route as a sorted
+    element list)."""
+    from hive_server_spark.plans import serving_pack
+
+    pools = sorted(r.pool_address for r in server.pools.collect())
+    info = dict(serving_pack.q_serving_pool_info_json(spark, SF_SMALL).collect())
+    book = {
+        r.pool_address: r.json
+        for r in serving_pack.q_serving_order_book_json(spark, SF_SMALL).collect()
+    }
+    t1 = serving_pack.q_serving_user_orders_json(spark, SF_SMALL).collect()
+    assert set(info) == set(book) == set(pools)
+    for addr in pools:
+        assert _body(server, f"/api/pools/{addr}") == info[addr]
+        assert _body(server, f"/api/pools/{addr}/orderbook") == book[addr]
+        t1_rows = sorted(r.json for r in t1 if r.pool_address == addr)
+        assert t1_rows, f"{addr}: T1 must have orders"
+        assert sorted(_elements(_body(server, f"/api/pools/{addr}/T1/orders"))) == t1_rows
 
 
 def test_bad_param_types_never_500(server):
@@ -188,6 +223,35 @@ def test_cdc_tail_versions(server):
     assert all(isinstance(s["price"], str) for s in all_snaps)
 
 
+def test_cdc_tail_serves_versions_landed_after_first_read(server, spark):
+    """The pull tail reads the committed versions on disk at every request,
+    like the push transports: a version landed after the first tail read is
+    served by the next one, in version order."""
+    import os
+    import shutil
+    import tempfile
+
+    base = tempfile.mkdtemp(prefix="hss_tail_")
+    cdc_copy = os.path.join(base, "cdc")
+    shutil.copytree(server.cdc_root, cdc_copy)
+    held_back = os.path.join(base, "cdc_version=2")
+    os.rename(os.path.join(cdc_copy, "cdc_version=2"), held_back)
+    srv = HiveApiServer(spark, SF_SMALL, cdc_dir=cdc_copy).start()
+    try:
+        first = {s["version"] for s in _get(srv, "/api/cdc/pool_0?since=-1")}
+        assert first == {0, 1}
+
+        # land cdc_version=2, _SUCCESS marker included, in one rename
+        assert os.path.exists(os.path.join(held_back, "_SUCCESS"))
+        os.rename(held_back, os.path.join(cdc_copy, "cdc_version=2"))
+        second = [s["version"] for s in _get(srv, "/api/cdc/pool_0?since=-1")]
+        assert 2 in second, "a version landed after the first read must be served"
+        assert set(second) == {0, 1, 2} and second == sorted(second)
+    finally:
+        srv.stop()
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_cdc_sse_last_event_id_header_resume(server):
     """A reconnecting EventSource sends 'Last-Event-ID: <n>' as a HEADER
     (it cannot rewrite the query string) — the server must resume after it,
@@ -249,7 +313,7 @@ def test_cdc_sse_concurrent_subscribers(server, spark):
 
 
 def test_cdc_sse_renders_each_version_once(server, spark):
-    """VERDICT r05 item 2: S subscribers on one pool must NOT cost S Spark
+    """S subscribers on one pool must NOT cost S Spark
     jobs per landed version — each version is rendered once (for all pools)
     and served from the cache, the reference's one-book-per-room broadcast
     (src/api/server.ts:43-51). Pinned via the server's materialization

@@ -7,7 +7,7 @@ from __future__ import annotations
 from hive_server_spark.operators import serving
 from hive_server_spark.operators.amount_out import amount_out
 from hive_server_spark.operators.fold import fold_order_events
-from hive_server_spark.operators.orderbook import order_book, price_levels, top_levels
+from hive_server_spark.operators.orderbook import price_levels, top_levels
 from hive_server_spark.sources.synthetic import order_events
 from tests.conftest import SF_SMALL
 
@@ -27,7 +27,6 @@ def test_amount_out_on_empty_book(spark, make_events):
 
 def test_unknown_pool_returns_empty_book(spark):
     orders = fold_order_events(order_events(spark, SF_SMALL))
-    assert order_book(orders, "pool_does_not_exist").count() == 0
     assert serving.order_book_json(orders, "pool_does_not_exist").count() == 0
     assert serving.order_json(orders, "pool_0", 10**9).count() == 0
 

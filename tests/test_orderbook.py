@@ -5,10 +5,12 @@ excluded (mirrors reference src/models/order-book.ts:202-349).
 
 from __future__ import annotations
 
+import json
 from decimal import Decimal as D
 
+from hive_server_spark.operators import serving
 from hive_server_spark.operators.fold import fold_order_events
-from hive_server_spark.operators.orderbook import order_book, price_levels, top_levels
+from hive_server_spark.operators.orderbook import price_levels, top_levels
 from tests.conftest import ev
 
 
@@ -54,13 +56,13 @@ def test_top_levels_depth(make_events):
 
 
 def test_order_book_assembly(make_events):
-    book = order_book(_fixture(make_events), "pool_0", depth=20).collect()
+    book = serving.order_book_json(_fixture(make_events), "pool_0", depth=20).collect()
     assert len(book) == 1
-    b = book[0]
-    assert [str(x.price) for x in b.bids] == ["100.000000000000000000"]
-    assert [str(x.price) for x in b.asks] == ["101.000000000000000000",
-                                              "102.000000000000000000"]
-    assert b.asks[0].total_volume == D(20)
+    b = json.loads(book[0].json)
+    assert [x["price"] for x in b["bids"]] == ["100.000000000000000000"]
+    assert [x["price"] for x in b["asks"]] == ["101.000000000000000000",
+                                               "102.000000000000000000"]
+    assert D(b["asks"][0]["totalVolume"]) == D(20)
 
 
 def test_trade_tick_flow_python_recompute(spark):

@@ -48,8 +48,7 @@ def test_user_orders_json_q7(spark):
 
 
 def _pools_dim(spark):
-    from hive_server_spark.gate import q_pool_info_enriched
-    return q_pool_info_enriched(spark, SF_SMALL)
+    return serving.pools_dim(order_events(spark, SF_SMALL))
 
 
 def test_pools_json_validity_filter_and_shape(spark):
