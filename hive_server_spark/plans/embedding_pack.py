@@ -233,12 +233,9 @@ def emb_pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine; the d-row per-dim sums broadcast back."""
     from pyspark.sql import functions as F
 
-    # the pair build is d(d+1)/2 products per row and CPU-bound; the bench
-    # corpus arrives as ONE parquet split, so rebalance the narrow
-    # (vec_id, embedding) projection to full parallelism first — at real
-    # scale the scan is already wide and this is a cheap no-op rebalance
+    # the pair build is d(d+1)/2 products per row and CPU-bound; _emb is
+    # already spread to full parallelism, so the build runs wide as is
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    emb = emb.repartition(spark.sparkContext.defaultParallelism)
     q = _q_expr("x")
     qi, qj = _q_expr("xi"), _q_expr("xj")
     pairs_expr = (

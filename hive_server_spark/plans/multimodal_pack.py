@@ -10,21 +10,17 @@ from pyspark.sql import functions as F
 
 from hive_server_spark.catalog import load_table
 from hive_server_spark.functions import multimodal as M
+from hive_server_spark.functions.text import spread
 from hive_server_spark.registry import register
 
 
 def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents rebalanced to full parallelism BEFORE synthesis: the
+    """documents spread to full parallelism BEFORE synthesis: the
     codecs downstream are partition-preserving by design (payload bytes
     are the data bulk at real scale — never shuffle them), so parallelism
     is fixed at the narrow (doc_id, text) source. The bench corpus is ONE
-    parquet split; without this every pure-Python decode runs single-task.
-    `max()` with the scan's own partition count (the text_pack._docs
-    posture) so a genuinely wide corpus is never coalesced down to the
-    session default — the rebalance only ever widens."""
-    docs = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, docs.rdd.getNumPartitions())
-    return docs.repartition(n)
+    parquet split; without this every pure-Python decode runs single-task."""
+    return spread(load_table(spark, sf_dir, "documents"))
 
 
 @register(

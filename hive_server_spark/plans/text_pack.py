@@ -20,16 +20,13 @@ _SHINGLES_CTE_D = (
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents, rebalanced to at least full parallelism. The tokenize /
+    """documents, spread to at least full parallelism. The tokenize /
     shingle / gram builds downstream are CPU-bound at many times the byte
     volume of the raw text, and the bench corpus arrives as ONE dense
     parquet split — without the rebalance every derivation in this pack
-    runs single-task. `max()` with the scan's own partition count so a
-    genuinely wide corpus is never coalesced; the shuffle moves only the
-    narrow raw rows, never a derived/exploded table."""
-    raw = load_table(spark, sf_dir, "documents")
-    n = max(spark.sparkContext.defaultParallelism, raw.rdd.getNumPartitions())
-    return raw.repartition(n)
+    runs single-task. The shuffle moves only the narrow raw rows, never a
+    derived/exploded table."""
+    return T.spread(load_table(spark, sf_dir, "documents"))
 
 
 # LSH candidate pairs are the dedup family's shared intermediate — the
@@ -4345,138 +4342,3 @@ def text_hash_features_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("m") * w).cast("bigint").alias("score_units"),
         (F.sum(F.col("m") * w) > 0).alias("kept"),
     )
-
-
-# ---------------------------------------------------------------------------
-# LEARNED quality classifier. The missing half of text_hash_features_score:
-# that query APPLIES a fixed weight table; this one TRAINS the table
-# distributedly — the fastText-shaped classifier loop big curation pipelines
-# actually fit (CCNet's LM filter, LLaMA's wiki-reference classifier),
-# reduced to its Spark-first essence as a BATCH PERCEPTRON (McDonald, Hall &
-# Mann 2010, "Distributed Training Strategies for the Perceptron"): per
-# step, score every doc against the broadcast weight vector, accumulate the
-# update Σ y·x over misclassified docs as a per-bucket integer SUM (map-side
-# combined, order-free — the entire trainer is INTEGER arithmetic, so the
-# hash gate needs no float tolerance anywhere), add it to the weights.
-#
-# Scale shape per step: one broadcast join of the cached per-doc feature
-# table against the ≤2^12-row weight vector + a doc-keyed margin agg + a
-# bucket-keyed gradient agg (both map-side combined); weights are
-# localCheckpoint-ed per step (the BPE-trainer bounded-iteration
-# discipline — vocab-sized state, never corpus-sized). Labels are the
-# integer-exact stopword-density proxy y = +1 iff 25·stops ≥ 3·n_tokens
-# (stop_ratio ≥ 0.12 with no division), the deterministic stand-in for
-# human quality labels.
-# ---------------------------------------------------------------------------
-_QCLS_STEPS = 3
-
-
-def _qcls_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _docs(spark, sf_dir).select(
-        "doc_id", F.expr(T.tokens_expr("text", "s")).alias("toks")
-    )
-    stops = sum(
-        F.expr(T.stop_count_expr("toks", lang, "s"))
-        for lang in ("en", "es", "de", "fr")
-    )
-    y = F.when(
-        F.lit(25) * stops >= F.lit(3) * F.size("toks"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    return toks.select("doc_id", y.cast("long").alias("y"))
-
-
-def _qcls_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, bucket, m): the text_hash_features_score feature space —
-    hashed bigrams into 2^12 buckets, counts as integers."""
-    return (
-        _gram_counts(spark, sf_dir)
-        .where(F.col("gram_size") == 2)
-        .select(
-            "doc_id",
-            (
-                F.expr(T.hash_expr("gram", "feat", "s")) % _HASHFEAT_BUCKETS
-            ).alias("bucket"),
-            F.col("c").alias("m"),
-        )
-        .groupBy("doc_id", "bucket")
-        .agg(F.sum("c").alias("m"))
-    )
-
-
-def _qcls_train(spark: SparkSession, sf_dir: str):
-    """Run the K-step batch perceptron once per (session, sf_dir); returns
-    (per-step stats DF, final weight DF (bucket, w))."""
-
-    def build() -> tuple:
-        from hive_server_spark.session import scoped_shuffle_partitions
-
-        with scoped_shuffle_partitions(spark, 8):
-            labels = _qcls_labels(spark, sf_dir).localCheckpoint()
-            feats = _qcls_feats(spark, sf_dir).localCheckpoint()
-            w = None  # empty model: every margin starts at 0
-            stats = []
-            for step in range(1, _QCLS_STEPS + 1):
-                if w is None:
-                    scored = labels.withColumn("margin", F.lit(0).cast("long"))
-                else:
-                    margins = (
-                        feats.join(F.broadcast(w), "bucket")
-                        .groupBy("doc_id")
-                        .agg(F.sum(F.col("m") * F.col("w")).alias("margin"))
-                    )
-                    scored = labels.join(margins, "doc_id", "left").select(
-                        "doc_id",
-                        "y",
-                        F.coalesce("margin", F.lit(0)).cast("long").alias("margin"),
-                    )
-                mis = scored.where(F.col("y") * F.col("margin") <= 0).select(
-                    "doc_id", "y"
-                )
-                grad = (
-                    feats.join(mis, "doc_id")
-                    .groupBy("bucket")
-                    .agg(F.sum(F.col("y") * F.col("m")).alias("g"))
-                )
-                if w is None:
-                    w = grad.select("bucket", F.col("g").cast("long").alias("w"))
-                else:
-                    w = w.join(grad, "bucket", "full").select(
-                        "bucket",
-                        (
-                            F.coalesce("w", F.lit(0)) + F.coalesce("g", F.lit(0))
-                        )
-                        .cast("long")
-                        .alias("w"),
-                    )
-                w = w.localCheckpoint()
-                step_stats = (
-                    mis.agg(F.count("*").cast("bigint").alias("n_misclassified"))
-                    .crossJoin(
-                        labels.agg(F.count("*").cast("bigint").alias("n_docs"))
-                    )
-                    .crossJoin(
-                        w.where(F.col("w") != 0).agg(
-                            F.count("*").cast("bigint").alias("n_buckets_nonzero"),
-                            F.sum(F.abs(F.col("w"))).cast("bigint").alias("weight_l1"),
-                            F.sum((F.col("bucket") + 1) * F.col("w"))
-                            .cast("bigint")
-                            .alias("weight_checksum"),
-                        )
-                    )
-                    .select(
-                        F.lit(step).cast("bigint").alias("step"),
-                        "n_docs",
-                        "n_misclassified",
-                        "n_buckets_nonzero",
-                        "weight_l1",
-                        "weight_checksum",
-                    )
-                    .localCheckpoint()
-                )
-                stats.append(step_stats)
-            out = stats[0]
-            for s in stats[1:]:
-                out = out.unionByName(s)
-        return out, w
-
-    return shared(spark, ("text:qcls_train", sf_dir), build)

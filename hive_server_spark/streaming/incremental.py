@@ -113,6 +113,14 @@ class ParquetStateStore:
     same files in one job. Batch ids are monotonic within one checkpoint
     lineage, and ``apply`` makes re-delivered batches exactly-once.
 
+    It holds the state of the foreachBatch folds that read post-merge
+    state or a frozen seed inside a batch: the orders fold
+    (``run_incremental_fold`` and its CDC variant in streaming/cdc.py),
+    the docs and media near-dup indexes, the IVF census and PQ codes, and
+    the deletion vectors (plans/streaming_pack.py). A pure keyed aggregate
+    needs none of that and runs as a native complete-mode streaming
+    aggregation on Spark's own state store instead.
+
     Scale note: each commit rewrites the full state — correct and atomic,
     but O(state). The production-scale variants, in order of preference:
     (a) a Delta/Iceberg MERGE target (transactional, row-level);

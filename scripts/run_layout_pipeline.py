@@ -11,7 +11,7 @@ same operators the gate value-checks one by one. Stages:
                      (layout_compaction_plan)
   3. zone maps     - per-file min/max/count statistics, the write-side
                      state every pruning read depends on
-                     (one-shot derivation, or --incremental: the
+                     (one-shot aggregate, or --incremental: the
                      streaming ingest streamed_zonemaps —
                      layout_zonemap_streaming)
   4. skipping audit- the read-side proof: four predicates evaluated
@@ -82,7 +82,7 @@ def main() -> None:
 
     from hive_server_spark import gate
     from hive_server_spark.catalog import load_table
-    from hive_server_spark.plans.sources_pack import _DV_PRED, _ZM_FILE_ROWS
+    from hive_server_spark.plans.sources_pack import _DV_PRED
 
     qs = gate.spark_queries()
     os.makedirs(args.out, exist_ok=True)
@@ -104,13 +104,16 @@ def main() -> None:
     )
 
     # stages 3 & 5: the maintained state — one-shot derivations by
-    # default, or the versioned streaming ingests under --incremental.
-    # Both must produce identical artifacts (the maps merge as a MIN/MAX
+    # default, or the streaming ingests under --incremental. Both must
+    # produce identical artifacts (the maps merge as a MIN/MAX
     # semilattice + COUNT sum; DV positions are offset-disciplined so
     # id-ordered landing makes offset + local rank the global position).
-    # The batch zone-map derivation below IS the oracle's `files` CTE —
-    # any drift from the streaming state fails the identical-artifact
-    # check at the bottom (and tests/test_pipeline_ops.py re-proves it).
+    # The zone maps are one aggregate, _zonemap_stats, run once over the
+    # table or as a stream over id-ordered chunks — any drift between the
+    # two fails the identical-artifact check at the bottom (and
+    # tests/test_pipeline_ops.py re-proves it).
+    from hive_server_spark.plans.streaming_pack import _zonemap_stats
+
     if args.incremental:
         from hive_server_spark.plans.streaming_pack import (
             streamed_deletion_vectors,
@@ -122,26 +125,10 @@ def main() -> None:
             lambda s, d: streamed_zonemaps(s, d, chunks=3),
         )
     else:
-        def batch_zonemaps(s, d):
-            return (
-                load_table(s, d, "events")
-                .groupBy(
-                    F.expr(f"event_id DIV {_ZM_FILE_ROWS}")
-                    .cast("bigint")
-                    .alias("file_id")
-                )
-                .agg(
-                    F.count("*").cast("bigint").alias("n_rows"),
-                    F.min(F.unix_micros("ts")).cast("bigint").alias("min_ts_us"),
-                    F.max(F.unix_micros("ts")).cast("bigint").alias("max_ts_us"),
-                    F.min("value").cast("double").alias("min_value"),
-                    F.max("value").cast("double").alias("max_value"),
-                    F.min("event_type").alias("min_type"),
-                    F.max("event_type").alias("max_type"),
-                )
-            )
-
-        zonemaps = stage("zonemaps[batch]", batch_zonemaps)
+        zonemaps = stage(
+            "zonemaps[batch]",
+            lambda s, d: _zonemap_stats(load_table(s, d, "events")),
+        )
 
     skipping = stage("layout_zonemap_skipping")
 

@@ -210,26 +210,11 @@ def test_incremental_fold_with_retention(spark):
 
 
 def _docs_ingest(spark, src_dir, work):
-    """Run the production docs-ingest fold (partial, merge, apply, runner)
-    over the landed `src_dir` with its checkpoint and state under `work`;
-    returns the store."""
-    import os
-
+    """Run the production docs-ingest stream over the landed `src_dir`
+    with its checkpoint under `work`; returns the index as of this run."""
     from hive_server_spark.plans import streaming_pack as sp
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        file_stream,
-        run_stream,
-    )
 
-    ckpt = os.path.join(work, "ckpt")
-    store = ParquetStateStore(os.path.join(work, "state"), ckpt)
-
-    def on_batch(bdf, bid):
-        store.apply(bid, sp._docs_ingest_partial(bdf), sp._docs_ingest_merge)
-
-    run_stream(file_stream(spark, src_dir), ckpt, on_batch)
-    return store
+    return sp.streamed_docs_index(spark, src_dir, work)
 
 
 def test_docs_ingest_chunk_invariance(spark):
@@ -240,14 +225,14 @@ def test_docs_ingest_chunk_invariance(spark):
     from hive_server_spark.plans import streaming_pack as sp
 
     def run(chunks):
-        store = _docs_ingest(
+        index = _docs_ingest(
             spark,
             sp._land_documents(spark, SF_SMALL, chunks),
             tempfile.mkdtemp(prefix="hss_docs_inv_"),
         )
         return {
             (r.fingerprint_md5, r.canonical_doc_id, r.group_size, r.total_tokens)
-            for r in store.latest(spark).collect()
+            for r in index.collect()
         }
 
     one = run(1)
@@ -276,10 +261,8 @@ def test_docs_ingest_resumes_from_checkpoint(spark):
     half_b = docs.where(F.col("doc_id") % 2 == 1)
     half_a.coalesce(1).write.parquet(src_dir)
 
-    store = _docs_ingest(spark, src_dir, work)
-    n_after_first = (
-        store.latest(spark).agg(F.sum("group_size")).collect()[0][0]
-    )
+    index = _docs_ingest(spark, src_dir, work)
+    n_after_first = index.agg(F.sum("group_size")).collect()[0][0]
     assert n_after_first == half_a.count()
 
     # append the second half as new files, same source dir + checkpoint
@@ -288,11 +271,11 @@ def test_docs_ingest_resumes_from_checkpoint(spark):
     for f in os.listdir(tmp_b):
         if f.startswith("part-"):
             shutil.copy(os.path.join(tmp_b, f), os.path.join(src_dir, f))
-    store = _docs_ingest(spark, src_dir, work)
+    index = _docs_ingest(spark, src_dir, work)
 
     final = {
         (r.fingerprint_md5, r.canonical_doc_id, r.group_size, r.total_tokens)
-        for r in store.latest(spark).collect()
+        for r in index.collect()
     }
     expect = {
         (r.fingerprint_md5, r.canonical_doc_id, r.group_size, r.total_tokens)
@@ -363,10 +346,10 @@ def test_cms_stream_equals_batch_sketch(spark, chunks):
     from pyspark.sql import functions as F
 
     from hive_server_spark.catalog import load_table
-    from hive_server_spark.plans.streaming_pack import _cms_partial, streamed_cms
+    from hive_server_spark.plans.streaming_pack import _cms_cells, streamed_cms
 
     streamed = streamed_cms(spark, SF_SMALL, chunks=chunks)
-    batch = _cms_partial(load_table(spark, SF_SMALL, "events")).select(
+    batch = _cms_cells(load_table(spark, SF_SMALL, "events")).select(
         F.col("r").cast("bigint"),
         F.col("bucket").cast("bigint"),
         F.col("cell").cast("bigint"),
@@ -382,10 +365,10 @@ def test_hll_stream_equals_batch_registers(spark, chunks):
     from pyspark.sql import functions as F
 
     from hive_server_spark.catalog import load_table
-    from hive_server_spark.plans.streaming_pack import _hll_partial, streamed_hll
+    from hive_server_spark.plans.streaming_pack import _hll_registers, streamed_hll
 
     streamed = streamed_hll(spark, SF_SMALL, chunks=chunks)
-    batch = _hll_partial(load_table(spark, SF_SMALL, "events")).select(
+    batch = _hll_registers(load_table(spark, SF_SMALL, "events")).select(
         "event_type",
         F.col("bucket").cast("bigint"),
         F.col("reg").cast("bigint"),
@@ -835,14 +818,16 @@ def test_commit_seed_state_raises_before_commit(spark, tmp_path):
 
 
 def test_every_ingest_commits_through_apply_or_seed_helper():
-    """Structural audit of the foreachBatch state stores: the package has
-    one foreachBatch (streaming/incremental.py::run_stream) and one
-    commit path. streaming_pack.py never commits or replay-guards a store
-    by hand; a batch-0 freeze — a store written inside a
+    """Structural audit of the streaming ingests: the package has one
+    foreachBatch (streaming/incremental.py::run_stream) and one commit
+    path. streaming_pack.py never commits or replay-guards a store by
+    hand; a batch-0 freeze — a store written inside a
     `latest(...) is None` bootstrap branch — goes through
     commit_seed_state (which counts the seed rows BEFORE committing),
-    never through apply/commit; and at least 10 ingests drive their
-    stream through run_stream."""
+    never through apply/commit. At least 10 ingests exactly-once their
+    state: at least 5 foreachBatch stores through run_stream, and at least
+    5 keyed aggregates as complete-mode streams, checkpointed by Spark's
+    own state store."""
     import pathlib
     import re
 
@@ -882,7 +867,10 @@ def test_every_ingest_commits_through_apply_or_seed_helper():
             )
 
     n_runs = sum(bool(re.search(r"\brun_stream\(", ln)) for ln in lines)
-    assert n_runs >= 10, f"foreachBatch ingests went missing: {n_runs} run_stream calls"
+    assert n_runs >= 5, f"foreachBatch ingests went missing: {n_runs} run_stream calls"
+    n_aggs = sum(bool(re.search(r'\bwork, "complete"', ln)) for ln in lines)
+    assert n_aggs >= 5, f"aggregate ingests went missing: {n_aggs} complete-mode streams"
+    assert n_runs + n_aggs >= 10, f"ingests went missing: {n_runs} + {n_aggs}"
 
 
 def test_layout_zonemap_streaming_chunk_invariance_and_batch_equality(spark):
