@@ -27,6 +27,8 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hive_server_spark.functions.clusters import cap_buckets
+
 N_PLANES = 10  # 2^10 = 1024 buckets
 
 
@@ -157,18 +159,14 @@ def lsh_candidate_pairs(
     vectors equal — e.g. a zero-variance feature extractor upstream) puts n
     rows in ONE bucket and the self-join emits C(n,2) rows regardless of
     N_PLANES. `max_bucket` drops buckets above the cap from pair generation
-    (their members are mutual near-dups by construction — route them to an
-    exact/hash dedup instead of pairwise scoring). None = uncapped (the
-    parity-gate configuration)."""
-    b = lsh_buckets(emb, n_dims).join(_vecs(emb).select("vec_id", "v"), "vec_id")
-    if max_bucket is not None:
-        small = (
-            b.groupBy("bucket")
-            .agg(F.count("*").alias("_b"))
-            .where(F.col("_b") <= max_bucket)
-            .select("bucket")
-        )
-        b = b.join(small, "bucket", "left_semi")
+    (functions/clusters.py `cap_buckets`: their members are mutual
+    near-dups by construction — route them to an exact/hash dedup instead
+    of pairwise scoring). None = uncapped (the parity-gate configuration)."""
+    b = cap_buckets(
+        lsh_buckets(emb, n_dims).join(_vecs(emb).select("vec_id", "v"), "vec_id"),
+        ["bucket"],
+        max_bucket,
+    )
     a, c = b.alias("a"), b.alias("b")
     return a.join(
         c,

@@ -54,7 +54,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -67,6 +67,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from hive_server_spark.functions.clusters import bucket_pairs, cap_buckets
 
 MEDIA_SCHEMA = StructType(
     [
@@ -469,95 +471,40 @@ def dhash_bands(media: DataFrame) -> DataFrame:
     )
 
 
+# the bucket columns of `band_long` rows
+BAND_KEYS = ["band_idx", "band_val"]
+
+
 def band_candidates(
     bands: DataFrame, max_bucket: int | None = None, n_bands: int = 4
 ) -> DataFrame:
-    """LSH candidate pairs from a wide band table (media_id,
+    """LSH candidate pairs (id1, id2) from a wide band table (media_id,
     band0..band{n_bands-1}): items sharing at least one 16-bit band value
     — modality-generic (the image dHash and the audio fingerprint emit
     the 4x16-bit shape; the video fingerprint emits 8 bands, four per
-    sampled keyframe). Shuffle is on the
-    (band_idx, band_val) bucket key; output is O(near-dups), never O(n²).
-
-    `max_bucket` is the adversarial-input guard, verbatim from
-    functions/text.py minhash_candidates: a bucket of b byte-identical
-    images contributes C(b,2) join rows, so pathological repetition
-    re-creates the all-pairs blowup banding exists to avoid. Buckets
-    larger than the cap are dropped — their members are (near-)identical
-    by construction and belong to an exact hash-dedup pass, which handles
-    them in O(b). None = uncapped (the parity-gate configuration)."""
-    long = band_long(bands, n_bands)
-    if max_bucket is not None:
-        small = (
-            long.groupBy("band_idx", "band_val")
-            .agg(F.count("*").alias("_b"))
-            .where(F.col("_b") <= max_bucket)
-            .select("band_idx", "band_val")
-        )
-        long = long.join(small, ["band_idx", "band_val"], "left_semi")
-    a, b = long.alias("a"), long.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(F.col("a.media_id").alias("id1"), F.col("b.media_id").alias("id2"))
-        .distinct()
+    sampled keyframe). The bucket self-join is functions/clusters.py
+    `bucket_pairs` on the (band_idx, band_val) key; output is
+    O(near-dups), never O(n²). `max_bucket` is its adversarial-input
+    guard (`cap_buckets`); None = uncapped (the parity-gate
+    configuration)."""
+    long = cap_buckets(band_long(bands, n_bands), BAND_KEYS, max_bucket)
+    return bucket_pairs(long, BAND_KEYS, "media_id").select(
+        F.col("media_id_a").alias("id1"), F.col("media_id_b").alias("id2")
     )
 
 
 def band_long(bands: DataFrame, n_bands: int = 4) -> DataFrame:
     """A wide band table (media_id, band0..band{n-1}) unpivoted to
     (media_id, band_idx, band_val) — the ONE definition of the band key
-    shape, shared by every fingerprint modality (image dHash, audio
-    energy fingerprint, video keyframe fingerprint): band_candidates
-    builds its LSH bucket rows through this same unpivot, so the
-    candidate generator and the persisted index can never disagree on
+    shape (`BAND_KEYS`), shared by every fingerprint modality (image
+    dHash, audio energy fingerprint, video keyframe fingerprint):
+    band_candidates builds its LSH bucket rows through this same unpivot,
+    so the candidate generator and the band index can never disagree on
     the key. Pure stack(); no shuffle."""
     parts = ", ".join(f"{i}L, band{i}" for i in range(n_bands))
     return bands.selectExpr(
         "media_id",
         f"stack({n_bands}, {parts}) AS (band_idx, band_val)",
-    )
-
-
-def incremental_band_neardup(
-    spark: SparkSession, index_path: str, batch_bands_long: DataFrame
-) -> DataFrame:
-    """Cross-snapshot incremental near-dup over ANY banded fingerprint:
-    dedup a new media batch (long band rows from `band_long`) against the
-    persisted band index at `index_path` ((band_idx, band_val,
-    min_media_id) parquet), merging the batch's own band partials in
-    first — the docs_neardup_incremental pattern (plans/streaming_pack.py)
-    generalized over modality. MIN is a semilattice, so replays and
-    batch boundaries can never change the index; the prior corpus is
-    never rescanned or re-DECODED (the expensive leg for media); merge
-    and flag joins reuse the same (band_idx, band_val) partitioning.
-    Returns (media_id, n_occupied_bands, partner_media_id)."""
-    prior_index = spark.read.parquet(index_path)
-    batch_part = batch_bands_long.groupBy("band_idx", "band_val").agg(
-        F.min("media_id").alias("min_media_id")
-    )
-    merged = (
-        prior_index.unionByName(batch_part)
-        .groupBy("band_idx", "band_val")
-        .agg(F.min("min_media_id").alias("min_media_id"))
-    )
-    return (
-        batch_bands_long.join(merged, ["band_idx", "band_val"])
-        .where(F.col("min_media_id") < F.col("media_id"))
-        .groupBy("media_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_occupied_bands"),
-            F.min("min_media_id").cast("bigint").alias("partner_media_id"),
-        )
-        .select(
-            F.col("media_id").cast("bigint").alias("media_id"),
-            "n_occupied_bands",
-            "partner_media_id",
-        )
     )
 
 
@@ -587,18 +534,6 @@ def band_hamming_pairs(
         .join(w2, "id2")
         .withColumn("hd", hd)
         .select("id1", "id2", "hd")
-    )
-
-
-def write_band_index(bands_long: DataFrame, index_path: str) -> None:
-    """Materialize a snapshot's band index ((band_idx, band_val) →
-    MIN media_id) — the persisted artifact incremental_band_neardup
-    refreshes against."""
-    (
-        bands_long.groupBy("band_idx", "band_val")
-        .agg(F.min("media_id").alias("min_media_id"))
-        .write.mode("overwrite")
-        .parquet(index_path)
     )
 
 

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hive_server_spark.functions.clusters import bucket_pairs, cap_buckets
+
 N_MINHASH = 8  # minhash functions
 N_BANDS = 4  # LSH bands (2 rows per band)
 SIMHASH_BITS = 32
@@ -384,32 +386,26 @@ def band_keys(sigs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_candidates(docs: DataFrame, max_bucket: int | None = None) -> DataFrame:
-    """LSH candidate pairs: docs sharing at least one band bucket. Shuffle is
-    on band keys (fine-grained); output is O(near-dups), never O(n²) — the
-    scale path for dedup. Pairs are distinct across bands.
+def doc_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, band_key) MinHash LSH band rows of a documents frame — the
+    rows every text near-dup form (batch candidates, the persisted-index
+    refresh, the streaming index, the fused bundle verdict) bands."""
+    return band_keys(minhash_signatures(docs))
 
-    `max_bucket` is the adversarial-input guard: a band bucket holding b docs
-    contributes C(b,2) join rows, so one pathological bucket (e.g. thousands
-    of byte-identical docs — a real failure mode in web corpora) re-creates
-    the O(n²) blowup banding exists to avoid. Buckets larger than the cap are
-    dropped from candidate generation; their members are (near-)identical by
-    construction and belong to `exact_dedup`'s hash-group path instead, which
-    handles them in O(b). None = uncapped (the parity-gate configuration)."""
-    bands = band_keys(minhash_signatures(docs))
-    if max_bucket is not None:
-        small = (
-            bands.groupBy("band_key")
-            .agg(F.count("*").alias("_b"))
-            .where(F.col("_b") <= max_bucket)
-            .select("band_key")
-        )
-        bands = bands.join(small, "band_key", "left_semi")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, (F.col("a.band_key") == F.col("b.band_key")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
+
+def minhash_candidates(docs: DataFrame, max_bucket: int | None = None) -> DataFrame:
+    """LSH candidate pairs (doc_a, doc_b): docs sharing at least one band
+    bucket (functions/clusters.py `bucket_pairs`). Shuffle is on band keys
+    (fine-grained); output is O(near-dups), never O(n²) — the scale path
+    for dedup. Pairs are distinct across bands.
+
+    `max_bucket` is the adversarial-input guard (`cap_buckets`): docs of a
+    dropped bucket are (near-)identical by construction and belong to
+    `exact_dedup`'s hash-group path instead, which handles them in O(b).
+    None = uncapped (the parity-gate configuration)."""
+    bands = cap_buckets(doc_bands(docs), ["band_key"], max_bucket)
+    return bucket_pairs(bands, ["band_key"], "doc_id").select(
+        F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
 
 

@@ -10,10 +10,13 @@ dispatched from src/services/hive-listener.ts:178-206,228-335.
 Spark-first design: each event row is projected to per-field *update columns*
 (null where the event doesn't touch the field); the current state is then the
 last non-null update per field in `seq` order. We compute that with ONE hash
-aggregate — `max(struct(seq, value))` per field — which gets map-side partial
-aggregation and no sort. At 100 TB this is a single shuffle on the state key,
-with combiner-style reduction on the map side; a window/sort formulation would
-shuffle the same data but add a per-partition sort and lose partial agg.
+aggregate — `max(struct(seq, value))` per field (`partial_fold`) — which gets
+map-side partial aggregation and no sort. The same aggregate is a mergeable
+partial state, so the batch fold, the micro-batch stream and the CDC fold all
+run it and differ only in how partials are combined. At 100 TB this is a
+single shuffle on the state key, with combiner-style reduction on the map
+side; a window/sort formulation would shuffle the same data but add a
+per-partition sort and lose partial agg.
 
 Quirk stances (SURVEY §2.11): Q3 — we read the ABI-named `filled` field (the
 reference destructures a misnamed `filledAmount` and stores NaN; we implement
@@ -22,25 +25,13 @@ the intent). Q5/Q7 encoded as above.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _last_update(value: Column, seq: Column) -> Column:
-    """Value carried by the latest (by seq) non-null update.
-
-    max(struct(seq, value)) over non-null updates == value at max seq.
-    Null updates produce a null struct, which max() skips entirely —
-    well-defined in Spark and mirrored by DuckDB's
-    `max_by(v, CASE WHEN v IS NOT NULL THEN seq END)` in the oracle.
-    """
-    return F.max(F.when(value.isNotNull(), F.struct(seq, value.alias("v")))).getField("v")
 
 
 def project_updates(events: DataFrame) -> DataFrame:
     """Project each event row to per-field *update columns* (null where the
-    event doesn't touch the field) — the shared front half of the batch fold
-    and the streaming incremental fold."""
+    event doesn't touch the field) — the front half of `partial_fold`."""
     et = F.col("event_type")
     is_created = et == "OrderCreated"
     is_filled = et == "OrderFilled"
@@ -74,39 +65,68 @@ def project_updates(events: DataFrame) -> DataFrame:
     return upd
 
 
+# order field -> its update column from project_updates
+_UPD_OF = {
+    "trader": "u_trader",
+    "price": "u_price",
+    "amount": "u_amount",
+    "filled": "u_filled",
+    "remaining_amount": "u_remaining",
+    "order_type": "u_order_type",
+    "active": "u_active",
+}
+_FIELDS = tuple(_UPD_OF)
+
+
+def partial_fold(events: DataFrame) -> DataFrame:
+    """Fold a batch of events into a mergeable partial state: per field a
+    struct(seq, v) carrying the latest non-null update. Null updates give
+    a null struct, which max() skips — mirrored by DuckDB's
+    `max_by(v, CASE WHEN v IS NOT NULL THEN seq END)` in the oracle. One
+    hash aggregate with map-side combine; the batch fold, the native
+    stream and the foreachBatch CDC fold all run it."""
+    upd = project_updates(events)
+    seq = F.col("seq")
+
+    def last_pair(field: str):
+        u = F.col(_UPD_OF[field])
+        return F.max(F.when(u.isNotNull(), F.struct(seq.alias("seq"), u.alias("v")))).alias(
+            f"p_{field}"
+        )
+
+    return upd.groupBy("pool_address", "order_id").agg(
+        *[last_pair(f) for f in _FIELDS],
+        F.min("u_created_ts").alias("created_ts"),
+        # seq of the (latest) OrderCreated — FIFO key for price-time
+        # priority within a level (A3)
+        F.max(F.when(F.col("is_created") == 1, seq)).alias("created_seq"),
+        F.max("is_created").alias("has_created"),
+    )
+
+
+def materialize_orders(partial: DataFrame) -> DataFrame:
+    """Partial state → the user-facing `orders` table (ORDERS_SCHEMA-shaped):
+    unwrap the (seq, v) pairs and keep only created orders (events for
+    unknown ids are dropped, matching the reference's undefined-lookup
+    behavior, reference src/models/order-book.ts:211-213)."""
+    return partial.where(F.col("has_created") == 1).select(
+        "pool_address",
+        "order_id",
+        *[F.col(f"p_{f}.v").alias(f) for f in _FIELDS],
+        "created_ts",
+        "created_seq",
+    )
+
+
 def fold_order_events(events: DataFrame) -> DataFrame:
     """Fold an order_events log (ORDER_EVENTS_SCHEMA-shaped) into the current
-    `orders` state table (ORDERS_SCHEMA-shaped).
+    `orders` state table: the fold of one batch holding the whole log.
 
     Pure batch recompute: deterministic given the log, independent of
     micro-batch boundaries (the streaming layer maintains the same result
     incrementally — see hive_server_spark.streaming).
     """
-    upd = project_updates(events)
-    seq = F.col("seq")
-    folded = (
-        upd.groupBy("pool_address", "order_id")
-        .agg(
-            _last_update(F.col("u_trader"), seq).alias("trader"),
-            _last_update(F.col("u_price"), seq).alias("price"),
-            _last_update(F.col("u_amount"), seq).alias("amount"),
-            _last_update(F.col("u_filled"), seq).alias("filled"),
-            _last_update(F.col("u_remaining"), seq).alias("remaining_amount"),
-            _last_update(F.col("u_order_type"), seq).alias("order_type"),
-            _last_update(F.col("u_active"), seq).alias("active"),
-            F.min("u_created_ts").alias("created_ts"),
-            # seq of the (latest) OrderCreated — FIFO key for price-time
-            # priority within a level (A3)
-            F.max(F.when(F.col("is_created") == 1, seq)).alias("created_seq"),
-            F.max("is_created").alias("_has_created"),
-        )
-        # an order exists only if it was created (events for unknown ids are
-        # dropped, matching the reference's undefined-lookup behavior,
-        # reference src/models/order-book.ts:211-213)
-        .where(F.col("_has_created") == 1)
-        .drop("_has_created")
-    )
-    return folded
+    return materialize_orders(partial_fold(events))
 
 
 # ---------------------------------------------------------------------------

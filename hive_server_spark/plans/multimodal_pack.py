@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from hive_server_spark.catalog import load_table
 from hive_server_spark.functions import multimodal as M
+from hive_server_spark.functions.clusters import band_index, occupied_flags, split_refresh
 from hive_server_spark.functions.text import spread
 from hive_server_spark.registry import register
 
@@ -845,9 +846,10 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cross-snapshot incremental image near-dup (round 11, VERDICT r10 item 2):
-# the MEDIA twin of docs_neardup_incremental (plans/streaming_pack.py) —
-# the dHash band index is a first-class PERSISTED parquet artifact
+# Cross-snapshot incremental image near-dup: the MEDIA twin of
+# docs_neardup_incremental (plans/streaming_pack.py), through the same
+# functions/clusters.py split_refresh — the dHash band index is a
+# first-class PERSISTED parquet artifact
 # ((band_idx, band_val) → MIN media_id), and a new image batch dedups
 # against the prior corpus WITHOUT rescanning it:
 #
@@ -897,24 +899,19 @@ def multimodal_phash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupied-band rule restricted to the batch (see block comment). The
     decode runs once via the shared _dhash_band_table; the batch
     path itself never touches prior-corpus payloads. The index machinery
-    is the modality-generic band_long / write_band_index /
-    incremental_band_neardup (functions/multimodal.py) — the SAME
-    functions refresh the audio and video fingerprint indexes
-    (tests/test_multimodal.py pins both against full-corpus recomputes)."""
+    is the modality-generic band_long + functions/clusters.py
+    split_refresh — the SAME refresh the audio and video fingerprint
+    indexes and the text index run (tests/test_multimodal.py pins the
+    audio and video members against full-corpus recomputes)."""
     import os
 
     from hive_server_spark.session import session_scratch
 
-    bands_wide = _dhash_band_table(spark, sf_dir)
-    mn, mx = bands_wide.agg(F.min("media_id"), F.max("media_id")).first()
-    thr = (mn + mx) // 2  # == the oracle's integer-division threshold
-    long = M.band_long(bands_wide)
     # stable per-process path + overwrite semantics: reruns replace the
-    # index instead of accumulating mkdtemp dirs in /tmp (ADVICE r11)
-    index_path = os.path.join(session_scratch("phash_incr"), "band_index")
-    M.write_band_index(long.where(F.col("media_id") < thr), index_path)
-    return M.incremental_band_neardup(
-        spark, index_path, long.where(F.col("media_id") >= thr)
+    # index instead of accumulating mkdtemp dirs in the scratch root
+    return split_refresh(
+        _dhash_band_table(spark, sf_dir), "media_id", M.band_long,
+        M.BAND_KEYS, os.path.join(session_scratch("phash_incr"), "band_index"),
     )
 
 
@@ -1787,14 +1784,10 @@ def multimodal_bundle_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_server_spark.functions import text as T
 
     docs = load_table(spark, sf_dir, "documents")
-    tb = T.band_keys(T.minhash_signatures(docs))
-    bmin = tb.groupBy("band_key").agg(F.min("doc_id").alias("min_id"))
-    txt = (
-        tb.join(bmin, "band_key")
-        .where(F.col("min_id") < F.col("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.min("min_id").cast("bigint").alias("text_partner"))
-    )
+    tb = T.doc_bands(docs)
+    txt = occupied_flags(
+        tb, band_index(tb, ["band_key"], "doc_id"), ["band_key"], "doc_id"
+    ).select("doc_id", F.col("partner_doc_id").alias("text_partner"))
     img = _min_partner(
         M.band_hamming_pairs(_dhash_band_table(spark, sf_dir), max_bucket=None),
         "image_partner",
@@ -1828,12 +1821,11 @@ def multimodal_bundle_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Audio + video fingerprint incremental refresh. Closes
-# VERDICT r11 item 2: the modality-generic persisted band index
-# (band_long / write_band_index / incremental_band_neardup,
-# functions/multimodal.py) refreshes audio and video fingerprints with
-# the SAME machinery that gates the image member
-# (multimodal_phash_incremental, green r11) — this query driver-gates the
+# Audio + video fingerprint incremental refresh: the modality-generic
+# persisted band index (functions/multimodal.py band_long +
+# functions/clusters.py split_refresh) refreshes audio and video
+# fingerprints with the SAME machinery that gates the image member
+# (multimodal_phash_incremental) — this query driver-gates the
 # remaining two members in one fused pass, exactly the refresh a real
 # multimodal corpus runs. Same split protocol as the image member: the
 # id-ordered prior half writes its index; the new batch merges its band
@@ -1936,6 +1928,7 @@ def multimodal_media_fp_incremental(
     partner_media_id). The decodes run once via the shared fingerprint
     caches; the batch path never touches prior-corpus payloads."""
     import os
+    from functools import partial
 
     from hive_server_spark.session import session_scratch
 
@@ -1944,15 +1937,11 @@ def multimodal_media_fp_incremental(
         ("audio", _audio_fp_band_table(spark, sf_dir), 4),
         ("video", _video_fp_band_table(spark, sf_dir), 4 * M.VIDEO_FP_FRAMES),
     ):
-        mn, mx = bands_wide.agg(F.min("media_id"), F.max("media_id")).first()
-        thr = (mn + mx) // 2  # == the oracle's integer-division threshold
-        long = M.band_long(bands_wide, n_bands=n_bands)
-        index_path = os.path.join(
-            session_scratch(f"{modality}_fp_incr"), "band_index"
-        )
-        M.write_band_index(long.where(F.col("media_id") < thr), index_path)
-        flagged = M.incremental_band_neardup(
-            spark, index_path, long.where(F.col("media_id") >= thr)
+        flagged = split_refresh(
+            bands_wide, "media_id",
+            partial(M.band_long, n_bands=n_bands),
+            M.BAND_KEYS,
+            os.path.join(session_scratch(f"{modality}_fp_incr"), "band_index"),
         ).select(
             F.lit(modality).alias("modality"),
             "media_id",

@@ -263,7 +263,7 @@ def q_orders_state_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     the session-shared fold (streaming_pack.fold_seq_slices) instead of
     re-running its own."""
     from hive_server_spark.plans.streaming_pack import fold_seq_slices
-    from hive_server_spark.streaming.incremental import materialize_orders
+    from hive_server_spark.operators.fold import materialize_orders
 
     store, _cdc_dir = fold_seq_slices(spark, sf_dir)
 

@@ -17,7 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_server_spark.catalog import load_table
-from hive_server_spark.operators.fold import ORDER_UPDATES_CTE, ORDERS_STATE_CTE
+from hive_server_spark.operators.fold import (
+    ORDER_UPDATES_CTE,
+    ORDERS_STATE_CTE,
+    materialize_orders,
+    partial_fold,
+)
 from hive_server_spark.registry import register
 from hive_server_spark.session import session_scratch
 from hive_server_spark.sources.synthetic import (
@@ -31,8 +36,6 @@ from hive_server_spark.streaming.incremental import (
     _await_bounded,
     commit_seed_state,
     file_stream,
-    materialize_orders,
-    run_incremental_fold,
     run_stream,
 )
 from hive_server_spark.streaming.windows import hourly_rollup_stream, session_stream
@@ -69,25 +72,34 @@ def _land_order_events(spark: SparkSession, sf_dir: str, chunks: int) -> str:
     )
 
 
+def streamed_orders_partial(spark: SparkSession, src_dir: str, work: str) -> DataFrame:
+    """Stream the order_events parquet files landed in `src_dir` (one
+    micro-batch per file) through `partial_fold` as a native complete-mode
+    aggregation checkpointed under `work`; returns the partial state as of
+    this run (materialize with `materialize_orders`). A rerun on the same
+    `work` folds only files landed since the last run into the
+    checkpointed state."""
+    return _run_sink_stream(
+        spark, partial_fold(file_stream(spark, src_dir)), work, "complete"
+    )
+
+
 def streamed_orders_state(
     spark: SparkSession, sf_dir: str, chunks: int = 2
 ) -> DataFrame:
-    # chunks=2 keeps the gate query genuinely multi-batch while halving its
-    # fixed cost; chunk-count invariance itself is pinned by
-    # tests/test_streaming.py at 1 and 3 chunks.
-    """Run the full streaming pipeline: derive order_events, land them as
-    `chunks` parquet files, stream them through the incremental fold
-    (maxFilesPerTrigger=1 → one micro-batch per file), return the
-    materialized orders state."""
-    work = tempfile.mkdtemp(dir=session_scratch("stream"))
-    with _scoped_shuffle_partitions(spark):
-        store = run_incremental_fold(
+    """Derive order_events, land them as `chunks` parquet files, stream
+    them through the partial fold (one micro-batch per file) and return
+    the materialized orders state. chunks=2 keeps the gate query
+    genuinely multi-batch while halving its fixed cost; chunk-count
+    invariance itself is pinned by tests/test_streaming.py at 1 and 3
+    chunks."""
+    return materialize_orders(
+        streamed_orders_partial(
             spark,
-            file_stream(spark, _land_order_events(spark, sf_dir, chunks)),
-            state_dir=os.path.join(work, "state"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
+            _land_order_events(spark, sf_dir, chunks),
+            tempfile.mkdtemp(dir=session_scratch("stream")),
         )
-    return materialize_orders(store.latest(spark))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -174,7 +186,7 @@ def _events_stream_in_ts_order(
 def _start_sink_stream(spark: SparkSession, out: DataFrame, work: str, mode: str):
     """Start (without awaiting) `out` into a memory sink in output `mode`
     with its checkpoint under `work`; returns (StreamingQuery, sink name).
-    Callers await and then read ``spark.table(sink)``.
+    Callers await and then read the sink with `_read_sink`.
 
     - ``"append"`` serves the watermarked streams: the final no-data
       micro-batch advances the watermark past every closed window and
@@ -210,7 +222,16 @@ def _run_sink_stream(
         # unbounded block (no retry wrapper here — these availableNow
         # drivers are deterministic re-runs, so failing fast is correct)
         _await_bounded(q)
-    return spark.table(sink)
+    return _read_sink(spark, sink)
+
+
+def _read_sink(spark: SparkSession, sink: str) -> DataFrame:
+    """The memory sink `sink` as a DataFrame, with its session temp view
+    dropped: the DataFrame holds the sink itself, so the view name is only
+    a leak once bound."""
+    df = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return df
 
 
 def _out_hourly_rollup(
@@ -561,10 +582,9 @@ def _land_seq_slices(spark: SparkSession, sf_dir: str) -> str:
 # CDC-family (orders_state_time_travel, cdc_book_snapshots,
 # orders_state_changelog) — unshared, each of the three gate queries
 # re-runs the same 3-micro-batch streaming fold (~9 s + 4 s + 4 s
-# locally); shared, one fold-with-CDC run serves all three.
-# The with-CDC variant commits the identical versioned state (same
-# partial_fold/merge/commit per batch — streaming/cdc.py adds only the
-# snapshot append), so at_version() readers are unaffected by sharing.
+# locally); shared, one fold-with-CDC run serves all three. Its
+# versioned state is the partial_fold of each slice merged per batch, so
+# at_version() readers are unaffected by sharing.
 def fold_seq_slices(spark: SparkSession, sf_dir: str):
     """Run (once per session × sf_dir) the incremental fold + CDC over the
     deterministic 3-slice landing; returns (ParquetStateStore, cdc_dir)."""
@@ -640,7 +660,7 @@ def stateful_orders_state(
             .start()
         )
         _await_bounded(q)  # stall-windowed await (see _run_sink_stream)
-    tbl = spark.table(sink)
+    tbl = _read_sink(spark, sink)
     w = Window.partitionBy("pool_address", "order_id").orderBy(F.desc("version"))
     return (
         tbl.withColumn("_rn", F.row_number().over(w))
@@ -847,6 +867,11 @@ from hive_server_spark.plans.text_pack import (  # noqa: E402
     _mh_cols_d,
 )
 from hive_server_spark.functions import text as _T  # noqa: E402
+from hive_server_spark.functions.clusters import (  # noqa: E402
+    band_index,
+    occupied_flags,
+    split_refresh,
+)
 
 _DOCS_NEARDUP_ORACLE = f"""
 WITH {_TOKS_CTE_D},
@@ -874,11 +899,26 @@ FROM j GROUP BY doc_id
 """
 
 
-def _doc_bands(docs_df: DataFrame) -> DataFrame:
-    """doc_id → 4 prefixed LSH band keys ('{band}#mh_mh'), one row each —
-    the same signatures dedup_minhash_sigs emits, exploded through the
-    shared band_keys spelling (functions/text.py)."""
-    return _T.band_keys(_T.minhash_signatures(docs_df))
+def _neardup_batch(
+    bands_store: ParquetStateStore,
+    flags_store: ParquetStateStore,
+    batch_id: int,
+    bands: DataFrame,
+    keys: list[str],
+    id: str,
+) -> None:
+    """One micro-batch of a banded near-dup ingest (docs and media):
+    MIN-merge the batch's band index into `bands_store`, then append to
+    `flags_store` the batch's items flagged against the POST-merge index —
+    an item is a near-dup iff some band's committed min is a smaller id
+    (functions/clusters.py)."""
+    bands_store.apply(
+        batch_id,
+        band_index(bands, keys, id),
+        lambda cur, part: band_index(cur.unionByName(part), keys, id),
+    )
+    flagged = occupied_flags(bands, bands_store.latest(bands.sparkSession), keys, id)
+    flags_store.apply(batch_id, flagged, DataFrame.unionByName)
 
 
 def streamed_docs_neardup(
@@ -895,36 +935,14 @@ def streamed_docs_neardup(
     flags_store = ParquetStateStore(os.path.join(work, "flags"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bands = _doc_bands(batch_df)
-        # 1. merge the batch into the band index (MIN semilattice)
-        bands_store.apply(
-            batch_id,
-            bands.groupBy("band_key").agg(F.min("doc_id").alias("min_doc_id")),
-            lambda cur, part: cur.unionByName(part)
-            .groupBy("band_key")
-            .agg(F.min("min_doc_id").alias("min_doc_id")),
+        _neardup_batch(
+            bands_store, flags_store, batch_id,
+            _T.doc_bands(batch_df), ["band_key"], "doc_id",
         )
-        # 2. flag this batch's docs against the POST-merge index: a doc is
-        #    a near-dup iff some band's committed min is a smaller doc_id
-        flagged = (
-            bands.join(bands_store.latest(batch_df.sparkSession), "band_key")
-            .where(F.col("min_doc_id") < F.col("doc_id"))
-            .groupBy("doc_id")
-            .agg(
-                F.count("*").alias("n_occupied_bands"),
-                F.min("min_doc_id").alias("partner_doc_id"),
-            )
-        )
-        flags_store.apply(batch_id, flagged, DataFrame.unionByName)
 
     with _scoped_shuffle_partitions(spark):
         run_stream(stream, ckpt, on_batch)
-    out = flags_store.latest(spark)
-    return out.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("n_occupied_bands").cast("bigint").alias("n_occupied_bands"),
-        F.col("partner_doc_id").cast("bigint").alias("partner_doc_id"),
-    )
+    return flags_store.latest(spark)
 
 
 @register("docs_neardup_streaming", _DOCS_NEARDUP_ORACLE)
@@ -952,6 +970,10 @@ def docs_neardup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   3. the batch's bands join the post-merge index: a doc is flagged iff
 #      some band's min is a smaller doc_id — catching dups against the
 #      prior corpus AND within the batch itself with ONE rule.
+#
+# The split and the three steps are functions/clusters.py split_refresh,
+# the same refresh the image, audio and video indexes run
+# (plans/multimodal_pack.py).
 #
 # Because the snapshot split is doc_id-ordered, the post-merge index equals
 # the full-corpus band index, so the flags are EXACTLY the batch LSH
@@ -990,39 +1012,6 @@ GROUP BY j.doc_id
 """
 
 
-def incremental_docs_neardup(
-    spark: SparkSession, index_path: str, batch: DataFrame
-) -> DataFrame:
-    """Dedup `batch` against the persisted band index at `index_path`
-    (band_key, min_doc_id parquet), merging the batch's own bands in
-    first. Returns the flags table (doc_id, n_occupied_bands,
-    partner_doc_id)."""
-    batch_bands = _doc_bands(batch)
-    prior_index = spark.read.parquet(index_path)
-    batch_part = batch_bands.groupBy("band_key").agg(
-        F.min("doc_id").alias("min_doc_id")
-    )
-    merged = (
-        prior_index.unionByName(batch_part)
-        .groupBy("band_key")
-        .agg(F.min("min_doc_id").alias("min_doc_id"))
-    )
-    return (
-        batch_bands.join(merged, "band_key")
-        .where(F.col("min_doc_id") < F.col("doc_id"))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_occupied_bands"),
-            F.min("min_doc_id").cast("bigint").alias("partner_doc_id"),
-        )
-        .select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            "n_occupied_bands",
-            "partner_doc_id",
-        )
-    )
-
-
 @register("docs_neardup_incremental", _DOCS_NEARDUP_INCR_ORACLE)
 def docs_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write the prior snapshot's band index to parquet (id-ordered first
@@ -1031,20 +1020,10 @@ def docs_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupied-band rule restricted to the batch (see block comment)."""
     from hive_server_spark.plans.text_pack import _docs as _text_docs
 
-    docs = _text_docs(spark, sf_dir)
-    mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    thr = (mn + mx) // 2  # == the oracle's integer-division threshold
     work = tempfile.mkdtemp(dir=session_scratch("neardup_incr"))
-    index_path = os.path.join(work, "band_index")
-    (
-        _doc_bands(docs.where(F.col("doc_id") < thr))
-        .groupBy("band_key")
-        .agg(F.min("doc_id").alias("min_doc_id"))
-        .write.mode("overwrite")
-        .parquet(index_path)
-    )
-    return incremental_docs_neardup(
-        spark, index_path, docs.where(F.col("doc_id") >= thr)
+    return split_refresh(
+        _text_docs(spark, sf_dir), "doc_id", _T.doc_bands,
+        ["band_key"], os.path.join(work, "band_index"),
     )
 
 
@@ -1271,7 +1250,7 @@ def _evt_streaming_results(spark: SparkSession, sf_dir: str) -> dict:
                 running[name] = _start_sink_stream(spark, *builder(spark, sf_dir))
             for q, _sink in running.values():
                 _await_bounded(q)  # stall-windowed (see _run_sink_stream)
-        return {name: spark.table(sink) for name, (_q, sink) in running.items()}
+        return {name: _read_sink(spark, sink) for name, (_q, sink) in running.items()}
 
     return shared(spark, ("stream:evt_streaming_family", sf_dir), build)
 
@@ -1298,7 +1277,7 @@ def _evt_streaming_results(spark: SparkSession, sf_dir: str) -> dict:
 # semilattice; the flags append is exactly-once through
 # ParquetStateStore.apply.
 #
-# Scale: state is (band_idx, band_val, min_media_id) — bytes per image,
+# Scale: state is (band_idx, band_val, media_id) — bytes per image,
 # not pixels; payloads never shuffle (partition-preserving mapInPandas
 # decode inside the batch); the merge and flag joins are band-keyed like
 # the batch incremental path. At 100 TB the stream ingests at decode
@@ -1364,7 +1343,6 @@ def streamed_media_neardup(
     flags_store = ParquetStateStore(os.path.join(work, "flags"), ckpt)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ss = batch_df.sparkSession
         # decode THIS batch only — and only the media-bearing slice (the
         # doc_id % _MEDIA_STREAM_MOD corpus contract above, mirrored in
         # the oracle src): synthesize -> T.81 decode -> dHash, spread to
@@ -1379,38 +1357,15 @@ def streamed_media_neardup(
         )
         bands = _M.band_long(wide).persist()
         try:
-            # 1. MIN-merge the batch's band partials into the index
-            bands_store.apply(
-                batch_id,
-                bands.groupBy("band_idx", "band_val").agg(
-                    F.min("media_id").alias("min_media_id")
-                ),
-                lambda cur, part: cur.unionByName(part)
-                .groupBy("band_idx", "band_val")
-                .agg(F.min("min_media_id").alias("min_media_id")),
+            _neardup_batch(
+                bands_store, flags_store, batch_id, bands, _M.BAND_KEYS, "media_id"
             )
-            # 2. flag this batch against the POST-merge index
-            flagged = (
-                bands.join(bands_store.latest(ss), ["band_idx", "band_val"])
-                .where(F.col("min_media_id") < F.col("media_id"))
-                .groupBy("media_id")
-                .agg(
-                    F.count("*").alias("n_occupied_bands"),
-                    F.min("min_media_id").alias("partner_media_id"),
-                )
-            )
-            flags_store.apply(batch_id, flagged, DataFrame.unionByName)
         finally:
             bands.unpersist()
 
     with _scoped_shuffle_partitions(spark):
         run_stream(stream, ckpt, on_batch)
-    out = flags_store.latest(spark)
-    return out.select(
-        F.col("media_id").cast("bigint").alias("media_id"),
-        F.col("n_occupied_bands").cast("bigint").alias("n_occupied_bands"),
-        F.col("partner_media_id").cast("bigint").alias("partner_media_id"),
-    )
+    return flags_store.latest(spark)
 
 
 @register("media_neardup_streaming", _MEDIA_NEARDUP_STREAM_ORACLE)

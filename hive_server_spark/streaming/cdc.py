@@ -20,12 +20,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_server_spark.operators.fold import materialize_orders, partial_fold
 from hive_server_spark.operators.orderbook import price_levels, top_levels
 from hive_server_spark.streaming.incremental import (
     ParquetStateStore,
-    materialize_orders,
     merge_partials,
-    partial_fold,
     run_stream,
 )
 

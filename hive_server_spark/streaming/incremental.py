@@ -5,8 +5,10 @@ block-triggered micro-batch loop with an in-memory cursor (reference
 src/services/block-event-manager.ts:39-92, src/services/hive-listener.ts:
 144-221); a crash loses the cursor (SURVEY ST6). Spark-first replacement:
 
-    readStream(order_events) → project_updates → per-batch PARTIAL FOLD
-    → foreachBatch MERGE into a versioned parquet state table
+    readStream(order_events) → partial_fold (operators/fold.py)
+    → Spark's own state store (a native complete-mode aggregation), or a
+      foreachBatch MERGE into a versioned parquet state table when a batch
+      must read post-merge state (the CDC fold, streaming/cdc.py)
 
 The state value per (pool_address, order_id) keeps, for every order field,
 the pair (seq-of-last-set, value) — `max(struct(seq, value))` over non-null
@@ -19,62 +21,24 @@ semantics (ST1) — and the property the equivalence tests pin down.
 Checkpointing replaces the reference's in-memory `lastProcessedBlock`
 cursor, strictly improving ST6 (no event loss on crash).
 
-Scale posture: each micro-batch does one hash-aggregate of the batch (small)
-plus an outer-join merge against current state partitioned on the state key;
-with state bucketed by (pool_address) the merge is a co-partitioned join.
-State never leaves executors; the driver only tracks the version pointer.
+Scale posture (the foreachBatch form): each micro-batch does one
+hash-aggregate of the batch (small) plus an outer-join merge against current
+state partitioned on the state key; with state bucketed by (pool_address)
+the merge is a co-partitioned join. State never leaves executors; the
+driver only tracks the version pointer.
 """
 
 from __future__ import annotations
 
 import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hive_server_spark.operators.fold import project_updates
-
-_FIELDS = (
-    "trader",
-    "price",
-    "amount",
-    "filled",
-    "remaining_amount",
-    "order_type",
-    "active",
-)
-_UPD_OF = {
-    "trader": "u_trader",
-    "price": "u_price",
-    "amount": "u_amount",
-    "filled": "u_filled",
-    "remaining_amount": "u_remaining",
-    "order_type": "u_order_type",
-    "active": "u_active",
-}
-
-
-def partial_fold(events: DataFrame) -> DataFrame:
-    """Fold a (micro-)batch of events into a mergeable partial state: per
-    field a struct(seq, v) carrying the latest non-null update in this batch.
-    One hash aggregate with map-side combine."""
-    upd = project_updates(events)
-    seq = F.col("seq")
-
-    def last_pair(field: str):
-        u = F.col(_UPD_OF[field])
-        return F.max(F.when(u.isNotNull(), F.struct(seq.alias("seq"), u.alias("v")))).alias(
-            f"p_{field}"
-        )
-
-    return upd.groupBy("pool_address", "order_id").agg(
-        *[last_pair(f) for f in _FIELDS],
-        F.min("u_created_ts").alias("created_ts"),
-        F.max(F.when(F.col("is_created") == 1, seq)).alias("created_seq"),
-        F.max("is_created").alias("has_created"),
-    )
+# materialize_orders is re-exported: perfbench/workload_ingest.py imports
+# it from here
+from hive_server_spark.operators.fold import _FIELDS, materialize_orders  # noqa: F401
 
 
 def merge_partials(state: DataFrame, batch: DataFrame) -> DataFrame:
@@ -95,18 +59,6 @@ def merge_partials(state: DataFrame, batch: DataFrame) -> DataFrame:
     return joined.select(*cols)
 
 
-def materialize_orders(partial: DataFrame) -> DataFrame:
-    """Partial state → the user-facing `orders` table (same shape as the
-    batch fold): unwrap the (seq, v) pairs, keep only created orders."""
-    cols = [F.col("pool_address"), F.col("order_id")]
-    rename = dict(zip(_FIELDS, ("trader", "price", "amount", "filled",
-                                "remaining_amount", "order_type", "active")))
-    for f, out in rename.items():
-        cols.append(F.col(f"p_{f}.v").alias(out))
-    cols += [F.col("created_ts"), F.col("created_seq")]
-    return partial.where(F.col("has_created") == 1).select(*cols)
-
-
 class ParquetStateStore:
     """Versioned parquet state table: each batch writes the full state as
     `v{n}`, and the pointer file flips last — never read and overwrite the
@@ -114,12 +66,17 @@ class ParquetStateStore:
     lineage, and ``apply`` makes re-delivered batches exactly-once.
 
     It holds the state of the foreachBatch folds that read post-merge
-    state or a frozen seed inside a batch: the orders fold
-    (``run_incremental_fold`` and its CDC variant in streaming/cdc.py),
-    the docs and media near-dup indexes, the IVF census and PQ codes, and
-    the deletion vectors (plans/streaming_pack.py). A pure keyed aggregate
-    needs none of that and runs as a native complete-mode streaming
-    aggregation on Spark's own state store instead.
+    state or a frozen seed inside a batch: the orders fold with CDC
+    (streaming/cdc.py), the docs and media near-dup indexes, the IVF
+    census and PQ codes, and the deletion vectors
+    (plans/streaming_pack.py). A pure keyed aggregate — the orders fold
+    without CDC included — needs none of that and runs as a native
+    complete-mode streaming aggregation on Spark's own state store
+    instead.
+
+    Every commit keeps its ``v{n}`` directory: the versions are the time
+    travel history ``at_version`` reads. Nothing prunes them; a store
+    lives as long as its stream's scratch directory.
 
     Scale note: each commit rewrites the full state — correct and atomic,
     but O(state). The production-scale variants, in order of preference:
@@ -166,15 +123,14 @@ class ParquetStateStore:
     def at_version(self, spark: SparkSession, batch_id: int) -> DataFrame:
         """Time travel: the state as of micro-batch `batch_id`. Every
         commit keeps its `v{n}` directory, so any historical version stays
-        readable until vacuumed — the plain-parquet form of Delta/Iceberg
-        snapshot reads. A vacuumed (or never-committed) version fails
-        loudly here, not with a deep Spark path error."""
+        readable — the plain-parquet form of Delta/Iceberg snapshot reads.
+        A version not on disk fails loudly here, not with a deep Spark
+        path error."""
         path = os.path.join(self.root, f"v{batch_id}")
         if not os.path.isdir(path):
             raise ValueError(
                 f"state version {batch_id} is not readable; committed "
-                f"versions: {self.versions()} (older versions are removed "
-                "by vacuum(keep_last=...))"
+                f"versions: {self.versions()}"
             )
         return spark.read.parquet(path)
 
@@ -186,25 +142,6 @@ class ParquetStateStore:
             if m is not None:
                 out.append(int(m.group(1)))
         return sorted(out)
-
-    def vacuum(self, keep_last: int = 1) -> list[int]:
-        """Retention: delete all but the newest `keep_last` version
-        directories (SCALE.md §6 — without this a long-running stream
-        accumulates one full state snapshot per commit, unboundedly).
-        The pointer target always survives, even if it is older than the
-        cut (a concurrent commit may not have flipped LATEST yet when the
-        newest directory appeared). Returns the removed version numbers."""
-        if keep_last < 1:
-            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        vs = self.versions()
-        keep = set(vs[-keep_last:])
-        ptr = self.committed_version()
-        if ptr is not None:
-            keep.add(ptr)
-        removed = [v for v in vs if v not in keep]
-        for v in removed:
-            shutil.rmtree(os.path.join(self.root, f"v{v}"))
-        return removed
 
     def _check_lineage(self, action: str) -> None:
         """Raise if this handle and a COMMITTED store disagree on
@@ -522,28 +459,3 @@ def run_stream(stream: DataFrame, checkpoint_dir: str, on_batch) -> None:
     )
     await_stream_with_retry(writer.start)
 
-
-def run_incremental_fold(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    retain_versions: int | None = None,
-) -> ParquetStateStore:
-    """Drive the stream to completion (availableNow) maintaining the state
-    store; returns the store (materialize with `materialize_orders`).
-
-    `events_stream` must be a *streaming* DataFrame with order_events shape.
-    `retain_versions=N` applies the vacuum retention policy after every
-    batch (keep the newest N snapshots) — the long-running-stream setting;
-    the default None keeps full history for time travel.
-    """
-    store = ParquetStateStore(state_dir, checkpoint_dir)
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        store.apply(batch_id, partial_fold(batch_df), merge_partials)
-        if retain_versions is not None:
-            store.vacuum(keep_last=retain_versions)
-
-    run_stream(events_stream, checkpoint_dir, on_batch)
-    return store

@@ -116,28 +116,15 @@ def main() -> None:
     def _batch_band_flags(s, d):
         from hive_server_spark.catalog import load_table
         from hive_server_spark.functions import multimodal as M
+        from hive_server_spark.functions.clusters import band_index, occupied_flags
 
         bands = M.band_long(
             M.dhash_bands(M.synthesize_dhash_jpeg_media(
                 load_table(s, d, "documents")
             ))
         )
-        bmin = bands.groupBy("band_idx", "band_val").agg(
-            F.min("media_id").alias("min_media_id")
-        )
-        return (
-            bands.join(bmin, ["band_idx", "band_val"])
-            .where(F.col("min_media_id") < F.col("media_id"))
-            .groupBy("media_id")
-            .agg(
-                F.count("*").cast("bigint").alias("n_occupied_bands"),
-                F.min("min_media_id").cast("bigint").alias("partner_media_id"),
-            )
-            .select(
-                F.col("media_id").cast("bigint").alias("media_id"),
-                "n_occupied_bands",
-                "partner_media_id",
-            )
+        return occupied_flags(
+            bands, band_index(bands, M.BAND_KEYS, "media_id"), M.BAND_KEYS, "media_id"
         )
 
     if args.incremental:

@@ -1179,10 +1179,9 @@ def test_phash_incremental_oracle_parity_sf(spark):
 
 
 def test_band_candidates_capped_parity_vs_oracle(spark, tmp_path):
-    """Value-gate for the CAPPED band_candidates path (VERDICT r10 watch
-    item): a crafted corpus plants a hot band — EIGHT byte-identical
-    images (same header, same parity), b >> cap — plus one small near-dup
-    pair and a singleton. The full decode → dHash → capped-LSH → Hamming
+    """Value-gate for the CAPPED band_candidates path: a crafted corpus
+    plants a hot band — EIGHT byte-identical images (same header, same
+    parity), b >> cap — plus one small near-dup pair and a singleton. The full decode → dHash → capped-LSH → Hamming
     summary under max_bucket=4 must equal a DuckDB oracle spelling the
     identical bucket-size rule over the shared _PHASH_BANDS_CTES hash
     derivation: hot buckets drop (their members belong to exact
@@ -1303,26 +1302,21 @@ def _incremental_flags_vs_full_recompute(spark, bands_wide, n_bands, tmp_path):
     oracle."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from hive_server_spark.functions.multimodal import (
-        band_long,
-        incremental_band_neardup,
-        write_band_index,
-    )
+    from hive_server_spark.functions.clusters import split_refresh
+    from hive_server_spark.functions.multimodal import BAND_KEYS, band_long
 
     rows = {
         r["media_id"]: tuple(r[f"band{i}"] for i in range(n_bands))
         for r in bands_wide.collect()
     }
     thr = (min(rows) + max(rows)) // 2
-    long = band_long(bands_wide, n_bands=n_bands)
     index_path = os.path.join(str(tmp_path), f"band_index_{n_bands}")
-    write_band_index(long.where(F.col("media_id") < thr), index_path)
     got = {
         r.media_id: (r.n_occupied_bands, r.partner_media_id)
-        for r in incremental_band_neardup(
-            spark, index_path, long.where(F.col("media_id") >= thr)
+        for r in split_refresh(
+            bands_wide, "media_id",
+            lambda wide: band_long(wide, n_bands=n_bands),
+            BAND_KEYS, index_path,
         ).collect()
     }
     expect = {}
@@ -1341,11 +1335,11 @@ def _incremental_flags_vs_full_recompute(spark, bands_wide, n_bands, tmp_path):
 
 
 def test_incremental_band_index_audio_fingerprint(spark, tmp_path):
-    """VERDICT r10 missing-item 2, audio member: the persisted-band-index
-    refresh runs over the audio energy-fingerprint table through the SAME
-    modality-generic functions the image gate query uses — planted
-    cross-snapshot dup flagged against the prior corpus without
-    rescanning it, plus the full-corpus-equivalence recompute."""
+    """Audio member: the persisted-band-index refresh runs over the audio
+    energy-fingerprint table through the SAME modality-generic functions
+    the image gate query uses — planted cross-snapshot dup flagged against
+    the prior corpus without rescanning it, plus the
+    full-corpus-equivalence recompute."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

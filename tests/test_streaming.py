@@ -7,13 +7,13 @@ from __future__ import annotations
 
 import pytest
 
-from hive_server_spark.operators.fold import fold_order_events
-from hive_server_spark.sources.synthetic import order_events
-from hive_server_spark.streaming.incremental import (
+from hive_server_spark.operators.fold import (
+    fold_order_events,
     materialize_orders,
-    merge_partials,
     partial_fold,
 )
+from hive_server_spark.sources.synthetic import order_events
+from hive_server_spark.streaming.incremental import merge_partials
 from hive_server_spark.plans.streaming_pack import streamed_orders_state
 from tests.conftest import SF_SMALL
 
@@ -28,6 +28,33 @@ def test_streaming_equals_batch(spark, chunks):
     batch = fold_order_events(order_events(spark, SF_SMALL))
     streamed = streamed_orders_state(spark, SF_SMALL, chunks=chunks)
     assert _rows(streamed) == _rows(batch)
+
+
+def test_sink_streams_leave_no_temp_views(spark):
+    """A memory-sink stream's result is bound to the returned DataFrame and
+    the sink's session temp view is dropped, so stream runs do not pile up
+    `stream_*` / `stateful_*` views in the session catalog; the returned
+    DataFrames still read their rows."""
+    from hive_server_spark.plans.streaming_pack import (
+        stateful_orders_state,
+        streamed_zonemaps,
+    )
+
+    def sink_views():
+        return {
+            t.name
+            for t in spark.catalog.listTables()
+            if t.isTemporary and t.name.startswith(("stream_", "stateful_"))
+        }
+
+    before = sink_views()
+    outs = [
+        streamed_zonemaps(spark, SF_SMALL, chunks=1),
+        streamed_orders_state(spark, SF_SMALL, chunks=1),
+        stateful_orders_state(spark, SF_SMALL, chunks=1),
+    ]
+    assert sink_views() == before
+    assert all(df.count() > 0 for df in outs)
 
 
 def test_merge_is_order_insensitive(spark, make_events):
@@ -86,10 +113,7 @@ def test_checkpoint_restart_exactly_once(spark):
 
     from pyspark.sql import functions as F
 
-    from hive_server_spark.streaming.incremental import (
-        file_stream,
-        run_incremental_fold,
-    )
+    from hive_server_spark.plans.streaming_pack import streamed_orders_partial
 
     ev = order_events(spark, SF_SMALL).cache()
     half_a = ev.where(F.col("seq") % 2 == 0)
@@ -97,20 +121,16 @@ def test_checkpoint_restart_exactly_once(spark):
 
     work = tempfile.mkdtemp(prefix="hss_restart_")
     ev_dir = os.path.join(work, "events")
-    state_dir = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
 
     def run():
-        return run_incremental_fold(spark, file_stream(spark, ev_dir), state_dir, ckpt)
+        return streamed_orders_partial(spark, ev_dir, work)
 
     # session 1: only the first half exists
     half_a.coalesce(1).write.mode("overwrite").parquet(ev_dir)
     run()
-    # "restart": second half lands, same checkpoint + state dirs
+    # "restart": second half lands, same checkpoint
     half_b.coalesce(1).write.mode("append").parquet(ev_dir)
-    store = run()
-
-    got = materialize_orders(store.latest(spark))
+    got = materialize_orders(run())
     want = fold_order_events(ev)
     assert _rows(got) == _rows(want)
 
@@ -132,81 +152,25 @@ def test_windowed_streams_chunk_invariant(spark):
 
 
 def test_state_store_vacuum_retention(spark):
-    """SCALE.md §6 retention: vacuum(keep_last=N) prunes old `v{n}` state
-    snapshots so a long-running stream doesn't accumulate one full copy of
-    state per commit forever. Pruned versions must fail loudly on
-    at_version(); kept versions and latest() must survive unchanged."""
-    import os
+    """Every commit keeps its `v{n}` snapshot for time travel; a version
+    that is not on disk must fail loudly on at_version() — a ValueError
+    listing the committed versions, not a deep Spark path error."""
     import tempfile
 
     import pytest as _pt
     from pyspark.sql import functions as F
 
-    from hive_server_spark.streaming.incremental import (
-        ParquetStateStore,
-        partial_fold,
-    )
+    from hive_server_spark.streaming.incremental import ParquetStateStore
 
     ev = order_events(spark, SF_SMALL)
-    store = ParquetStateStore(tempfile.mkdtemp(prefix="hss_vacuum_"), "/ckpt/vacuum")
-    for batch_id in range(4):
-        store.commit(partial_fold(ev.where(F.col("seq") % 4 == batch_id)), batch_id)
-    assert store.versions() == [0, 1, 2, 3]
-    latest_before = _rows(materialize_orders(store.latest(spark)))
+    store = ParquetStateStore(tempfile.mkdtemp(prefix="hss_versions_"), "/ckpt/versions")
+    for batch_id in range(2):
+        store.commit(partial_fold(ev.where(F.col("seq") % 2 == batch_id)), batch_id)
+    assert store.versions() == [0, 1]
+    assert store.at_version(spark, 0).count() > 0
 
-    removed = store.vacuum(keep_last=2)
-    assert removed == [0, 1]
-    assert store.versions() == [2, 3]
-    assert not os.path.isdir(os.path.join(store.root, "v0"))
-
-    # pruned -> a clear error naming vacuum, not a deep Spark path error
-    with _pt.raises(ValueError, match="vacuum"):
-        store.at_version(spark, 0)
-    # kept + latest unaffected
-    assert store.at_version(spark, 2).count() > 0
-    assert _rows(materialize_orders(store.latest(spark))) == latest_before
-
-    # the pointer target survives even when older than the keep_last cut
-    with open(store._ptr, "w") as fh:
-        fh.write("v2")
-    assert store.vacuum(keep_last=1) == []  # v3 newest, v2 pointed-to
-    assert store.versions() == [2, 3]
-
-    with _pt.raises(ValueError, match="keep_last"):
-        store.vacuum(keep_last=0)
-
-
-def test_incremental_fold_with_retention(spark):
-    """retain_versions=1 applies the vacuum policy per commit: after the
-    stream drains, only the newest snapshot survives — and the final state
-    still equals the batch fold (vacuum can never touch the live pointer)."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from hive_server_spark.streaming.incremental import (
-        file_stream,
-        run_incremental_fold,
-    )
-
-    ev = order_events(spark, SF_SMALL).cache()
-    work = tempfile.mkdtemp(prefix="hss_retain_")
-    ev_dir = os.path.join(work, "events")
-    ev.withColumn("half", (F.col("seq") % 2).cast("int")).write.partitionBy(
-        "half"
-    ).parquet(ev_dir)
-    store = run_incremental_fold(
-        spark,
-        file_stream(spark, ev_dir),
-        os.path.join(work, "state"),
-        os.path.join(work, "ckpt"),
-        retain_versions=1,
-    )
-    assert len(store.versions()) == 1
-    got = materialize_orders(store.latest(spark))
-    want = fold_order_events(ev)
-    assert _rows(got) == _rows(want)
+    with _pt.raises(ValueError, match=r"not readable; committed versions: \[0, 1\]"):
+        store.at_version(spark, 7)
 
 
 def _docs_ingest(spark, src_dir, work):
@@ -452,11 +416,9 @@ def test_docs_neardup_chunk_invariance_and_oracle(spark):
     occupied-band rule computed directly on the corpus."""
     from pyspark.sql import functions as F
 
-    from hive_server_spark.plans.streaming_pack import (
-        _doc_bands,
-        streamed_docs_neardup,
-    )
     from hive_server_spark.catalog import load_table
+    from hive_server_spark.functions.text import doc_bands
+    from hive_server_spark.plans.streaming_pack import streamed_docs_neardup
     from tests.conftest import SF_SMALL
 
     one = sorted(
@@ -468,7 +430,7 @@ def test_docs_neardup_chunk_invariance_and_oracle(spark):
     assert one == three and len(one) > 0
 
     # batch recompute of the occupied-band rule from the same band keys
-    bands = _doc_bands(load_table(spark, SF_SMALL, "documents"))
+    bands = doc_bands(load_table(spark, SF_SMALL, "documents"))
     bmin = bands.groupBy("band_key").agg(F.min("doc_id").alias("min_id"))
     want = sorted(
         tuple(r)
@@ -495,7 +457,7 @@ def test_incremental_neardup_cross_snapshot_and_intra_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from hive_server_spark import gate
-    from hive_server_spark.plans.streaming_pack import _doc_bands
+    from hive_server_spark.functions.text import doc_bands
 
     dup_a = "the quick brown fox jumps over the lazy dog again and again " * 4
     dup_b = "pack my box with five dozen liquor jugs every single day now " * 4
@@ -542,7 +504,7 @@ def test_incremental_neardup_cross_snapshot_and_intra_batch(spark, tmp_path):
     assert 9 not in flags  # the batch pair's EARLIER doc is the canonical
     # equivalence: full-corpus batch LSH rule restricted to the batch
     docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
-    bands = _doc_bands(docs)
+    bands = doc_bands(docs)
     bmin = bands.groupBy("band_key").agg(F.min("doc_id").alias("min_id"))
     full = (
         bands.join(bmin, "band_key")
