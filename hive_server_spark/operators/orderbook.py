@@ -20,23 +20,23 @@ parallel execution; SURVEY §7 hard-part e).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def price_levels(orders: DataFrame) -> DataFrame:
-    """Aggregate active orders into price levels (A2): one row per
-    (pool_address, order_type, price) with total volume and FIFO order ids.
-
-    Single shuffle on the level key; map-side partial aggregation applies to
-    sum/count. At 100 TB the level cardinality is tiny relative to orders, so
-    this reduces data massively before any downstream sort.
-    """
+@functools.cache
+def _level_columns() -> tuple[Column, tuple[Column, ...], tuple[Column, ...]]:
+    """`price_levels`' filter, level key and aggregates. Columns are
+    unresolved expressions with no session state, so they are built once
+    per process and every call (CDC micro-batch, REST render) only binds
+    them."""
     return (
-        orders.where(F.col("active") & F.col("price").isNotNull())
-        .groupBy("pool_address", "order_type", "price")
-        .agg(
+        F.col("active") & F.col("price").isNotNull(),
+        (F.col("pool_address"), F.col("order_type"), F.col("price")),
+        (
             F.sum(F.col("amount") - F.col("filled")).alias("total_volume"),
             F.count(F.lit(1)).alias("order_count"),
             # A3: price-time priority — FIFO by creation seq, never by the
@@ -47,7 +47,31 @@ def price_levels(orders: DataFrame) -> DataFrame:
                 ),
                 lambda s: s["order_id"],
             ).alias("order_ids"),
-        )
+        ),
+    )
+
+
+def price_levels(orders: DataFrame) -> DataFrame:
+    """Aggregate active orders into price levels (A2): one row per
+    (pool_address, order_type, price) with total volume and FIFO order ids.
+
+    Single shuffle on the level key; map-side partial aggregation applies to
+    sum/count. At 100 TB the level cardinality is tiny relative to orders, so
+    this reduces data massively before any downstream sort.
+    """
+    active, keys, aggs = _level_columns()
+    return orders.where(active).groupBy(*keys).agg(*aggs)
+
+
+@functools.cache
+def _rank_column() -> Column:
+    """`top_levels`' per-side level rank, built once per process."""
+    # one window each way; price is unique within (pool, side) so ranking is
+    # deterministic without a tiebreaker
+    w_bid = Window.partitionBy("pool_address", "order_type").orderBy(F.desc("price"))
+    w_ask = Window.partitionBy("pool_address", "order_type").orderBy(F.asc("price"))
+    return F.when(F.col("order_type") == "BUY", F.row_number().over(w_bid)).otherwise(
+        F.row_number().over(w_ask)
     )
 
 
@@ -57,17 +81,10 @@ def top_levels(levels: DataFrame, depth: int = 20) -> DataFrame:
 
     Rank-over-window so one job covers every pool; depth default 20 matches
     the reference model default (REST default is 10 — SURVEY Q4; depth is an
-    explicit parameter here).
+    explicit parameter here). The depth predicate is the one per-call
+    expression (callers vary it, e.g. amount_out's `level_cap`), given as
+    SQL text so no Column is built per call.
     """
-    # one window each way; price is unique within (pool, side) so ranking is
-    # deterministic without a tiebreaker
-    w_bid = Window.partitionBy("pool_address", "order_type").orderBy(F.desc("price"))
-    w_ask = Window.partitionBy("pool_address", "order_type").orderBy(F.asc("price"))
-    ranked = levels.withColumn(
-        "level_rank",
-        F.when(F.col("order_type") == "BUY", F.row_number().over(w_bid)).otherwise(
-            F.row_number().over(w_ask)
-        ),
+    return levels.withColumn("level_rank", _rank_column()).where(
+        f"level_rank <= {int(depth)}"
     )
-    return ranked.where(F.col("level_rank") <= depth)
-

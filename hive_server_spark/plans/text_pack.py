@@ -3989,6 +3989,8 @@ def _bpe_train(spark: SparkSession, sf_dir: str, steps: int = _BPE_TRAIN_STEPS):
     real cluster size this to the live vocab)."""
 
     def build() -> tuple:
+        import pyarrow as pa
+
         from hive_server_spark.session import scoped_shuffle_partitions
 
         with scoped_shuffle_partitions(spark, 8):
@@ -4043,8 +4045,21 @@ def _bpe_train(spark: SparkSession, sf_dir: str, steps: int = _BPE_TRAIN_STEPS):
                     bpe_apply_merge_col(F.col("symseq"), a, b).alias("symseq"),
                     "cnt",
                 ).localCheckpoint()
+        # an arrow table becomes a LocalTableScan (the rows live in the
+        # plan; collecting it runs no job); a list of tuples would be a
+        # Scan ExistingRDD with defaultParallelism partitions
+        schema = pa.schema(
+            [
+                ("step", pa.int64()),
+                ("sym_a", pa.string()),
+                ("sym_b", pa.string()),
+                ("pair_count", pa.int64()),
+            ]
+        )
         merges = spark.createDataFrame(
-            rows, "step long, sym_a string, sym_b string, pair_count long"
+            pa.Table.from_pylist(
+                [dict(zip(schema.names, r)) for r in rows], schema=schema
+            )
         )
         return merges, vocab
 

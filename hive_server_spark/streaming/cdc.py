@@ -8,10 +8,16 @@ exactly the pools touched in this batch and append the snapshots (with the
 batch id as the CDC version) to an output table — any push transport can
 tail that table; the engine's job ends at the versioned snapshot stream.
 
-Scale posture: the touched-pool set is typically tiny relative to the pool
-universe, so the book recompute filters the state table on an IN-list
-(broadcast semi-join) before aggregating — per batch the cost is
-O(orders of touched pools), not O(all orders)."""
+Scale posture: a batch is O(state), not O(touched pools). Its merge scans
+the full orders state and rewrites it whole (see `ParquetStateStore`), and
+the book recompute scans the new version once more. Only what follows the
+broadcast semi-join on the touched pools — the level aggregate, the top-k
+rank and the snapshot write — is O(orders of touched pools).
+
+Driver posture: every Column a batch uses is built once per process
+(`operators/fold.py`, `operators/orderbook.py`, `merge_partials`), and the
+state store reads each version with the schema it inferred on its first
+read, so a batch only binds its input DataFrames."""
 
 from __future__ import annotations
 

@@ -30,15 +30,34 @@ driver only tracks the version pointer.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # materialize_orders is re-exported: perfbench/workload_ingest.py imports
 # it from here
 from hive_server_spark.operators.fold import _FIELDS, materialize_orders  # noqa: F401
+
+
+@functools.cache
+def _merge_columns() -> tuple[Column, ...]:
+    """`merge_partials`' select list over the `s`/`b` aliased join, built
+    once per process: a micro-batch only binds it."""
+    return (
+        F.col("pool_address"),
+        F.col("order_id"),
+        *[
+            F.greatest(F.col(f"s.p_{f}"), F.col(f"b.p_{f}")).alias(f"p_{f}")
+            for f in _FIELDS
+        ],
+        F.least(F.col("s.created_ts"), F.col("b.created_ts")).alias("created_ts"),
+        F.greatest(F.col("s.created_seq"), F.col("b.created_seq")).alias("created_seq"),
+        F.greatest(F.col("s.has_created"), F.col("b.has_created")).alias("has_created"),
+    )
 
 
 def merge_partials(state: DataFrame, batch: DataFrame) -> DataFrame:
@@ -48,15 +67,7 @@ def merge_partials(state: DataFrame, batch: DataFrame) -> DataFrame:
     result."""
     s, b = state.alias("s"), batch.alias("b")
     joined = s.join(b, ["pool_address", "order_id"], "full_outer")
-    cols = [F.col("pool_address"), F.col("order_id")]
-    for f in _FIELDS:
-        cols.append(F.greatest(F.col(f"s.p_{f}"), F.col(f"b.p_{f}")).alias(f"p_{f}"))
-    cols += [
-        F.least(F.col("s.created_ts"), F.col("b.created_ts")).alias("created_ts"),
-        F.greatest(F.col("s.created_seq"), F.col("b.created_seq")).alias("created_seq"),
-        F.greatest(F.col("s.has_created"), F.col("b.has_created")).alias("has_created"),
-    ]
-    return joined.select(*cols)
+    return joined.select(*_merge_columns())
 
 
 class ParquetStateStore:
@@ -78,6 +89,11 @@ class ParquetStateStore:
     travel history ``at_version`` reads. Nothing prunes them; a store
     lives as long as its stream's scratch directory.
 
+    Every version of a store has the same columns, so a handle infers the
+    schema once, on its first read (a Spark job over the parquet footers),
+    and passes it to every later ``latest`` / ``at_version`` read, which
+    then submits no job. A commit whose columns differ drops the memo.
+
     Scale note: each commit rewrites the full state — correct and atomic,
     but O(state). The production-scale variants, in order of preference:
     (a) a Delta/Iceberg MERGE target (transactional, row-level);
@@ -97,6 +113,7 @@ class ParquetStateStore:
         refused here, before its stream starts, and again on every touch."""
         self.root = root
         self.run_id = run_id
+        self._schema: StructType | None = None
         os.makedirs(root, exist_ok=True)
         self._check_lineage("open")
 
@@ -114,11 +131,19 @@ class ParquetStateStore:
         with open(self._run_file) as fh:
             return fh.read().strip()
 
+    def _read(self, spark: SparkSession, version: int) -> DataFrame:
+        path = os.path.join(self.root, f"v{version}")
+        if self._schema is not None:
+            return spark.read.schema(self._schema).parquet(path)
+        df = spark.read.parquet(path)
+        self._schema = df.schema
+        return df
+
     def latest(self, spark: SparkSession) -> DataFrame | None:
         b = self.committed_version()
         if b is None:
             return None
-        return spark.read.parquet(os.path.join(self.root, f"v{b}"))
+        return self._read(spark, b)
 
     def at_version(self, spark: SparkSession, batch_id: int) -> DataFrame:
         """Time travel: the state as of micro-batch `batch_id`. Every
@@ -126,13 +151,12 @@ class ParquetStateStore:
         readable — the plain-parquet form of Delta/Iceberg snapshot reads.
         A version not on disk fails loudly here, not with a deep Spark
         path error."""
-        path = os.path.join(self.root, f"v{batch_id}")
-        if not os.path.isdir(path):
+        if not os.path.isdir(os.path.join(self.root, f"v{batch_id}")):
             raise ValueError(
                 f"state version {batch_id} is not readable; committed "
                 f"versions: {self.versions()}"
             )
-        return spark.read.parquet(path)
+        return self._read(spark, batch_id)
 
     def versions(self) -> list[int]:
         """Committed version numbers still on disk, ascending."""
@@ -171,6 +195,10 @@ class ParquetStateStore:
         # AHEAD of the pointer would silently corrupt the store (the
         # already_applied guard alone only catches ids at-or-behind it)
         self._check_lineage("commit")
+        if self._schema is not None and (
+            df.schema.simpleString() != self._schema.simpleString()
+        ):
+            self._schema = None  # other columns: the next read infers again
         version = f"v{batch_id}"
         df.write.mode("overwrite").parquet(os.path.join(self.root, version))
         if self._recorded_run_id() is None or self.committed_version() is None:

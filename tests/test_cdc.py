@@ -75,3 +75,40 @@ def test_cdc_fold_refuses_committed_state_of_another_checkpoint(spark):
     run("ckpt_a")
     with pytest.raises(RuntimeError, match="different streaming checkpoint"):
         run("ckpt_b")
+
+
+def test_warm_cdc_fold_builds_no_column(spark, monkeypatch, tmp_path):
+    """Every Column a CDC micro-batch uses is built once per process, so
+    a batch only binds its input DataFrames: once a fold has run, a second
+    fold over fresh dirs in the same process constructs no Python Column
+    (each one costs py4j round trips on the driver)."""
+    from pyspark.sql.classic.column import Column
+
+    work = str(tmp_path)
+    ev_dir = os.path.join(work, "events")
+    order_events(spark, SF_SMALL).repartition(3).write.parquet(ev_dir)
+
+    def run(tag):
+        return run_incremental_fold_with_cdc(
+            spark,
+            file_stream(spark, ev_dir),
+            state_dir=os.path.join(work, tag, "state"),
+            checkpoint_dir=os.path.join(work, tag, "ckpt"),
+            cdc_dir=os.path.join(work, tag, "cdc"),
+        )
+
+    run("warm")
+    built = []
+    init = Column.__init__
+
+    def counting_init(self, *args, **kwargs):
+        built.append(type(self).__name__)
+        init(self, *args, **kwargs)
+
+    monkeypatch.setattr(Column, "__init__", counting_init)
+    store, cdc_dir = run("measured")
+    monkeypatch.undo()
+
+    assert store.versions() == [0, 1, 2]  # three micro-batches ran
+    assert sorted(os.listdir(cdc_dir)) == [f"cdc_version={v}" for v in range(3)]
+    assert built == []

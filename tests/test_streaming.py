@@ -173,6 +173,60 @@ def test_state_store_vacuum_retention(spark):
         store.at_version(spark, 7)
 
 
+def _next_job_id(spark) -> int:
+    """The id the next Spark job will get, once the listener bus has
+    delivered every job start so far to the status store."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return 0 if jobs.isEmpty() else max(jobs.head().jobId(), jobs.last().jobId()) + 1
+
+
+def test_state_store_reads_with_remembered_schema(spark, tmp_path):
+    """A handle infers the state schema on its first read and passes it to
+    every later read: latest() and at_version() then submit no Spark job,
+    and return the schema and rows an inferring spark.read.parquet does.
+    A fresh handle on an existing store infers exactly once; a commit with
+    other columns makes the next read infer again."""
+    import os
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from hive_server_spark.streaming.incremental import ParquetStateStore
+
+    ev = order_events(spark, SF_SMALL)
+    root = str(tmp_path)
+    store = ParquetStateStore(root, "/ckpt/schema-memo")
+    for batch_id in range(2):
+        part = partial_fold(ev.where(F.col("seq") % 2 == batch_id))
+        store.apply(batch_id, part, merge_partials)  # batch 1 reads v0
+
+    for version, read in (
+        (1, lambda: store.latest(spark)),
+        (0, lambda: store.at_version(spark, 0)),
+        (1, lambda: store.at_version(spark, 1)),
+    ):
+        first = _next_job_id(spark)
+        got = read()
+        assert _next_job_id(spark) == first, f"v{version}: the read submitted a job"
+        inferred = spark.read.parquet(os.path.join(root, f"v{version}"))
+        assert got.schema == inferred.schema
+        assert Counter(got.collect()) == Counter(inferred.collect())
+
+    fresh = ParquetStateStore(root, "/ckpt/schema-memo")
+    first = _next_job_id(spark)
+    fresh.latest(spark)
+    fresh.at_version(spark, 0)
+    fresh.latest(spark)
+    assert _next_job_id(spark) - first == 1  # one inference, on the first read
+
+    store.commit(spark.range(3), 2)
+    first = _next_job_id(spark)
+    assert store.latest(spark).columns == ["id"]
+    assert _next_job_id(spark) - first == 1
+
+
 def _docs_ingest(spark, src_dir, work):
     """Run the production docs-ingest stream over the landed `src_dir`
     with its checkpoint under `work`; returns the index as of this run."""
