@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_server_spark.schemas import DRIVER_TABLES
+from hive_server_spark.session_cache import shared
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -39,8 +40,29 @@ def _ensure_read_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def _file_version(path: str) -> tuple | None:
+    """(path, size, st_mtime_ns) of every file under `path` (or of `path`
+    itself), so a rewritten table reads as a new version; None when the
+    path is not on the local filesystem."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, _dirs, files in os.walk(path):
+            for fn in files:
+                st = os.stat(os.path.join(root, fn))
+                out.append((os.path.join(root, fn), st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+    except OSError:
+        return None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver table. Parquet supplies the schema (footer-exact).
+    Inferring it is a Spark job, so it is inferred on the first read of
+    each file version and reused (`session_cache.shared`) by the reads
+    after it in this SparkContext, which then run no job.
 
     `events.ts` has changed physical encoding across driver testdata
     regenerations, so normalize every known encoding to the session
@@ -56,7 +78,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     * timestamp[us] UTC → already session TIMESTAMP; no-op.
     """
     _ensure_read_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    version = _file_version(path)
+    if version is None:
+        df = spark.read.parquet(path)
+    else:
+        schema = shared(
+            spark,
+            ("catalog:schema", path, version),
+            lambda: spark.read.parquet(path).schema,
+        )
+        df = spark.read.schema(schema).parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -118,17 +118,17 @@ def split_refresh(
     prior corpus AND within the batch by one rule. The split is
     id-ordered, so the post-merge index equals the full-corpus index and
     the flags are the full-corpus occupied-band rule restricted to the
-    batch. The prior corpus is never rescanned."""
+    batch. The prior corpus is never rescanned. The index is read back
+    with the schema of the frame just written (no schema-inference job)."""
     mn, mx = rows.agg(F.min(id), F.max(id)).first()
     thr = (mn + mx) // 2  # == the oracles' integer-division threshold
-    band_index(to_bands(rows.where(F.col(id) < thr)), keys, id).write.mode(
-        "overwrite"
-    ).parquet(index_path)
+    prior = band_index(to_bands(rows.where(F.col(id) < thr)), keys, id)
+    prior.write.mode("overwrite").parquet(index_path)
     batch = to_bands(rows.where(F.col(id) >= thr))
     merged = band_index(
-        rows.sparkSession.read.parquet(index_path).unionByName(
-            band_index(batch, keys, id)
-        ),
+        rows.sparkSession.read.schema(prior.schema)
+        .parquet(index_path)
+        .unionByName(band_index(batch, keys, id)),
         keys,
         id,
     )

@@ -44,9 +44,14 @@ codecs (H.26x/VP9/AV1) remain a documented strict-mode ValueError /
 strict=False fake: a GOP/bitstream decoder would be a re-implementation
 of an external codec library, out of scope here.
 
-Scale posture: mapInPandas preserves partitioning (no shuffle); payload
-bytes stay columnar end-to-end via Arrow; feature vectors come back as
-array<float> ready for functions/embeddings.py similarity ops."""
+Scale posture: fan-out is the codec entry's job. Every synthesizer
+spreads its `documents` input (`functions/text.py::spread`, free on an
+already-spread frame), the Python-codec ones through one tail,
+`_codec_media`, so a one-split scan never runs a codec in one task.
+Downstream mapInPandas stages preserve that partitioning
+(no shuffle); payload bytes stay columnar end-to-end via Arrow; feature
+vectors come back as array<float> ready for functions/embeddings.py
+similarity ops."""
 
 from __future__ import annotations
 
@@ -69,6 +74,7 @@ from pyspark.sql.types import (
 )
 
 from hive_server_spark.functions.clusters import bucket_pairs, cap_buckets
+from hive_server_spark.functions.text import spread
 
 MEDIA_SCHEMA = StructType(
     [
@@ -137,10 +143,7 @@ VIDEO_DECODED_SCHEMA = StructType(
 def synthesize_media(docs: DataFrame, kind: str = "image") -> DataFrame:
     """Deterministic media fixtures: payload = utf8 bytes of the document
     text (stands in for compressed media bytes). Pure column expressions."""
-    from hive_server_spark.functions.text import spread
-
-    docs = spread(docs)
-    return docs.select(
+    return spread(docs).select(
         F.col("doc_id").alias("media_id"),
         F.lit(kind).alias("kind"),
         F.encode("text", "utf-8").alias("payload"),
@@ -149,6 +152,32 @@ def synthesize_media(docs: DataFrame, kind: str = "image") -> DataFrame:
             F.col("n_chars").cast("long").alias("n_bytes"),
         ).alias("meta"),
     )
+
+
+def _codec_media(docs: DataFrame, kind: str, encode) -> DataFrame:
+    """The one tail of every Python-codec synthesizer: spread `docs`, then
+    run `encode(doc_id, text) -> (payload, declared_format)` on each row in
+    one Arrow-batched mapInPandas. Fan-out is the codec entry's job: a
+    caller may hand over a one-split scan, and the encode is per-row
+    Python CPU, so it must not run in one task. Spreading a spread frame is
+    the identity (`spread` reads the planned partitioning), so callers that
+    share one exchange across several synthesizers keep their plans."""
+
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [encode(i, t) for i, t in zip(pdf["doc_id"], pdf["text"])]
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["doc_id"],
+                    "kind": kind,
+                    "payload": [p for p, _ in rows],
+                    "meta": [
+                        {"declared_format": f, "n_bytes": len(p)} for p, f in rows
+                    ],
+                }
+            )
+
+    return spread(docs).select("doc_id", "text").mapInPandas(build, schema=MEDIA_SCHEMA)
 
 
 def synthesize_ppm_media(docs: DataFrame) -> DataFrame:
@@ -161,7 +190,7 @@ def synthesize_ppm_media(docs: DataFrame) -> DataFrame:
     n = F.octet_length(F.encode("text", "utf-8"))
     w = (F.lit(8) + n % 8).alias("w")
     h = (F.lit(8) + (n / F.lit(8)).cast("long") % 8).alias("h")
-    sized = docs.select(F.col("doc_id"), w, h, F.col("text"))
+    sized = spread(docs).select(F.col("doc_id"), w, h, F.col("text"))
     px_len = F.col("w") * F.col("h") * 3
     hx = F.hex(F.encode("text", "utf-8"))
     # rpad cycles the pad string and truncates past len in both Spark and
@@ -196,37 +225,19 @@ def synthesize_png_media(docs: DataFrame) -> DataFrame:
     shape the decode uses); row filters rotate y % 5, so the decoder's full
     filter reconstruction is exercised on every image taller than 4 rows."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def encode(doc_id, text):
         import numpy as np
 
-        for pdf in batches:
-            ids, payloads, sizes = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                w, h = 8 + n % 8, 8 + (n // 8) % 8
-                hx = data.hex().upper() or "0"
-                need = w * h * 3
-                px = (hx * (need // len(hx) + 1))[:need]
-                pixels = np.frombuffer(px.encode("ascii"), dtype=np.uint8).reshape(
-                    h, w, 3
-                )
-                payload = encode_png(pixels)
-                ids.append(doc_id)
-                payloads.append(payload)
-                sizes.append(len(payload))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"declared_format": "image/png", "n_bytes": s} for s in sizes
-                    ],
-                }
-            )
+        data = (text or "").encode("utf-8")
+        n = len(data)
+        w, h = 8 + n % 8, 8 + (n // 8) % 8
+        hx = data.hex().upper() or "0"
+        need = w * h * 3
+        px = (hx * (need // len(hx) + 1))[:need]
+        pixels = np.frombuffer(px.encode("ascii"), dtype=np.uint8).reshape(h, w, 3)
+        return encode_png(pixels), "image/png"
 
-    return docs.select("doc_id", "text").mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _codec_media(docs, "image", encode)
 
 
 def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
@@ -248,48 +259,32 @@ def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
         encode_jpeg_ycbcr_blocks,
     )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, fmts = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                bw, bh = 1 + n % 3, 1 + (n // 3) % 3
-                hx = data.hex().upper() or "0"
-                variant = doc_id % 3
-                nblk = 4 * bw * bh if variant == 2 else bw * bh
-                vals = [ord(hx[k % len(hx)]) for k in range(nblk)]
-                if variant == 0:
-                    payload = encode_jpeg_gray_blocks(vals, bw, bh, restart_interval=2)
-                    fmt = "image/jpeg;gray"
-                elif variant == 1:
-                    flat = [128] * len(vals)
-                    payload = encode_jpeg_ycbcr_blocks(
-                        vals, flat, flat, bw, bh, restart_interval=2
-                    )
-                    fmt = "image/jpeg;ycbcr"
-                else:
-                    flat = [128] * (bw * bh)
-                    payload = encode_jpeg_ycbcr_420_blocks(
-                        vals, flat, flat, bw, bh, restart_interval=2
-                    )
-                    fmt = "image/jpeg;ycbcr420"
-                ids.append(doc_id)
-                payloads.append(payload)
-                fmts.append(fmt)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"declared_format": f, "n_bytes": len(p)}
-                        for f, p in zip(fmts, payloads)
-                    ],
-                }
+    def encode(doc_id, text):
+        data = (text or "").encode("utf-8")
+        n = len(data)
+        bw, bh = 1 + n % 3, 1 + (n // 3) % 3
+        hx = data.hex().upper() or "0"
+        variant = doc_id % 3
+        nblk = 4 * bw * bh if variant == 2 else bw * bh
+        vals = [ord(hx[k % len(hx)]) for k in range(nblk)]
+        if variant == 0:
+            return (
+                encode_jpeg_gray_blocks(vals, bw, bh, restart_interval=2),
+                "image/jpeg;gray",
             )
+        if variant == 1:
+            flat = [128] * len(vals)
+            return (
+                encode_jpeg_ycbcr_blocks(vals, flat, flat, bw, bh, restart_interval=2),
+                "image/jpeg;ycbcr",
+            )
+        flat = [128] * (bw * bh)
+        return (
+            encode_jpeg_ycbcr_420_blocks(vals, flat, flat, bw, bh, restart_interval=2),
+            "image/jpeg;ycbcr420",
+        )
 
-    return docs.select("doc_id", "text").mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _codec_media(docs, "image", encode)
 
 
 def synthesize_progressive_jpeg_media(docs: DataFrame) -> DataFrame:
@@ -302,40 +297,24 @@ def synthesize_progressive_jpeg_media(docs: DataFrame) -> DataFrame:
     reconstruction is exact, so the closed-form pixel-sum oracle holds."""
     from hive_server_spark.functions.jpeg import encode_jpeg_progressive_blocks
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, fmts = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                bw, bh = 1 + n % 3, 1 + (n // 3) % 3
-                hx = data.hex().upper() or "0"
-                vals = [ord(hx[k % len(hx)]) for k in range(bw * bh)]
-                if doc_id % 2 == 0:
-                    payload = encode_jpeg_progressive_blocks([vals], bw, bh)
-                    fmt = "image/jpeg;progressive-gray"
-                else:
-                    flat = [128] * len(vals)
-                    payload = encode_jpeg_progressive_blocks(
-                        [vals, flat, flat], bw, bh
-                    )
-                    fmt = "image/jpeg;progressive-ycbcr"
-                ids.append(doc_id)
-                payloads.append(payload)
-                fmts.append(fmt)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"declared_format": f, "n_bytes": len(p)}
-                        for f, p in zip(fmts, payloads)
-                    ],
-                }
+    def encode(doc_id, text):
+        data = (text or "").encode("utf-8")
+        n = len(data)
+        bw, bh = 1 + n % 3, 1 + (n // 3) % 3
+        hx = data.hex().upper() or "0"
+        vals = [ord(hx[k % len(hx)]) for k in range(bw * bh)]
+        if doc_id % 2 == 0:
+            return (
+                encode_jpeg_progressive_blocks([vals], bw, bh),
+                "image/jpeg;progressive-gray",
             )
+        flat = [128] * len(vals)
+        return (
+            encode_jpeg_progressive_blocks([vals, flat, flat], bw, bh),
+            "image/jpeg;progressive-ycbcr",
+        )
 
-    return docs.select("doc_id", "text").mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _codec_media(docs, "image", encode)
 
 
 # dHash geometry: a 9x8 cell grid gives 8 row-wise adjacent comparisons per
@@ -387,29 +366,15 @@ def synthesize_dhash_jpeg_media(docs: DataFrame) -> DataFrame:
 
     nblk = DHASH_GRID_W * DHASH_GRID_H
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                prefix = (text or "")[:DHASH_PREFIX_LEN]
-                vals = [dhash_cell_value(prefix, k, doc_id) for k in range(nblk)]
-                ids.append(doc_id)
-                payloads.append(
-                    encode_jpeg_gray_blocks(vals, DHASH_GRID_W, DHASH_GRID_H)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"declared_format": "image/jpeg;gray", "n_bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
+    def encode(doc_id, text):
+        prefix = (text or "")[:DHASH_PREFIX_LEN]
+        vals = [dhash_cell_value(prefix, k, doc_id) for k in range(nblk)]
+        return (
+            encode_jpeg_gray_blocks(vals, DHASH_GRID_W, DHASH_GRID_H),
+            "image/jpeg;gray",
+        )
 
-    return docs.select("doc_id", "text").mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _codec_media(docs, "image", encode)
 
 
 def _dhash_band_values(samples, w: int, h: int) -> list[int]:
@@ -579,41 +544,22 @@ def synthesize_fpavi_media(docs: DataFrame) -> DataFrame:
 
     nblk = DHASH_GRID_W * DHASH_GRID_H
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                prefix = (text or "")[:DHASH_PREFIX_LEN]
-                frames = [
-                    encode_jpeg_gray_blocks(
-                        [
-                            video_fp_cell_value(prefix, f, k, doc_id)
-                            for k in range(nblk)
-                        ],
-                        DHASH_GRID_W,
-                        DHASH_GRID_H,
-                    )
-                    for f in range(VIDEO_FP_FRAMES)
-                ]
-                ids.append(doc_id)
-                payloads.append(
-                    encode_avi_mjpeg(
-                        frames, 8 * DHASH_GRID_W, 8 * DHASH_GRID_H, rate=25
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "video",
-                    "payload": payloads,
-                    "meta": [
-                        {"declared_format": "video/avi;mjpeg", "n_bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
+    def encode(doc_id, text):
+        prefix = (text or "")[:DHASH_PREFIX_LEN]
+        frames = [
+            encode_jpeg_gray_blocks(
+                [video_fp_cell_value(prefix, f, k, doc_id) for k in range(nblk)],
+                DHASH_GRID_W,
+                DHASH_GRID_H,
             )
+            for f in range(VIDEO_FP_FRAMES)
+        ]
+        return (
+            encode_avi_mjpeg(frames, 8 * DHASH_GRID_W, 8 * DHASH_GRID_H, rate=25),
+            "video/avi;mjpeg",
+        )
 
-    return docs.select("doc_id", "text").mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _codec_media(docs, "video", encode)
 
 
 def video_fp_bands(media: DataFrame) -> DataFrame:
@@ -1368,40 +1314,20 @@ def synthesize_hier_jpeg_media(docs: DataFrame) -> DataFrame:
 
     _PROCS = ("seq", "prog", "arith", "arith-prog")
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, fmts = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                hx = data.hex().upper() or "0"
-                v0 = ord(hx[0])
-                axes = ((1, 1), (1, 0), (0, 1))[doc_id % 3]
-                gw, gh = 1 + axes[0], 1 + axes[1]
-                diffs = [
-                    ord(hx[(k + 1) % len(hx)]) - 57 for k in range(gw * gh)
-                ]
-                proc = _PROCS[doc_id % 4]
-                ri = 2 if proc in ("seq", "arith") else 0
-                payload = encode_jpeg_hierarchical_gray_process(
-                    [v0], 1, 1, [(axes[0], axes[1], diffs)],
-                    process=proc, restart_interval=ri,
-                )
-                ids.append(doc_id)
-                payloads.append(payload)
-                fmts.append(f"image/jpeg;hier-{proc}")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "meta": [
-                        {"declared_format": f, "n_bytes": len(p)}
-                        for f, p in zip(fmts, payloads)
-                    ],
-                }
-            )
+    def encode(doc_id, text):
+        hx = (text or "").encode("utf-8").hex().upper() or "0"
+        axes = ((1, 1), (1, 0), (0, 1))[doc_id % 3]
+        gw, gh = 1 + axes[0], 1 + axes[1]
+        diffs = [ord(hx[(k + 1) % len(hx)]) - 57 for k in range(gw * gh)]
+        proc = _PROCS[doc_id % 4]
+        ri = 2 if proc in ("seq", "arith") else 0
+        payload = encode_jpeg_hierarchical_gray_process(
+            [ord(hx[0])], 1, 1, [(axes[0], axes[1], diffs)],
+            process=proc, restart_interval=ri,
+        )
+        return payload, f"image/jpeg;hier-{proc}"
 
-    return docs.select("doc_id", "text").mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _codec_media(docs, "image", encode)
 
 
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
@@ -1502,42 +1428,25 @@ def synthesize_avi_media(docs: DataFrame) -> DataFrame:
     from hive_server_spark.functions.jpeg import encode_jpeg_gray_blocks
     from hive_server_spark.functions.video import encode_avi_mjpeg
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, fmts = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = (text or "").encode("utf-8")
-                n = len(data)
-                bw, bh = 1 + n % 3, 1 + (n // 3) % 3
-                hx = data.hex().upper() or "0"
-                nblk = bw * bh
-                n_frames = 2 + doc_id % 3
-                frames = [
-                    encode_jpeg_gray_blocks(
-                        [ord(hx[(f * nblk + k) % len(hx)]) for k in range(nblk)],
-                        bw, bh, restart_interval=2,
-                    )
-                    for f in range(n_frames)
-                ]
-                payload = encode_avi_mjpeg(
-                    frames, 8 * bw, 8 * bh, rate=10 + 5 * (doc_id % 4), scale=1
-                )
-                ids.append(doc_id)
-                payloads.append(payload)
-                fmts.append("video/avi;mjpeg")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "video",
-                    "payload": payloads,
-                    "meta": [
-                        {"declared_format": f, "n_bytes": len(p)}
-                        for f, p in zip(fmts, payloads)
-                    ],
-                }
+    def encode(doc_id, text):
+        data = (text or "").encode("utf-8")
+        n = len(data)
+        bw, bh = 1 + n % 3, 1 + (n // 3) % 3
+        hx = data.hex().upper() or "0"
+        nblk = bw * bh
+        frames = [
+            encode_jpeg_gray_blocks(
+                [ord(hx[(f * nblk + k) % len(hx)]) for k in range(nblk)],
+                bw, bh, restart_interval=2,
             )
+            for f in range(2 + doc_id % 3)
+        ]
+        payload = encode_avi_mjpeg(
+            frames, 8 * bw, 8 * bh, rate=10 + 5 * (doc_id % 4), scale=1
+        )
+        return payload, "video/avi;mjpeg"
 
-    return docs.select("doc_id", "text").mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _codec_media(docs, "video", encode)
 
 
 def _nn_resize(arr, out_w: int, out_h: int):
@@ -1681,7 +1590,7 @@ def synthesize_wav_media(docs: DataFrame) -> DataFrame:
     n = F.octet_length(F.encode("text", "utf-8"))
     n_samples = (F.lit(64) + n % 192).alias("n_samples")
     rate = (F.lit(8000) + (F.col("doc_id") % 4) * 4000).alias("rate")
-    sized = docs.select(F.col("doc_id"), n_samples, rate, F.col("text"))
+    sized = spread(docs).select(F.col("doc_id"), n_samples, rate, F.col("text"))
     hx = F.hex(F.encode("text", "utf-8"))
     hx = F.when(F.length(hx) > 0, hx).otherwise(F.lit("0"))
     samples = F.rpad(hx, F.col("n_samples"), hx)
@@ -1956,30 +1865,15 @@ def synthesize_fpwav_media(docs: DataFrame) -> DataFrame:
         + b"data" + _struct.pack("<I", n_samples)
     )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                prefix = (text or "")[:AUDIO_FP_PREFIX_LEN]
-                data = bytearray()
-                for k in range(AUDIO_FP_FRAMES):
-                    a = audio_fp_amplitude(prefix, k, doc_id)
-                    data += bytes([128 + a]) * AUDIO_FP_FRAME_LEN
-                ids.append(doc_id)
-                payloads.append(header + bytes(data))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "audio",
-                    "payload": payloads,
-                    "meta": [
-                        {"declared_format": "audio/wav", "n_bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
+    def encode(doc_id, text):
+        prefix = (text or "")[:AUDIO_FP_PREFIX_LEN]
+        data = bytearray()
+        for k in range(AUDIO_FP_FRAMES):
+            a = audio_fp_amplitude(prefix, k, doc_id)
+            data += bytes([128 + a]) * AUDIO_FP_FRAME_LEN
+        return header + bytes(data), "audio/wav"
 
-    return docs.select("doc_id", "text").mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _codec_media(docs, "audio", encode)
 
 
 def audio_fingerprint_bands(
@@ -2078,53 +1972,33 @@ def synthesize_flac_media(docs: DataFrame) -> DataFrame:
 
     _KINDS = ("fixed1", "verbatim", "lpc2")
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                hx = (text or "").encode("utf-8").hex().upper() or "0"
-                samples = [ord(c) - 128 for c in hx]
-                kind = _KINDS[doc_id % 3]
-                # within the LPC rotation slot, alternate order-2 /
-                # order-8 encodings so the decoder's GENERAL LPC
-                # dot-product (arbitrary order/precision/shift) is
-                # exercised by the gate corpus, not just the order-2
-                # special case (VERDICT r12 item 5). The stats are
-                # kind-agnostic — lossless decode — so the doc_id % 3
-                # variant label and every closed form are unaffected.
-                if kind == "lpc2" and (doc_id // 3) % 2 == 1:
-                    kind = "lpc8"
-                # predictors need warmup + residual in EVERY block, and
-                # encode_flac blocks at 4096: a doc whose sample count
-                # leaves a tail block shorter than the warmup (e.g.
-                # 4098 samples -> blocks [4096, 2] under lpc2) must fall
-                # back, not crash the gate query (round-12 review)
-                need = {"fixed1": 2, "lpc2": 3, "lpc8": 9}.get(kind, 1)
-                tail = len(samples) % 4096
-                if len(samples) < need or (tail and tail < need):
-                    kind = "verbatim"
-                ids.append(doc_id)
-                payloads.append(
-                    encode_flac(
-                        [samples],
-                        sample_rate=8000 + 1000 * (doc_id % 4),
-                        bits=8,
-                        subframe=kind,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "audio",
-                    "payload": payloads,
-                    "meta": [
-                        {"declared_format": "audio/flac", "n_bytes": len(p)}
-                        for p in payloads
-                    ],
-                }
-            )
+    def encode(doc_id, text):
+        hx = (text or "").encode("utf-8").hex().upper() or "0"
+        samples = [ord(c) - 128 for c in hx]
+        kind = _KINDS[doc_id % 3]
+        # within the LPC rotation slot, alternate order-2 / order-8
+        # encodings so the decoder's GENERAL LPC dot-product (arbitrary
+        # order/precision/shift) is exercised by the gate corpus, not just
+        # the order-2 special case (VERDICT r12 item 5). The stats are
+        # kind-agnostic — lossless decode — so the doc_id % 3 variant
+        # label and every closed form are unaffected.
+        if kind == "lpc2" and (doc_id // 3) % 2 == 1:
+            kind = "lpc8"
+        # predictors need warmup + residual in EVERY block, and encode_flac
+        # blocks at 4096: a doc whose sample count leaves a tail block
+        # shorter than the warmup (e.g. 4098 samples -> blocks [4096, 2]
+        # under lpc2) must fall back, not crash the gate query (round-12
+        # review)
+        need = {"fixed1": 2, "lpc2": 3, "lpc8": 9}.get(kind, 1)
+        tail = len(samples) % 4096
+        if len(samples) < need or (tail and tail < need):
+            kind = "verbatim"
+        payload = encode_flac(
+            [samples], sample_rate=8000 + 1000 * (doc_id % 4), bits=8, subframe=kind
+        )
+        return payload, "audio/flac"
 
-    return docs.select("doc_id", "text").mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _codec_media(docs, "audio", encode)
 
 
 def flac_stats(media: DataFrame) -> DataFrame:

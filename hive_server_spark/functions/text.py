@@ -217,12 +217,26 @@ def subtoken_count_expr(toks: str, dialect: str) -> str:
 # ---------------------------------------------------------------------------
 def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to cluster parallelism when the input arrives
-    in fewer splits (e.g., one small parquet file). The per-row work here
-    (md5 hashing, array folds) is CPU-bound, so a single input split would
-    serialize it on one core; at 100 TB the source has plenty of natural
-    splits and this is a no-op."""
+    in fewer splits (e.g., one small parquet file). The per-row work after
+    it (md5 hashing, array folds, Python codecs) is CPU-bound, so a single
+    input split would serialize it on one core; at 100 TB the source has
+    plenty of natural splits and this is a no-op.
+
+    This is THE fan-out rule: each entry that starts per-row work (the
+    tokenizer, the vector parse, every media synthesizer) spreads its own
+    input, so spreading an already-spread frame must be free. The split
+    count is therefore read from the planned physical output partitioning
+    (pre-AQE: `RoundRobinPartitioning(n)` for a spread frame and anything
+    narrow over it), which plans but never executes. `df.rdd` is not
+    asked first: on a plan that holds an exchange, AQE materializes that
+    shuffle stage (a Spark job) just to count its partitions. The
+    `df.rdd` split count is read only when the plan does not know its
+    partitioning (0): on a file scan, a local relation or a micro-batch it
+    lists splits without running a job; on a persisted frame whose cache
+    is not built yet it builds that cache a step early."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    planned = df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
+    if (planned or df.rdd.getNumPartitions()) < target:
         return df.repartition(target)
     return df
 

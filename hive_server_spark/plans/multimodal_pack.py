@@ -16,11 +16,11 @@ from hive_server_spark.registry import register
 
 
 def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents spread to full parallelism BEFORE synthesis: the
-    codecs downstream are partition-preserving by design (payload bytes
-    are the data bulk at real scale — never shuffle them), so parallelism
-    is fixed at the narrow (doc_id, text) source. The bench corpus is ONE
-    parquet split; without this every pure-Python decode runs single-task."""
+    """documents spread to full parallelism once, for a query that feeds
+    SEVERAL synthesizers (or filtered slices of one corpus) so they share
+    one exchange. Fan-out itself is the synthesizer's job: each spreads its
+    own input (functions/multimodal.py), and spreading this frame again is
+    the identity, so a query with one synthesizer passes the scan."""
     return spread(load_table(spark, sf_dir, "documents"))
 
 
@@ -85,7 +85,7 @@ def multimodal_frame_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode (one row per frame, payload never transits the driver) faces a
     closed-form DuckDB oracle — the batch shape and slicing logic are both
     checked, leaving only the real codec stubbed."""
-    media = M.synthesize_media(_docs_wide(spark, sf_dir), kind="video")
+    media = M.synthesize_media(load_table(spark, sf_dir, "documents"), kind="video")
     frames = M.sample_frames(media, n_frames=4)
     return frames.agg(
         F.count_distinct("media_id").cast("bigint").alias("n_media"),
@@ -258,7 +258,7 @@ def multimodal_jpeg_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the strict pure-Python T.81 decoder in the Arrow worker, and fold the
     float32 outputs back to exact per-image pixel sums so every variant
     faces the byte-level DuckDB oracle."""
-    docs = _docs_wide(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     dec = M.decode_media(M.synthesize_jpeg_media(docs), strict=True)
     px_len = (F.col("width") * F.col("height")).cast("double")
     per = dec.select(
@@ -343,7 +343,7 @@ def multimodal_resize_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decode→resize→re-encode→decode roundtrip faces a closed-form
     byte-level oracle (each resampled pixel located by integer arithmetic
     in the synthesis hex string)."""
-    docs = _docs_wide(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     resized = M.resize_media(
         M.synthesize_ppm_media(docs), _RESIZE_OW, _RESIZE_OH, strict=True
     )
@@ -420,7 +420,7 @@ def multimodal_audio_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     total duration in integer microseconds. Audio analogue of
     multimodal_decode_profile — the WAV header fields (rate, mono, 8-bit,
     chunk sizes) all face the byte-level oracle."""
-    docs = _docs_wide(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     dec = M.decode_audio(M.synthesize_wav_media(docs), strict=True)
     per = dec.select(
         "sample_rate",
@@ -567,7 +567,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-clip exact DSP features (mean-centered energy, zero crossings,
     peak) computed by the real WAV decode path in the Arrow worker, faced
     with the closed-form sample-byte oracle."""
-    docs = _docs_wide(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     return M.audio_features(M.synthesize_wav_media(docs))
 
 
@@ -620,7 +620,7 @@ def multimodal_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-image sample-value entropy (integer micro-nats) over the
     real PNG decode path — the decode→histogram→entropy chain a corpus
     image-quality audit runs, value-gated byte-for-byte."""
-    docs = _docs_wide(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     hist = M.image_value_histogram(M.synthesize_png_media(docs))
     term = F.round(
         F.col("c").cast("double")
@@ -682,7 +682,7 @@ def multimodal_jpeg_progressive_profile(spark: SparkSession, sf_dir: str) -> Dat
     strict pure-Python multi-scan decoder in the Arrow worker, and fold
     the outputs back to exact per-image pixel sums against the byte-level
     DuckDB oracle."""
-    docs = _docs_wide(spark, sf_dir)
+    docs = load_table(spark, sf_dir, "documents")
     dec = M.decode_media(M.synthesize_progressive_jpeg_media(docs), strict=True)
     px_len = (F.col("width") * F.col("height")).cast("double")
     per = dec.select(
@@ -816,7 +816,9 @@ def _dhash_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared(
         spark,
         ("mm:dhash_bands", sf_dir),
-        lambda: M.dhash_bands(M.synthesize_dhash_jpeg_media(_docs_wide(spark, sf_dir))),
+        lambda: M.dhash_bands(M.synthesize_dhash_jpeg_media(
+            load_table(spark, sf_dir, "documents")
+        )),
     )
 
 
@@ -984,7 +986,7 @@ def _audio_fp_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         ("mm:audiofp_bands", sf_dir),
         lambda: M.audio_fingerprint_bands(
-            M.synthesize_fpwav_media(_docs_wide(spark, sf_dir))
+            M.synthesize_fpwav_media(load_table(spark, sf_dir, "documents"))
         ),
     )
 
@@ -1079,7 +1081,7 @@ def _avi_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared(
         spark,
         ("mm:avi_media", sf_dir),
-        lambda: M.synthesize_avi_media(_docs_wide(spark, sf_dir)),
+        lambda: M.synthesize_avi_media(load_table(spark, sf_dir, "documents")),
     )
 
 
@@ -1189,7 +1191,7 @@ def multimodal_jpeg_hierarchical_profile(
     arithmetic, sequential and progressive), each row's pixel sum folded
     back from the float32 mean and hash-compared with the closed-form
     byte-level oracle."""
-    media = M.synthesize_hier_jpeg_media(_docs_wide(spark, sf_dir))
+    media = M.synthesize_hier_jpeg_media(load_table(spark, sf_dir, "documents"))
     # process is a pure function of media_id (the synthesis rotation), so
     # derive it as a CASE instead of re-joining the synthesized payloads —
     # one mapInPandas pass, no self-join recompute
@@ -1316,7 +1318,9 @@ def _video_fp_band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared(
         spark,
         ("mm:videofp_bands", sf_dir),
-        lambda: M.video_fp_bands(M.synthesize_fpavi_media(_docs_wide(spark, sf_dir))),
+        lambda: M.video_fp_bands(M.synthesize_fpavi_media(
+            load_table(spark, sf_dir, "documents")
+        )),
     )
 
 
@@ -1582,7 +1586,7 @@ def _fpavi_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared(
         spark,
         ("mm:fpavi_media", sf_dir),
-        lambda: M.synthesize_fpavi_media(_docs_wide(spark, sf_dir)),
+        lambda: M.synthesize_fpavi_media(load_table(spark, sf_dir, "documents")),
     )
 
 
@@ -1676,7 +1680,7 @@ def multimodal_flac_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     requested) on both sides; docs too short for a predictor's warmup
     encode verbatim but keep their rotation label — the stats are
     kind-agnostic so the oracle is unaffected."""
-    media = M.synthesize_flac_media(_docs_wide(spark, sf_dir))
+    media = M.synthesize_flac_media(load_table(spark, sf_dir, "documents"))
     st = M.flac_stats(media).withColumn(
         "variant",
         F.when(F.col("media_id") % 3 == 0, "fixed1")

@@ -1345,14 +1345,14 @@ def streamed_media_neardup(
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         # decode THIS batch only — and only the media-bearing slice (the
         # doc_id % _MEDIA_STREAM_MOD corpus contract above, mirrored in
-        # the oracle src): synthesize -> T.81 decode -> dHash, spread to
-        # full parallelism (the landed chunk is one file = one partition).
-        # persist(): the merge commit and the flags commit are two Spark
-        # actions — without the cache each would re-run the mapInPandas
-        # decode, doubling the expensive leg
+        # the oracle src): synthesize -> T.81 decode -> dHash; the
+        # synthesizer spreads the landed chunk (one file = one partition)
+        # to full parallelism. persist(): the merge commit and the flags
+        # commit are two Spark actions — without the cache each would
+        # re-run the mapInPandas decode, doubling the expensive leg
         wide = _M.dhash_bands(
             _M.synthesize_dhash_jpeg_media(
-                _T.spread(batch_df.where(F.col("doc_id") % media_mod == 0))
+                batch_df.where(F.col("doc_id") % media_mod == 0)
             )
         )
         bands = _M.band_long(wide).persist()

@@ -16,6 +16,16 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
 
 
+def next_job_id(spark) -> int:
+    """The id the next Spark job will get, once the listener bus has
+    delivered every job start so far to the status store: the jobs a code
+    region submitted are the ids between two reads."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return 0 if jobs.isEmpty() else max(jobs.head().jobId(), jobs.last().jobId()) + 1
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")

@@ -164,17 +164,16 @@ def _read_sse_events(resp, n_events, deadline_s=20.0):
     return events
 
 
-def test_cdc_sse_push_bridge(server, spark):
+def test_cdc_sse_push_bridge(server, spark, tmp_path):
     """The io.to(room).emit analogue (reference src/api/server.ts:43-51):
     a subscriber replays the committed versions in order, then receives a
     NEW version pushed while subscribed — actual push, not just backlog.
     Runs against a COPY of the CDC dir (own server) so landing the extra
     version never pollutes the session-shared fold output."""
     import shutil
-    import tempfile
     import threading
 
-    cdc_copy = tempfile.mkdtemp(prefix="hss_sse_") + "/cdc"
+    cdc_copy = str(tmp_path / "cdc")
     shutil.copytree(server.cdc_root, cdc_copy)
     srv = HiveApiServer(spark, SF_SMALL, cdc_dir=cdc_copy).start()
     try:
@@ -223,15 +222,14 @@ def test_cdc_tail_versions(server):
     assert all(isinstance(s["price"], str) for s in all_snaps)
 
 
-def test_cdc_tail_serves_versions_landed_after_first_read(server, spark):
+def test_cdc_tail_serves_versions_landed_after_first_read(server, spark, tmp_path):
     """The pull tail reads the committed versions on disk at every request,
     like the push transports: a version landed after the first tail read is
     served by the next one, in version order."""
     import os
     import shutil
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix="hss_tail_")
+    base = str(tmp_path)
     cdc_copy = os.path.join(base, "cdc")
     shutil.copytree(server.cdc_root, cdc_copy)
     held_back = os.path.join(base, "cdc_version=2")
@@ -280,14 +278,13 @@ def test_cdc_sse_malformed_last_event_id_falls_back(server):
     assert [e["id"] for e in events] == ["2"], "must resume from ?since=1"
 
 
-def test_cdc_sse_concurrent_subscribers(server, spark):
+def test_cdc_sse_concurrent_subscribers(server, spark, tmp_path):
     """Two concurrent subscribers (the Socket.io multi-room analogue) must
     each independently receive a version landed while both are connected."""
     import shutil
-    import tempfile
     import threading
 
-    cdc_copy = tempfile.mkdtemp(prefix="hss_sse2_") + "/cdc"
+    cdc_copy = str(tmp_path / "cdc")
     shutil.copytree(server.cdc_root, cdc_copy)
     srv = HiveApiServer(spark, SF_SMALL, cdc_dir=cdc_copy).start()
     try:
@@ -312,7 +309,7 @@ def test_cdc_sse_concurrent_subscribers(server, spark):
         shutil.rmtree(cdc_copy, ignore_errors=True)
 
 
-def test_cdc_sse_renders_each_version_once(server, spark):
+def test_cdc_sse_renders_each_version_once(server, spark, tmp_path):
     """S subscribers on one pool must NOT cost S Spark
     jobs per landed version — each version is rendered once (for all pools)
     and served from the cache, the reference's one-book-per-room broadcast
@@ -320,10 +317,9 @@ def test_cdc_sse_renders_each_version_once(server, spark):
     counter: 3 subscribers x (3 backlog + 1 live) versions -> exactly 4
     Spark-side renders, and a different pool's subscriber adds zero."""
     import shutil
-    import tempfile
     import threading
 
-    cdc_copy = tempfile.mkdtemp(prefix="hss_sse3_") + "/cdc"
+    cdc_copy = str(tmp_path / "cdc")
     shutil.copytree(server.cdc_root, cdc_copy)
     srv = HiveApiServer(spark, SF_SMALL, cdc_dir=cdc_copy).start()
     try:
@@ -364,17 +360,16 @@ def test_cdc_sse_renders_each_version_once(server, spark):
         shutil.rmtree(cdc_copy, ignore_errors=True)
 
 
-def test_cdc_sse_cache_invalidated_on_version_rewrite(server, spark):
+def test_cdc_sse_cache_invalidated_on_version_rewrite(server, spark, tmp_path):
     """A rewritten cdc_version dir (foreachBatch replay after checkpoint
     restart overwrites whole version dirs) must re-render: the cache is
     stamped with the _SUCCESS mtime, so a late subscriber gets the book on
     disk, never a pre-rewrite render."""
     import os
     import shutil
-    import tempfile
     import time as _time
 
-    cdc_copy = tempfile.mkdtemp(prefix="hss_sse4_") + "/cdc"
+    cdc_copy = str(tmp_path / "cdc")
     shutil.copytree(server.cdc_root, cdc_copy)
     srv = HiveApiServer(spark, SF_SMALL, cdc_dir=cdc_copy).start()
     try:
@@ -478,17 +473,16 @@ def _ws_read_frames(sock, leftover: bytes, n_frames: int):
     return frames, buf
 
 
-def test_cdc_websocket_push_bridge(server, spark):
+def test_cdc_websocket_push_bridge(server, spark, tmp_path):
     """RFC 6455 parity with the reference's Socket.io rooms: handshake with
     a verified accept digest, version-ordered backlog replay as text
     frames, a live-landed version pushed mid-subscription, and a clean
     close frame at the timeout. Shares the render-once snapshot cache with
     the SSE bridge."""
     import shutil
-    import tempfile
     import threading
 
-    cdc_copy = tempfile.mkdtemp(prefix="hss_ws_") + "/cdc"
+    cdc_copy = str(tmp_path / "cdc")
     shutil.copytree(server.cdc_root, cdc_copy)
     srv = HiveApiServer(spark, SF_SMALL, cdc_dir=cdc_copy).start()
     try:

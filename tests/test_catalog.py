@@ -107,3 +107,31 @@ def test_all_driver_tables_load_with_expected_columns(spark, sf_dir):
             f"regenerated testdata with a different schema; fix at the catalog "
             f"boundary (hive_server_spark/catalog.py), not in consumers"
         )
+
+
+def test_load_table_infers_each_file_version_once(spark, tmp_path):
+    """The first load of a table file infers its schema (one Spark job);
+    later loads of the same file version reuse it and submit no job, with
+    the schema and rows an inferring read returns. A rewrite of the file
+    with other columns is a new version, so the next load infers again."""
+    from collections import Counter
+
+    from tests.conftest import next_job_id
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    load_table(spark, str(tmp_path), "t")
+
+    first = next_job_id(spark)
+    got = load_table(spark, str(tmp_path), "t")
+    assert next_job_id(spark) == first, "a second load submitted a job"
+    inferred = spark.read.parquet(path)
+    assert got.schema == inferred.schema
+    assert Counter(got.collect()) == Counter(inferred.collect())
+
+    pq.write_table(pa.table({"c": [1.5, 2.5]}), path)
+    first = next_job_id(spark)
+    again = load_table(spark, str(tmp_path), "t")
+    assert next_job_id(spark) - first == 1  # one inference, of the new file
+    assert again.columns == ["c"]
+    assert sorted(r.c for r in again.collect()) == [1.5, 2.5]

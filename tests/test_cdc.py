@@ -4,7 +4,6 @@ micro-batch; the final version equals the batch-computed book."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,9 +16,9 @@ from hive_server_spark.streaming.incremental import file_stream
 from tests.conftest import SF_SMALL
 
 
-def test_cdc_final_snapshot_matches_batch_book(spark):
+def test_cdc_final_snapshot_matches_batch_book(spark, tmp_path):
     ev = order_events(spark, SF_SMALL)
-    work = tempfile.mkdtemp(prefix="hss_cdc_")
+    work = str(tmp_path)
     ev_dir = os.path.join(work, "events")
     ev.repartition(3).write.parquet(ev_dir)
     _, cdc_dir = run_incremental_fold_with_cdc(
@@ -54,12 +53,12 @@ def test_cdc_final_snapshot_matches_batch_book(spark):
     assert all(1 <= r.n <= n_pools for r in per_version)
 
 
-def test_cdc_fold_refuses_committed_state_of_another_checkpoint(spark):
+def test_cdc_fold_refuses_committed_state_of_another_checkpoint(spark, tmp_path):
     """A fresh checkpoint restarts batch ids at 0. Re-running the CDC fold
     on a committed state_dir under a new checkpoint must fail loudly —
     not read every batch as a replay, keep the old state and write CDC
     snapshots from it."""
-    work = tempfile.mkdtemp(prefix="hss_cdc_lineage_")
+    work = str(tmp_path)
     ev_dir = os.path.join(work, "events")
     order_events(spark, SF_SMALL).repartition(2).write.parquet(ev_dir)
 

@@ -20,6 +20,24 @@ def media(spark):
     return M.synthesize_media(load_table(spark, SF_SMALL, "documents"))
 
 
+SYNTHESIZERS = sorted(n for n in dir(M) if n.startswith("synthesize_"))
+
+
+@pytest.mark.parametrize("name", SYNTHESIZERS)
+def test_synthesizer_fans_out_a_one_split_input(spark, name):
+    """Fan-out is the codec entry's job: every synthesizer handed a
+    one-split `documents` frame yields defaultParallelism partitions, with
+    the rows it yields over a frame spread beforehand."""
+    from hive_server_spark.functions.text import spread
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    synth = getattr(M, name)
+    narrow = docs.coalesce(1)
+    got = synth(narrow)
+    assert got.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(got.collect()) == sorted(synth(spread(docs)).collect())
+
+
 def test_media_schema(media):
     # names+types must match the declared contract (nullability flags may
     # differ: parquet-derived columns arrive nullable)

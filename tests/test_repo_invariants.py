@@ -1,6 +1,7 @@
 """Repository invariants that need no Spark session: every scratch dir in
-the query packs lives under the session-scratch root, and every registered
-query has a COVERAGE.md row."""
+the query packs lives under the session-scratch root (and every test
+scratch dir under pytest's tmp_path), and every registered query has a
+COVERAGE.md row."""
 
 from __future__ import annotations
 
@@ -24,20 +25,25 @@ def test_no_bare_mkdtemp_outside_session_scratch():
     ``tempfile.mkdtemp(prefix=...)`` accumulates in /tmp across gate and
     bench runs with nothing to reclaim it. ``mkdtemp(dir=session_scratch(
     ...))`` keeps per-invocation uniqueness (streaming checkpoints must
-    not be reused) while bounding /tmp to one root per live process."""
-    pkg = os.path.join(REPO, "hive_server_spark")
+    not be reused) while bounding /tmp to one root per live process.
+    Tests take pytest's ``tmp_path`` (pytest prunes old runs), so under
+    ``tests/`` no ``mkdtemp`` is allowed at all."""
     offenders = []
-    for dirpath, _dirs, files in os.walk(pkg):
-        for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, fn)
-            with open(path) as f:
-                for i, line in enumerate(f, 1):
-                    if "mkdtemp(" not in line or line.lstrip().startswith("#"):
-                        continue
-                    if not re.search(r"mkdtemp\(\s*dir=session_scratch", line):
-                        offenders.append(f"{os.path.relpath(path, REPO)}:{i}")
+    for top, allowed in (
+        ("hive_server_spark", r"mkdtemp\(\s*dir=session_scratch"),
+        ("tests", None),
+    ):
+        for dirpath, _dirs, files in os.walk(os.path.join(REPO, top)):
+            for fn in files:
+                path = os.path.join(dirpath, fn)
+                if not fn.endswith(".py") or path == os.path.abspath(__file__):
+                    continue
+                with open(path) as f:
+                    for i, line in enumerate(f, 1):
+                        if "mkdtemp(" not in line or line.lstrip().startswith("#"):
+                            continue
+                        if allowed is None or not re.search(allowed, line):
+                            offenders.append(f"{os.path.relpath(path, REPO)}:{i}")
     assert not offenders, (
         f"bare mkdtemp outside session_scratch: {offenders}"
     )

@@ -11,9 +11,7 @@ turn the tables into noise.
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import tempfile
 from collections import Counter
 
 import pytest
@@ -28,18 +26,17 @@ MULT = 3
 
 
 @pytest.fixture(scope="module")
-def scaled_dir(spark):
+def scaled_dir(spark, tmp_path_factory):
     import scale_probe
 
     old = scale_probe.BASE_DIR
     scale_probe.BASE_DIR = SF_SMALL
-    tmp = tempfile.mkdtemp(prefix="probe_inv_")
+    tmp = str(tmp_path_factory.mktemp("probe_inv"))
     try:
         scale_probe.build_scaled_dir(spark, tmp, MULT)
         yield tmp
     finally:
         scale_probe.BASE_DIR = old
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_fact_tables_scale_and_dims_do_not(spark, scaled_dir):

@@ -151,7 +151,7 @@ def test_compaction_plan_hand_computed(spark):
     assert (b1.n_inputs, b1.total_bytes) == (1, 10)
 
 
-def test_zonemap_skipping_hand_computed(spark):
+def test_zonemap_skipping_hand_computed(spark, tmp_path):
     """Zone-map audit on a crafted two-file layout: the ts-clustered
     predicate proves one file skippable, the unclustered value band skips
     nothing, and exact matched counts come from the full scan."""
@@ -160,7 +160,6 @@ def test_zonemap_skipping_hand_computed(spark):
     from hive_server_spark.plans.sources_pack import layout_zonemap_skipping
     import hive_server_spark.plans.sources_pack as sp
     import os
-    import tempfile
 
     t0 = dt.datetime(2024, 1, 1)
     late = dt.datetime(2024, 1, 29)
@@ -178,7 +177,7 @@ def test_zonemap_skipping_hand_computed(spark):
     df = spark.createDataFrame(
         rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]
     )
-    work = tempfile.mkdtemp(prefix="zm_test_")
+    work = str(tmp_path)
     df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(work, "events.parquet")
     )

@@ -15,7 +15,7 @@ from hive_server_spark.operators.fold import (
 from hive_server_spark.sources.synthetic import order_events
 from hive_server_spark.streaming.incremental import merge_partials
 from hive_server_spark.plans.streaming_pack import streamed_orders_state
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, next_job_id
 
 
 def _rows(df):
@@ -103,13 +103,12 @@ def test_fill_before_create_across_batches(spark, make_events):
     assert materialize_orders(partial_fold(make_events(fill))).count() == 0
 
 
-def test_checkpoint_restart_exactly_once(spark):
+def test_checkpoint_restart_exactly_once(spark, tmp_path):
     """ST6: stop the stream, add more data, restart with the SAME checkpoint
     and state dir — every event folds exactly once (no loss on restart, no
     double-apply of already-processed files). The reference loses its
     in-memory cursor on crash; Spark's checkpoint is the fix."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -119,7 +118,7 @@ def test_checkpoint_restart_exactly_once(spark):
     half_a = ev.where(F.col("seq") % 2 == 0)
     half_b = ev.where(F.col("seq") % 2 == 1)
 
-    work = tempfile.mkdtemp(prefix="hss_restart_")
+    work = str(tmp_path)
     ev_dir = os.path.join(work, "events")
 
     def run():
@@ -151,19 +150,17 @@ def test_windowed_streams_chunk_invariant(spark):
         assert one == two, f"{fn.__name__}: chunking changed the emitted set"
 
 
-def test_state_store_vacuum_retention(spark):
+def test_state_store_vacuum_retention(spark, tmp_path):
     """Every commit keeps its `v{n}` snapshot for time travel; a version
     that is not on disk must fail loudly on at_version() — a ValueError
     listing the committed versions, not a deep Spark path error."""
-    import tempfile
-
     import pytest as _pt
     from pyspark.sql import functions as F
 
     from hive_server_spark.streaming.incremental import ParquetStateStore
 
     ev = order_events(spark, SF_SMALL)
-    store = ParquetStateStore(tempfile.mkdtemp(prefix="hss_versions_"), "/ckpt/versions")
+    store = ParquetStateStore(str(tmp_path), "/ckpt/versions")
     for batch_id in range(2):
         store.commit(partial_fold(ev.where(F.col("seq") % 2 == batch_id)), batch_id)
     assert store.versions() == [0, 1]
@@ -171,15 +168,6 @@ def test_state_store_vacuum_retention(spark):
 
     with _pt.raises(ValueError, match=r"not readable; committed versions: \[0, 1\]"):
         store.at_version(spark, 7)
-
-
-def _next_job_id(spark) -> int:
-    """The id the next Spark job will get, once the listener bus has
-    delivered every job start so far to the status store."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusStore().jobsList(None)
-    return 0 if jobs.isEmpty() else max(jobs.head().jobId(), jobs.last().jobId()) + 1
 
 
 def test_state_store_reads_with_remembered_schema(spark, tmp_path):
@@ -207,24 +195,24 @@ def test_state_store_reads_with_remembered_schema(spark, tmp_path):
         (0, lambda: store.at_version(spark, 0)),
         (1, lambda: store.at_version(spark, 1)),
     ):
-        first = _next_job_id(spark)
+        first = next_job_id(spark)
         got = read()
-        assert _next_job_id(spark) == first, f"v{version}: the read submitted a job"
+        assert next_job_id(spark) == first, f"v{version}: the read submitted a job"
         inferred = spark.read.parquet(os.path.join(root, f"v{version}"))
         assert got.schema == inferred.schema
         assert Counter(got.collect()) == Counter(inferred.collect())
 
     fresh = ParquetStateStore(root, "/ckpt/schema-memo")
-    first = _next_job_id(spark)
+    first = next_job_id(spark)
     fresh.latest(spark)
     fresh.at_version(spark, 0)
     fresh.latest(spark)
-    assert _next_job_id(spark) - first == 1  # one inference, on the first read
+    assert next_job_id(spark) - first == 1  # one inference, on the first read
 
     store.commit(spark.range(3), 2)
-    first = _next_job_id(spark)
+    first = next_job_id(spark)
     assert store.latest(spark).columns == ["id"]
-    assert _next_job_id(spark) - first == 1
+    assert next_job_id(spark) - first == 1
 
 
 def _docs_ingest(spark, src_dir, work):
@@ -235,18 +223,16 @@ def _docs_ingest(spark, src_dir, work):
     return sp.streamed_docs_index(spark, src_dir, work)
 
 
-def test_docs_ingest_chunk_invariance(spark):
+def test_docs_ingest_chunk_invariance(spark, tmp_path):
     """The incremental dedup index is a monoid fold: 1-chunk and 3-chunk
     ingests must produce identical index contents."""
-    import tempfile
-
     from hive_server_spark.plans import streaming_pack as sp
 
     def run(chunks):
+        work = tmp_path / f"chunks{chunks}"
+        work.mkdir()
         index = _docs_ingest(
-            spark,
-            sp._land_documents(spark, SF_SMALL, chunks),
-            tempfile.mkdtemp(prefix="hss_docs_inv_"),
+            spark, sp._land_documents(spark, SF_SMALL, chunks), str(work)
         )
         return {
             (r.fingerprint_md5, r.canonical_doc_id, r.group_size, r.total_tokens)
@@ -258,7 +244,7 @@ def test_docs_ingest_chunk_invariance(spark):
     assert one == three and one
 
 
-def test_docs_ingest_resumes_from_checkpoint(spark):
+def test_docs_ingest_resumes_from_checkpoint(spark, tmp_path):
     """Restart semantics of the incremental dedup index: after the first
     availableNow run drains the landed files, new files appended to the
     source are picked up by a SECOND run on the SAME checkpoint — already-
@@ -266,13 +252,12 @@ def test_docs_ingest_resumes_from_checkpoint(spark):
     index equals the batch GROUP BY over the union."""
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from hive_server_spark.catalog import load_table
 
-    work = tempfile.mkdtemp(prefix="hss_docs_resume_")
+    work = str(tmp_path)
     src_dir = os.path.join(work, "docs")
     docs = load_table(spark, SF_SMALL, "documents")
     half_a = docs.where(F.col("doc_id") % 2 == 0)
@@ -308,7 +293,7 @@ def test_docs_ingest_resumes_from_checkpoint(spark):
     assert final == expect
 
 
-def test_replay_guard_batch_is_exactly_once(spark):
+def test_replay_guard_batch_is_exactly_once(spark, tmp_path):
     """foreachBatch is at-least-once: a crash after store.commit() but
     before the streaming checkpoint commit re-delivers the same batch_id
     on restart. Re-applying the batch must be a no-op — store.apply skips
@@ -317,7 +302,6 @@ def test_replay_guard_batch_is_exactly_once(spark):
     replay re-merges off the old pointer."""
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -327,7 +311,7 @@ def test_replay_guard_batch_is_exactly_once(spark):
     b0 = ev.where(F.col("seq") % 2 == 0)
     b1 = ev.where(F.col("seq") % 2 == 1)
 
-    store = ParquetStateStore(tempfile.mkdtemp(prefix="hss_replay_"), "/ckpt/replay")
+    store = ParquetStateStore(str(tmp_path), "/ckpt/replay")
 
     def on_batch(df, batch_id):
         store.apply(batch_id, partial_fold(df), merge_partials)
@@ -407,7 +391,7 @@ def test_cusum_stream_equals_batch_drift(spark, chunks):
     assert _rows(streamed) == _rows(batch)
 
 
-def test_state_store_run_id_guard(spark):
+def test_state_store_run_id_guard(spark, tmp_path):
     """Batch ids are monotonic only within ONE checkpoint lineage. A
     COMMITTED store must refuse a handle of a different lineage: when it
     is opened, and on every touch of a handle opened before the foreign
@@ -416,11 +400,10 @@ def test_state_store_run_id_guard(spark):
     torn FIRST commit (RUN_ID written, pointer never flipped) leaves the
     store logically empty and reclaimable."""
     import os
-    import tempfile
 
     from hive_server_spark.streaming.incremental import ParquetStateStore
 
-    root = tempfile.mkdtemp(prefix="hss_runid_")
+    root = str(tmp_path / "lineage")
     df = spark.range(3)
 
     s1 = ParquetStateStore(root, run_id="/ckpt/run-A")
@@ -450,7 +433,7 @@ def test_state_store_run_id_guard(spark):
     # torn FIRST commit: RUN_ID recorded but LATEST never flipped — the
     # store is logically empty, so a new lineage may claim it (and its
     # own restart then replays normally instead of false-raising)
-    root2 = tempfile.mkdtemp(prefix="hss_runid_torn_")
+    root2 = str(tmp_path / "torn")
     t1 = ParquetStateStore(root2, run_id="/ckpt/run-A")
     with open(t1._run_file, "w") as fh:  # simulate the torn claim
         fh.write("/ckpt/run-A")

@@ -4,7 +4,6 @@ batch operators, plus the late-data drop policy."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -18,8 +17,8 @@ from hive_server_spark.streaming.windows import hourly_rollup_stream, session_st
 from tests.conftest import SF_SMALL
 
 
-def _stream_dir(spark, df, chunks: int) -> tuple[str, str]:
-    work = tempfile.mkdtemp(prefix="hss_stateful_")
+def _stream_dir(tmp_path, df, chunks: int) -> tuple[str, str]:
+    work = str(tmp_path)
     path = os.path.join(work, "in")
     df.repartition(chunks).write.mode("overwrite").parquet(path)
     return work, path
@@ -38,9 +37,9 @@ def _run_to_memory(spark, out_df, name: str, ckpt: str, mode: str):
     return spark.table(name)
 
 
-def test_stateful_fold_matches_batch(spark):
+def test_stateful_fold_matches_batch(spark, tmp_path):
     ev = order_events(spark, SF_SMALL)
-    work, path = _stream_dir(spark, ev, chunks=3)
+    work, path = _stream_dir(tmp_path, ev, chunks=3)
     out = stateful_orders_stream(file_stream(spark, path))
     tbl = _run_to_memory(
         spark, out, "stateful_orders", os.path.join(work, "ckpt"), "update"
@@ -75,9 +74,9 @@ def test_stateful_fold_matches_batch(spark):
     assert got == want
 
 
-def test_hourly_rollup_stream_matches_batch(spark):
+def test_hourly_rollup_stream_matches_batch(spark, tmp_path):
     events = load_table(spark, SF_SMALL, "events")
-    work, path = _stream_dir(spark, events, chunks=1)
+    work, path = _stream_dir(tmp_path, events, chunks=1)
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path)
     # parquet re-read keeps ts as micros timestamp (no nanos conversion issue)
@@ -114,7 +113,7 @@ def test_hourly_rollup_stream_matches_batch(spark):
         assert want[k] == v
 
 
-def test_late_events_dropped_by_watermark(spark):
+def test_late_events_dropped_by_watermark(spark, tmp_path):
     """Append-mode with watermark: an event older than (max seen ts − delay)
     arriving in a later micro-batch is dropped — the documented late-data
     policy (SURVEY ST2)."""
@@ -123,7 +122,7 @@ def test_late_events_dropped_by_watermark(spark):
     on_time = events.where(F.unix_micros("ts") >= mid)
     late = events.where(F.unix_micros("ts") < mid)  # far older than watermark
 
-    work = tempfile.mkdtemp(prefix="hss_late_")
+    work = str(tmp_path)
     path = os.path.join(work, "in")
     # file 0: the *newer* half (advances the watermark far ahead)
     on_time.coalesce(1).write.parquet(os.path.join(path))
@@ -151,9 +150,9 @@ def test_late_events_dropped_by_watermark(spark):
     assert total >= on_time.count() - events.count() * 0  # at least the on-time half
 
 
-def test_session_stream_runs_and_bounds_sessions(spark):
+def test_session_stream_runs_and_bounds_sessions(spark, tmp_path):
     events = load_table(spark, SF_SMALL, "events").limit(2000)
-    work, path = _stream_dir(spark, events, chunks=1)
+    work, path = _stream_dir(tmp_path, events, chunks=1)
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path)
     tbl = _run_to_memory(
@@ -169,7 +168,7 @@ def test_session_stream_runs_and_bounds_sessions(spark):
         assert r.session_end > r.session_start and r.n_events >= 1
 
 
-def test_session_stream_consistent_with_batch_islands(spark):
+def test_session_stream_consistent_with_batch_islands(spark, tmp_path):
     """The streaming session_window and the batch lag/island sessionization
     must agree on session membership wherever watermark finalization allows
     (same 30-min gap; the only semantic boundary — an event at EXACTLY the
@@ -178,7 +177,7 @@ def test_session_stream_consistent_with_batch_islands(spark):
     from tests.conftest import SF_SMALL as SF
 
     events = load_table(spark, SF, "events")
-    work, path = _stream_dir(spark, events, chunks=1)
+    work, path = _stream_dir(tmp_path, events, chunks=1)
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path)
     tbl = _run_to_memory(

@@ -13,6 +13,35 @@ def _docs(spark):
     return load_table(spark, SF_SMALL, "documents")
 
 
+def _formatted(df) -> str:
+    jvm = df.sparkSession._jvm
+    return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def test_spread_reads_the_plan_and_submits_no_job(spark):
+    """`spread` decides from the planned partitioning, so asking is free:
+    on a one-split scan, on a spread frame and on a mapInPandas over a
+    spread frame it submits no Spark job (`df.rdd` on a plan with an
+    exchange would run that shuffle), and spreading a spread frame returns
+    its input unchanged."""
+    from hive_server_spark.functions import multimodal as M
+    from tests.conftest import next_job_id
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    first = next_job_id(spark)
+    wide = T.spread(docs)
+    again = T.spread(wide)
+    media = M.synthesize_png_media(wide)
+    media_again = T.spread(media)
+    assert next_job_id(spark) == first, "spread submitted a Spark job"
+    n = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({n})" in _formatted(wide)
+    assert _formatted(again) == _formatted(wide)
+    assert _formatted(media_again) == _formatted(media)
+
+
 def test_minhash_candidates_recall_planted_dups(spark):
     """Every true near-dup pair (3-gram Jaccard >= 0.8) must appear in the
     MinHash-LSH candidate set — banding with 4 bands x 2 rows has >=98%
@@ -182,12 +211,12 @@ def test_leakage_safe_splits_keep_neardups_together(spark):
     assert splits.exceptAll(again).count() == 0
 
 
-def test_repetition_profile_hand_computed(spark):
+def test_repetition_profile_hand_computed(spark, tmp_path):
     """'a b a b a b c': bigrams [ab, ba, ab, ba, bc] x6 -> top 'a b' 3/6;
     trigrams 5 with 'a b a' x2 and 'b a b' x2 -> top 2/5, distinct 3."""
     from hive_server_spark.plans.text_pack import text_repetition_profile
-    import tempfile, os
-    d = tempfile.mkdtemp(prefix="rep_docs_")
+    import os
+    d = str(tmp_path)
     spark.createDataFrame(
         [(1, "a b a b a b c"), (2, "x y z"), (3, "solo")],
         "doc_id long, text string",
