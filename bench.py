@@ -6,7 +6,7 @@ sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 Each query is executed with a count() action (full materialization, no
 driver-side result transfer) after a warm-up of the session.
 
-Streaming-wave attribution (VERDICT r07 item 4): the shared streaming
+Streaming-wave attribution: the shared streaming
 families (the 3-slice CDC fold, the concurrent evt_* wave) are materialized
 ONCE, timed explicitly, and reported under "streaming_waves" — so the
 per-query times of their members reflect marginal (cached) cost instead of
@@ -17,7 +17,7 @@ Extra, non-driver flags (the driver runs `python bench.py` bare):
   --reps N    run N full repetitions, each on a FRESH SparkSession (stops
               the previous one, so session caches are cold every rep) —
               back-to-back reps separate host-load variance from real
-              plan regressions (VERDICT r07 items 2-3)
+              plan regressions
   --out PATH  write the full artifact (every rep's per-query table + wave
               times + loadavg metadata) as pretty JSON to PATH; the stdout
               line stays the single-line rep-1 summary the driver parses
@@ -72,8 +72,8 @@ def _time_streaming_waves(spark, sf_dir: str) -> dict[str, float]:
 
 def _time_shared_materializations(spark, sf_dir: str) -> dict[str, float]:
     """Session-cached BATCH intermediates whose first consumer would
-    otherwise pay the whole build (VERDICT r9 item 5: text_bpe_train
-    swung 2.8x round-over-round purely from which of the bpe pair hit the
+    otherwise pay the whole build (text_bpe_train swung 2.8x between
+    bench runs purely from which of the bpe pair hit the
     cold shared BPE trainer first). Materialize them here, timed as their
     own line, so text_bpe_train / text_bpe_encode always measure marginal
     cost — attribution is deterministic regardless of query order."""

@@ -356,34 +356,6 @@ FROM m GROUP BY cid, dim
 
 
 # ---------------------------------------------------------------------------
-# grouped-map applyInPandas: per-label centering (feature post-processing)
-# ---------------------------------------------------------------------------
-def center_embeddings_per_label(emb: DataFrame) -> DataFrame:
-    """Subtract the per-label centroid from every vector (grouped-map
-    `applyInPandas` — the UDF shape for whole-group Python transforms, e.g.
-    recentering an IVF cell before residual quantization).
-
-    Each label group streams through one Python worker as Arrow batches;
-    groups are independent, so the shuffle is the only coordination. Not
-    oracle-checkable (per-group float sums are reduction-order dependent);
-    semantics pinned by tests instead."""
-    import pandas as pd  # noqa: F401  (worker-side import)
-
-    def center(pdf):
-        import numpy as np
-
-        mat = np.vstack(pdf["embedding"].map(lambda v: np.asarray(v, dtype="float32")))
-        mat = mat - mat.mean(axis=0, keepdims=True)
-        out = pdf[["vec_id", "label"]].copy()
-        out["embedding"] = [row.tolist() for row in mat]
-        return out
-
-    return emb.groupBy("label").applyInPandas(
-        center, schema="vec_id long, label int, embedding array<float>"
-    )
-
-
-# ---------------------------------------------------------------------------
 # semantic dedup (SemDeDup-shaped): LSH discovery -> cosine-thresholded
 # near-dup edges -> connected components -> one representative per cluster.
 # The raw driver embeddings are isotropic random (max pairwise cosine ~0.51
@@ -533,7 +505,7 @@ FROM lab l JOIN sz ON l.cluster_id = sz.cluster_id
 
 
 # ---------------------------------------------------------------------------
-# Dim-truncation recall audit (round 7): the Matryoshka-style question —
+# Dim-truncation recall audit: the Matryoshka-style question —
 # if ANN search keeps only the first d dimensions (cheaper index, smaller
 # transfer), how much of the exact full-dim top-k does it still find?
 # Recall@k is exact set overlap between the full-dim top-k and each
@@ -625,7 +597,7 @@ full_k AS (SELECT vec_id FROM (SELECT vec_id, row_number() OVER
 
 
 # ---------------------------------------------------------------------------
-# Product quantization (round 7): the memory-compression half of a
+# Product quantization: the memory-compression half of a
 # PQ/IVF-PQ ANN index — split each vector into M contiguous subvectors,
 # assign each to the nearest of K_SUB per-subspace sub-centroids, and pack
 # the assignments into one integer code. Sub-centroids are the subvectors
@@ -1145,7 +1117,7 @@ FROM top JOIN cand ON top.vec_id = cand.vec_id
 
 
 # ---------------------------------------------------------------------------
-# Batch IVF-PQ search (round 9, VERDICT r8 item 4): the read path above
+# Batch IVF-PQ search: the read path above
 # serves ONE query vector; real retrieval serves a query TABLE (a batch
 # of user queries, a bitext-mining shard, a hard-negative pass). This
 # generalizes emb_ivfpq_topk to a bounded query set (vec_id <
@@ -1237,6 +1209,9 @@ def ivfpq_batch_topk(
         )
     )
     adc = (
+        # a sort-merge join: both sides are vec_id-keyed corpus derivations
+        # (candidates grow with the query batch), and it reuses the vec_id
+        # partitioning of the assignment aggregate under `cand`
         cand.join(decoded, "vec_id")
         .join(F.broadcast(lut), ["qid", "m", "cid"])
         .groupBy("qid", "vec_id", "cell")
@@ -1443,7 +1418,7 @@ FROM top JOIN vec ON top.vec_id = vec.vec_id
 
 
 # ---------------------------------------------------------------------------
-# Hard-negative mining (round 7): for each anchor vector, the most
+# Hard-negative mining: for each anchor vector, the most
 # cosine-similar vectors with a DIFFERENT label — the contrastive-training
 # curation step (high-similarity cross-label neighbors are the negatives
 # that carry gradient; random negatives are too easy). The anchor set is
@@ -1507,7 +1482,7 @@ WHERE rk <= {k}
 
 
 # ---------------------------------------------------------------------------
-# IVF routing recall curve (round 7): recall@k of cell-restricted exact
+# IVF routing recall curve: recall@k of cell-restricted exact
 # search at nprobe = 1, 2, 4 against the full-scan exact top-k — the
 # recall/compute trade-off table every ANN index ships with (the IVF
 # contract: scanned fraction ~ nprobe/nlist, recall climbs toward 1).
@@ -1652,7 +1627,7 @@ h AS (SELECT {hit_cols} FROM ranked r JOIN exact e USING (vec_id))
 
 
 # ---------------------------------------------------------------------------
-# Bitext mining (round 7): CCMatrix/LASER-style parallel-corpus discovery —
+# Bitext mining: CCMatrix/LASER-style parallel-corpus discovery —
 # for every source-language document, the most cosine-similar
 # target-language document among LSH co-bucket candidates, using the
 # multilingual embedding as the alignment space (Schwenk et al. 2021,
@@ -1742,7 +1717,7 @@ FROM (
 
 
 # ---------------------------------------------------------------------------
-# MMR diverse re-ranking (round 7): Maximal Marginal Relevance (Carbonell &
+# MMR diverse re-ranking: Maximal Marginal Relevance (Carbonell &
 # Goldstein 1998, public) — re-rank a relevance top-N pool down to k items
 # that are relevant AND mutually dissimilar: each step picks
 # argmax λ·rel(d) − (1−λ)·max_{s∈selected} sim(d, s). The de-duplicated
@@ -1898,7 +1873,7 @@ FROM ({union_all})
 
 
 # ---------------------------------------------------------------------------
-# Semantic decontamination (round 7): the embedding-space twin of
+# Semantic decontamination: the embedding-space twin of
 # text_decontaminate — flag corpus vectors whose cosine against ANY
 # held-out benchmark vector (vec_id % 101 = 0, the same holdout convention
 # as the n-gram sweep) reaches the near-dup threshold. Paraphrased eval

@@ -1,10 +1,10 @@
 """FLAC audio codec — pure Python, no external libraries.
 
-Round 11: closes the audio-format boundary the way round 10 closed JPEG
-(ITU-T T.81) and RIFF/AVI — FLAC is the one remaining fully-public,
-pure-integer audio codec: Rice-coded residuals of fixed/LPC integer
-predictors, CRC-checked frames, an MD5 of the unencoded stream in the
-header (IETF RFC 9639; the format is bit-exact by construction, so a
+Closes the audio-format boundary the way functions/jpeg.py closes JPEG
+(ITU-T T.81) and functions/video.py RIFF/AVI — FLAC is the one remaining
+fully-public, pure-integer audio codec: Rice-coded residuals of fixed/LPC
+integer predictors, CRC-checked frames, an MD5 of the unencoded stream in
+the header (IETF RFC 9639; the format is bit-exact by construction, so a
 correct decoder is EXACT, never approximate).
 
 Surface:
@@ -489,7 +489,7 @@ class _BitWriter:
 
     def bytes(self) -> bytes:
         # explicit raise, not assert: a no-op under `python -O` would let
-        # a misaligned frame body be silently truncated (ADVICE r11)
+        # a misaligned frame body be silently truncated
         if self.nbits:
             raise ValueError("unaligned FLAC bit buffer — call align() first")
         return bytes(self.buf)
@@ -498,7 +498,7 @@ class _BitWriter:
 def _write_utf8_number(w: _BitWriter, v: int) -> None:
     if not 0 <= v < (1 << 36):
         # the 7-byte coded form tops out at 36 payload bits; without this
-        # guard the chunking loop below can never terminate (ADVICE r11)
+        # guard the chunking loop below can never terminate
         raise ValueError(f"FLAC coded number {v} out of 36-bit range")
     if v < 0x80:
         w.write(v, 8)
@@ -569,7 +569,7 @@ def encode_flac(
     if block_size > 65535:
         # STREAMINFO's min/max block-size fields are 16-bit; _BitWriter
         # masks, so an unchecked value would emit a corrupt-but-CRC-valid
-        # stream instead of honouring the error contract (ADVICE r11)
+        # stream instead of honouring the error contract
         raise ValueError("FLAC block size must fit the 16-bit STREAMINFO field")
     if not 0 < sample_rate < (1 << 20):
         # same masking hazard for the 20-bit STREAMINFO rate field — and
@@ -644,7 +644,7 @@ def encode_flac(
                 # shift 3) that drives the decoder's general LPC
                 # dot-product — order, precision, and shift all differ
                 # from lpc2, so the order-2 special case cannot mask a
-                # general-path bug (VERDICT r12 item 5)
+                # general-path bug
                 order, prec, shift, coefs = _LPC_KINDS[kind]
                 if bs < order + 1:
                     raise ValueError(

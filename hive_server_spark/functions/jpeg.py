@@ -1,21 +1,19 @@
 """JPEG (ITU-T T.81) codec — pure Python + numpy, no external image
-libraries. Built up rounds 6-10 (VERDICT r05 "What's missing" item 2 and
-its successors); everything below is public T.81 knowledge.
+libraries; everything below is public T.81 knowledge.
 
-``decode_jpeg`` format matrix (mode × entropy coding) — COMPLETE as of
-round 10: every SOF code T.81 defines decodes:
+``decode_jpeg`` format matrix (mode × entropy coding) — COMPLETE: every
+SOF code T.81 defines decodes:
 
-  | T.81 mode                | Huffman              | arithmetic (QM)     |
-  |--------------------------|----------------------|---------------------|
-  | sequential DCT, 8-bit    | SOF0 — decodes (r6)  | SOF9 — decodes (r9) |
-  | extended seq. DCT, 12-bit| SOF1 — decodes (r9)  | SOF9 — decodes (r9) |
-  | progressive DCT          | SOF2 — decodes (r7;  | SOF10 — decodes (r9)|
-  |                          | subsampled since r9) |                     |
-  | lossless (Annex H)       | SOF3 — decodes (r9)  | SOF11 — decodes(r10)|
-  | hierarchical (Annex J):  | SOF5/6/7 — decode    | SOF13/14/15 — decode|
-  | DHP + EXP + differential | (r10)                | (r10)               |
+  | T.81 mode                | Huffman              | arithmetic (QM)      |
+  |--------------------------|----------------------|----------------------|
+  | sequential DCT, 8-bit    | SOF0                 | SOF9                 |
+  | extended seq. DCT, 12-bit| SOF1                 | SOF9                 |
+  | progressive DCT          | SOF2, any sampling   | SOF10                |
+  | lossless (Annex H)       | SOF3                 | SOF11                |
+  | hierarchical (Annex J):  | SOF5/6/7             | SOF13/14/15          |
+  | DHP + EXP + differential |                      |                      |
 
-Hierarchical sequences (round 10, second pass): DHP declares the final
+Hierarchical sequences: DHP declares the final
 resolution, non-differential frames of ANY process above set per-
 component references, EXP doubles them with the J.1.1.2 rounded-mean
 filter (edge replication), and differential frames — DC prediction
@@ -55,7 +53,9 @@ arithmetic with the (Da, Db)-conditioned lossless model).
   EXACTLY and the decode profile keeps a closed-form byte-level DuckDB
   oracle even though the container is an entropy-coded lossy format. The
   lossless round-trip is a property of these fixtures, not a claim about
-  DCT JPEG (SOF3 excepted, where the MODE is lossless).
+  DCT JPEG (SOF3 excepted, where the MODE is lossless). The arithmetic
+  (SOF9-SOF11, SOF15) fixture encoders only tests call; they live in
+  ``tests/jpeg_arith_encoders.py``.
 
 Reference parity: the reference server stores media only as opaque blobs
 (no codec surface); this belongs to the repo's training-data-pipeline
@@ -340,14 +340,14 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, float] | None:
                 off += 17 + n
         elif marker in (
             0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA, 0xCB,  # non-differential
-            0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF,  # differential (round 10)
+            0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF,  # differential
             0xDE,  # DHP: hierarchical progression header, same syntax
         ):
             # SOF0 baseline / SOF1 extended sequential / SOF2 progressive /
             # SOF3 lossless (Huffman) / SOF9 extended sequential / SOF10
-            # progressive (arithmetic, round 9) / SOF11 lossless
-            # (arithmetic, round 10) / SOF5-7 + SOF13-15 differential
-            # frames inside a DHP hierarchical sequence (round 10)
+            # progressive (arithmetic) / SOF11 lossless
+            # (arithmetic) / SOF5-7 + SOF13-15 differential
+            # frames inside a DHP hierarchical sequence
             if len(seg) < 6:
                 raise ValueError("truncated JPEG SOF header")
             prec, height, width, ncomp = struct.unpack(">BHHB", seg[:6])
@@ -420,7 +420,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, float] | None:
             if len(seg) < 1 or len(seg) < 4 + 2 * seg[0]:
                 raise ValueError("truncated JPEG SOS header")
             if hier is not None:
-                # hierarchical sequence (round 10): decode this frame's
+                # hierarchical sequence: decode this frame's
                 # scan(s), fold into the reference store, and keep
                 # walking — the image completes at EOI. All six frame
                 # processes run under either entropy coder; progressive
@@ -578,7 +578,7 @@ def _decode_progressive_scan(
     (interleaved or single-component) and AC first/refinement
     (single-component, spectral band [Ss, Se], successive approximation
     Ah→Al) accumulate into `coef`. Returns the byte offset of the next
-    marker's 0xFF. ``differential=True`` (hierarchical SOF6, round 10)
+    marker's 0xFF. ``differential=True`` (hierarchical SOF6)
     codes each first-scan DC value directly — PRED is zero per block."""
     height, width, comps, _prec = frame
     ncomp_scan, ss, se, ah, al, scan_comps = _parse_scan_header(seg, comps)
@@ -1081,8 +1081,8 @@ def _decode_scan_planes(
     # decode — integer ratios (4:4:4, 4:2:2, 4:2:0, 4:1:1) AND fractional
     # ratios (e.g. 3x1 luma against 2x1 chroma = 3/2): upsampling is the
     # nearest-sample gather x -> floor(x*hs/hmax), which degenerates to
-    # pixel replication exactly when the ratio is an integer (round 9;
-    # T.81 leaves the upsampling filter to the decoder).
+    # pixel replication exactly when the ratio is an integer (T.81 leaves
+    # the upsampling filter to the decoder).
     hmax = max(hs for _, hs, _, _ in comps)
     vmax = max(vs for _, _, vs, _ in comps)
     for _, hs, vs, _ in comps:
@@ -1210,7 +1210,7 @@ def _decode_scan_lossless_planes(
 
     Returns (planes, pt, end_pos) with planes in the CODED domain (before
     the point-transform shift back up). ``differential=True`` (SOF7 inside
-    a hierarchical sequence, round 10) requires predictor selection 0 —
+    a hierarchical sequence) requires predictor selection 0 —
     the coded values are reference differences with NO spatial
     prediction (T.81 B.2.3 reserves Ss=0 for exactly this)."""
     height, width, comps, prec = frame
@@ -1455,7 +1455,7 @@ def _decode_scan_arith_planes(
     (functions/jpeg_arith.py). DAC conditioning defaults per F.1.4.4.1.4:
     DC (L, U) = (0, 1), AC Kx = 5. RSTn resets the coder, every
     statistics area, the DC predictions AND the DC contexts (E.2.4).
-    ``differential=True`` (hierarchical SOF13, round 10) decodes each DC
+    ``differential=True`` (hierarchical SOF13) decodes each DC
     value directly — PRED is zero, while the conditioning context still
     tracks the previously decoded value exactly as F.1.4.4.1 conditions
     on the previous DIFF."""
@@ -2082,98 +2082,6 @@ def encode_jpeg_hierarchical_gray_process(
     return bytes(out)
 
 
-def _ll_arith_hier_frame_bytes(
-    marker: int, plane, precision: int, predictor: int,
-    differential: bool, dc_cond: tuple[int, int],
-) -> bytes:
-    """One single-component LOSSLESS ARITHMETIC frame (SOF11
-    non-differential / SOF15 differential with predictor selection 0)
-    for the hierarchical fixture encoder — the H.1.2.3 model with
-    conditioning on neighboring diff classes, PRED zero when
-    differential."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    plane = np.asarray(plane, dtype=np.int64)
-    h, w = plane.shape
-    out = bytearray()
-    out += bytes([0xFF, marker]) + struct.pack(">HBHHB", 11, precision, h, w, 1)
-    out += bytes([1, 0x11, 0])
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1)
-    out += bytes([1, 0x00, 0 if differential else predictor, 0, 0])
-    st0 = ja.LosslessStats(*dc_cond)
-    default_pred = 1 << (precision - 1)
-    diffs = np.zeros((h, w), dtype=np.int64)
-    enc = ja.ArithEncoder()
-    for y in range(h):
-        for x in range(w):
-            if differential:
-                px = 0
-            elif y == 0 and x == 0:
-                px = default_pred
-            elif y == 0:
-                px = int(plane[y, x - 1])
-            elif x == 0:
-                px = int(plane[y - 1, 0])
-            else:
-                a = int(plane[y, x - 1])
-                bb = int(plane[y - 1, x])
-                c = int(plane[y - 1, x - 1])
-                if predictor == 1:
-                    px = a
-                elif predictor == 2:
-                    px = bb
-                elif predictor == 3:
-                    px = c
-                elif predictor == 4:
-                    px = a + bb - c
-                elif predictor == 5:
-                    px = a + ((bb - c) >> 1)
-                elif predictor == 6:
-                    px = bb + ((a - c) >> 1)
-                else:
-                    px = (a + bb) >> 1
-            diff = ((int(plane[y, x]) - px + 0x8000) & 0xFFFF) - 0x8000
-            cls_a = st0.classify5(int(diffs[y, x - 1])) if x > 0 else 0
-            cls_b = st0.classify5(int(diffs[y - 1, x])) if y > 0 else 0
-            ja.encode_lossless_diff(enc, st0, cls_a, cls_b, diff)
-            diffs[y, x] = diff
-    out += enc.flush()
-    return bytes(out)
-
-
-def encode_jpeg_hierarchical_lossless_arith(
-    base_plane, stages, predictor: int = 4, precision: int = 8,
-    dc_cond: tuple[int, int] = (0, 1),
-) -> bytes:
-    """Spec-valid HIERARCHICAL LOSSLESS ARITHMETIC grayscale JPEG: DHP at
-    the final resolution, an SOF11 base frame, then per stage an optional
-    EXP doubling followed by an SOF15 differential frame (predictor
-    selection 0) — the arithmetic twin of
-    encode_jpeg_hierarchical_lossless."""
-    base_plane = np.asarray(base_plane, dtype=np.int64)
-    fh, fw = base_plane.shape
-    for eh, ev, _ in stages:
-        fw *= 2 if eh else 1
-        fh *= 2 if ev else 1
-    lo, hi = dc_cond
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xde" + struct.pack(">HBHHB", 11, precision, fh, fw, 1)
-    out += bytes([1, 0x11, 0])
-    out += b"\xff\xcc" + struct.pack(">H", 4) + bytes([0x00, (hi << 4) | lo])
-    out += _ll_arith_hier_frame_bytes(
-        0xCB, base_plane, precision, predictor, False, dc_cond
-    )
-    for eh, ev, diffs in stages:
-        if eh or ev:
-            out += b"\xff\xdf" + struct.pack(">HB", 3, (eh << 4) | ev)
-        out += _ll_arith_hier_frame_bytes(
-            0xCF, np.asarray(diffs, dtype=np.int64), precision, predictor,
-            True, dc_cond,
-        )
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
 def _write_dc_diff(bw_: _BitWriter, diff: int) -> None:
     """Category + magnitude bits for one DC difference (canonical length-4
     DC code for category s IS s — the shared fixture table)."""
@@ -2186,11 +2094,12 @@ def _write_dc_diff(bw_: _BitWriter, diff: int) -> None:
 
 
 def _progressive_fixture_layout(planes, blocks_w, blocks_h, sampling, width, height):
-    """Shared prologue of the progressive fixture encoders (Huffman SOF2
-    and arithmetic SOF10): per-component MCU-padded block grids, value
-    validation, and the frame-dimension override bound — one copy, so the
-    two entropy variants can never disagree on layout rules (the
-    cross-coder equality tests depend on that)."""
+    """Shared prologue of the progressive fixture encoders (Huffman SOF2 and
+    arithmetic SOF10, in ``tests/jpeg_arith_encoders.py``): per-component
+    MCU-padded block grids, value validation, and the frame-dimension
+    override bound — one copy, so the two entropy variants can never
+    disagree on layout rules (the cross-coder equality tests depend on
+    that)."""
     ncomp = len(planes)
     if sampling is None:
         sampling = [(1, 1)] * ncomp
@@ -2243,7 +2152,7 @@ def encode_jpeg_progressive_blocks(
     reconstruction is EXACT: decode returns precisely the block constants,
     keeping the closed-form pixel-sum oracle of the baseline fixtures.
 
-    `sampling` (round 9) gives each component's (hs, vs) factors —
+    `sampling` gives each component's (hs, vs) factors —
     blocks_w/blocks_h are then MCU-grid dims and plane ci is row-major
     over its (blocks_w*hs) x (blocks_h*vs) MCU-padded block grid; the DC
     scans interleave per T.81 MCU order while each AC scan walks the
@@ -2302,319 +2211,12 @@ def encode_jpeg_progressive_blocks(
     return bytes(out)
 
 
-# ---------------------------------------------------------------------------
-# arithmetic (SOF9) fixture encoders — same constant-block decode-exact
-# contract as the Huffman fixtures, entropy-coded with the T.81 QM coder
-# (functions/jpeg_arith.py). Emitting an explicit DAC segment with the
-# default conditioning exercises the DAC parse path.
-# ---------------------------------------------------------------------------
-
-
-def _arith_headers(
-    w: int, h: int, ncomp: int, sampling, prec: int = 8,
-    dc_cond: tuple[int, int] = (0, 1), ac_kx: int = 5, sof: int = 0xC9,
-) -> bytearray:
-    out = bytearray(b"\xff\xd8")
-    if prec == 12:  # 16-bit Pq=1 quant table, the 12-bit-sample form
-        out += (
-            b"\xff\xdb" + struct.pack(">H", 2 + 1 + 128)
-            + b"\x10" + _ENC12_QUANT_ZIGZAG
-        )
-    else:
-        out += b"\xff\xdb" + struct.pack(">H", 2 + 1 + 64) + b"\x00" + _ENC_QUANT_ZIGZAG
-    out += bytes([0xFF, sof]) + struct.pack(">HBHHB", 8 + 3 * ncomp, prec, h, w, ncomp)
-    for ci in range(ncomp):
-        hs, vs = sampling[ci]
-        out += bytes([ci + 1, (hs << 4) | vs, 0])
-    # DAC for DC table 0 (class 0) + AC table 0 (class 1) — defaults
-    # (L=0, U=1, Kx=5) unless a test overrides the conditioning, so the
-    # parse path is always exercised
-    lo, hi = dc_cond
-    out += b"\xff\xcc" + struct.pack(">H", 6) + bytes(
-        [0x00, (hi << 4) | lo, 0x10, ac_kx]
-    )
-    return out
-
-
-def encode_jpeg_arith_gray_blocks(
-    block_values, blocks_w: int, blocks_h: int, restart_interval: int = 0
-) -> bytes:
-    """Spec-valid grayscale SOF9 (extended sequential, arithmetic) JPEG
-    mirroring ``encode_jpeg_gray_blocks``: block k (row-major) is the
-    constant ``block_values[k]`` (0..255); with the DC quantizer pinned
-    to 8 the decode is exact, so the closed-form byte-level oracle works
-    unchanged. A nonzero ``restart_interval`` terminates the arithmetic
-    segment (flush), emits RSTn, and restarts coder + statistics +
-    predictions per T.81 E.2.4."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    values = list(block_values)
-    if len(values) != blocks_w * blocks_h:
-        raise ValueError("block value count != block grid")
-    out = _arith_headers(8 * blocks_w, 8 * blocks_h, 1, [(1, 1)])
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
-    enc = ja.ArithEncoder()
-    dc_st, ac_st = ja.DCStats(), ja.ACStats()
-    pred = context = 0
-    zero_ac = [0] * 64
-    for mcu, v in enumerate(values):
-        if not 0 <= int(v) <= 255:
-            raise ValueError(f"block value {v} outside 0..255")
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            out += enc.flush()
-            out += bytes([0xFF, 0xD0 + ((mcu // restart_interval) - 1) % 8])
-            enc = ja.ArithEncoder()
-            dc_st.reset()
-            ac_st.reset()
-            pred = context = 0
-        dc = int(v) - 128  # quantized DC: 8*(v-128) / qDC=8, exact
-        context = ja.encode_dc_diff(enc, dc_st, context, dc - pred)
-        pred = dc
-        ja.encode_ac_block(enc, ac_st, zero_ac)
-    out += enc.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_arith_gray_coeffs(
-    coeff_blocks, blocks_w: int, blocks_h: int,
-    dc_cond: tuple[int, int] = (0, 1), ac_kx: int = 5,
-) -> bytes:
-    """Grayscale SOF9 fixture from FULL quantized coefficient blocks:
-    ``coeff_blocks[k]`` is a 64-list in zig-zag order (index 0 = the
-    block's absolute quantized DC; 1..63 quantized AC) — exercises the
-    AC model's run/EOB/magnitude ladders, which the constant-block
-    fixture never touches. ``dc_cond``/``ac_kx`` set non-default DAC
-    conditioning (both coder directions derive their contexts from it)."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    blocks = [list(cb) for cb in coeff_blocks]
-    if len(blocks) != blocks_w * blocks_h:
-        raise ValueError("coefficient block count != block grid")
-    out = _arith_headers(
-        8 * blocks_w, 8 * blocks_h, 1, [(1, 1)], dc_cond=dc_cond, ac_kx=ac_kx
-    )
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
-    enc = ja.ArithEncoder()
-    dc_st, ac_st = ja.DCStats(*dc_cond), ja.ACStats(ac_kx)
-    pred = context = 0
-    for cb in blocks:
-        if len(cb) != 64:
-            raise ValueError("coefficient block must be 64 zig-zag values")
-        context = ja.encode_dc_diff(enc, dc_st, context, int(cb[0]) - pred)
-        pred = int(cb[0])
-        ja.encode_ac_block(enc, ac_st, [int(x) for x in cb])
-    out += enc.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_arith_ycbcr_420_blocks(
-    y_values, cb_values, cr_values, chroma_bw: int, chroma_bh: int
-) -> bytes:
-    """3-component 4:2:0 SOF9 arithmetic JPEG mirroring
-    ``encode_jpeg_ycbcr_420_blocks``: luma 2x2 / chroma 1x1, constant
-    per-block values, MCU-interleaved — exercises the arithmetic path's
-    component interleaving, per-component DC contexts, and SHARED
-    conditioning-table statistics (all components select table 0, so one
-    statistics area adapts across all three, F.1.4.4.1.3)."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    planes = [list(y_values), list(cb_values), list(cr_values)]
-    sampling = [(2, 2), (1, 1), (1, 1)]
-    for p, (hs, vs) in zip(planes, sampling):
-        if len(p) != chroma_bw * hs * chroma_bh * vs:
-            raise ValueError("block value count != component block grid")
-    out = _arith_headers(16 * chroma_bw, 16 * chroma_bh, 3, sampling)
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    for ci in range(3):
-        out += bytes([ci + 1, 0x00])
-    out += bytes([0, 63, 0])
-    enc = ja.ArithEncoder()
-    dc_st, ac_st = ja.DCStats(), ja.ACStats()  # shared: one table id
-    preds = [0, 0, 0]
-    contexts = [0, 0, 0]
-    zero_ac = [0] * 64
-    for my in range(chroma_bh):
-        for mx in range(chroma_bw):
-            for ci in range(3):
-                hs, vs = sampling[ci]
-                for v in range(vs):
-                    for h2 in range(hs):
-                        k = (my * vs + v) * (chroma_bw * hs) + (mx * hs + h2)
-                        val = int(planes[ci][k])
-                        if not 0 <= val <= 255:
-                            raise ValueError(f"block value {val} outside 0..255")
-                        dc = val - 128
-                        contexts[ci] = ja.encode_dc_diff(
-                            enc, dc_st, contexts[ci], dc - preds[ci]
-                        )
-                        preds[ci] = dc
-                        ja.encode_ac_block(enc, ac_st, zero_ac)
-    out += enc.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
 def _sos_segment(comp_ids, ss: int, se: int, ah: int, al: int) -> bytes:
     body = bytearray([len(comp_ids)])
     for cid in comp_ids:
         body += bytes([cid, 0x00])
     body += bytes([ss, se, (ah << 4) | al])
     return b"\xff\xda" + struct.pack(">H", 2 + len(body)) + bytes(body)
-
-
-def encode_jpeg_arith_progressive_blocks(
-    planes, blocks_w: int, blocks_h: int, sampling=None,
-    width: int | None = None, height: int | None = None,
-) -> bytes:
-    """PROGRESSIVE ARITHMETIC (SOF10) fixture mirroring
-    ``encode_jpeg_progressive_blocks`` scan-for-scan: interleaved DC first
-    scan at Al=1 (the F.1.4.4.1.1 DC model on the shifted diffs), DC
-    refinement (one fixed-bin decision per block — the low bit), then one
-    all-EOB AC scan per component over its TRUE block grid. Constant
-    DC-only blocks keep the exact-reconstruction contract, so decode must
-    equal the Huffman progressive fixture bit-for-bit."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    ncomp, sampling, planes, grids, hmax, vmax, w, h = (
-        _progressive_fixture_layout(planes, blocks_w, blocks_h, sampling,
-                                    width, height)
-    )
-    out = _arith_headers(w, h, ncomp, sampling, sof=0xCA)
-
-    def dc_block_order():
-        return _mcu_dc_order(sampling, grids, blocks_w, blocks_h)
-
-    # scan 1: DC first, interleaved, Al=1 — arithmetic diffs in shifted units
-    out += _sos_segment(list(range(1, ncomp + 1)), 0, 0, 0, 1)
-    enc = ja.ArithEncoder()
-    dc_st = ja.DCStats()
-    preds = [0] * ncomp
-    contexts = [0] * ncomp
-    for ci, k in dc_block_order():
-        shifted = (int(planes[ci][k]) - 128) >> 1  # arithmetic shift
-        contexts[ci] = ja.encode_dc_diff(enc, dc_st, contexts[ci], shifted - preds[ci])
-        preds[ci] = shifted
-    out += enc.flush()
-    # scan 2: DC refinement (Ah=1 -> Al=0): fixed-bin low bit per block
-    out += _sos_segment(list(range(1, ncomp + 1)), 0, 0, 1, 0)
-    enc = ja.ArithEncoder()
-    fixed = bytearray([ja.FIXED_BIN_STATE])
-    for ci, k in dc_block_order():
-        enc.encode((int(planes[ci][k]) - 128) & 1, fixed, 0)
-    out += enc.flush()
-    # per-component all-zero AC scans over the TRUE (unpadded) block grid
-    zero_ac = [0] * 64
-    for ci in range(ncomp):
-        hs, vs = sampling[ci]
-        cw = -(-w * hs // hmax)
-        ch = -(-h * vs // vmax)
-        n_true = ((cw + 7) // 8) * ((ch + 7) // 8)
-        out += _sos_segment([ci + 1], 1, 63, 0, 0)
-        enc = ja.ArithEncoder()
-        ac_st = ja.ACStats()
-        for _ in range(n_true):
-            ja.encode_ac_block(enc, ac_st, zero_ac)
-        out += enc.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_arith_progressive_coeffs(coeff_blocks, blocks_w: int, blocks_h: int) -> bytes:
-    """Grayscale SOF10 fixture from FULL quantized coefficient blocks in
-    FOUR scans — DC first (Al=1), DC refinement, AC first (Al=1, coding
-    the point-transformed sign(v)*(|v|>>1)), AC refinement (Al=0:
-    correction bits widen surviving magnitudes, |v|==1 coefficients enter
-    as newly-significant) — exercising decode_ac_refine's kex/EOB walk,
-    which the constant-block fixture never touches. Reconstruction is
-    exact: |v| = (|v|>>1)*2 + (|v|&1)."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    blocks = [list(cb) for cb in coeff_blocks]
-    if len(blocks) != blocks_w * blocks_h:
-        raise ValueError("coefficient block count != block grid")
-    out = _arith_headers(8 * blocks_w, 8 * blocks_h, 1, [(1, 1)], sof=0xCA)
-
-    # scan 1: DC first, Al=1
-    out += _sos_segment([1], 0, 0, 0, 1)
-    enc = ja.ArithEncoder()
-    dc_st = ja.DCStats()
-    pred = context = 0
-    for cb in blocks:
-        if len(cb) != 64:
-            raise ValueError("coefficient block must be 64 zig-zag values")
-        shifted = int(cb[0]) >> 1
-        context = ja.encode_dc_diff(enc, dc_st, context, shifted - pred)
-        pred = shifted
-    out += enc.flush()
-    # scan 2: DC refinement
-    out += _sos_segment([1], 0, 0, 1, 0)
-    enc = ja.ArithEncoder()
-    fixed = bytearray([ja.FIXED_BIN_STATE])
-    for cb in blocks:
-        enc.encode(int(cb[0]) & 1, fixed, 0)
-    out += enc.flush()
-    # scan 3: AC first, Al=1 — the AC point transform truncates toward zero
-    def pt(v: int) -> int:
-        return (abs(v) >> 1) * (1 if v > 0 else -1)
-
-    out += _sos_segment([1], 1, 63, 0, 1)
-    enc = ja.ArithEncoder()
-    ac_st = ja.ACStats()
-    for cb in blocks:
-        ja.encode_ac_block(enc, ac_st, [pt(int(v)) for v in cb])
-    out += enc.flush()
-    # scan 4: AC refinement, Ah=1 -> Al=0
-    out += _sos_segment([1], 1, 63, 1, 0)
-    enc = ja.ArithEncoder()
-    ac_st = ja.ACStats()
-    for cb in blocks:
-        prev = np.zeros((8, 8), dtype=np.int64)
-        target = np.zeros((8, 8), dtype=np.int64)
-        for k in range(1, 64):
-            v = int(cb[k])
-            prev[_ZIGZAG[k]] = pt(v) << 1
-            target[_ZIGZAG[k]] = v
-        ja.encode_ac_refine(enc, ac_st, prev, target, _ZIGZAG, 1, 63, 0)
-    out += enc.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_arith_12bit_gray_blocks(
-    block_values, blocks_w: int, blocks_h: int
-) -> bytes:
-    """12-bit SOF9 (extended sequential, arithmetic) grayscale fixture
-    mirroring ``encode_jpeg_12bit_gray_blocks``: constant blocks of
-    0..4095, DC = v - 2048 with quantizer 8 (Pq=1 16-bit DQT) — decode is
-    exact and the mean normalizes by 4095. The DC magnitude ladder covers
-    the full 12-bit diff range (category up to X12), which the 8-bit
-    fixtures never reach."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    vals = [int(v) for v in block_values]
-    if len(vals) != blocks_w * blocks_h:
-        raise ValueError("block value count != blocks_w * blocks_h")
-    for v in vals:
-        if not 0 <= v <= 4095:
-            raise ValueError(f"block value {v} outside 0..4095")
-    out = _arith_headers(8 * blocks_w, 8 * blocks_h, 1, [(1, 1)], prec=12)
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
-    enc = ja.ArithEncoder()
-    dc_st, ac_st = ja.DCStats(), ja.ACStats()
-    pred = context = 0
-    zero_ac = [0] * 64
-    for v in vals:
-        dc = v - 2048  # quantized DC: 8*(v-2048) / qDC=8, exact
-        context = ja.encode_dc_diff(enc, dc_st, context, dc - pred)
-        pred = dc
-        ja.encode_ac_block(enc, ac_st, zero_ac)
-    out += enc.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
@@ -2724,111 +2326,3 @@ def encode_jpeg_lossless(
     return bytes(out)
 
 
-def encode_jpeg_arith_lossless(
-    planes, predictor: int = 4, precision: int = 8, pt: int = 0,
-    restart_interval: int = 0, dc_cond: tuple[int, int] = (0, 1),
-) -> bytes:
-    """Spec-valid LOSSLESS ARITHMETIC (SOF11) JPEG — the
-    encode_jpeg_lossless sample walk (same predictors, edge rules, point
-    transform, mod-65536 signed residues, restart resync) with the QM
-    coder + the H.1.2.3 (Da, Db)-conditioned statistical model as the
-    entropy layer. `dc_cond` lands in the DAC segment (Tc=0 table 0), so
-    non-default conditioning bounds exercise the parse path. Mirrors
-    _decode_scan_lossless_arith exactly — decode is bit-exact for pt=0."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    planes = [np.asarray(p, dtype=np.int64) for p in planes]
-    if len(planes) not in (1, 3):
-        raise ValueError("lossless fixture supports 1 or 3 components")
-    h, w = planes[0].shape
-    if any(p.shape != (h, w) for p in planes):
-        raise ValueError("all components must share the frame dims (1x1)")
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"predictor {predictor} invalid")
-    if not 2 <= precision <= 16:
-        raise ValueError(f"precision {precision} invalid for lossless")
-    vmax = (1 << precision) - 1
-    for p in planes:
-        if p.min() < 0 or p.max() > vmax:
-            raise ValueError("sample outside precision range")
-    ncomp = len(planes)
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xcb" + struct.pack(
-        ">HBHHB", 8 + 3 * ncomp, precision, h, w, ncomp
-    )
-    for ci in range(ncomp):
-        out += bytes([ci + 1, 0x11, 0])  # 1x1 sampling, no quant table
-    lo, hi = dc_cond
-    out += b"\xff\xcc" + struct.pack(">H", 4) + bytes([0x00, (hi << 4) | lo])
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
-    for ci in range(ncomp):
-        out += bytes([ci + 1, 0x00])  # Td=0 conditioning table
-    out += bytes([predictor, 0, pt & 0x0F])
-
-    shifted = [p >> pt for p in planes]
-    default_pred = 1 << (precision - 1 - pt)
-    # every component selects conditioning table 0, so they SHARE one
-    # statistics area (F.1.4.4.1.3) — matching the decoder's per-Td dict
-    st0 = ja.LosslessStats(lo, hi)
-    diffs = [np.zeros((h, w), dtype=np.int64) for _ in planes]
-    enc = ja.ArithEncoder()
-    mcu = 0
-    start_mcu = 0
-    fresh = True
-    first_line = 0
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                out += enc.flush()
-                out += bytes([0xFF, 0xD0 + ((mcu // restart_interval) - 1) % 8])
-                enc = ja.ArithEncoder()
-                st0.reset()
-                fresh = True
-                first_line = y
-                start_mcu = mcu
-            for ci, p in enumerate(shifted):
-                d = diffs[ci]
-                if fresh:
-                    px = default_pred
-                elif y == first_line:
-                    px = int(p[y, x - 1])
-                elif x == 0:
-                    px = int(p[y - 1, 0])
-                else:
-                    a = int(p[y, x - 1])
-                    bb = int(p[y - 1, x])
-                    c = int(p[y - 1, x - 1])
-                    if predictor == 1:
-                        px = a
-                    elif predictor == 2:
-                        px = bb
-                    elif predictor == 3:
-                        px = c
-                    elif predictor == 4:
-                        px = a + bb - c
-                    elif predictor == 5:
-                        px = a + ((bb - c) >> 1)
-                    elif predictor == 6:
-                        px = bb + ((a - c) >> 1)
-                    else:
-                        px = (a + bb) >> 1
-                diff = ((int(p[y, x]) - px + 0x8000) & 0xFFFF) - 0x8000
-                cls_a = (
-                    st0.classify5(int(d[y, x - 1]))
-                    if x > 0 and (y * w + x - 1) >= start_mcu
-                    else 0
-                )
-                cls_b = (
-                    st0.classify5(int(d[y - 1, x]))
-                    if y > 0 and ((y - 1) * w + x) >= start_mcu
-                    else 0
-                )
-                ja.encode_lossless_diff(enc, st0, cls_a, cls_b, diff)
-                d[y, x] = diff
-            fresh = False
-            mcu += 1
-    out += enc.flush()
-    out += b"\xff\xd9"
-    return bytes(out)

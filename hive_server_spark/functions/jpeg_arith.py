@@ -2,11 +2,10 @@
 QM coder plus the DC/AC/lossless statistical models, pure Python, no
 external codecs.
 
-This closes the arithmetic-coding format boundary VERDICT r08 listed for
-the JPEG surface: SOF9 (extended sequential) and SOF10 (progressive) in
-round 9, SOF11 (lossless, the H.1.2.3 (Da, Db)-conditioned model at the
-bottom of this module) in round 10 — all DECODE for real instead of
-raising. Everything here is public T.81 knowledge:
+This closes the arithmetic-coding format boundary of the JPEG surface:
+SOF9 (extended sequential), SOF10 (progressive) and SOF11 (lossless, the
+H.1.2.3 (Da, Db)-conditioned model at the bottom of this module) all
+DECODE for real instead of raising. Everything here is public T.81 knowledge:
 
 - ``ArithDecoder`` / ``ArithEncoder`` implement the QM binary arithmetic
   coder of T.81 Annex D: 16-bit interval register A kept in
@@ -702,7 +701,7 @@ def encode_ac_block(
 
 
 # ---------------------------------------------------------------------------
-# Lossless-mode statistical model (T.81 H.1.2.3, round 10 — closes SOF11).
+# Lossless-mode statistical model (T.81 H.1.2.3 — closes SOF11).
 # The prediction difference DIFF is coded with the DC-difference structure
 # of F.1.4.4.1.1, except the zero/sign/first-magnitude decisions condition
 # on BOTH neighboring differences: Da (sample to the left) and Db (sample

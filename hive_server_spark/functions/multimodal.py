@@ -11,8 +11,8 @@ its own pure-Python decoders — PNG (non-interlaced 8-bit RGB/grayscale via
 stdlib zlib, with full None/Sub/Up/Average/Paeth filter reconstruction),
 PPM (P6 binary and P3 ascii), BMP (24-bit uncompressed BI_RGB), and JPEG
 (ITU-T T.81: sequential/progressive/lossless modes, Huffman AND QM
-arithmetic entropy coding, any 1..4 sampling, 8/12-bit, and — since the
-round-10 second pass — hierarchical DHP/EXP/differential sequences, so
+arithmetic entropy coding, any 1..4 sampling, 8/12-bit, and hierarchical
+DHP/EXP/differential sequences, so
 the ENTIRE T.81 SOF matrix decodes; functions/jpeg.py, format matrix in
 its docstring) — doing real header
 parsing and numpy pixel math in the Arrow worker. strict=True requires every
@@ -35,8 +35,8 @@ walks RIFF chunks properly — fmt/data discovery with word-alignment
 padding, unknown chunks skipped — supporting 8-bit unsigned and 16-bit
 signed PCM, mono or multi-channel.
 
-Video is real for the one format decodable without an external codec
-(round 10): RIFF/AVI Motion-JPEG — a pure-Python container walk
+Video is real for the one format decodable without an external codec:
+RIFF/AVI Motion-JPEG — a pure-Python container walk
 (functions/video.py) whose frames run through the full T.81 JPEG decoder,
 with real keyframe extraction in `sample_frames` and a decode-exact AVI
 fixture (`synthesize_avi_media`, constant-block frames). Inter-frame
@@ -248,7 +248,7 @@ def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
     decode profile keeps a byte-level DuckDB oracle despite the lossy
     container (constant blocks are DC-only and quantization-exact; see
     functions/jpeg.py). doc_id % 3 picks the variant — 0: grayscale, 1:
-    3-component 4:4:4 YCbCr, 2 (round 7): 4:2:0 subsampled YCbCr whose
+    3-component 4:4:4 YCbCr, 2: 4:2:0 subsampled YCbCr whose
     16x16-pixel MCUs carry four constant luma blocks over the DOUBLED
     (2bw x 2bh) luma grid — all with Cb=Cr=128 (decoded RGB == replicated
     Y, same mean) and a restart interval of 2, so the RSTn resync path
@@ -288,7 +288,7 @@ def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
 
 
 def synthesize_progressive_jpeg_media(docs: DataFrame) -> DataFrame:
-    """REAL progressive (SOF2) JPEG payloads (round 7): the same block
+    """REAL progressive (SOF2) JPEG payloads: the same block
     grid / hex-cycle value derivation as synthesize_jpeg_media, but coded
     as multi-scan progressive streams — DC successive approximation
     (Al=1 first scan + refinement scan) plus per-component AC scans
@@ -971,7 +971,7 @@ def encode_png(pixels) -> bytes:
 
 
 def _decode_png(payload: bytes) -> tuple[int, int, float] | None:
-    """Pure-Python PNG decode via stdlib zlib (VERDICT r05 stretch item 6):
+    """Pure-Python PNG decode via stdlib zlib:
     chunk walk, IHDR parse, IDAT inflate, full per-row filter reconstruction
     (None/Sub/Up/Average/Paeth). Supports non-interlaced 8-bit RGB (color
     type 2) and grayscale (type 0); anything else — palette, alpha, 16-bit,
@@ -1332,7 +1332,7 @@ def synthesize_hier_jpeg_media(docs: DataFrame) -> DataFrame:
 
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     """Uniform frame sampling for 'video' payloads, exploded one row per
-    sampled frame. RIFF/AVI payloads (round 10) get REAL keyframe
+    sampled frame. RIFF/AVI payloads get REAL keyframe
     extraction: the container walk pulls the MJPEG frame payloads and the
     sample keeps every frame when the video has <= n_frames, else the
     strictly-increasing stride indices i*F//n_frames — frame_idx is the
@@ -1374,7 +1374,7 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
 
 def decode_video(media: DataFrame, strict: bool = False) -> DataFrame:
     """Decode video payloads via mapInPandas — REAL for RIFF/AVI MJPEG
-    (round 10; functions/video.py): container walk, every frame decoded
+    (functions/video.py): container walk, every frame decoded
     through the full T.81 JPEG decoder, mean_luma the pixel-weighted mean
     over all frames. strict=True raises on anything that is not a valid
     MJPEG AVI (inter-frame codecs need external libraries — the documented
@@ -1815,16 +1815,15 @@ def audio_features(media: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Audio fingerprint near-dup (round 10 library, gate registration planned
-# for round 11): the audio member of the perceptual-dedup triad (text
-# MinHash, image dHash, audio frame-energy hash). The fingerprint is the
-# chromaprint-shaped "energy delta" bit vector WITHOUT the FFT leg: frame
-# the decoded PCM into fixed-length frames, per-frame energy = sum of
+# Audio fingerprint near-dup: the audio member of the perceptual-dedup triad
+# (text MinHash, image dHash, audio frame-energy hash). The fingerprint is
+# the chromaprint-shaped "energy delta" bit vector WITHOUT the FFT leg:
+# frame the decoded PCM into fixed-length frames, per-frame energy = sum of
 # squared centered amplitudes, bit i = energy[i] < energy[i+1] — 65 frames
 # -> 64 bits, carried as the same four 16-bit bands the image dHash emits,
 # so band_candidates / Hamming verification apply verbatim. The fixture
-# synthesizer uses CONSTANT amplitude per frame (energy = N*a^2, monotone
-# in a for a >= 0), which keeps the whole decode -> energy -> bit chain in
+# synthesizer uses CONSTANT amplitude per frame (energy = N*a^2, monotone in
+# a for a >= 0), which keeps the whole decode -> energy -> bit chain in
 # closed form for a DuckDB oracle while the Spark side runs the real RIFF
 # walk + numpy energies.
 # ---------------------------------------------------------------------------
@@ -1937,7 +1936,7 @@ def audio_fingerprint_bands(
 
 
 # ---------------------------------------------------------------------------
-# FLAC surface (round 11 — functions/flac.py): fixture synthesis and the
+# FLAC surface (functions/flac.py): fixture synthesis and the
 # exact integer stats profile. FLAC is bit-exact by construction, so the
 # stats carry NO float leg at all: the decoder returns integer samples and
 # the per-clip amplitude total is an integer sum — the strongest oracle
@@ -1962,12 +1961,12 @@ def synthesize_flac_media(docs: DataFrame) -> DataFrame:
     4; the subframe kind rotates fixed-predictor+Rice / verbatim /
     LPC by doc_id % 3 (coprime cycles — every kind sees every
     rate), so ALL THREE decoder predictor families are value-gated
-    through the gate corpus, LPC included (VERDICT r11 item 6). The LPC
-    slot itself alternates order-2 / order-8 encodings (different order,
-    precision, AND shift), so the general LPC dot-product is gated too
-    (VERDICT r12 item 5). Docs too short for a predictor's warmup fall
-    back to verbatim coding but keep their rotation label — the stats
-    are kind-agnostic, so the closed forms are unaffected."""
+    through the gate corpus, LPC included. The LPC slot itself alternates
+    order-2 / order-8 encodings (different order, precision, AND shift),
+    so the general LPC dot-product is gated too. Docs too short for a
+    predictor's warmup fall back to verbatim coding but keep their
+    rotation label — the stats are kind-agnostic, so the closed forms are
+    unaffected."""
     from hive_server_spark.functions.flac import encode_flac
 
     _KINDS = ("fixed1", "verbatim", "lpc2")
@@ -1979,7 +1978,7 @@ def synthesize_flac_media(docs: DataFrame) -> DataFrame:
         # within the LPC rotation slot, alternate order-2 / order-8
         # encodings so the decoder's GENERAL LPC dot-product (arbitrary
         # order/precision/shift) is exercised by the gate corpus, not just
-        # the order-2 special case (VERDICT r12 item 5). The stats are
+        # the order-2 special case. The stats are
         # kind-agnostic — lossless decode — so the doc_id % 3 variant
         # label and every closed form are unaffected.
         if kind == "lpc2" and (doc_id // 3) % 2 == 1:
@@ -1987,8 +1986,7 @@ def synthesize_flac_media(docs: DataFrame) -> DataFrame:
         # predictors need warmup + residual in EVERY block, and encode_flac
         # blocks at 4096: a doc whose sample count leaves a tail block
         # shorter than the warmup (e.g. 4098 samples -> blocks [4096, 2]
-        # under lpc2) must fall back, not crash the gate query (round-12
-        # review)
+        # under lpc2) must fall back, not crash the gate query
         need = {"fixed1": 2, "lpc2": 3, "lpc8": 9}.get(kind, 1)
         tail = len(samples) % 4096
         if len(samples) < need or (tail and tail < need):

@@ -1,11 +1,11 @@
 """RIFF/AVI (MJPEG) video container codec — pure Python, no external
-libraries. Round 10: closes the "video decode remains faked" boundary for
-the one video format this repo can decode honestly — Motion-JPEG in an AVI
-container, where every frame is an ITU-T T.81 JPEG that functions/jpeg.py
-already decodes across the full SOF matrix. Anything needing an actual
-inter-frame codec (H.26x, VP9, AV1...) stays a documented strict-mode
-ValueError: a GOP/bitstream decoder would be a re-implementation of an
-external codec library, out of scope (the PPM maxval>255 stance).
+libraries. Real video decode for the one video format this repo can decode
+honestly — Motion-JPEG in an AVI container, where every frame is an ITU-T
+T.81 JPEG that functions/jpeg.py already decodes across the full SOF matrix.
+Anything needing an actual inter-frame codec (H.26x, VP9, AV1...) stays a
+documented strict-mode ValueError: a GOP/bitstream decoder would be a
+re-implementation of an external codec library, out of scope (the PPM
+maxval>255 stance).
 
 Container layout handled (all public knowledge — the Microsoft AVI RIFF
 form, OpenDML-free baseline):

@@ -138,7 +138,7 @@ def q_order_book_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Order-book analytics on top of the levels (round 7): depth-weighted
+# Order-book analytics on top of the levels: depth-weighted
 # VWAP per side over the top-20 levels, the best-bid/ask mid, and the
 # depth imbalance — the standard book-quality summary a market-data
 # consumer derives from exactly this snapshot. Every aggregate is an
@@ -211,7 +211,7 @@ def q_order_book_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SCD-2 order version history (round 7): the warehouse-style complement of
+# SCD-2 order version history: the warehouse-style complement of
 # the state fold — every order-touching event becomes a version row with a
 # [valid_from_seq, valid_to_seq) validity interval, carried-forward
 # attributes (the same last-ignorenulls semantics the fold aggregates),
@@ -748,7 +748,7 @@ def q_range_price_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Tick-rule trade classification + order-flow imbalance (round 7): the
+# Tick-rule trade classification + order-flow imbalance: the
 # Lee-Ready tick test (Lee & Ready 1991, public) over executed market
 # orders — an up-tick vs the previous trade print in the same pool marks
 # the trade buyer-initiated (+1), a down-tick seller-initiated (-1), and a
@@ -847,7 +847,7 @@ def q_trade_tick_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Trailing EWMA of the price stream (round 7): the exponentially-weighted
+# Trailing EWMA of the price stream: the exponentially-weighted
 # moving average every ticker/analytics panel smooths with (alpha = 0.2),
 # over the LAST 100 price updates per pool. The recursion
 # ewma_i = a*p_i + (1-a)*ewma_{i-1} is inherently sequential — the house

@@ -6,9 +6,9 @@ Exact ``percentile`` / ``quantile_cont`` is the one aggregate whose buffer
 holds *every value of the group* (SCALE.md "Exact percentiles"), so a
 per-group threshold computed over the whole population is an unbounded
 buffer at 100 TB no matter how sound the surrounding join topology is.
-The round-9 policy (first applied to ``text_ccnet_buckets`` /
-``text_quality_filter``, generalized here in round 10 for the events and
-relational packs) estimates thresholds on a slice that is bounded *by
+The held-out policy (used by ``text_ccnet_buckets`` /
+``text_quality_filter`` and by the events and relational packs)
+estimates thresholds on a slice that is bounded *by
 construction*:
 
 1. **hash-mod predicate** — a seeded 32-bit md5 hash of a unique row key,
@@ -108,7 +108,7 @@ def held_cte_d(
     """DuckDB `held` CTE: the identical capped held-out slice — seeded
     hash-mod predicate, then the first `cap` rows per `group` by
     (md5 draw key, row key). ONE spelling for every bounded-threshold
-    query so the round-9 policy is one mechanism, not per-query copies."""
+    query so the held-out policy is one mechanism, not per-query copies."""
     return (
         f"held AS (\n"
         f"  SELECT {group}, {value},"

@@ -101,7 +101,7 @@ def fk_suite(
     fact: DataFrame, checks: list[tuple[str, str, DataFrame, str]]
 ) -> DataFrame:
     """Referential report for SEVERAL foreign keys of the SAME fact table in
-    ONE pass (optimization r16): each dim's distinct key set left-joins in
+    ONE pass: each dim's distinct key set left-joins in
     with a hit marker, and a single aggregate counts every check's misses
     together — N checks cost one fact scan instead of the 2N scans of the
     per-check (anti-join + total-count) pair, the same all-rules-one-scan

@@ -141,7 +141,7 @@ def emb_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# one Lloyd iteration, exact-checkable (round 6): seeds are vec_id 0..7,
+# one Lloyd iteration, exact-checkable: seeds are vec_id 0..7,
 # assignment via bit-deterministic in-order L2^2 folds with min(struct(d2,
 # cid)) tie-breaking, centroid update as fixed-point micro-unit sums so the
 # per-(cluster, dim) output hash-matches across engines (the house float
@@ -170,7 +170,7 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# PCA moment matrix (round 6): the single-pass second-moment accumulation
+# PCA moment matrix: the single-pass second-moment accumulation
 # that whitening / PCA / low-rank projection of an embedding corpus starts
 # from — per dimension pair (i <= j), the exact co-moment sum plus per-dim
 # first-moment sums, from which covariance falls out in closed form.
@@ -286,7 +286,7 @@ def emb_pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF index build artifact (round 6): the posting-list census an IVF index
+# IVF index build artifact: the posting-list census an IVF index
 # materializes after training — every vector assigned to its nearest seed
 # centroid (same bit-deterministic assignment as emb_kmeans_update), then
 # per cell: population, corpus share, an exact posting-list checksum
@@ -375,7 +375,7 @@ def emb_ivf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# L2-norm audit (round 6): the pre-flight check every cosine/ANN pipeline
+# L2-norm audit: the pre-flight check every cosine/ANN pipeline
 # owes itself — per vector, the squared-norm in-order IEEE fold (the same
 # bit-deterministic accumulation dot_expr/cosine use), the norm in exact
 # micro-units (sqrt is correctly rounded by IEEE 754 — the one libm-safe
@@ -529,8 +529,6 @@ def emb_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O(batch) map-side assignment + a k-row merge; at 100 TB the index
 # census is k rows regardless of corpus size.
 # ---------------------------------------------------------------------------
-
-
 def _ivf_partial_census(vec: DataFrame, cent: DataFrame) -> DataFrame:
     """Per-cell additive census partials (n_vecs, posting_checksum,
     sum_d2_micro) for `vec` against broadcast centroids — the mergeable
@@ -603,7 +601,7 @@ def emb_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec = E._vecs(_emb(spark, sf_dir)).select("vec_id", "v")
     mn, mx = vec.agg(F.min("vec_id"), F.max("vec_id")).first()
     thr = (mn + mx) // 2
-    # stable per-process path + overwrite semantics (ADVICE r11): reruns
+    # stable per-process path + overwrite semantics: reruns
     # replace the persisted index instead of accumulating /tmp dirs
     work = session_scratch("ivf_incr")
     cent_path = os.path.join(work, "centroids")
@@ -631,10 +629,9 @@ def emb_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Incremental PQ code maintenance. Extends the
-# emb_ivf_incremental persisted-state pattern to the PQ codes table
-# (VERDICT r10 item 5): the PQ index between corpus snapshots is TWO
-# parquet artifacts — the codebook (cid, cv) and the per-vector codes
-# table — and a refresh
+# emb_ivf_incremental persisted-state pattern to the PQ codes table:
+# the PQ index between corpus snapshots is TWO parquet artifacts — the
+# codebook (cid, cv) and the per-vector codes table — and a refresh
 #
 #   1. encodes ONLY the new batch (vec_id-ordered second half) against
 #      the codebook READ BACK from the index (pq_codes_from_vecs'
@@ -666,7 +663,7 @@ def emb_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec = E._vecs(_emb(spark, sf_dir)).select("vec_id", "v")
     mn, mx = vec.agg(F.min("vec_id"), F.max("vec_id")).first()
     thr = (mn + mx) // 2
-    # stable per-process path + overwrite semantics (ADVICE r11)
+    # stable per-process path + overwrite semantics
     work = session_scratch("pq_incr")
     cb_path = os.path.join(work, "codebook")
     codes_path = os.path.join(work, "codes")
@@ -772,7 +769,7 @@ def emb_ivf_delete_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # --- prior snapshot run: persist the build census (the index
     # artifact a deployed maintenance pass reads back — emb_pq_incremental's
-    # prior-snapshot discipline; stable path + overwrite, ADVICE r11) ----
+    # prior-snapshot discipline; stable path + overwrite) ----
     work = session_scratch("ivf_delete")
     census_path = os.path.join(work, "census")
     _ivf_partial_census(vec, cent).write.mode("overwrite").parquet(census_path)
@@ -791,9 +788,9 @@ def emb_ivf_delete_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF rebalance plan (round-15 capability; NOT REGISTERED — the staging
-# budget note in gate.py pins zero new registrations through r17, so
-# this ships as an operator + oracle-parity pytest only). The MONITOR
+# IVF rebalance plan (NOT REGISTERED: an operator run by
+# scripts/run_embedding_pipeline.py, checked against its oracle by
+# tests/test_embeddings.py, whose SQL is tests/ivf_oracles.py). The MONITOR
 # step after the lifecycle's grow/shrink legs: arrival-time ingest
 # (emb_ivf_streaming) and retention deletes (emb_ivf_delete_maintenance)
 # both mutate cell populations without re-training, so a deployed index
@@ -819,34 +816,6 @@ def emb_ivf_delete_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nothing corpus-sized moves, the same metadata-only shape as
 # layout_compaction_plan on the layout side.
 # ---------------------------------------------------------------------------
-def _ivf_rebalance_oracle() -> str:
-    return f"""
-WITH census AS ({_ivf_build_oracle()}),
-tot AS (
-  SELECT CAST(SUM(n_vecs) AS BIGINT) AS nv,
-         CAST(COUNT(*) AS BIGINT) AS k
-  FROM census
-)
-SELECT CAST(cluster_id AS BIGINT) AS cluster_id,
-       CAST(n_vecs AS BIGINT)     AS n_vecs,
-       CAST(n_vecs * k AS DOUBLE) / CAST(nv AS DOUBLE) AS fill_factor,
-       mean_d2_micro,
-       CASE WHEN n_vecs * k > 2 * nv THEN 'split'
-            WHEN n_vecs * k * 2 < nv THEN 'underfull'
-            ELSE 'keep' END AS action,
-       CAST(CASE WHEN n_vecs * k > 2 * nv
-                 THEN (n_vecs * k + nv - 1) // nv
-                 ELSE 1 END AS BIGINT) AS n_subcells,
-       CASE WHEN n_vecs * k > 2 * nv THEN
-         CAST(row_number() OVER (
-           ORDER BY (n_vecs * k > 2 * nv) DESC, mean_d2_micro DESC,
-                    cluster_id
-         ) AS BIGINT)
-       END AS split_priority
-FROM census CROSS JOIN tot
-"""
-
-
 def emb_ivf_rebalance_plan(
     spark: SparkSession, sf_dir: str, census: DataFrame | None = None
 ) -> DataFrame:
@@ -903,13 +872,13 @@ def emb_ivf_rebalance_plan(
 
 
 # ---------------------------------------------------------------------------
-# IVF split execution (round-15 capability; NOT REGISTERED — same
-# staging-budget stance as the rebalance plan above). Executes the
+# IVF split execution (NOT REGISTERED, like the rebalance plan above).
+# Executes the
 # plan's 'split' decisions: for each flagged cell, ONE Lloyd assignment
 # step over that cell's posting list against n_subcells deterministic
 # sub-seeds — the parent CENTROID (taken from the centroid table, so an
 # exact-duplicate vector at a lower cluster_id stealing the parent's
-# self-assignment cannot drop it — ADVICE r15) plus the cell's
+# self-assignment cannot drop it) plus the cell's
 # lowest-id other members (the vec_id-ordered seed convention every IVF
 # query here uses). The parent seed is therefore ALWAYS among the
 # sub-seeds, on any corpus, which yields a provable invariant: every member's nearest-sub-seed distance is <= its
@@ -928,74 +897,6 @@ def emb_ivf_rebalance_plan(
 # aggregate — re-training cost is bounded by the plan, never by the
 # corpus.
 # ---------------------------------------------------------------------------
-def _ivf_split_oracle(k: int = _IVF_K, micro: int = 1_000_000) -> str:
-    return f"""
-WITH vec AS (
-  SELECT vec_id, {E.vec_expr('embedding', 'd')} AS v FROM embeddings
-),
-c AS (SELECT vec_id AS cid, v AS cv FROM vec WHERE vec_id < {k}),
-d AS (
-  SELECT vec.vec_id, c.cid, {E.sqdist_expr('vec.v', 'c.cv', 'd')} AS d2
-  FROM vec CROSS JOIN c
-), a AS (
-  SELECT vec_id, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-    FROM d
-  ) WHERE rn = 1
-),
-cells AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_vecs FROM a GROUP BY cid),
-tot AS (
-  SELECT CAST(SUM(n_vecs) AS BIGINT) AS nv,
-         CAST(COUNT(*) AS BIGINT) AS k
-  FROM cells
-),
-split AS (
-  SELECT cid, CAST((n_vecs * k + nv - 1) // nv AS BIGINT) AS n_sub
-  FROM cells CROSS JOIN tot WHERE n_vecs * k > 2 * nv
-),
-members AS (
-  SELECT a.cid, a.vec_id, vec.v, s.n_sub
-  FROM a JOIN split s USING (cid) JOIN vec USING (vec_id)
-),
-subseeds AS (
-  -- the parent seed comes from the CENTROID table, not the parent's
-  -- self-assignment: an exact duplicate vector at a lower cluster_id
-  -- ties at d2=0 and steals the parent seed row out of `members`,
-  -- which would silently drop the anchor the distortion-never-
-  -- increases proof rests on (ADVICE r15). Parent first, then the
-  -- cell's lowest-id OTHER members up to n_sub.
-  SELECT cid, sid, sv FROM (
-    SELECT s.cid, s.cid AS sid, c.cv AS sv, 1 AS rn, s.n_sub
-    FROM split s JOIN c ON c.cid = s.cid
-    UNION ALL
-    SELECT m.cid, m.vec_id AS sid, m.v AS sv,
-           row_number() OVER (PARTITION BY m.cid ORDER BY m.vec_id) + 1
-             AS rn,
-           m.n_sub
-    FROM members m WHERE m.vec_id != m.cid
-  ) WHERE rn <= n_sub
-),
-md AS (
-  SELECT m.cid, m.vec_id, s.sid, {E.sqdist_expr('m.v', 's.sv', 'd')} AS d2
-  FROM members m JOIN subseeds s ON s.cid = m.cid
-),
-ma AS (
-  SELECT cid, vec_id, sid, d2 FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY cid, vec_id ORDER BY d2, sid
-    ) AS rn FROM md
-  ) WHERE rn = 1
-)
-SELECT CAST(cid AS BIGINT)  AS parent_id,
-       CAST(sid AS BIGINT)  AS subseed_id,
-       CAST(COUNT(*) AS BIGINT) AS n_vecs,
-       CAST(SUM(vec_id) AS BIGINT) AS posting_checksum,
-       CAST(SUM(CAST(floor(d2 * {micro}.0) AS BIGINT)) AS BIGINT)
-         AS sum_d2_micro
-FROM ma GROUP BY cid, sid
-"""
-
-
 def emb_ivf_split_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd assignment step over each plan-flagged cell's posting
     list against parent-seed-anchored sub-seeds; returns the per-sub-cell
@@ -1033,7 +934,7 @@ def emb_ivf_split_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = assigned.join(F.broadcast(split), "cid").join(vec, "vec_id")
     # Parent seed anchored on the CENTROID table (not the parent's
     # self-assignment, which an exact-duplicate vector at a lower
-    # cluster_id can steal at d2=0 — ADVICE r15); then the cell's
+    # cluster_id can steal at d2=0); then the cell's
     # lowest-id OTHER members fill the remaining n_sub - 1 slots.
     w = Window.partitionBy("cid").orderBy("vec_id")
     parent_seeds = split.join(F.broadcast(cent), "cid").select(
@@ -1075,8 +976,8 @@ def emb_ivf_split_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# IVF merge execution (round-15 capability; NOT REGISTERED — same
-# staging-budget stance as the plan/split above). Executes the plan's
+# IVF merge execution (NOT REGISTERED, like the plan and split above).
+# Executes the plan's
 # 'underfull' decisions, the COLD-cell counterpart of the split: the
 # underfull cells' centroids are retired and ONLY their members are
 # reassigned to the nearest surviving centroid, their census partials
@@ -1097,53 +998,6 @@ def emb_ivf_split_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows are k-row metadata read from the census. Merge cost is bounded
 # by the cold tail, never the corpus.
 # ---------------------------------------------------------------------------
-def _ivf_merge_oracle(k: int = _IVF_K, micro: int = 1_000_000) -> str:
-    return f"""
-WITH vec AS (
-  SELECT vec_id, {E.vec_expr('embedding', 'd')} AS v FROM embeddings
-),
-c AS (SELECT vec_id AS cid, v AS cv FROM vec WHERE vec_id < {k}),
-d AS (
-  SELECT vec.vec_id, c.cid, {E.sqdist_expr('vec.v', 'c.cv', 'd')} AS d2
-  FROM vec CROSS JOIN c
-), a AS (
-  SELECT vec_id, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-    FROM d
-  ) WHERE rn = 1
-),
-cells AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_vecs FROM a GROUP BY cid),
-tot AS (
-  SELECT CAST(SUM(n_vecs) AS BIGINT) AS nv,
-         CAST(COUNT(*) AS BIGINT) AS k
-  FROM cells
-),
-surv AS (
-  SELECT cid FROM cells CROSS JOIN tot WHERE NOT (n_vecs * k * 2 < nv)
-),
-c2 AS (SELECT c.cid, c.cv FROM c JOIN surv USING (cid)),
-d2_ AS (
-  SELECT vec.vec_id, c2.cid, {E.sqdist_expr('vec.v', 'c2.cv', 'd')} AS d2
-  FROM vec CROSS JOIN c2
-), a2 AS (
-  SELECT vec_id, cid, d2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-    FROM d2_
-  ) WHERE rn = 1
-), nv2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS nv FROM a2)
-SELECT CAST(cid AS BIGINT)      AS cluster_id,
-       CAST(COUNT(*) AS BIGINT) AS n_vecs,
-       CAST(COUNT(*) AS DOUBLE) / CAST(nv AS DOUBLE) AS share,
-       CAST(SUM(vec_id) AS BIGINT) AS posting_checksum,
-       CAST(SUM(CAST(floor(d2 * {micro}.0) AS BIGINT)) AS BIGINT)
-         AS sum_d2_micro,
-       CAST(SUM(CAST(floor(d2 * {micro}.0) AS BIGINT)) AS DOUBLE)
-         / CAST(COUNT(*) AS DOUBLE) AS mean_d2_micro
-FROM a2 CROSS JOIN nv2
-GROUP BY cid, nv
-"""
-
-
 def emb_ivf_merge_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retire the plan's underfull cells, reassign ONLY their members to
     the nearest surviving centroid, and fold the moved partials into the

@@ -368,7 +368,7 @@ def evt_retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MAD-based anomaly report (round 6; thresholds bounded round 10): the
+# MAD-based anomaly report (thresholds bounded): the
 # robust outlier detector a feature pipeline runs where winsorization
 # (evt_winsor_stats) would clip — flag values beyond median ± 3·MAD per
 # event type. Median and MAD are estimated on the shared capped held-out
@@ -459,7 +459,7 @@ def evt_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Count-min sketch heavy hitters (round 7): the mergeable-sketch answer to
+# Count-min sketch heavy hitters: the mergeable-sketch answer to
 # "top users" when exact per-key counts don't fit — a d×w cell grid
 # (d=4 hash rows, w=64 buckets) where cell(r,b) sums the counts of every
 # key hashing to b under row-hash r; a key's estimate is the MIN over its
@@ -551,7 +551,7 @@ def evt_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# HyperLogLog cardinality sketch (round 7): the distinct-count twin of the
+# HyperLogLog cardinality sketch: the distinct-count twin of the
 # count-min sketch above — m=64 registers (p=6), register = max over keys
 # of (leading zeros of the 26-bit hash suffix + 1), estimate =
 # alpha_m * m^2 / Σ 2^-reg, with the standard small-range linear-counting
@@ -714,7 +714,7 @@ def evt_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bloom-filter semi-join reduction (round 7): the runtime-filter pattern
+# Bloom-filter semi-join reduction: the runtime-filter pattern
 # every warehouse engine applies to big-probe/small-build joins — build a
 # Bloom filter from the build-side keys, prune the probe side BEFORE the
 # shuffle, then verify exactly. Build side: users whose purchase total
@@ -723,7 +723,7 @@ def evt_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IS broadcast is the bit set: ≤ m = 128 distinct positions BY
 # CONSTRUCTION (the modulus caps it), so the broadcast is safe at any
 # scale — the same bounded-vs-data-dependent distinction the survivor-set
-# de-broadcast (VERDICT r06) enforced. The probe side chains k = 3
+# de-broadcast enforced. The probe side chains k = 3
 # bounded semi-joins (each a broadcast build of ≤ m rows) — rows failing
 # any hash never reach the exact join, exactly how Spark's own
 # spark.sql.optimizer.runtimeFilter Bloom pruning behaves. The audit
@@ -857,7 +857,7 @@ def evt_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# First-order Markov transition matrix (round 7): per-user event-type
+# First-order Markov transition matrix: per-user event-type
 # transition counts and row-normalized probabilities — the sequence-level
 # behavioral model product analytics builds next to funnels (funnel =
 # fixed path, this = the full 5x5 transition structure), and the
@@ -920,7 +920,7 @@ def evt_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CUSUM drift detection (round 7): the sequential change-point monitor
+# CUSUM drift detection: the sequential change-point monitor
 # (Page 1954, public) a pipeline-health system runs over per-type hourly
 # event rates — two-sided cumulative sums S_up = max(0, S + (x - mean)),
 # S_dn = max(0, S + (mean - x)), whose maxima localize sustained rate
@@ -1033,7 +1033,7 @@ def evt_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# HLL set algebra (round 8): the property that makes HLL registers the
+# HLL set algebra: the property that makes HLL registers the
 # exchange format of distributed analytics — registers of DIFFERENT sets
 # compose. Union is exact on sketches (cell-wise MAX is the semilattice
 # join, same merge the streaming twin uses across micro-batches);

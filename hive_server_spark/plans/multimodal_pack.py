@@ -95,7 +95,7 @@ def multimodal_frame_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The codec is REAL here (round-5 PPM, round-6 PNG): synthesize_ppm_media
+# The codec is REAL here (PPM and PNG): synthesize_ppm_media
 # builds genuine P6 payloads with column expressions (header + w*h*3
 # hex-char pixel bytes) and synthesize_png_media builds genuine zlib+CRC32
 # PNGs whose DECODED pixels are byte-identical to the PPM ones (same w/h
@@ -201,7 +201,7 @@ def multimodal_decode_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# JPEG strict decode (round 6, closes VERDICT r05 missing item 2): the
+# JPEG strict decode: the
 # fixtures are REAL entropy-coded baseline JPEGs — marker segments, Huffman
 # scan, RSTn restart markers every 2 MCUs, grayscale for even doc_ids and
 # 3-component 4:4:4 YCbCr (Cb=Cr=128) for odd — built from constant 8×8
@@ -253,8 +253,8 @@ FROM per GROUP BY variant
 """,
 )
 def multimodal_jpeg_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize REAL baseline JPEGs (gray, 4:4:4 color, and — round 7 —
-    4:2:0 subsampled color, all with restart markers), decode them with
+    """Synthesize REAL baseline JPEGs (gray, 4:4:4 color, and 4:2:0
+    subsampled color, all with restart markers), decode them with
     the strict pure-Python T.81 decoder in the Arrow worker, and fold the
     float32 outputs back to exact per-image pixel sums so every variant
     faces the byte-level DuckDB oracle."""
@@ -282,7 +282,7 @@ def multimodal_jpeg_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Resize is a REAL media→media transform (round 6): decode 8-bit PPM →
+# Resize is a REAL media→media transform: decode 8-bit PPM →
 # nearest-neighbor resample (floor mapping: src(y,x) = (y*h//OH, x*w//OW))
 # → re-encode P6, then the ordinary strict decoder profiles the RESIZED
 # payloads — so the oracle checks the whole decode→resize→encode→decode
@@ -364,7 +364,7 @@ def multimodal_resize_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The audio codec is REAL (round 6): synthesize_wav_media builds genuine
+# The audio codec is REAL: synthesize_wav_media builds genuine
 # RIFF/WAVE PCM containers with pure column expressions (44-byte canonical
 # header through unhex; sample bytes are the same rpad-cycled hex-of-text
 # trick as the image fixtures) and decode_audio walks RIFF chunks with real
@@ -442,7 +442,7 @@ def multimodal_audio_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The quarantine path (round 6): a real ingest sees valid, corrupt, and
+# The quarantine path: a real ingest sees valid, corrupt, and
 # foreign payloads in one stream; the audit classifies every payload by
 # actually running the codecs and catching their documented ValueErrors.
 # The mixed corpus is synthesized deterministically by doc_id % 4 — valid
@@ -508,7 +508,7 @@ def multimodal_corrupt_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Audio feature extraction (round 6): exact-integer DSP through the real
+# Audio feature extraction: exact-integer DSP through the real
 # WAV codec — the audio feature-extract slot (energy filtering, silence /
 # clipping detection) as a first-class gate query. The float mean never
 # exists: deviations are n-scaled integers (dev_i = n*s_i − Σs), so
@@ -572,7 +572,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Image value-entropy profile (round 7): decode the REAL PNG fixtures,
+# Image value-entropy profile: decode the REAL PNG fixtures,
 # bincount sample values in the Arrow worker (<= 256 rows per image leave
 # Python — never pixels), then aggregate Shannon entropy JVM-side in exact
 # integer micro-nats: per (image, value) the term
@@ -635,7 +635,7 @@ def multimodal_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Progressive JPEG profile (round 7): the SOF2 decode path — multi-scan
+# Progressive JPEG profile: the SOF2 decode path — multi-scan
 # coefficient accumulation with DC successive approximation and AC EOB
 # scans — exercised through the strict Arrow-worker decode against the
 # same closed-form pixel-sum oracle as the baseline profile (the
@@ -706,7 +706,7 @@ def multimodal_jpeg_progressive_profile(spark: SparkSession, sf_dir: str) -> Dat
 
 
 # ---------------------------------------------------------------------------
-# Perceptual-hash image near-dup (round 10, VERDICT r9 item 3): dHash over
+# Perceptual-hash image near-dup: dHash over
 # REAL decoded JPEG pixels, banded-LSH candidate generation, Hamming
 # verification ONLY on co-bucketed candidates — never all-pairs. The image
 # twin of dedup_minhash_candidates: band values are the bucket keys
@@ -1014,7 +1014,7 @@ def multimodal_audio_fp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Real video decode (round 10, VERDICT r9 "what's missing" item 3): the
+# Real video decode: the
 # fixtures are REAL RIFF/AVI Motion-JPEG containers (functions/video.py)
 # whose frames are the decode-exact constant-block JPEGs — so the FULL
 # chain (RIFF walk -> per-frame T.81 decode -> pixel-weighted mean, plus
@@ -1222,17 +1222,14 @@ def multimodal_jpeg_hierarchical_profile(
 
 
 # ---------------------------------------------------------------------------
-# Video fingerprint near-dup (round-10 second-pass library; REGISTRATION
-# registered in the round-11 window, same staging as the hierarchical
-# profile above). Completes the perceptual-
-# dedup triad (image dHash / audio energy fingerprint / video keyframe
-# fingerprint): REAL AVI container walk -> both keyframes through the
-# full JPEG decoder -> per-frame dHash -> 128-bit fingerprint as eight
-# 16-bit bands keyed (frame, band) -> band_candidates(n_bands=8) ->
-# Hamming verify on co-bucketed candidates only, never all-pairs. Same
-# closed-form-oracle scheme as multimodal_phash_neardup with a frame
-# dimension; parity pinned by tests/test_multimodal.py on crafted + sf
-# corpora.
+# Video fingerprint near-dup. Completes the perceptual-dedup triad (image
+# dHash / audio energy fingerprint / video keyframe fingerprint): REAL AVI
+# container walk -> both keyframes through the full JPEG decoder ->
+# per-frame dHash -> 128-bit fingerprint as eight 16-bit bands keyed (frame,
+# band) -> band_candidates(n_bands=8) -> Hamming verify on co-bucketed
+# candidates only, never all-pairs. Same closed-form-oracle scheme as
+# multimodal_phash_neardup with a frame dimension; parity pinned by
+# tests/test_multimodal.py on crafted + sf corpora.
 # ---------------------------------------------------------------------------
 _VIDEO_FP_ORACLE = f"""
 WITH d AS (
@@ -1349,10 +1346,8 @@ def multimodal_video_fp_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Video scene segmentation (round-10 second-pass library; REGISTRATION
-# registered in the round-11 window, same staging as the two entries
-# above). The shot-boundary primitive a
-# video training pipeline samples frames per-shot with: per-frame means
+# Video scene segmentation. The shot-boundary primitive a video training
+# pipeline samples frames per-shot with: per-frame means
 # leave the Arrow worker as SCALARS (video_frame_stats — one row per
 # frame, payloads never shuffle), then the segmentation itself is pure
 # JVM window work — lag() frame diff, cut flag at mean-pixel delta >= 10,
@@ -1462,7 +1457,7 @@ def multimodal_video_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # End-to-end video curation pipeline. The video twin
-# of text_pretrain_keep (VERDICT r10 item 4): every stage LIVE in one
+# of text_pretrain_keep: every stage LIVE in one
 # query, raw AVI corpus → shot segmentation → one keyframe per shot →
 # keyframe dHash → banded-LSH near-dup verdict → per-clip keep/drop:
 #
@@ -1638,11 +1633,11 @@ def multimodal_video_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# FLAC decode profile. Closes the audio-format boundary (VERDICT r10
-# item 7): real FLAC decode — Rice-coded fixed-predictor residuals AND
-# verbatim subframes, frame CRC-8/CRC-16, whole-stream MD5 — value-gated
-# with a purely INTEGER oracle: the decoder emits integer samples, so
-# the amplitude total is an exact BIGINT sum, no float leg at all.
+# FLAC decode profile. Closes the audio-format boundary: real FLAC decode —
+# Rice-coded fixed-predictor residuals AND verbatim subframes, frame
+# CRC-8/CRC-16, whole-stream MD5 — value-gated with a purely INTEGER oracle:
+# the decoder emits integer samples, so the amplitude total is an exact
+# BIGINT sum, no float leg at all.
 # ---------------------------------------------------------------------------
 _FLAC_ORACLE = """
 WITH m AS (
@@ -1674,7 +1669,7 @@ GROUP BY 1
 def multimodal_flac_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strict decode profile over REAL FLAC clips: one row per subframe
     kind (fixed-predictor+Rice / verbatim / order-2 LPC — all three
-    decoder predictor families, VERDICT r11 item 6), every stat an exact
+    decoder predictor families), every stat an exact
     integer from the CRC- and MD5-verified decode (see block comment).
     The variant label is the doc_id % 3 rotation (what synthesis
     requested) on both sides; docs too short for a predictor's warmup

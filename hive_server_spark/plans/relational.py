@@ -516,6 +516,8 @@ def rel_full_outer_nation_activity(spark: SparkSession, sf_dir: str) -> DataFram
         .groupBy(F.col("s_nationkey").alias("nationkey"))
         .agg(F.count("*").alias("n_suppliers"))
     )
+    # FULL OUTER has no broadcast form: a sort-merge join of two
+    # nation-keyed aggregates (≤ 25 rows each)
     return cn.join(sn, "nationkey", "full_outer").select(
         F.col("nationkey"),
         F.coalesce("n_customers", F.lit(0)).cast("bigint").alias("n_customers"),
@@ -809,15 +811,14 @@ def rel_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact distinct shuffles every key; the sketch ships fixed-size state).
     HLL bound: 5×rsd relative error (rsd=0.02 → ±10%, ~5σ) against the
     exact distinct count (bounded state — constant per group after the
-    distinct expand). Quantile bound (bounded round 10): accuracy=10000 ⇒
-    rank error n/10000; the audit band is the p25/p75 of the shared capped
-    held-out slice (operators/heldout.py) — the previous whole-population
-    exact p45/p55 was the one unbounded percentile buffer left after the
-    round-9 policy (see _SKETCH_AUDIT_CAP for the band-width statistics;
-    nations absent from the slice fall back to the global band, and a
-    fully empty slice yields no audit claim → TRUE). Tighter accuracy
-    assertions live in tests/test_relational_ops.py, which runs at
-    fixture scale where the exact form is legitimate."""
+    distinct expand). Quantile bound: accuracy=10000 ⇒ rank error n/10000;
+    the audit band is the p25/p75 of the shared capped held-out slice
+    (operators/heldout.py) — the previous whole-population exact p45/p55 was
+    an unbounded percentile buffer (see _SKETCH_AUDIT_CAP for the band-width
+    statistics; nations absent from the slice fall back to the global band,
+    and a fully empty slice yields no audit claim → TRUE). Tighter accuracy
+    assertions live in tests/test_relational_ops.py, which runs at fixture
+    scale where the exact form is legitimate."""
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_suppkey", "l_extendedprice"
     )
@@ -1431,7 +1432,7 @@ def dq_lineitem_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Winsorization bounds: per-group p05/p95 clipping thresholds + clip counts.
-# Thresholds bounded round 10: estimated on the shared capped held-out
+# Thresholds bounded: estimated on the shared capped held-out
 # slice (operators/heldout.py), types absent from the slice falling back to
 # the global held-out bounds — an exact percentile over every event of a
 # type buffers the whole group (SCALE.md "Exact percentiles").
@@ -1542,7 +1543,7 @@ def rel_conditional_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Median absolute deviation — robust dispersion, both percentiles estimated
-# on the shared capped held-out slice (bounded round 10: the exact form
+# on the shared capped held-out slice (bounded: the exact form
 # buffers every order of a priority twice — SCALE.md "Exact percentiles").
 # ---------------------------------------------------------------------------
 _MADPRI_HELDOUT_MOD = 3

@@ -130,7 +130,7 @@ def layout_zorder_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Hive-partitioned layout round trip (round 6): write events partitioned by
+# Hive-partitioned layout round trip: write events partitioned by
 # event_type (the §2 layout primitive: partition columns become directory
 # keys), read back ONE partition through a pushed filter, and aggregate.
 # The oracle filters the original table, so partition-column type recovery
@@ -188,7 +188,7 @@ def src_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Compaction plan (round 7): the lakehouse small-file maintenance
+# Compaction plan: the lakehouse small-file maintenance
 # primitive — given a file manifest (documents standing in as the
 # per-partition file listing: doc_id = file, n_chars = bytes, source =
 # partition directory), assign input files to target-size output files by
@@ -253,7 +253,7 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Zone-map data skipping (round 7): the min/max-statistics read-pruning
+# Zone-map data skipping: the min/max-statistics read-pruning
 # primitive every lakehouse format (parquet row groups, Delta/Iceberg file
 # stats) serves — computed and *evaluated* as a value-gated query. Events
 # are grouped into synthetic files (file = event_id DIV 512, the same
@@ -376,7 +376,7 @@ def layout_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deletion vectors (round 7): the lakehouse DML-without-rewrite primitive
+# Deletion vectors: the lakehouse DML-without-rewrite primitive
 # (Delta deletion vectors / Iceberg positional delete files, public specs) —
 # a DELETE marks row POSITIONS inside immutable files instead of rewriting
 # them; readers apply the per-file position bitmap. This query runs
@@ -467,7 +467,7 @@ def layout_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Schema-evolution round trip (round 8): the read-side contract every
+# Schema-evolution round trip: the read-side contract every
 # long-lived lakehouse table depends on — a v1 batch written with three
 # columns and a v2 batch with two ADDED columns are read back through
 # parquet schema merging; pre-evolution rows must surface the added
@@ -544,7 +544,7 @@ def src_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Snapshot manifest diff (round 8): what an incremental consumer (or a
+# Snapshot manifest diff: what an incremental consumer (or a
 # table-maintenance audit) sees between two versions of the synthetic
 # 512-row-file layout. v2 applies (a) a RANGE-SCOPED predicate DELETE —
 # the layout_deletion_vectors predicate restricted to 3 of every 5 file
@@ -555,7 +555,7 @@ def src_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
 # REMOVED; the deleted rows from kept files land in fresh quarantine
 # files keyed -(1 + file_id) — a keyspace DISJOINT from genuine
 # non-negative file ids at any table size (a positive offset would
-# collide once the table reaches offset×rows_per_file rows; review r08)
+# collide once the table reaches offset×rows_per_file rows)
 # — ADDED. A file is UNCHANGED iff its content hash (md5 over the
 # int-sorted event-id list) is byte-identical. Scale: each manifest is ONE map-side-combined
 # agg producing a file-count-sized table; the diff is a manifest-to-
@@ -637,6 +637,8 @@ def layout_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
         )
     )
+    # FULL OUTER (a file may be in one manifest only) has no broadcast
+    # form: a sort-merge join of two file-count-sized manifests
     j = v1.alias("v1").join(
         v2.alias("v2"), F.col("v1.file_id") == F.col("v2.file_id"), "full_outer"
     )
@@ -804,7 +806,7 @@ def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple:
         tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         names = (f"orders_bkt_{tag}", f"customer_bkt_{tag}")
         work = session_scratch(f"bucketed_{tag}")
-        # ADVICE r13: with a persistent metastore the catalog entry can
+        # With a persistent metastore the catalog entry can
         # outlive its scratch-rooted data (the files die at interpreter
         # exit, the DROP in-session does not run across processes) — a
         # later session resolving the stale name would read a dangling

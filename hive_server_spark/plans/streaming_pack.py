@@ -196,7 +196,10 @@ def _start_sink_stream(spark: SparkSession, out: DataFrame, work: str, mode: str
       every batch replaces the sink with the whole result. The sink holds
       only what this run emitted, so a run on an already-drained
       checkpoint returns 0 rows: callers pass a fresh checkpoint, or land
-      new files before resuming one."""
+      new files before resuming one.
+    - ``"update"`` serves the custom stateful operator
+      (`stateful_orders_state`): each batch emits a row per touched key,
+      and the caller keeps the newest row per key."""
     sink = f"stream_{uuid.uuid4().hex[:8]}"
     q = (
         out.writeStream.outputMode(mode)
@@ -648,19 +651,7 @@ def stateful_orders_state(
 
     work = tempfile.mkdtemp(dir=session_scratch("stateful"))
     stream = file_stream(spark, _land_order_events(spark, sf_dir, chunks))
-    sink = f"stateful_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle_partitions(spark):
-        q = (
-            stateful_orders_stream(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_bounded(q)  # stall-windowed await (see _run_sink_stream)
-    tbl = _read_sink(spark, sink)
+    tbl = _run_sink_stream(spark, stateful_orders_stream(stream), work, "update")
     w = Window.partitionBy("pool_address", "order_id").orderBy(F.desc("version"))
     return (
         tbl.withColumn("_rn", F.row_number().over(w))

@@ -129,7 +129,7 @@ def udf_user_centered_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Python UDTF (round 7): the table-function third of the UDF/UDAF/UDTF
+# Python UDTF: the table-function third of the UDF/UDAF/UDTF
 # surface (Spark 4 `@udtf`, Arrow-transported) — a per-row generator that
 # EMITS rows, joined laterally, which neither a scalar UDF (1→1) nor a
 # grouped map (group→group) expresses. Showcase: character-trigram

@@ -95,7 +95,7 @@ def get_spark(app_name: str = "hive-server-spark", *, shuffle_partitions: int | 
 # incremental band / IVF / PQ refreshes write a "prior snapshot" parquet
 # index, then dedup or encode a batch against the read-back files). A raw
 # tempfile.mkdtemp per invocation accumulates in /tmp across gate + bench
-# runs (ADVICE r11); this anchor is STABLE within the process — every
+# runs; this anchor is STABLE within the process — every
 # rerun of a query lands on the same path with mode("overwrite") — and is
 # removed at interpreter exit, so a full driver round leaves nothing
 # behind. On a real deployment the index would live at a durable table
@@ -126,11 +126,11 @@ def session_scratch(name: str) -> str:
         # SIGTERM/os._exit (the per-query watchdogs hard-exit), so a
         # killed harness can orphan its root — each new process sweeps
         # them, keeping /tmp bounded across crashes too. PID liveness
-        # alone is not enough (ADVICE r12): a recycled PID belonging to
+        # alone is not enough: a recycled PID belonging to
         # an unrelated live process would shield a stale root forever,
         # so roots older than _SCRATCH_MAX_AGE_S are reclaimed
         # regardless — and because every session_scratch() call below
-        # refreshes the owning root's mtime (ADVICE r13: the root's
+        # refreshes the owning root's mtime (the root's
         # st_mtime is otherwise set at creation and never advances —
         # later writes land in subdirectories — so a legitimately live
         # long-soak process would cross the cutoff and lose its live

@@ -97,9 +97,10 @@ class ParquetStateStore:
     Scale note: each commit rewrites the full state — correct and atomic,
     but O(state). The production-scale variants, in order of preference:
     (a) a Delta/Iceberg MERGE target (transactional, row-level);
-    (b) state partitioned by pool bucket (sources/layout.py) with dynamic
-        partition overwrite, rewriting only buckets touched by the batch —
-        O(touched state), at the cost of non-atomic multi-bucket commits.
+    (b) state partitioned by pool bucket (`pmod(hash(pool_address), B)`)
+        with dynamic partition overwrite, rewriting only buckets touched by
+        the batch — O(touched state), at the cost of non-atomic
+        multi-bucket commits.
     Plain versioned parquet keeps this repo dependency-free."""
 
     def __init__(self, root: str, run_id: str):

@@ -1,8 +1,7 @@
-"""Compare two BENCH_LOCAL_r*.json artifacts (bench.py --reps N --out)
-query by query and print the round-over-round table VERDICT r08 item 6
-asks for: per-query best-of-reps times, the ratio, and a flagged list of
-queries slower than the --flag threshold (default 1.5x) that must get a
-plan diff or a load note in SCALE.md.
+"""Compare two BENCH_LOCAL_r*.json artifacts (bench.py --reps N --out) query
+by query and print the run-over-run table: per-query best-of-reps times, the
+ratio, and a flagged list of queries slower than the --flag threshold
+(default 1.5x) that must get a plan diff or a load note in SCALE.md.
 
 Best-of-reps is the right round-over-round statistic for a shared host:
 each rep is a cold session, so min() strips the load noise the loadavg
@@ -70,8 +69,8 @@ def main() -> None:
         print(f"new-in-{args.new}: "
               + ", ".join(f"{q} {new_q[q]:.2f}s" for q in only_new))
 
-    # VERDICT r12 item 4: EVERY ratio > flag is listed regardless of
-    # absolute time — the round-12 sweep silently dropped a 1.54x flag
+    # EVERY ratio > flag is listed regardless of absolute time — an
+    # earlier sweep silently dropped a 1.54x flag
     # because it sat under the absolute floor. The floor now only
     # classifies (sub-floor = host-noise class), it never suppresses;
     # each line still needs a disposition note in SCALE.md.

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
-# End-of-round snapshot gate (VERDICT r03 item 4): the round must never end
-# with a knowingly red suite. Run this before the final snapshot commit;
+# Snapshot gate: a snapshot must never be taken with a knowingly red
+# suite. Run this before the final snapshot commit;
 # exit 0 = safe to snapshot, nonzero = BLOCKED.
 #
 #   bash scripts/preflight.sh            # pytest + oracle parity gate

@@ -89,8 +89,8 @@ def main() -> None:
     print(f"kept for training: {n_kept}/{n_docs} docs")
 
     # gate-verified: text_kept_token_shards re-derives kept AND train
-    # internally (ADVICE r05 — the written manifest must cover only the
-    # cleaned subset, not the raw corpus)
+    # internally (the written manifest must cover only the cleaned
+    # subset, not the raw corpus)
     shards = stage("text_kept_token_shards")
     n_sharded = shards.agg(F.sum("n_docs")).collect()[0][0]
     assert n_sharded == n_kept, (

@@ -10,15 +10,13 @@ operators the gate value-checks one by one. Stages:
   3. coarse train    - one k-means Lloyd step for the coarse quantizer
                        (emb_kmeans_update)
   4. PQ train        - per-subspace Lloyd step for the sub-quantizers
-                       (emb_pq_train, registered round 13)
+                       (emb_pq_train)
   5. IVF build       - coarse index census
                        (emb_ivf_build, or --incremental: the streaming
-                       ingest streamed_ivf_census — emb_ivf_streaming,
-                       registered round 14)
+                       ingest streamed_ivf_census — emb_ivf_streaming)
   6. PQ encode       - per-vector codes table
                        (emb_pq_codes, or --incremental: the streaming
-                       ingest streamed_pq_codes — emb_pq_streaming,
-                       registered round 15)
+                       ingest streamed_pq_codes — emb_pq_streaming)
   7. serve           - IVF-PQ top-k read path (emb_ivfpq_topk)
   8. recall audit    - nprobe sweep vs exact top-k
                        (emb_ivf_recall_curve)
@@ -27,15 +25,15 @@ operators the gate value-checks one by one. Stages:
                        (emb_ivf_delete_maintenance)
   10. monitor        - cell-skew audit + distortion-ranked split plan
                        over the build census
-                       (emb_ivf_rebalance_plan, round 15 — unregistered)
+                       (emb_ivf_rebalance_plan, unregistered)
   11. rebalance      - execute the plan's splits: one cell-scoped Lloyd
                        assignment per flagged cell, conservation +
                        distortion-never-increases reconciled
-                       (emb_ivf_split_execute, round 15 — unregistered)
+                       (emb_ivf_split_execute, unregistered)
   12. merge          - execute the plan's underfull retirements: only
                        the cold tail reassigns, survivors' census rows
                        untouched; equals the survivor-set rebuild
-                       (emb_ivf_merge_execute, round 15 — unregistered)
+                       (emb_ivf_merge_execute, unregistered)
 
 The index artifacts (IVF census + PQ codes) are written to the out dir.
 Because the streaming ingests' final state equals the one-shot builds
@@ -135,7 +133,7 @@ def main() -> None:
     serve = stage("emb_ivfpq_topk")
     recall = stage("emb_ivf_recall_curve")
 
-    # stage 9 (round 14): index maintenance under a retention DELETE —
+    # stage 9: index maintenance under a retention DELETE —
     # the tombstoned slice's census partials subtracted from the
     # persisted build census, equal to the rebuild over survivors
     # (emb_ivf_delete_maintenance). The survivor-count
@@ -147,7 +145,7 @@ def main() -> None:
 
     maint = stage("ivf_delete_maintenance", emb_ivf_delete_maintenance)
 
-    # stage 10 (round 15): the monitor step — per-cell skew audit and
+    # stage 10: the monitor step — per-cell skew audit and
     # split plan over the build census (k-row metadata; executing a
     # flagged split is a cell-scoped Lloyd step, not done here)
     from hive_server_spark.plans.embedding_pack import emb_ivf_rebalance_plan
@@ -188,7 +186,7 @@ def main() -> None:
     )
     n_split = plan.where("action = 'split'").count()
 
-    # stage 11 (round 15): execute the flagged splits and reconcile —
+    # stage 11: execute the flagged splits and reconcile —
     # the sub-cells must exactly partition their parents' posting lists
     # and never increase the summed micro-distortion (the acceptance
     # check before a deployed index swaps the new cells in)
@@ -221,7 +219,7 @@ def main() -> None:
             assert agg[p]["d2"] <= cen[p]["sum_d2_micro"], (
                 f"split of cell {p} increased distortion"
             )
-    # stage 12 (round 15): retire the underfull cells — population must
+    # stage 12: retire the underfull cells — population must
     # be conserved and exactly the plan's non-underfull cells survive
     from hive_server_spark.plans.embedding_pack import emb_ivf_merge_execute
 

@@ -21,14 +21,14 @@ same operators the gate value-checks one by one. Stages:
                      no file rewrite
                      (layout_deletion_vectors, or --incremental: the
                      streaming ingest streamed_deletion_vectors —
-                     layout_dv_streaming, registered round 15)
+                     layout_dv_streaming)
   6. snapshot expiry - retention over the v1→v2→v3 manifest chain
                      (layout_snapshot_expiry)
   7. manifest diff - snapshot-to-snapshot change audit
                      (layout_manifest_diff)
   8. bucketed read - the pre-shuffled zero-exchange join the maintained
                      layout exists to serve
-                     (layout_bucketed_join, registered round 15)
+                     (layout_bucketed_join)
 
 The maintenance artifacts (zone-map statistics + deletion-vector
 report) are written to the out dir. Because the streaming ingests'

@@ -12,17 +12,16 @@ value-checks one by one. Stages:
   4. video near-dup  - AVI decode -> keyframe dHash -> 128-bit verify
                        (multimodal_video_fp_neardup)
   5. video curation  - shots -> keyframes -> near-dup verdict -> keep
-                       (multimodal_video_curation, registered round 12)
+                       (multimodal_video_curation)
   6. incremental refresh - new image batch vs the persisted band index
                        (multimodal_phash_incremental)
   7. bundle verdict  - fused text/image/audio per-document dedup
-                       (multimodal_bundle_neardup — registered round 13)
+                       (multimodal_bundle_neardup)
   8. image band flags - the full-corpus occupied-band verdict, produced
                        by the BATCH rule by default, or — with
                        --incremental — by driving the versioned band
                        index through the STREAMING ingest path
-                       (streamed_media_neardup — media_neardup_streaming,
-                       registered round 14)
+                       (streamed_media_neardup — media_neardup_streaming)
 
 The final manifest joins the fused bundle verdict, the video-curation
 keep flag, and the image band-flag partner into one per-document media

@@ -23,7 +23,7 @@ semantic invariants the gate queries rely on:
   operator (minhash candidates, dup spans) measures the synthetic
   C(MULT,2) duplicate structure instead of engine scaling. Under the
   shuffle, near-dup/dup-span mass is the base corpus's own structure
-  replicated linearly — the shape a real 100 TB corpus has. (The round-6
+  replicated linearly — the shape a real 100 TB corpus has. (An earlier
   probe used a suffix-only perturbation; its C(MULT,2) candidate-pair
   caveat and the resulting text_dup_spans / pretrain_keep exclusions are
   obsolete under the shuffle.) The suffix still guarantees byte-level
@@ -34,8 +34,8 @@ semantic invariants the gate queries rely on:
   stacking in them.
 
 Output: a markdown table of per-query wall time at 1x vs MULTx and the
-ratio. A query whose ratio is >> MULT is superlinear — the thing VERDICT
-round-2 item 6 asks this probe to expose. Run:
+ratio. A query whose ratio is >> MULT is superlinear — the thing this probe
+exists to expose. Run:
 
     python scripts/scale_probe.py [--mult 10] [--queries q1,q2,...]
 
@@ -81,8 +81,8 @@ DEFAULT_QUERIES = [
     # dedup_minhash_sigs is the linear signature scan; under the keyed-
     # shuffle replication (see module docstring) candidate-pair volume is
     # also linear in mult (cross-copy shingles are distinct, so only the
-    # base corpus's own near-dup structure replicates), making the r6
-    # C(mult,2) caveat obsolete.
+    # base corpus's own near-dup structure replicates), making the suffix-only
+    # probe's C(mult,2) caveat obsolete.
     "dedup_minhash_sigs",
     "text_repetition_profile",
     # NOTE on shared session caches: queries later in this list that share a
@@ -98,30 +98,30 @@ DEFAULT_QUERIES = [
     "emb_lsh_buckets",
     "emb_cosine_topk",
     "emb_int8_quantization",
-    # round-6 additions, both map-only scans + small aggs (the shapes that
+    # both map-only scans + small aggs (the shapes that
     # must scale perfectly linearly): JVM-regexp PII scrub, WAV codec
     # synth+decode through the Arrow worker
     "text_pii_scrub",
     "multimodal_audio_profile",
-    # round-6 additions, second batch: the mixing/bucket audits are scan +
+    # the mixing/bucket audits are scan +
     # tiny agg; the moment matrix is the d(d+1)/2-per-row pair explode —
     # inherent arithmetic for a covariance pass, linear in rows.
     "text_source_mixing",
     "text_length_buckets",
     "emb_pca_moments",
-    # round-7 additions: the two de-broadcast survivor-set joins (VERDICT
-    # r06 item 1/4). Under the keyed-shuffle replication their survivor
-    # sets scale with the base corpus's own duplicate structure (injected
-    # footers/passages), not with C(mult,2) copy collisions — so the probe
-    # measures the new shuffle-join plan, which is the point.
+    # the two de-broadcast survivor-set joins. Under the keyed-shuffle
+    # replication their survivor sets scale with the base corpus's own
+    # duplicate structure (injected footers/passages), not with C(mult,2)
+    # copy collisions — so the probe measures the new shuffle-join plan,
+    # which is the point.
     "text_line_dedup",
     "text_dup_spans",
-    # round-7 second batch: vocabulary census (explode + map-side-combined
+    # vocabulary census (explode + map-side-combined
     # token agg + bounded top-N) and winnowing fingerprints (per-doc ROWS
     # window over gram hashes) — both must scale linearly.
     "text_vocab_census",
     "text_winnow_fingerprints",
-    # round-7 third batch: nearest as-of (two window sorts, one shuffle),
+    # nearest as-of (two window sorts, one shuffle),
     # SCD-2 versions (per-key window), source-KL (vocabulary equi-join) —
     # window- and join-shaped plans that must stay linear.
     "asof_nearest_price",
@@ -132,7 +132,7 @@ DEFAULT_QUERIES = [
     # sf_dir (plans/serving_pack.py), so its time is the CDF read alone.
     "cdc_book_snapshots",
     "orders_state_changelog",
-    # round-7 fourth batch: mergeable sketches (map-side-combined grids,
+    # mergeable sketches (map-side-combined grids,
     # bounded regardless of corpus size), the Bloom runtime-filter join
     # (bounded 128-bit set broadcast + co-partitioned equi-join), the
     # zone-map audit (per-file agg + one conditional-agg pass), and the
@@ -143,7 +143,7 @@ DEFAULT_QUERIES = [
     "evt_bloom_prune_join",
     "layout_zonemap_skipping",
     "emb_ivfpq_topk",
-    # round-7 fifth batch: Gopher rules are the map-only filter shape;
+    # Gopher rules are the map-only filter shape;
     # TF-IDF and DSIR are explode + (vocab-join | bounded-model-join)
     # shapes; tick flow is two per-pool windows + rollup; hard negatives
     # is the two-level grouped_topk (per-partition heads, bounded merge);
@@ -169,12 +169,12 @@ DEFAULT_QUERIES = [
     "emb_semantic_decontaminate",
     "text_quota_sample",
     "evt_cusum_drift",
-    # round-8 batch (VERDICT r07 item 5): MMR measured rather than
+    # MMR measured rather than
     # excluded — its ratio should be ~1x by design (k fixed selection
     # steps over localCheckpointed ≤625-row sets; only the pool-build
     # scan is corpus-linear), and the probe row PROVES the
-    # bounded-iteration claim instead of asserting it. The BPE pair are
-    # round-8 registrations: train = one linear vocab-build pass + K
+    # bounded-iteration claim instead of asserting it. The BPE pair:
+    # train = one linear vocab-build pass + K
     # vocab-sized iterations (corpus-size-independent after the first
     # agg); encode = per-(source, token) agg + vocab-to-vocab join.
     "emb_mmr_diverse_topk",
@@ -196,7 +196,7 @@ DEFAULT_QUERIES = [
     "text_ccnet_buckets",
     "text_hash_features_score",
     "evt_hll_set_algebra",
-    # round-9: the bounded-threshold quality cut (held-out slice + capped
+    # the bounded-threshold quality cut (held-out slice + capped
     # per-group percentile — the probe verifies the NEW plan still rides
     # the profile scan linearly) and the batch IVF-PQ read path (per-query
     # routing via a bounded broadcast table; ratio should track the
@@ -212,7 +212,7 @@ DEFAULT_QUERIES = [
     # docs_neardup_streaming (same harness exclusion — its per-batch math
     # is the dedup_minhash_sigs signature scan, probed at 10x/100x, plus a
     # band-keyed agg/join against the bounded band index).
-    # round-10: the perceptual-hash near-dup chain (decode + dHash is a
+    # the perceptual-hash near-dup chain (decode + dHash is a
     # partition-preserving linear scan; candidates are band-bucket joins —
     # under the keyed-shuffle replication each copy's header prefix is
     # distinct, so dup mass is the base structure replicated linearly) and
@@ -223,7 +223,7 @@ DEFAULT_QUERIES = [
     "docs_neardup_incremental",
 ]
 
-# --mult 100 list (VERDICT r05 item 4): the cheap-per-row families where a
+# --mult 100 list: the cheap-per-row families where a
 # 100x corpus still fits local[32]'s memory and a probe run's time budget.
 # Exclusions, each explicit:
 # - cdc_book_snapshots / orders_state_changelog: the streaming harness
@@ -258,11 +258,11 @@ HUNDREDX_QUERIES = [
     "multimodal_audio_profile",
     "text_source_mixing",
     "text_length_buckets",
-    # round-7 (VERDICT r06 item 4): the de-broadcast survivor-set joins,
+    # the de-broadcast survivor-set joins,
     # probed at 100x under the new shuffle plan
     "text_line_dedup",
     "text_dup_spans",
-    # round-7 second/third batches: token-agg + bounded-top-N census,
+    # token-agg + bounded-top-N census,
     # per-doc window fingerprints, two-direction as-of windows, per-key
     # SCD-2 windows, vocabulary-join KL — every shape must stay linear.
     "text_vocab_census",
@@ -270,7 +270,7 @@ HUNDREDX_QUERIES = [
     "asof_nearest_price",
     "orders_scd2_versions",
     "text_source_kl",
-    # round-7 fourth batch. The sketches are the 100x headline: CMS/HLL
+    # The sketches are the 100x headline: CMS/HLL
     # grids are bounded by construction, so 100x data is pure linear scan
     # + map-side combine into a fixed-size state. Bloom prune and the
     # zone-map audit are events-table linear shapes.
@@ -282,7 +282,7 @@ HUNDREDX_QUERIES = [
     "evt_hll_cardinality",
     "evt_bloom_prune_join",
     "layout_zonemap_skipping",
-    # round-8 (VERDICT r07 item 5): the composed IVF-PQ read path at 100x
+    # the composed IVF-PQ read path at 100x
     # for real — candidate restriction lands BEFORE the decode explode, so
     # the ratio should track a linear scan shrunk by nprobe/nlist plus the
     # bounded LUT/codebook broadcasts. emb_bitext_mining stays at 10x BY
@@ -299,13 +299,13 @@ HUNDREDX_QUERIES = [
     # after its first linear vocab-build agg the K iterations are
     # vocab-sized, so 100x would re-time one agg plus constants.
     "emb_ivfpq_topk",
-    # round-9 (VERDICT r8 item 4): the batch generalization at 100x — the
+    # the batch generalization at 100x — the
     # corpus-sized halves (assignment scan, candidate ADC) are shared
     # across the 8 queries, so the ratio should sit near emb_ivfpq_topk's.
     "emb_ivfpq_batch_topk",
     "text_bpe_encode",
     "layout_manifest_diff",
-    # round-7 fifth batch, the corpus-scaling members: map-only Gopher
+    # the corpus-scaling members: map-only Gopher
     # rules, the two explode+join text shapes, and the per-pool window
     # rollup. The emb_* members and RRF stay at 10x: embeddings at 100x is
     # already characterized by the emb_int8_quantization linear scan, and
@@ -321,7 +321,7 @@ HUNDREDX_QUERIES = [
     "evt_markov_transitions",
     "text_quota_sample",
     "evt_cusum_drift",
-    # round-10: both near-dup additions are cheap-per-row (decode+dHash ~
+    # both near-dup additions are cheap-per-row (decode+dHash ~
     # 0.2 ms/image; band joins O(near-dups)) so the 100x corpus fits the
     # probe budget; the keyed-shuffle replication keeps header-prefix dup
     # mass linear (distinct prefixes per copy — no C(mult,2) structure).

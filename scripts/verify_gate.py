@@ -58,7 +58,7 @@ def main() -> int:
     # VANILLA session, deliberately: the round driver builds its own
     # SparkSession without any of our session.py tuning, so every query must
     # be self-sufficient (catalog._ensure_read_confs pins what it needs).
-    # Round 1 lost ~22 gate queries to exactly this gap.
+    # ~22 gate queries once failed on exactly this gap.
     spark = (
         SparkSession.builder.master(os.environ.get("SPARK_MASTER", "local[8]"))
         .appName("verify-gate")
@@ -77,7 +77,7 @@ def main() -> int:
     def fresh_con():
         # memory_limit bounds the buffer manager: an unbounded DuckDB next
         # to a live Spark JVM has flaked with a transient bad_alloc on
-        # this host (observed round 9) — 16 GB is ~100x what any sf0.01
+        # a 4-core host — 16 GB is ~100x what any sf0.01
         # oracle needs
         c = duckdb.connect()
         c.execute("SET memory_limit='16GB'")

@@ -26,11 +26,16 @@ def next_job_id(spark) -> int:
     return 0 if jobs.isEmpty() else max(jobs.head().jobId(), jobs.last().jobId()) + 1
 
 
+def tier1_session():
+    """The tier-1 session: `scripts/explain_audit.py` builds its PLANS.md
+    rows in this same session shape."""
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    return get_spark("hive-server-spark-tests", shuffle_partitions=4)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    s = get_spark("hive-server-spark-tests", shuffle_partitions=4)
-    yield s
+    yield tier1_session()
 
 
 def ev(

@@ -1,4 +1,4 @@
-"""ANSI-mode canary (round-2 advice): the session deliberately runs with
+"""ANSI-mode canary: the session deliberately runs with
 spark.sql.ansi.enabled=false to match DuckDB's permissive casts
 (session.py), which means a decimal overflow would return NULL silently
 instead of raising. These tests re-run the decimal-heavy money paths — the

@@ -206,7 +206,7 @@ def test_grouped_topk_property_random(spark):
 
 
 def test_asof_join_nearest_rejects_non_integral_order(spark):
-    """Contract check (ADVICE r07): the nearest-join's distance arithmetic
+    """Contract check: the nearest-join's distance arithmetic
     runs in long, so a timestamp/date order column must fail with the
     documented TypeError up front, not a deep analysis error or silent
     wrong arithmetic."""

@@ -17,7 +17,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
-from hive_server_spark.catalog import load_all, load_table
+from hive_server_spark.catalog import load_table
+from hive_server_spark.schemas import DRIVER_TABLES
 from tests.conftest import SF_MED, SF_SMALL
 
 # One canonical instant: 2024-01-01T00:00:01.234567Z
@@ -57,7 +58,7 @@ def test_events_ts_lands_as_session_timestamp(spark, tmp_path, encoding):
         f"{df.schema['ts'].dataType} for parquet encoding {encoding!r}"
     )
     # Value contract: identical instant under the pinned UTC session tz,
-    # and unix_micros (the consumer that broke in r03) must resolve.
+    # and unix_micros (a consumer that once broke here) must resolve.
     [(got,)] = df.select(F.unix_micros("ts")).collect()
     assert got == MICROS, f"{encoding}: expected {MICROS}, got {got}"
 
@@ -98,10 +99,9 @@ EXPECTED_COLUMNS = {
 
 @pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_MED])
 def test_all_driver_tables_load_with_expected_columns(spark, sf_dir):
-    tables = load_all(spark, sf_dir)
-    assert set(tables) >= set(EXPECTED_COLUMNS)
+    assert set(DRIVER_TABLES) >= set(EXPECTED_COLUMNS)
     for name, expected in EXPECTED_COLUMNS.items():
-        missing = expected - set(tables[name].columns)
+        missing = expected - set(load_table(spark, sf_dir, name).columns)
         assert not missing, (
             f"{name} at {sf_dir} lost column(s) {sorted(missing)} — the driver "
             f"regenerated testdata with a different schema; fix at the catalog "

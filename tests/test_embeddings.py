@@ -978,7 +978,7 @@ def _write_skewed_embeddings(tmp_path):
 
 
 def test_ivf_rebalance_plan_oracle_parity_and_actions(spark, tmp_path):
-    """The (round-15, unregistered) IVF rebalance plan: per-cell
+    """The (unregistered) IVF rebalance plan: per-cell
     fill/action/sub-cell/priority decisions must match the DuckDB oracle
     on the sf corpus, and the exact-integer action thresholds must fire
     correctly on a crafted skewed corpus (one hot cell -> split with the
@@ -988,9 +988,9 @@ def test_ivf_rebalance_plan_oracle_parity_and_actions(spark, tmp_path):
 
     from hive_server_spark.plans.embedding_pack import (
         _IVF_K,
-        _ivf_rebalance_oracle,
         emb_ivf_rebalance_plan,
     )
+    from tests.ivf_oracles import _ivf_rebalance_oracle
 
     # --- sf corpus: full value parity with the oracle --------------------
     got = sorted(
@@ -1039,7 +1039,7 @@ def test_ivf_rebalance_plan_oracle_parity_and_actions(spark, tmp_path):
 
 
 def test_ivf_split_execute_invariants_and_oracle_parity(spark, tmp_path):
-    """The (round-15, unregistered) IVF split execution: the sub-cells
+    """The (unregistered) IVF split execution: the sub-cells
     must partition each flagged parent's posting list exactly (population
     + checksum conservation), the summed micro-distortion must never
     increase (the parent seed is always among the sub-seeds and floor()
@@ -1050,11 +1050,11 @@ def test_ivf_split_execute_invariants_and_oracle_parity(spark, tmp_path):
     import duckdb
 
     from hive_server_spark.plans.embedding_pack import (
-        _ivf_split_oracle,
         emb_ivf_build,
         emb_ivf_rebalance_plan,
         emb_ivf_split_execute,
     )
+    from tests.ivf_oracles import _ivf_split_oracle
 
     _write_skewed_embeddings(tmp_path)
     sf = str(tmp_path)
@@ -1126,7 +1126,7 @@ def test_rebalance_plan_over_streamed_census_equals_batch(spark):
 
 
 def test_ivf_merge_execute_equals_survivor_rebuild_and_oracle(spark, tmp_path):
-    """The (round-15, unregistered) IVF merge execution: retiring the
+    """The (unregistered) IVF merge execution: retiring the
     underfull cells and folding only their members' reassignment
     partials into the persisted census must equal the full rebuild over
     the surviving centroid set — the centroid-side mirror of the
@@ -1141,10 +1141,10 @@ def test_ivf_merge_execute_equals_survivor_rebuild_and_oracle(spark, tmp_path):
     from hive_server_spark.plans.embedding_pack import (
         _IVF_K,
         _census_report,
-        _ivf_merge_oracle,
         _ivf_partial_census,
         emb_ivf_merge_execute,
     )
+    from tests.ivf_oracles import _ivf_merge_oracle
 
     _write_skewed_embeddings(tmp_path)
     sf = str(tmp_path)
@@ -1186,7 +1186,7 @@ def test_ivf_merge_execute_equals_survivor_rebuild_and_oracle(spark, tmp_path):
 
 
 def test_ivf_split_parent_anchor_survives_duplicate_seed(spark, tmp_path):
-    """ADVICE r15: the split's distortion-never-increases proof must not
+    """The split's distortion-never-increases proof must not
     depend on the parent seed being assigned to its own cell. With an
     exact-duplicate seed pair (vec 1 == vec 0) every tie at d2=0 breaks
     to the LOWER cluster_id, so cell 1 drains into cell 0 entirely (it
@@ -1203,10 +1203,10 @@ def test_ivf_split_parent_anchor_survives_duplicate_seed(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from hive_server_spark.plans.embedding_pack import (
-        _ivf_split_oracle,
         emb_ivf_build,
         emb_ivf_split_execute,
     )
+    from tests.ivf_oracles import _ivf_split_oracle
 
     def vec(spike_dim, extra_dim=None):
         v = [0.0] * 64

@@ -1,4 +1,4 @@
-"""FLAC codec tests (round 11) — no Spark.
+"""FLAC codec tests — no Spark.
 
 Covers: encode/decode roundtrip exactness across subframe kinds, bit
 depths, channel counts and frame boundaries; the hand-built decoder paths
@@ -615,7 +615,7 @@ def test_flac_corpus_fingerprints_like_wav(spark, tmp_path):
 
 
 def test_flac_synthesis_lpc2_short_tail_block_falls_back(spark, tmp_path):
-    """Round-12 review regression: a document long enough to leave a
+    """Regression: a document long enough to leave a
     2-sample tail block (2049 UTF-8 bytes -> 4098 hex samples -> blocks
     [4096, 2] at the default 4096 blocking) in an lpc2 rotation slot
     (doc_id % 3 == 2) must fall back to verbatim coding instead of
@@ -653,7 +653,7 @@ def test_flac_synthesis_lpc2_short_tail_block_falls_back(spark, tmp_path):
 
 
 def test_lpc8_emits_order8_subframe_and_gate_corpus_uses_it(spark, tmp_path):
-    """VERDICT r12 item 5: the gate corpus must exercise the decoder's
+    """The gate corpus must exercise the decoder's
     GENERAL LPC dot-product (order >= 8, different precision and shift
     from the order-2 special case), not just lpc2. Pins (a) the lpc8
     stream really carries an order-8 LPC subframe (stype 39 = 0x20 | 7 —

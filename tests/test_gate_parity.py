@@ -1,6 +1,10 @@
 """Cross-engine parity: every gate query must produce identical rows under
 Spark and under its DuckDB oracle SQL at sf0.001 — a local replica of the
 driver's CORRECTNESS check (BASELINE.md t2 gate), run on every pytest.
+
+After the collect, the plan that ran must match the query's PLANS.md row
+(`scripts/explain_audit.py`): a new sort-merge join, cartesian product,
+shuffle, scan or Python node in any query shows up as a changed count.
 """
 
 from __future__ import annotations
@@ -12,6 +16,7 @@ import pytest
 
 from hive_server_spark import gate
 from hive_server_spark.schemas import DRIVER_TABLES
+from scripts.explain_audit import plan_counts, read_plans
 from tests.conftest import SF_SMALL
 
 
@@ -52,3 +57,13 @@ def test_gate_query_matches_duckdb(spark, name):
     # exercise real rows even at the smallest scale factor
     assert len(s_rows) > 0, f"{name}: empty result (vacuous parity)"
     assert _rowset(s_cols, s_rows) == _rowset(o_cols, o_rows), f"{name}: value mismatch"
+
+    row = read_plans().get(name)
+    assert row is not None, f"{name}: no PLANS.md row; rerun scripts/explain_audit.py"
+    changed = {
+        col: f"{row.get(col)} -> {n}" for col, n in plan_counts(sdf).items() if row.get(col) != n
+    }
+    assert not changed, (
+        f"{name}: final plan differs from PLANS.md {changed}; "
+        "if intended, rerun scripts/explain_audit.py and commit PLANS.md"
+    )

@@ -20,6 +20,7 @@ from hive_server_spark.functions.jpeg import (
     encode_jpeg_gray_blocks,
     encode_jpeg_ycbcr_blocks,
 )
+from tests import jpeg_arith_encoders as jae
 
 
 def _mean(vals, bw, bh):
@@ -77,7 +78,7 @@ def test_truncated_raises():
 
 
 def test_progressive_roundtrip_exact():
-    """SOF2 progressive decode (round 7): DC successive approximation
+    """SOF2 progressive decode: DC successive approximation
     (first scan Al=1, then a refinement scan), per-component AC scans —
     reconstruction at EOI must be bit-exact for the DC-only fixtures,
     including odd negative DC values (the refinement OR on two's
@@ -133,7 +134,7 @@ def test_progressive_ac_successive_approximation_hand_crafted():
 
 
 def test_progressive_420_roundtrip_exact():
-    """Progressive WITH subsampled chroma (round 9): interleaved DC
+    """Progressive WITH subsampled chroma: interleaved DC
     scans over the 2x2 luma clusters + per-component AC scans over each
     component's own block grid must reconstruct the constant blocks
     exactly (neutral chroma -> decoded RGB == replicated luma)."""
@@ -321,7 +322,7 @@ def test_strict_dispatch_reports_jpeg_decoder():
 
 
 def test_12bit_extended_sequential_roundtrip_exact():
-    """12-bit SOF1 decode (round 9): Pq=1 16-bit quant table, level shift
+    """12-bit SOF1 decode: Pq=1 16-bit quant table, level shift
     2048, clamp to 0..4095, mean normalized by 4095 — exact for the
     constant-block fixture, including DC diffs spanning category 12."""
     from hive_server_spark.functions.jpeg import encode_jpeg_12bit_gray_blocks
@@ -425,11 +426,11 @@ def test_decode_error_contract_under_mutation():
 
     seeds = [
         jpeg.encode_jpeg_gray_blocks([10, 200, 30, 99], 2, 2),
-        jpeg.encode_jpeg_arith_gray_blocks([10, 200, 30, 99], 2, 2, 2),
+        jae.encode_jpeg_arith_gray_blocks([10, 200, 30, 99], 2, 2, 2),
         jpeg.encode_jpeg_progressive_blocks([[10, 200, 30, 99]], 2, 2),
-        jpeg.encode_jpeg_arith_progressive_blocks([[10, 200, 30, 99]], 2, 2),
+        jae.encode_jpeg_arith_progressive_blocks([[10, 200, 30, 99]], 2, 2),
         jpeg.encode_jpeg_lossless([[[1, 2], [3, 4]]], restart_interval=1),
-        jpeg.encode_jpeg_arith_lossless([[[1, 2], [3, 4]]], restart_interval=1),
+        jae.encode_jpeg_arith_lossless([[[1, 2], [3, 4]]], restart_interval=1),
         jpeg.encode_jpeg_12bit_gray_blocks([1000, 3000], 2, 1),
     ]
     for seed in seeds:
@@ -448,7 +449,7 @@ def test_decode_error_contract_under_mutation():
 
 
 def test_odd_length_dac_segment_raises():
-    """ADVICE r9: an odd-length DAC payload (the segment is 2-byte
+    """An odd-length DAC payload (the segment is 2-byte
     (Tc/Tb, Cs) pairs by construction, T.81 B.2.4.3) must raise the
     malformed-stream ValueError, not silently drop its trailing byte."""
     p = encode_jpeg_gray_blocks([100], 1, 1)

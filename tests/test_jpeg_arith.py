@@ -19,6 +19,7 @@ import pytest
 
 from hive_server_spark.functions import jpeg
 from hive_server_spark.functions import jpeg_arith as ja
+from tests import jpeg_arith_encoders as jae
 
 # T.81 §K.4: 256-bit test input and the spec's coded sequence (the code
 # string body; the spec then discards trailing zero bytes and appends EOI)
@@ -119,7 +120,7 @@ def test_cross_coder_gray_equality():
         vals = [rng.randrange(256) for _ in range(bw * bh)]
         ri = rng.choice([0, 0, 1, 2, 3])
         h = jpeg.decode_jpeg(jpeg.encode_jpeg_gray_blocks(vals, bw, bh, ri))
-        a = jpeg.decode_jpeg(jpeg.encode_jpeg_arith_gray_blocks(vals, bw, bh, ri))
+        a = jpeg.decode_jpeg(jae.encode_jpeg_arith_gray_blocks(vals, bw, bh, ri))
         assert h == a, (trial, bw, bh, ri)
 
 
@@ -134,7 +135,7 @@ def test_cross_coder_ycbcr_420_equality():
         cr = [rng.randrange(256) for _ in range(cbw * cbh)]
         h = jpeg.decode_jpeg(jpeg.encode_jpeg_ycbcr_420_blocks(y, cb, cr, cbw, cbh))
         a = jpeg.decode_jpeg(
-            jpeg.encode_jpeg_arith_ycbcr_420_blocks(y, cb, cr, cbw, cbh)
+            jae.encode_jpeg_arith_ycbcr_420_blocks(y, cb, cr, cbw, cbh)
         )
         assert h == a, trial
 
@@ -169,7 +170,7 @@ def test_coeff_fixture_exercises_ac_ladders():
                 cbk[rng.randrange(1, 64)] = rng.randrange(-255, 256) or 1
             blocks.append(cbk)
         w, hgt, mean = jpeg.decode_jpeg(
-            jpeg.encode_jpeg_arith_gray_coeffs(blocks, bw, bh)
+            jae.encode_jpeg_arith_gray_coeffs(blocks, bw, bh)
         )
         assert (w, hgt) == (bw * 8, bh * 8)
         assert mean == _expected_mean_from_coeffs(blocks, bw, bh), trial
@@ -189,7 +190,7 @@ def test_nondefault_dac_conditioning_end_to_end():
             for _ in range(10):
                 cbk[rng.randrange(1, 64)] = rng.randrange(-300, 300) or 3
             blocks.append(cbk)
-        payload = jpeg.encode_jpeg_arith_gray_coeffs(
+        payload = jae.encode_jpeg_arith_gray_coeffs(
             blocks, 3, 2, dc_cond=dc_cond, ac_kx=kx
         )
         w, hgt, mean = jpeg.decode_jpeg(payload)
@@ -238,7 +239,7 @@ def test_cross_coder_progressive_equality():
             jpeg.encode_jpeg_progressive_blocks(planes, bw, bh, sampling, **kw)
         )
         a = jpeg.decode_jpeg(
-            jpeg.encode_jpeg_arith_progressive_blocks(planes, bw, bh, sampling, **kw)
+            jae.encode_jpeg_arith_progressive_blocks(planes, bw, bh, sampling, **kw)
         )
         assert h == a, trial
 
@@ -262,7 +263,7 @@ def test_progressive_arith_four_scan_refinement():
                 )
             blocks.append(cbk)
         w, hgt, mean = jpeg.decode_jpeg(
-            jpeg.encode_jpeg_arith_progressive_coeffs(blocks, bw, bh)
+            jae.encode_jpeg_arith_progressive_coeffs(blocks, bw, bh)
         )
         assert (w, hgt) == (bw * 8, bh * 8)
         assert mean == _expected_mean_from_coeffs(blocks, bw, bh), trial
@@ -277,7 +278,7 @@ def test_cross_coder_12bit_equality():
         bw, bh = rng.randrange(1, 6), rng.randrange(1, 6)
         vals = [rng.randrange(4096) for _ in range(bw * bh)]
         h = jpeg.decode_jpeg(jpeg.encode_jpeg_12bit_gray_blocks(vals, bw, bh))
-        a = jpeg.decode_jpeg(jpeg.encode_jpeg_arith_12bit_gray_blocks(vals, bw, bh))
+        a = jpeg.decode_jpeg(jae.encode_jpeg_arith_12bit_gray_blocks(vals, bw, bh))
         assert h == a, trial
 
 
@@ -313,8 +314,8 @@ except ImportError:  # pragma: no cover - hypothesis is baked in normally
 
 def test_differential_sofs_refused_outside_dhp():
     # differential SOFs decode only inside a hierarchical (DHP) sequence
-    # (round 10); outside one they keep the strict-refusal stance
-    payload = bytearray(jpeg.encode_jpeg_arith_gray_blocks([100], 1, 1))
+    #; outside one they keep the strict-refusal stance
+    payload = bytearray(jae.encode_jpeg_arith_gray_blocks([100], 1, 1))
     idx = payload.find(b"\xff\xc9")
     for sof in (0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF):
         p = bytearray(payload)
@@ -353,7 +354,7 @@ def test_lossless_arith_roundtrip_all_predictors_and_precisions():
             )
             for _ in range(ncomp)
         ]
-        payload = jpeg.encode_jpeg_arith_lossless(
+        payload = jae.encode_jpeg_arith_lossless(
             planes, predictor=pred, precision=prec, restart_interval=ri,
             dc_cond=cond,
         )
@@ -380,7 +381,7 @@ def test_lossless_arith_matches_huffman_lossless():
             )
         ]
         hp = jpeg.encode_jpeg_lossless(planes, predictor=pred)
-        ap = jpeg.encode_jpeg_arith_lossless(planes, predictor=pred)
+        ap = jae.encode_jpeg_arith_lossless(planes, predictor=pred)
         wh_h, hh_h, s_h = decode_jpeg_samples(hp)
         wh_a, hh_a, s_a = decode_jpeg_samples(ap)
         assert (wh_h, hh_h) == (wh_a, hh_a)
@@ -396,7 +397,7 @@ def test_lossless_arith_point_transform_and_wraparound():
     # Pt > 0: codes v >> Pt, decoder shifts back — Pt-truncated exactly
     samples = np.arange(64).reshape(8, 8) * 4 + 3
     _, _, s = decode_jpeg_samples(
-        jpeg.encode_jpeg_arith_lossless([samples], precision=8, pt=2)
+        jae.encode_jpeg_arith_lossless([samples], precision=8, pt=2)
     )
     assert np.array_equal(s[0], ((samples >> 2) << 2).astype(float))
     # mod-65536 wraparound diff (-32768) at 16-bit precision: the
@@ -404,7 +405,7 @@ def test_lossless_arith_point_transform_and_wraparound():
     # must carry Sz = 32767 (msb 0x4000) without overflow
     wrap = np.array([[0, 32768, 0, 32768]])
     _, _, s = decode_jpeg_samples(
-        jpeg.encode_jpeg_arith_lossless([wrap], predictor=1, precision=16)
+        jae.encode_jpeg_arith_lossless([wrap], predictor=1, precision=16)
     )
     assert np.array_equal(s[0], wrap.astype(float))
 
@@ -415,7 +416,7 @@ def test_lossless_arith_truncation_is_deterministic():
     import numpy as np
 
     img = np.arange(64).reshape(8, 8) * 3 % 256
-    full = jpeg.encode_jpeg_arith_lossless([img])
+    full = jae.encode_jpeg_arith_lossless([img])
     cut = full[:-6] + b"\xff\xd9"
     r1 = jpeg.decode_jpeg(cut)
     r2 = jpeg.decode_jpeg(cut)
@@ -426,7 +427,7 @@ def test_truncated_arith_stream_is_deterministic():
     """Truncation mid-scan zero-feeds (T.81 F.2.2.3) rather than raising:
     arithmetic scans have no codeword boundary to detect truncation at —
     but the result must be deterministic, not garbage-read."""
-    full = jpeg.encode_jpeg_arith_gray_blocks(list(range(0, 256, 16)), 4, 4)
+    full = jae.encode_jpeg_arith_gray_blocks(list(range(0, 256, 16)), 4, 4)
     # chop entropy bytes just before EOI
     cut = full[:-6] + b"\xff\xd9"
     r1 = jpeg.decode_jpeg(cut)

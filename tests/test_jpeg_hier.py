@@ -1,4 +1,4 @@
-"""Hierarchical JPEG (T.81 Annex J) decode tests — round 10.
+"""Hierarchical JPEG (T.81 Annex J) decode tests.
 
 DHP + EXP + differential-frame decode against a numpy mirror of the
 spec's reconstruction (J.1.1.2 expansion, modulo-2^16 differential
@@ -197,7 +197,7 @@ def test_hierarchical_fuzz_never_misdecodes():
 
 
 # ---------------------------------------------------------------------------
-# full process matrix (round 10 second pass): every T.81 frame process
+# full process matrix: every T.81 frame process
 # decodes inside a hierarchical sequence, under both entropy coders
 # ---------------------------------------------------------------------------
 
@@ -248,9 +248,7 @@ def test_hierarchical_lossless_exact(precision):
 
 
 def test_hierarchical_lossless_arith_exact():
-    from hive_server_spark.functions.jpeg import (
-        encode_jpeg_hierarchical_lossless_arith,
-    )
+    from tests.jpeg_arith_encoders import encode_jpeg_hierarchical_lossless_arith
 
     rng = np.random.default_rng(9)
     base = rng.integers(0, 256, size=(5, 6))

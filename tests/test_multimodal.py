@@ -302,7 +302,7 @@ def test_png_malformed_ihdr_is_valueerror_not_struct_error():
 
 
 # ---------------------------------------------------------------------------
-# WAV audio codec (round 6)
+# WAV audio codec
 # ---------------------------------------------------------------------------
 
 
@@ -397,7 +397,7 @@ def test_wav_nonstrict_fake_pcm8(spark):
 
 
 # ---------------------------------------------------------------------------
-# nearest-neighbor resize transform (round 6)
+# nearest-neighbor resize transform
 # ---------------------------------------------------------------------------
 
 
@@ -572,18 +572,19 @@ def test_image_value_histogram_and_entropy_recompute(spark):
 
 def test_strict_decode_arithmetic_jpeg_via_spark(spark):
     """SOF9/SOF10 arithmetic payloads decode under strict=True inside
-    mapInPandas — the round-9 QM-coder path wired through the actual
+    mapInPandas — the QM-coder path wired through the actual
     Arrow-worker pipeline, values matching the local decoder exactly."""
     from hive_server_spark.functions import jpeg
+    from tests import jpeg_arith_encoders as jae
 
     payloads = []
     for i in range(8):
         vals = [(i * 37 + k * 11) % 256 for k in range(4)]
         if i % 2 == 0:
-            payloads.append(jpeg.encode_jpeg_arith_gray_blocks(vals, 2, 2))
+            payloads.append(jae.encode_jpeg_arith_gray_blocks(vals, 2, 2))
         else:
             payloads.append(
-                jpeg.encode_jpeg_arith_progressive_blocks([vals], 2, 2)
+                jae.encode_jpeg_arith_progressive_blocks([vals], 2, 2)
             )
     rows = [
         (i, "image", p, {"declared_format": "image/jpeg", "n_bytes": len(p)})
@@ -785,7 +786,7 @@ def test_audio_fp_bands_match_closed_form(spark):
 
 def test_audio_fp_neardup_oracle_parity(spark, tmp_path):
     """Full Spark-vs-DuckDB parity of the audio fingerprint near-dup
-    query (registered in the round-10 driver window) over a crafted
+    query over a crafted
     corpus AND the sf0.001 corpus."""
     import duckdb
     import pyarrow as pa
@@ -837,9 +838,8 @@ def test_audio_fp_neardup_oracle_parity(spark, tmp_path):
 
 
 def test_jpeg_hierarchical_profile_oracle_parity(spark, tmp_path):
-    """Full Spark-vs-DuckDB parity of the (round-11-deferred) hierarchical
-    JPEG decode profile over a crafted corpus AND the sf0.001 corpus — so
-    the round-11 registration is a one-line flip with parity proven."""
+    """Full Spark-vs-DuckDB parity of the hierarchical JPEG decode profile
+    over a crafted corpus AND the sf0.001 corpus."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -937,10 +937,8 @@ def test_video_fp_bands_match_closed_form(spark):
 
 
 def test_video_fp_neardup_oracle_parity(spark, tmp_path):
-    """Full Spark-vs-DuckDB parity of the (round-11-deferred) video
-    fingerprint near-dup query over a crafted corpus AND the sf0.001
-    corpus — so the round-11 registration is a one-line flip with the
-    parity already proven."""
+    """Full Spark-vs-DuckDB parity of the video fingerprint near-dup
+    query over a crafted corpus AND the sf0.001 corpus."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -1049,7 +1047,7 @@ def test_resample_audio_via_spark(spark):
 
 
 def test_wav_parse_rejects_nonpositive_rate_and_channels():
-    """The shared codec error contract (ADVICE r10): a crafted PCM WAV
+    """The shared codec error contract: a crafted PCM WAV
     whose fmt chunk declares sample rate 0 (or zero channels) must raise
     ValueError at parse — never leak a ZeroDivisionError out of
     resample_audio's (n*dst)//src or the channel math downstream."""

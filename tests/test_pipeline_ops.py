@@ -1,4 +1,4 @@
-"""Unit pins for the round-2 pipeline operators — properties the gate's
+"""Unit pins for the pipeline operators — properties the gate's
 value-hash can't see on its own:
 - hash sampling is invariant under repartitioning (the reproducibility claim);
 - gap fill emits NULL before the first observation and carries values
@@ -500,7 +500,7 @@ def test_media_pipeline_script_end_to_end(spark, tmp_path, monkeypatch, capsys):
     # ingest (versioned band index, media_id-ordered chunks) instead of
     # the one-shot batch rule — the final manifest in the SAME out dir
     # must be row-identical, proving the batch and streaming pipelines
-    # share state layout (VERDICT r12 item 6)
+    # share state layout
     batch_rows = sorted(tuple(r) for r in manifest.collect())
     monkeypatch.setattr(
         sys, "argv",
@@ -548,9 +548,9 @@ def test_embedding_pipeline_script_end_to_end(spark, tmp_path, monkeypatch, caps
     out = capsys.readouterr().out
     assert "ivf_census[batch]" in out
     assert "batch ingest mode" in out
-    # the round-14 maintenance stage ran and reconciled its tombstones
+    # the maintenance stage ran and reconciled its tombstones
     assert "ivf_delete_maintenance" in out and "tombstones ->" in out
-    # the round-15 monitor + rebalance + merge stages ran and reconciled
+    # the monitor + rebalance + merge stages ran and reconciled
     assert "ivf_rebalance_plan" in out and "flagged for split" in out
     assert "ivf_split_execute" in out
     assert "ivf_merge_execute" in out
@@ -656,11 +656,11 @@ def test_layout_pipeline_script_end_to_end(spark, tmp_path, monkeypatch, capsys)
 
 
 def test_bench_compare_flags_subfloor_regressions(tmp_path, monkeypatch, capsys):
-    """VERDICT r12 item 4: the round-over-round sweep must list EVERY
+    """The run-over-run sweep must list EVERY
     query with a best-of-reps ratio over the flag threshold, regardless
     of absolute time — the absolute floor only classifies a flag as
-    sub-floor host-noise class, it must never suppress the line (the r12
-    sweep silently dropped a 1.54x sub-floor flag exactly that way)."""
+    sub-floor host-noise class, it must never suppress the line (an
+    earlier sweep silently dropped a 1.54x sub-floor flag exactly that way)."""
     import json
     import os
     import runpy

@@ -1,13 +1,13 @@
 """Physical-plan regression guards: the scale posture (pushdown, pruning,
 broadcast joins) is asserted, not just documented — a future change that
 silently drops a pushed filter, widens a scan, or flips a dimension join to
-sort-merge fails here before it ships."""
+sort-merge fails here before it ships. Every query's join, exchange, scan
+and Python-node counts are checked against PLANS.md by
+`tests/test_gate_parity.py`."""
 
 from __future__ import annotations
 
 import re
-
-import pytest
 
 from hive_server_spark import gate
 from tests.conftest import SF_SMALL
@@ -41,139 +41,12 @@ def test_fold_reads_only_needed_event_columns(spark):
     assert "value" not in "".join(schemas)
 
 
-def test_no_sort_merge_join_anywhere_in_gate(spark):
-    """Every *dimension* join must resolve to broadcast/hash — a sort-merge
-    join appearing means a dimension grew past the broadcast threshold or a
-    hint was lost. Exempt: queries whose joins are intentionally big-big
-    (shuffle joins are the correct 100 TB strategy there):
-    - emb_lsh_neardup_topk: bucket self-join, both sides are the corpus;
-    - dedup_clusters: iterative graph joins, co-partitioned by design
-      (broadcasting labels would break on billion-edge graphs);
-    - rel_full_outer_nation_activity: FULL OUTER has no broadcast form.
-    No query, exempt or not, may plan a CartesianProduct: an unbroadcast
-    cross join is never right. BroadcastNestedLoopJoin is allowed, for
-    bounded scalar broadcasts (a 1-row total or k-row centroid table
-    cross-joined onto every row)."""
-    exempt = {
-        "orders_state_streaming",
-        "evt_hourly_rollup_streaming",  # runs a real stream; plan is a memory-table scan
-        "evt_sliding_rollup_streaming",  # same: overlapping-window stream
-        "evt_sessions_streaming",  # same: session_window stream, memory-table scan
-        "evt_stream_stream_join",  # same: watermarked join stream, memory-table scan
-        "evt_dedup_rollup_streaming",  # same: chained stateful stream
-        "evt_stream_static_enrich",  # same: stream-static join stream
-        "orders_state_time_travel",  # same: incremental fold stream + snapshot read
-        "orders_state_stateful",  # same: applyInPandasWithState stream
-        "cdc_book_snapshots",  # same: CDC fold stream; visible plan is the snapshot scan
-        "orders_state_changelog",  # same: incremental fold stream + version diffs
-        "emb_lsh_neardup_topk",
-        "rag_hybrid_rrf",  # FULL OUTER has no broadcast form (the
-        # rel_full_outer_nation_activity case) — but both fusion inputs are
-        # ≤k-row top-k sets by construction, so the SMJ sorts ~2k rows
-        "emb_bitext_mining",  # same family as emb_lsh_neardup_topk: src-lang
-        # corpus ⋈ tgt-lang corpus on LSH bucket — both sides are corpus
-        # slices, so a co-partitioned shuffle join IS the 100 TB plan; the
-        # hint-free small-scale strategy flips on borderline size stats
-        "dedup_clusters",
-        "emb_semantic_dedup",  # same shape as dedup_clusters: corpus ⋈ CC
-        # labels (+ cluster-size agg) on vec_id/cluster_id — the label side
-        # is O(duplicated vectors), not broadcastable at scale, and the plan
-        # flips between BHJ/SMJ on borderline localCheckpoint size stats
-        "text_leakage_safe_splits",  # same shape as dedup_clusters: corpus ⋈ CC labels
-        "text_pretrain_keep",  # three corpus-sized sides (profile ⋈ CC labels ⋈
-        # repetition) joined on doc_id — co-partitioned shuffle joins are the
-        # correct 100 TB strategy; no side is broadcastable
-        "text_kept_token_shards",  # same shape: the token table semi-joins
-        # the keep verdict and train split, all three corpus-sized on doc_id
-        "dedup_canonical_quality",  # same shape: corpus ⋈ CC labels ⋈
-        # profile, all doc_id-keyed and corpus-sized — co-partitioned
-        # shuffle joins, nothing broadcastable at scale
-        "dedup_minhash_accuracy",  # candidate pairs ⋈ signatures ⋈ shingle
-        # table: the pair set is O(near-dups) (unbounded at scale, not a
-        # dimension) and the other sides are the corpus — big-big on
-        # doc_id/(doc, shingle) is the correct strategy
-        "text_line_dedup",  # the boilerplate-line survivor set is
-        # corpus-derived and huge on real web corpora (billions of repeated
-        # lines in C4/CCNet) — de-broadcast in r7 (VERDICT r06); the plan
-        # may legitimately resolve big-big on the line hash
-        "text_dup_spans",  # same shape: the duplicated-gram survivor set
-        # is a large corpus fraction at scale (Lee et al. 2021) — plain
-        # equi-join on the gram digest, stats decide the strategy
-        "text_bigram_nll",  # the head-count (c_a) side is vocabulary-
-        # sized, unbounded for whitespace tokens on web text — plain
-        # equi-join on the head token, stats decide the strategy
-        "rel_full_outer_nation_activity",
-        "evt_hll_set_algebra",  # the exact-intersection audit self-join:
-        # two corpus-derived distinct (type, user) sets joined on user_id
-        # — both sides are data-dependent and user-cardinality-sized
-        # (unbounded at scale), so the co-partitioned sort-merge is the
-        # correct plan; the sketch half of the query touches only the
-        # bounded register tables
-        "layout_manifest_diff",  # manifest ⋈ manifest FULL OUTER on
-        # file_id: both sides are file-count-sized (millions of rows on a
-        # large table, and full outer cannot one-side-broadcast anyway) —
-        # the co-partitioned sort-merge is the correct snapshot-diff plan
-        "emb_ivfpq_topk",  # codes ⋈ probed-cell candidates: both sides
-        # exit vec_id hash aggregates over the corpus (codes are the whole
-        # index, candidates ~nprobe/nlist of it) — a vec_id co-partitioned
-        # shuffle join that reuses the aggregate partitioning is the
-        # correct 100 TB strategy; in a deployed index the codes are
-        # stored partitioned by cell and the join disappears
-        "emb_ivfpq_rerank_topk",  # stage 1 IS emb_ivfpq_topk's machinery
-        # (same codes ⋈ candidates join, same argument above); stage 2
-        # only touches the ≤shortlist-row set, all its joins broadcast
-        "multimodal_video_curation",  # the final keep-verdict join:
-        # per-clip shot counts LEFT OUTER ⋈ per-clip dup partners, both
-        # sides clip-count-sized corpus aggregates exiting mapInPandas
-        # (no broadcastable dimension; at 100 TB the partner side is
-        # O(near-dup clips), unbounded) — a media_id co-partitioned
-        # shuffle join that reuses the aggregates' partitioning is the
-        # correct plan; the banded candidate tail upstream stays
-        # BHJ/bounded exactly like the registered fp gates
-        "layout_bucketed_join",  # (registered r15) the SMJ is the POINT:
-        # both sides are bucketBy(8, custkey) tables, so the sort-merge
-        # join runs with ZERO exchange under it — the pre-shuffled
-        # co-located join bucketing exists to provide; the dedicated
-        # plan contract (only the final aggregate exchanges, both scans
-        # advertise Bucketed: true) is pinned in test_scale_utils.py
-        "multimodal_bundle_neardup",  # the final fused assembly: docs
-        # LEFT OUTER ⋈ per-modality partner tables on doc_id. Each
-        # partner table is a per-document aggregate over verified
-        # near-dup pairs — O(near-dup docs), corpus-derived and
-        # unbounded at 100 TB (the video_curation keep-verdict
-        # argument, one hop further: three modality legs instead of
-        # one) — and exits a doc_id-keyed groupBy already hash-
-        # partitioned on the join key, so the co-partitioned shuffle
-        # join reuses that partitioning with no extra exchange; the
-        # banded candidate tails upstream stay BHJ/bounded exactly
-        # like the registered per-modality gates
-        "emb_ivfpq_batch_topk",  # the batch read path inherits exactly
-        # the emb_ivfpq_topk shape: codes ⋈ candidate restriction and
-        # candidates ⋈ decoded sub-codes, all vec_id-keyed and corpus-
-        # derived (candidates are the union of every query's probed
-        # cells, which GROWS with the query batch — even less
-        # broadcastable than the single-query case); only the per-query
-        # routing table and LUT broadcast
-    }
-    offenders = []
-    for name in sorted(gate.spark_queries()):
-        try:
-            plan = _plan(spark, name)
-        except Exception as e:  # pragma: no cover
-            pytest.fail(f"{name}: explain failed: {e}")
-        if "CartesianProduct" in plan:
-            offenders.append(f"{name}: CartesianProduct")
-        if "SortMergeJoin" in plan and name not in exempt:
-            offenders.append(f"{name}: SortMergeJoin")
-    assert not offenders, f"plan-shape offenders: {offenders}"
-
-
 def test_survivor_set_joins_are_not_hint_forced(spark):
     """The three survivor-set joins (boilerplate lines, duplicated grams,
     bigram head counts) must NOT carry a broadcast hint: the survivor side
     is data-dependent and corpus-derived — huge on real web corpora — so a
-    forced broadcast OOMs at exactly the scale these operators target
-    (VERDICT r06). Without the hint Spark's size stats / AQE still elect a
+    forced broadcast OOMs at exactly the scale these operators target.
+    Without the hint Spark's size stats / AQE still elect a
     broadcast when the set genuinely is small; hint-free is the contract.
     The hint survives analysis as ResolvedHint, so its absence in the
     analyzed plan proves no F.broadcast() wrap anywhere in the query."""
@@ -193,8 +66,8 @@ def test_topk_uses_bounded_sort(spark):
 
 def test_packing_prefix_sum_is_two_level(spark):
     """text_token_shards / text_pack_windows must never run a doc-level
-    window partitioned only by source (VERDICT r04: that caps parallelism at
-    the source count — the one 100 TB scale-killer found in round 4). The
+    window partitioned only by source (that caps parallelism at the source
+    count, a 100 TB scale-killer). The
     two-level rewrite keeps exactly one source-only window — the running
     offset over per-bucket SUBTOTALS (ordered by bucket) — while the window
     that touches document rows partitions on (source, bucket)."""

@@ -59,7 +59,7 @@ def test_amount_out_cap_reports_insufficient_when_uncapped_fills(spark):
 
 
 def test_bounded_threshold_fallback_and_cap_parity_events_orders(spark, tmp_path):
-    """Round-10 twin of test_heldout_threshold_fallback_and_cap_parity for
+    """Twin of test_heldout_threshold_fallback_and_cap_parity for
     the events/relational routes through operators/heldout.py: (a) a group
     with NO held-out rows -> global-fallback thresholds; (b) a group with
     more held-out rows than the cap -> the (draw_key, key) cap binds. Full

@@ -1,15 +1,11 @@
-"""Scale utilities: salted-join equivalence and partition-pruned layout."""
+"""Scale utilities: salted-join equivalence and lakehouse-layout operators."""
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import functions as F
 
 from hive_server_spark.catalog import load_table
-from hive_server_spark.operators.fold import fold_order_events
 from hive_server_spark.operators.skew import salted_join
-from hive_server_spark.sources import layout
 from hive_server_spark.sources.synthetic import order_events
 from tests.conftest import SF_SMALL
 
@@ -37,51 +33,6 @@ def test_salted_join_rejects_ambiguous_columns(spark):
     ev = order_events(spark, SF_SMALL).select("pool_address", "seq")
     with pytest.raises(ValueError):
         salted_join(ev, ev, "pool_address")
-
-
-def test_partitioned_layout_prunes_to_one_bucket(spark):
-    orders = fold_order_events(order_events(spark, SF_SMALL))
-    with tempfile.TemporaryDirectory(prefix="hss_layout_") as root:
-        path = f"{root}/orders"
-        layout.write_orders_partitioned(orders, path)
-        dirs = layout.partition_dirs(path)
-        assert 1 <= len(dirs) <= layout.N_BUCKETS
-
-        pool = orders.first().pool_address
-        pruned = layout.read_pool_orders(spark, path, pool)
-        # correctness: identical rows to an unpartitioned filter
-        want = orders.where(F.col("pool_address") == pool)
-        assert _rows(pruned) == _rows(want.select(*pruned.columns))
-
-        # pruning: scans at most the files of ONE bucket directory
-        total_files = layout.scanned_files(spark.read.parquet(path))
-        pruned_files = layout.scanned_files(pruned)
-        assert pruned_files < total_files or len(dirs) == 1
-
-
-def test_center_embeddings_per_label(spark):
-    from hive_server_spark.functions.embeddings import center_embeddings_per_label
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    centered = center_embeddings_per_label(emb)
-    assert centered.count() == emb.count()
-    import numpy as np
-
-    rows = centered.where(F.col("label") == 0).collect()
-    mat = np.vstack([np.asarray(r.embedding) for r in rows])
-    assert np.abs(mat.mean(axis=0)).max() < 1e-4  # centroid removed
-
-
-def test_compaction_reduces_file_count(spark, tmp_path):
-    from hive_server_spark.sources.layout import compact, scanned_files
-
-    src = f"{tmp_path}/fragmented"
-    ev = order_events(spark, SF_SMALL)
-    ev.repartition(13).write.parquet(src)
-    assert scanned_files(spark.read.parquet(src)) == 13
-    n = compact(spark, src, f"{tmp_path}/compacted", target_files=2)
-    assert n == 2
-    assert spark.read.parquet(f"{tmp_path}/compacted").count() == ev.count()
 
 
 def test_zorder_files_cover_compact_boxes(spark):

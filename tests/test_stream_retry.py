@@ -3,7 +3,7 @@ the transient-py4j retry in BOTH failure modes: the noisy one (socket
 reset surfaces as an exception) and the silent one (the callback channel
 wedges and an ACTIVE stream stops making progress, which a bare
 awaitTermination() would wait on forever — observed as a 30+ minute
-verify stall in round 9). Fake StreamingQuery objects keep these tests
+verify stall). Fake StreamingQuery objects keep these tests
 Spark-free and sub-second."""
 
 from __future__ import annotations
@@ -102,7 +102,7 @@ def test_retry_gives_up_after_attempts():
 
 
 def test_stall_path_waits_for_failed_stop_to_settle():
-    """ADVICE r9: a stop() that raises (or exceeds stopTimeout) can leave
+    """A stop() that raises (or exceeds stopTimeout) can leave
     the query ACTIVE; the stall path must wait (bounded) for isActive to
     clear so the retry's start on the same checkpoint doesn't collide."""
 
@@ -129,7 +129,7 @@ def test_stall_path_waits_for_failed_stop_to_settle():
 
 
 def test_retry_treats_concurrent_start_as_retryable():
-    """ADVICE r9: if the wedged predecessor never released the checkpoint,
+    """If the wedged predecessor never released the checkpoint,
     the next start fails with CONCURRENT_QUERY / 'already active' — that
     must consume a retry attempt, not abort the remaining ones."""
     calls = []

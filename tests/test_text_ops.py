@@ -42,6 +42,25 @@ def test_spread_reads_the_plan_and_submits_no_job(spark):
     assert _formatted(media_again) == _formatted(media)
 
 
+def test_reachability_keeps_the_shared_candidate_cache(spark):
+    """`dedup_reachability_recursive` reads the session's persisted LSH
+    candidates through a temp view. Dropping a temp view uncaches its plan,
+    so a per-call drop would leave every later candidate consumer to
+    recompute them: after a call the candidates stay cached, and a second
+    call submits no more jobs than the first."""
+    from hive_server_spark.plans import text_pack as TP
+    from tests.conftest import next_job_id
+
+    cand = TP._minhash_candidates(spark, SF_SMALL)
+    level = cand.storageLevel
+    first = next_job_id(spark)
+    TP.dedup_reachability_recursive(spark, SF_SMALL).collect()
+    mid = next_job_id(spark)
+    assert cand.storageLevel == level, "the call uncached the shared candidates"
+    TP.dedup_reachability_recursive(spark, SF_SMALL).collect()
+    assert next_job_id(spark) - mid <= mid - first
+
+
 def test_minhash_candidates_recall_planted_dups(spark):
     """Every true near-dup pair (3-gram Jaccard >= 0.8) must appear in the
     MinHash-LSH candidate set — banding with 4 bands x 2 rows has >=98%
@@ -95,7 +114,7 @@ def test_simhash_near_for_near_texts(spark):
 
 # ---------------------------------------------------------------------------
 # Adversarial hot-key bounds: the scale claims in text.py:19-25 pinned as
-# join-ROW counts, not wall time (VERDICT r2 item 5).
+# join-ROW counts, not wall time.
 # ---------------------------------------------------------------------------
 def _shingle_join_volume(edges) -> int:
     """Exact output volume of the shingle self-join: sum over shingles of
@@ -410,7 +429,7 @@ def test_line_dedup_hand_computed(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-6 additions: substring-span dedup, source mixing, length buckets
+# substring-span dedup, source mixing, length buckets
 # ---------------------------------------------------------------------------
 def test_dup_span_report_hand_computed(spark):
     """Interval-merge correctness on planted passages: single shared 8-gram,
@@ -679,7 +698,7 @@ def test_dup_span_report_randomized_vs_python(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-7 additions: vocabulary census, winnowing fingerprints
+# vocabulary census, winnowing fingerprints
 # ---------------------------------------------------------------------------
 def test_vocab_census_hand_computed(spark):
     """3-doc corpus with known counts: cf/df/rank/cf_frac exact, tie on cf
@@ -1302,7 +1321,7 @@ def test_hash_features_score_python_recompute(spark):
 def test_bpe_apply_merge_edge_cases(spark):
     """The merge-application fold on adversarial symbol sequences — the
     exact cases a plain string replace gets wrong (separator sharing on
-    back-to-back pairs; review finding r08): Spark column, DuckDB SQL,
+    back-to-back pairs): Spark column, DuckDB SQL,
     and a python greedy reference must agree element-wise."""
     import duckdb
 
@@ -1405,7 +1424,7 @@ def test_bpe_apply_merge_property_random(spark):
 
 
 def test_bpe_separator_chars_full_parity(spark, tmp_path):
-    """ADVICE-r8 high: parens and the Java-'.'-excluded line separators
+    """Parens and the Java-'.'-excluded line separators
     (U+2028 / U+2029 / U+0085 / \\x0b / \\x0c) through the FULL BPE
     train + encode pipeline, Spark vs the registered DuckDB oracle.
 

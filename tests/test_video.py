@@ -1,4 +1,4 @@
-"""RIFF/AVI MJPEG codec + video operator tests (round 10).
+"""RIFF/AVI MJPEG codec + video operator tests.
 
 Covers the container codec's exactness and error contract without Spark,
 then the Spark surface: synthesis → strict decode_video parity with the
@@ -294,7 +294,7 @@ def test_video_frame_stats_rows(spark, tmp_path):
 
 
 def test_video_scenes_oracle_parity(spark, tmp_path):
-    """Full Spark-vs-DuckDB parity of the (round-11-deferred) scene
+    """Full Spark-vs-DuckDB parity of the scene
     segmentation query over a crafted corpus AND the sf0.001 corpus."""
     import duckdb
 
@@ -419,7 +419,7 @@ def _two_stream_avi(frame_jpegs, width, height, rate=10, scale=1,
 def test_avi_audio_first_stream_layout():
     """An AVI whose audio stream is declared before the video stream keeps
     its video frames in '01dc' chunks — the parse must track the vids
-    strl position instead of hard-coding stream 0 (ADVICE r10)."""
+    strl position instead of hard-coding stream 0."""
     frames = _frames([[10, 20], [30, 40]], 2, 1)
     avi = _two_stream_avi(frames, 16, 8, rate=20)
     got = parse_avi(avi)
