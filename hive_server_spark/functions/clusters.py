@@ -135,28 +135,27 @@ def split_refresh(
     return occupied_flags(batch, merged, keys, id)
 
 
+# partitions of the materialized edge set: near-dup graphs are small
+_GRAPH_PARTITIONS = 4
+
+
 def connected_components(
-    pairs: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
-    max_iter: int = 20,
-    graph_partitions: int | None = None,
+    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b"
 ) -> DataFrame:
     """pairs(a, b) → (doc_id, cluster_id) where cluster_id = min doc id in
     the component. Docs absent from `pairs` are their own singleton cluster
-    (join the result back to the corpus with a coalesce for those)."""
+    (join the result back to the corpus with a coalesce for those). The
+    labels are exact on any graph: the loop runs until a probe sees no
+    label change, however long the component's chains."""
     # materialize the edge set once and truncate its lineage: every round
     # would otherwise re-derive the candidate-pair pipeline, and each round's
     # plan would grow by the whole previous round. Near-dup edge sets are
-    # O(dups) rows, so a handful of partitions beats the session default —
-    # size graph_partitions to ~edges/10M for a genuinely large graph.
-    if graph_partitions is None:
-        graph_partitions = 4
+    # O(dups) rows, so a handful of partitions beats the session default.
     edges = (
         pairs.select(F.col(a).alias("x"), F.col(b).alias("y"))
         .union(pairs.select(F.col(b).alias("x"), F.col(a).alias("y")))
         .distinct()
-        .coalesce(graph_partitions)
+        .coalesce(_GRAPH_PARTITIONS)
         .localCheckpoint()  # (use checkpoint(dir) on a real cluster)
     )
     labels = (
@@ -183,14 +182,13 @@ def connected_components(
     # propagate TWO rounds per materialization+convergence probe: halves the
     # number of Spark actions, still exact on any graph (the loop continues
     # until a probe sees zero changes)
-    for _ in range(0, max_iter, 2):
+    changed = 1
+    while changed:
         stepped = one_round(one_round(labels).select(
             "doc_id", F.col("new_label").alias("label")
         )).localCheckpoint()
         changed = stepped.where(F.col("new_label") != F.col("label")).count()
         labels = stepped.select("doc_id", F.col("new_label").alias("label"))
-        if changed == 0:
-            break
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 

@@ -23,11 +23,21 @@ no level shift — ADD to the references modulo 2^16 (J.1), clipped to
 clear ValueError they always did (never a silent mis-decode — the PPM
 maxval>255 stance).
 
-Shared decode machinery: marker walk (SOI/APPn/COM/DQT/DHT/DAC/DRI/SOS/
-RSTn/EOI with 0xFF fill-byte tolerance), canonical Huffman MINCODE walk,
-0xFF00 unstuffing + restart resync, dequantization, zig-zag inverse,
-float64 IDCT via the orthonormal DCT-II basis, level shift, BT.601
-full-range YCbCr→RGB for 3-component DCT scans. Sampling: ANY factors in
+Shared decode machinery: one marker walk (SOI/APPn/COM/DQT/DHT/DAC/DRI/
+SOS/RSTn/EOI with 0xFF fill-byte tolerance) and one scan walk per
+process — ``_sequential_planes``, ``_progressive_scan`` and
+``_lossless_planes``. Each walk owns its header and sampling checks, its
+MCU/block/sample order, its restart count and its DC or sample
+prediction, and draws every coded value from the scan's entropy decoder,
+built once per scan from the SOF's coder. The entropy decoder is the only
+part the two coders do not share: ``_HuffmanScan`` (canonical Huffman
+MINCODE walk, 0xFF00 unstuffing, the progressive EOB run) and
+``_ArithScan`` (the QM coder with its statistics areas, DC contexts and
+lossless Da/Db history, functions/jpeg_arith.py). Each resets its own
+state at RSTn and reports where its scan ended. After the walk:
+dequantization, zig-zag inverse, float64 IDCT via the orthonormal DCT-II
+basis, level shift, BT.601 full-range YCbCr→RGB for 3-component DCT
+scans. Sampling: ANY factors in
 1..4 — integer ratios (4:4:4/4:2:2/4:2:0/4:1:1) replicate, fractional
 ratios (e.g. 3x1 luma vs 2x1 chroma) use the nearest-sample gather
 x -> floor(x*hs/hmax) (T.81 leaves the upsampling filter to the
@@ -53,8 +63,9 @@ arithmetic with the (Da, Db)-conditioned lossless model).
   EXACTLY and the decode profile keeps a closed-form byte-level DuckDB
   oracle even though the container is an entropy-coded lossy format. The
   lossless round-trip is a property of these fixtures, not a claim about
-  DCT JPEG (SOF3 excepted, where the MODE is lossless). The arithmetic
-  (SOF9-SOF11, SOF15) fixture encoders only tests call; they live in
+  DCT JPEG (SOF3 excepted, where the MODE is lossless). The fixture
+  encoders only tests call — arithmetic (SOF9-SOF11, SOF15), lossless,
+  12-bit and the Huffman-only hierarchical ones — live in
   ``tests/jpeg_arith_encoders.py``.
 
 Reference parity: the reference server stores media only as opaque blobs
@@ -65,28 +76,14 @@ decodable inside the Arrow worker without container-level dependencies.
 
 from __future__ import annotations
 
-import contextvars
 import math
 import struct
 
 import numpy as np
 
+from hive_server_spark.functions import jpeg_arith as ja
+
 __all__ = ["decode_jpeg", "decode_jpeg_samples", "encode_jpeg_gray_blocks"]
-
-# Sample tap for decode_jpeg_samples: when set (a list), every decode tail
-# appends its final clipped sample array before reducing to the scalar
-# (width, height, mean) contract. A ContextVar so concurrent decodes in
-# different contexts/threads can't cross-capture; the default None makes
-# the capture a no-op on the normal decode path.
-_SAMPLE_TAP: contextvars.ContextVar[list | None] = contextvars.ContextVar(
-    "jpeg_sample_tap", default=None
-)
-
-
-def _maybe_capture(samples) -> None:
-    tap = _SAMPLE_TAP.get()
-    if tap is not None:
-        tap.append(samples)
 
 # orthonormal 8×8 DCT-II basis: M[u, x] = c(u)/2 · cos((2x+1)uπ/16);
 # forward F = M f Mᵀ, inverse f = Mᵀ F M. DC-only block d → every pixel d/8.
@@ -229,6 +226,228 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
+class _HuffmanScan:
+    """Huffman entropy decoder of one scan (T.81 F.2.2, G.2, H.1.2.2): the
+    bit reader over the scan's entropy-coded segment and the DHT tables
+    its components select. ``dc``/``ac`` name the table classes the scan
+    reads (a missing one raises here); a lossless scan reads DC tables
+    only, and its differences need no context, so ``lossless`` (the
+    arithmetic decoder's history shape) goes unused. Restart byte-aligns
+    past RSTn and clears the progressive EOB run."""
+
+    def __init__(self, b, pos, tables, scan_comps, dc=True, ac=True, lossless=None):
+        huff_dc, huff_ac = tables
+        try:
+            self.dc = {ci: huff_dc[td] for ci, td, _ in scan_comps if dc}
+            self.ac = {ci: huff_ac[ta] for ci, _, ta in scan_comps if ac}
+        except KeyError:
+            raise ValueError("JPEG scan references missing Huffman table") from None
+        self.br = _BitReader(b, pos)
+        self.eobrun = 0
+
+    def restart(self) -> None:
+        self.br.restart()
+        self.eobrun = 0
+
+    def end(self) -> int:
+        # a reader that met a marker has already raised: the scan's last
+        # byte was read whole, so its end is searched from here
+        return _find_next_marker(self.br.data, self.br.pos)
+
+    def dc_diff(self, ci: int) -> int:
+        br = self.br
+        s = self.dc[ci].decode(br)
+        return _extend(br.receive(s), s)
+
+    def dc_bit(self) -> int:
+        return self.br.read_bit()
+
+    def block(self, ci: int, coeffs) -> int:
+        """One sequential block: its AC coefficients into ``coeffs``, its DC
+        difference returned."""
+        br = self.br
+        s = self.dc[ci].decode(br)
+        diff = _extend(br.receive(s), s)
+        table = self.ac[ci]
+        k = 1
+        while k < 64:
+            rs = table.decode(br)
+            r, size = rs >> 4, rs & 0x0F
+            if size == 0:
+                if r == 15:  # ZRL: sixteen zeros
+                    k += 16
+                    continue
+                break  # EOB
+            k += r
+            if k > 63:
+                raise ValueError("JPEG AC run past end of block")
+            coeffs[_ZIGZAG[k]] = _extend(br.receive(size), size)
+            k += 1
+        return diff
+
+    def lossless_diff(self, ci: int, y: int, x: int) -> int:
+        s = self.dc[ci].decode(self.br)
+        if s == 16:  # H.1.2.2: category 16 codes diff 32768 directly
+            return 32768
+        return _extend(self.br.receive(s), s)
+
+    def ac_first(self, ci: int, block, ss: int, se: int, al: int) -> None:
+        """Progressive AC first pass (G.1.2.2) over the band [ss, se] of one
+        block, values stored << al; an EOB run skips whole blocks."""
+        if self.eobrun > 0:
+            self.eobrun -= 1
+            return
+        br, table = self.br, self.ac[ci]
+        k = ss
+        while k <= se:
+            rs = table.decode(br)
+            r, s = rs >> 4, rs & 0x0F
+            if s == 0:
+                if r == 15:  # ZRL
+                    k += 16
+                    continue
+                self.eobrun = (1 << r) - 1
+                if r:
+                    self.eobrun += br.receive(r)
+                break
+            k += r
+            if k > se:
+                raise ValueError("JPEG AC run past spectral band end")
+            block[_ZIGZAG[k]] = _extend(br.receive(s), s) << al
+            k += 1
+
+    def ac_refine(self, ci: int, block, ss: int, se: int, al: int) -> None:
+        """Progressive AC refinement (G.2.2) of one block: correction bits
+        for nonzero-history coefficients, newly significant ±1 << al ones."""
+        br, table = self.br, self.ac[ci]
+        p1, m1 = 1 << al, -1 << al
+        k = ss
+        if self.eobrun == 0:
+            while k <= se:
+                rs = table.decode(br)
+                r, s = rs >> 4, rs & 0x0F
+                newval = 0
+                if s == 0:
+                    if r < 15:
+                        # refinement convention: the count INCLUDES this
+                        # block, whose [k..Se] remainder still gets
+                        # correction bits below before the eobrun -= 1
+                        # (libjpeg decode_mcu_AC_refine)
+                        self.eobrun = 1 << r
+                        if r:
+                            self.eobrun += br.receive(r)
+                        break
+                    # ZRL: pass 16 zero-history coefficients
+                else:
+                    if s != 1:
+                        raise ValueError("JPEG AC refinement magnitude must be 1")
+                    newval = p1 if br.read_bit() else m1
+                # advance past r zero-history coefficients, refining every
+                # nonzero-history coefficient on the way
+                placed = newval == 0
+                while k <= se:
+                    z = _ZIGZAG[k]
+                    if block[z] != 0:
+                        if br.read_bit() and (block[z] & p1) == 0:
+                            block[z] += p1 if block[z] >= 0 else m1
+                    else:
+                        if r == 0:
+                            if newval:
+                                block[z] = newval
+                                placed = True
+                            k += 1
+                            break
+                        r -= 1
+                    k += 1
+                if not placed:
+                    raise ValueError("JPEG AC refinement ran past the spectral band")
+        if self.eobrun > 0:
+            # EOB band: refine remaining nonzero-history coefficients
+            while k <= se:
+                z = _ZIGZAG[k]
+                if block[z] != 0:
+                    if br.read_bit() and (block[z] & p1) == 0:
+                        block[z] += p1 if block[z] >= 0 else m1
+                k += 1
+            self.eobrun -= 1
+
+
+class _ArithScan:
+    """QM-coded entropy decoder of one scan (T.81 F.1.4.4, G.2, H.1.2.3):
+    the arithmetic decoder, one statistics area per conditioning table
+    the scan reads (DAC; defaults (L, U) = (0, 1) and Kx = 5), shared by
+    the components that select it (F.1.4.4.1.3), a DC context per
+    component and, in a lossless scan of ``lossless`` = (height, width)
+    samples, the history of decoded differences whose classes condition
+    the next ones (Da left, Db above). Restart re-initializes the coder
+    and resets statistics, contexts and the history window (E.2.4)."""
+
+    def __init__(self, b, pos, tables, scan_comps, dc=True, ac=True, lossless=None):
+        dac_dc, dac_ac = tables
+        model = ja.LosslessStats if lossless else ja.DCStats
+        dc_areas = {td: model(*dac_dc.get(td, (0, 1))) for _, td, _ in scan_comps if dc}
+        ac_areas = {ta: ja.ACStats(dac_ac.get(ta, 5)) for _, _, ta in scan_comps if ac}
+        self.areas = [*dc_areas.values(), *ac_areas.values()]
+        self.dc = {ci: dc_areas[td] for ci, td, _ in scan_comps if dc}
+        self.ac = {ci: ac_areas[ta] for ci, _, ta in scan_comps if ac}
+        self.contexts = dict.fromkeys(self.dc, 0)
+        self.fixed = bytearray([ja.FIXED_BIN_STATE])  # DC refinement bin (G.2)
+        if lossless:
+            self.width = lossless[1]
+            self.history = {ci: np.zeros(lossless, dtype=np.int64) for ci in self.dc}
+        self.start = 0  # first sample of the restart interval (lossless)
+        self.last = -1  # last sample decoded (lossless)
+        self.dec = ja.ArithDecoder(b, pos)
+
+    def restart(self) -> None:
+        self.dec.restart()
+        for st in self.areas:
+            st.reset()
+        self.contexts = dict.fromkeys(self.contexts, 0)
+        self.start = self.last + 1
+
+    def end(self) -> int:
+        dec = self.dec
+        return _find_next_marker(
+            dec.data, dec.pos - 2 if dec.marker is not None else dec.pos
+        )
+
+    def dc_diff(self, ci: int) -> int:
+        diff, self.contexts[ci] = ja.decode_dc_diff(
+            self.dec, self.dc[ci], self.contexts[ci]
+        )
+        return diff
+
+    def dc_bit(self) -> int:
+        return self.dec.decode(self.fixed, 0)
+
+    def block(self, ci: int, coeffs) -> int:
+        diff = self.dc_diff(ci)
+        ja.decode_ac_block(self.dec, self.ac[ci], coeffs, _ZIGZAG)
+        return diff
+
+    def lossless_diff(self, ci: int, y: int, x: int) -> int:
+        # a neighbouring difference outside the restart interval, or off
+        # the image, conditions as zero (H.1.2.3)
+        d, st = self.history[ci], self.dc[ci]
+        i = y * self.width + x
+        cls_a = st.classify5(int(d[y, x - 1])) if x and i > self.start else 0
+        cls_b = (
+            st.classify5(int(d[y - 1, x]))
+            if y and i - self.width >= self.start
+            else 0
+        )
+        d[y, x] = diff = ja.decode_lossless_diff(self.dec, st, cls_a, cls_b)
+        self.last = i
+        return diff
+
+    def ac_first(self, ci: int, block, ss: int, se: int, al: int) -> None:
+        ja.decode_ac_block(self.dec, self.ac[ci], block, _ZIGZAG, ss, se, al)
+
+    def ac_refine(self, ci: int, block, ss: int, se: int, al: int) -> None:
+        ja.decode_ac_refine(self.dec, self.ac[ci], block, _ZIGZAG, ss, se, al)
+
+
 def decode_jpeg(payload: bytes) -> tuple[int, int, float] | None:
     """Decode a JPEG — any T.81 process (see the module docstring's
     format matrix). Returns (width, height, mean_sample/maxval)
@@ -236,6 +455,28 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, float] | None:
     same contract as the PPM/PNG/BMP decoders — or None if the payload
     does not start with SOI. Malformed payloads
     raise ValueError (never a silently wrong decode)."""
+    r = _decode(payload)
+    if r is None:
+        return None
+    width, height, samples, prec = r
+    return width, height, float(samples.mean()) / float((1 << prec) - 1)
+
+
+def decode_jpeg_samples(payload: bytes):
+    """Decode a JPEG and return (width, height, samples) where `samples`
+    is the final clipped sample array the decode tail produced — (h, w)
+    for grayscale, (h, w, 3) for color-converted 3-component scans,
+    (ncomp, h, w) for lossless. Same error contract as decode_jpeg (None
+    for non-JPEG, ValueError for malformed); the per-pixel plane feeds
+    perceptual hashing (functions/multimodal.py dhash_bands), where the
+    scalar mean contract is not enough."""
+    r = _decode(payload)
+    return None if r is None else r[:3]
+
+
+def _decode(payload: bytes):
+    """The marker walk behind both entry points: (width, height, samples,
+    precision), or None without SOI."""
     b = bytes(payload)
     if b[:2] != b"\xff\xd8":
         return None
@@ -245,17 +486,15 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, float] | None:
     dac_dc: dict[int, tuple[int, int]] = {}  # DAC: table id -> (L, U)
     dac_ac: dict[int, int] = {}  # DAC: table id -> Kx
     restart_interval = 0
-    frame = None  # (h, w, comps) ; comps = [(cid, hq, vq, tq)]
+    frame = None  # (h, w, comps, prec) ; comps = [(cid, hq, vq, tq)]
     progressive = False
     arith = False
     lossless = False
     differential = False
-    coef = None  # progressive coefficient store, created at first SOS
+    coef = None  # coefficient store of the progressive frame, made at its first SOS
     hier = None  # hierarchical (DHP) frame header; decode spans frames
     refs: dict[int, np.ndarray] = {}  # hierarchical reference components
     pending_exp = (0, 0)  # EXP expansion flags for the next frame
-    hier_coef = None  # coefficient store of an in-progress progressive
-    # frame INSIDE a hierarchical sequence (merged at the frame boundary)
     pos = 2
     while pos < len(b):
         if b[pos] != 0xFF:
@@ -269,7 +508,8 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, float] | None:
             raise ValueError("truncated JPEG marker")
         pos += 2
         if (
-            hier_coef is not None
+            hier is not None
+            and coef is not None
             and marker in (
                 0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
                 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF, 0xDE, 0xDF, 0xD9,
@@ -278,23 +518,22 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, float] | None:
             # a frame-ending marker closes the in-progress progressive
             # frame of a hierarchical sequence: reconstruct and merge
             _hier_merge(
-                refs, frame,
-                _reconstruct_progressive_planes(frame, qt, hier_coef),
-                differential, pending_exp,
-                level_shift=1 << (frame[3] - 1),
+                refs, frame, _reconstruct_progressive_planes(frame, qt, coef),
+                differential, pending_exp, level_shift=1 << (frame[3] - 1),
             )
             pending_exp = (0, 0)
             frame = None
-            hier_coef = None
+            coef = None
         if marker == 0xD9:  # EOI
             if hier is not None:
                 if not refs:
                     raise ValueError("JPEG EOI before scan data")
-                return _finish_hier(refs, hier)
+                return hier[1], hier[0], _finish_hier(refs, hier), hier[3]
             if progressive and coef is not None:
                 # progressive image complete: reconstruct from the
                 # accumulated coefficients
-                return _reconstruct_progressive(frame, qt, coef)
+                planes = _reconstruct_progressive_planes(frame, qt, coef)
+                return frame[1], frame[0], _finish_planes(planes, frame), frame[3]
             raise ValueError("JPEG EOI before scan data")
         if marker == 0x01 or 0xD0 <= marker <= 0xD7:
             continue  # TEM / stray RST: no segment body
@@ -419,124 +658,89 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, float] | None:
             # seg must be a ValueError, never an IndexError in a parser
             if len(seg) < 1 or len(seg) < 4 + 2 * seg[0]:
                 raise ValueError("truncated JPEG SOS header")
-            if hier is not None:
-                # hierarchical sequence: decode this frame's
-                # scan(s), fold into the reference store, and keep
-                # walking — the image completes at EOI. All six frame
-                # processes run under either entropy coder; progressive
-                # frames accumulate scans and merge at the frame boundary.
-                if pending_exp != (0, 0) and not differential:
-                    raise ValueError(
-                        "JPEG EXP must precede a differential frame"
-                    )
-                if progressive:
-                    if hier_coef is None:
-                        hier_coef = _init_coef(frame)
-                    if arith:
-                        pos = _decode_progressive_scan_arith(
-                            b, pos + seglen, seg, frame, dac_dc, dac_ac,
-                            restart_interval, hier_coef, differential,
-                        )
-                    else:
-                        pos = _decode_progressive_scan(
-                            b, pos + seglen, seg, frame, huff_dc, huff_ac,
-                            restart_interval, hier_coef, differential,
-                        )
-                    continue  # merge happens at the frame boundary
+            if pending_exp != (0, 0) and not differential:
+                raise ValueError("JPEG EXP must precede a differential frame")
+            coder, tables = (
+                (_ArithScan, (dac_dc, dac_ac)) if arith
+                else (_HuffmanScan, (huff_dc, huff_ac))
+            )
+            start = pos + seglen
+            if progressive:
+                if coef is None:
+                    coef = _init_coef(frame)
+                pos = _progressive_scan(
+                    b, start, seg, frame, coder, tables, restart_interval,
+                    coef, differential,
+                )
+                continue  # the frame completes at EOI or at its frame end
+            if lossless:
+                planes, pt, pos = _lossless_planes(
+                    b, start, seg, frame, coder, tables, restart_interval,
+                    differential,
+                )
+                planes = [p << pt for p in planes]  # undo the point transform
+            else:
+                planes, pos = _sequential_planes(
+                    b, start, seg, frame, qt, coder, tables, restart_interval,
+                    differential,
+                )
+            height, width, _comps, prec = frame
+            if hier is None:
                 if lossless:
-                    if arith:
-                        planes, pt, end = _decode_scan_lossless_arith_planes(
-                            b, pos + seglen, seg, frame, dac_dc,
-                            restart_interval, differential,
-                        )
-                    else:
-                        planes, pt, end = _decode_scan_lossless_planes(
-                            b, pos + seglen, seg, frame, huff_dc,
-                            restart_interval, differential,
-                        )
-                    # undo the point transform BEFORE the reference merge:
-                    # references hold full-precision samples (J.1)
-                    _hier_merge(
-                        refs, frame, [p << pt for p in planes],
-                        differential, pending_exp, level_shift=0,
+                    samples = np.clip(
+                        np.stack(planes).astype(np.float64), 0,
+                        float((1 << prec) - 1),
                     )
                 else:
-                    if arith:
-                        planes, end = _decode_scan_arith_planes(
-                            b, pos + seglen, seg, frame, qt, dac_dc,
-                            dac_ac, restart_interval, differential,
-                        )
-                    else:
-                        planes, end = _decode_scan_planes(
-                            b, pos + seglen, seg, frame, qt, huff_dc,
-                            huff_ac, restart_interval, differential,
-                        )
-                    _hier_merge(
-                        refs, frame, planes, differential, pending_exp,
-                        level_shift=1 << (frame[3] - 1),
-                    )
-                pending_exp = (0, 0)
-                frame = None
-                pos = end
-                continue  # pos points at the next marker's 0xFF
-            if lossless:
-                if arith:
-                    return _decode_scan_lossless_arith(
-                        b, pos + seglen, seg, frame, dac_dc, restart_interval
-                    )
-                return _decode_scan_lossless(
-                    b, pos + seglen, seg, frame, huff_dc, restart_interval
-                )
-            if not progressive:
-                if arith:
-                    return _decode_scan_arith(
-                        b, pos + seglen, seg, frame, qt, dac_dc, dac_ac,
-                        restart_interval,
-                    )
-                return _decode_scan(b, pos + seglen, seg, frame, qt, huff_dc, huff_ac, restart_interval)
-            if coef is None:
-                coef = _init_coef(frame)
-            if arith:
-                pos = _decode_progressive_scan_arith(
-                    b, pos + seglen, seg, frame, dac_dc, dac_ac,
-                    restart_interval, coef,
-                )
-            else:
-                pos = _decode_progressive_scan(
-                    b, pos + seglen, seg, frame, huff_dc, huff_ac,
-                    restart_interval, coef,
-                )
-            continue  # pos now points at the next marker's 0xFF
+                    samples = _finish_planes(planes, frame)
+                return width, height, samples, prec
+            # hierarchical sequence: fold this frame into the reference
+            # store (full-precision samples, J.1) and walk on to EOI
+            _hier_merge(
+                refs, frame, planes, differential, pending_exp,
+                level_shift=0 if lossless else 1 << (prec - 1),
+            )
+            pending_exp = (0, 0)
+            frame = None
+            continue  # pos points at the next marker's 0xFF
         # APPn / COM / anything else: skip
         pos += seglen
     raise ValueError("JPEG has no SOS marker")
 
 
-def decode_jpeg_samples(payload: bytes):
-    """Decode a JPEG and return (width, height, samples) where `samples`
-    is the final clipped sample array the decode tail produced — (h, w)
-    for grayscale, (h, w, 3) for color-converted 3-component scans,
-    (ncomp, h, w) for lossless. Same error contract as decode_jpeg (None
-    for non-JPEG, ValueError for malformed); the per-pixel plane feeds
-    perceptual hashing (functions/multimodal.py dhash_bands), where the
-    scalar mean contract is not enough."""
-    tap: list = []
-    token = _SAMPLE_TAP.set(tap)
-    try:
-        r = decode_jpeg(payload)
-    finally:
-        _SAMPLE_TAP.reset(token)
-    if r is None:
-        return None
-    width, height, _mean = r
-    return width, height, tap[-1]
+def _parse_scan_header(seg, comps):
+    """SOS header fields every scan walk reads: the Ns count, Ss and Se
+    (the spectral band; in a lossless scan Ss selects the predictor), the
+    successive-approximation nibbles Ah/Al (Al is the lossless point
+    transform), and the (component index, Td, Ta) of each frame component
+    the scan selects, in frame order — one per selector, so malformed
+    headers fail alike under either coder."""
+    ncomp_scan = seg[0]
+    if ncomp_scan == 0:
+        raise ValueError("JPEG scan selects no component")
+    selectors = {}
+    for i in range(ncomp_scan):
+        cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
+        selectors[cs] = (tdta >> 4, tdta & 0x0F)
+    ss, se = seg[1 + 2 * ncomp_scan], seg[2 + 2 * ncomp_scan]
+    ahal = seg[3 + 2 * ncomp_scan]
+    scan_comps = [
+        (ci, *selectors[cid])
+        for ci, (cid, _hs, _vs, _tq) in enumerate(comps)
+        if cid in selectors
+    ]
+    if len(scan_comps) != ncomp_scan:
+        raise ValueError("JPEG scan selectors do not match the frame components")
+    return ncomp_scan, ss, se, ahal >> 4, ahal & 0x0F, scan_comps
 
 
 def _frame_geometry(frame):
-    """Sampling geometry shared by the progressive scan decoder and the
-    reconstruction (T.81 A.1.1): (hmax, vmax, MCU grid, and per component
+    """Sampling geometry shared by the scan walks and the reconstruction
+    (T.81 A.1.1): (hmax, vmax, MCU grid, and per component
     its TRUE block grid ceil(comp_dim/8) — the data-unit count of a
-    NON-interleaved scan, which has no MCU padding)."""
+    NON-interleaved scan, which has no MCU padding). Every factor must
+    lie in 1..4: the MCU is Hmax*8 x Vmax*8 pixels and component i
+    contributes hs*vs blocks per MCU."""
     height, width, comps, _prec = frame
     hmax = max(hs for _, hs, _, _ in comps)
     vmax = max(vs for _, _, vs, _ in comps)
@@ -570,280 +774,228 @@ def _init_coef(frame):
     ]
 
 
-def _decode_progressive_scan(
-    b, pos, seg, frame, huff_dc, huff_ac, restart_interval, coef,
-    differential=False,
+def _sequential_planes(
+    b, pos, seg, frame, qt, coder, tables, restart_interval, differential=False,
 ):
-    """One progressive (SOF2/SOF6) scan per T.81 G.2: DC first/refinement
-    (interleaved or single-component) and AC first/refinement
-    (single-component, spectral band [Ss, Se], successive approximation
-    Ah→Al) accumulate into `coef`. Returns the byte offset of the next
-    marker's 0xFF. ``differential=True`` (hierarchical SOF6)
-    codes each first-scan DC value directly — PRED is zero per block."""
+    """Sequential-DCT scan walk (SOF0/1/9, differential SOF5/13): one
+    interleaved scan of every frame component in MCU order. Returns
+    (planes, end_pos): the MCU-padded per-component sample arrays BEFORE
+    level shift (differential frames never get one — T.81 J.1) and the
+    offset of the marker that ended the scan. RSTn resets the entropy
+    decoder and the DC predictions (E.2.4); ``differential=True`` takes
+    each DC value as coded (F.1.1.5.1: PRED is zero). Any sampling
+    factors decode (see ``_frame_geometry``; the tail upsamples)."""
     height, width, comps, _prec = frame
-    ncomp_scan, ss, se, ah, al, scan_comps = _parse_scan_header(seg, comps)
-    br = _BitReader(b, pos)
-    _hmax, _vmax, mcux, mcuy, dims = _frame_geometry(frame)
-
-    if ss == 0:  # DC scan (Se must be 0 per spec)
-        if se != 0:
-            raise ValueError("JPEG progressive DC scan with Se != 0")
-        preds = {ci: 0 for ci, _td, _ta in scan_comps}
-
-        def dc_unit(ci: int, td: int, by: int, bx: int) -> None:
-            if ah == 0:  # first DC scan: Huffman diff, shifted by Al
-                if td not in huff_dc:
-                    raise ValueError("JPEG scan references missing Huffman table")
-                s = huff_dc[td].decode(br)
-                diff = _extend(br.receive(s), s)
-                if differential:
-                    coef[ci][by, bx, 0, 0] = diff << al  # PRED = 0
-                else:
-                    preds[ci] += diff
-                    coef[ci][by, bx, 0, 0] = preds[ci] << al
-            else:  # DC refinement: one raw bit per block
-                if br.read_bit():
-                    coef[ci][by, bx, 0, 0] |= 1 << al
-
-        if ncomp_scan > 1:
-            # interleaved: MCU order, each component its hs x vs cluster
-            # (incl. edge padding blocks); restart counts MCUs (T.81 G.2)
-            unit = 0
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        br.restart()
-                        preds.update({ci: 0 for ci, _td, _ta in scan_comps})
-                    for ci, td, _ta in scan_comps:
-                        _cid, hs, vs, _tq = frame[2][ci]
-                        for v in range(vs):
-                            for h2 in range(hs):
-                                dc_unit(ci, td, my * vs + v, mx * hs + h2)
-                    unit += 1
-        else:
-            # non-interleaved single-component DC scan: raster order over
-            # the component's TRUE block grid, no MCU padding
-            ci, td, _ta = scan_comps[0]
-            bh_c, bw_c = dims[ci]
-            unit = 0
-            for by in range(bh_c):
-                for bx in range(bw_c):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        br.restart()
-                        preds.update({ci: 0 for ci, _td2, _ta2 in scan_comps})
-                    dc_unit(ci, td, by, bx)
-                    unit += 1
-    else:  # AC scan: exactly one component (T.81 G.1.1.1.1)
-        if ncomp_scan != 1:
-            raise ValueError("JPEG progressive AC scan must be single-component")
-        ci, _td, ta = scan_comps[0]
-        if ta not in huff_ac:
-            raise ValueError("JPEG scan references missing Huffman table")
-        table = huff_ac[ta]
-        # raster order over the component's TRUE block grid (ceil(comp/8),
-        # never MCU-padded — non-interleaved scans have no pad data units)
-        bh_c, bw_c = dims[ci]
-        nblocks = bh_c * bw_c
-        eobrun = 0
-        for blk in range(nblocks):
-            if restart_interval and blk and blk % restart_interval == 0:
-                br.restart()
-                eobrun = 0
-            by, bx = blk // bw_c, blk % bw_c
-            block = coef[ci][by, bx]
-            if ah == 0:  # AC first scan
-                if eobrun > 0:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    rs = table.decode(br)
-                    r, s = rs >> 4, rs & 0x0F
-                    if s == 0:
-                        if r == 15:  # ZRL
-                            k += 16
-                            continue
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += br.receive(r)
-                        break
-                    k += r
-                    if k > se:
-                        raise ValueError("JPEG AC run past spectral band end")
-                    block[_ZIGZAG[k]] = _extend(br.receive(s), s) << al
-                    k += 1
-            else:  # AC refinement scan (T.81 G.2.2)
-                p1, m1 = 1 << al, -1 << al
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        rs = table.decode(br)
-                        r, s = rs >> 4, rs & 0x0F
-                        newval = 0
-                        if s == 0:
-                            if r < 15:
-                                # refinement convention: the count INCLUDES
-                                # this block, whose [k..Se] remainder still
-                                # gets correction bits below before the
-                                # eobrun -= 1 (libjpeg decode_mcu_AC_refine)
-                                eobrun = 1 << r
-                                if r:
-                                    eobrun += br.receive(r)
-                                break
-                            # ZRL: pass 16 zero-history coefficients
-                        else:
-                            if s != 1:
-                                raise ValueError(
-                                    "JPEG AC refinement magnitude must be 1"
-                                )
-                            newval = p1 if br.read_bit() else m1
-                        # advance past r zero-history coefficients, refining
-                        # every nonzero-history coefficient on the way
-                        placed = newval == 0
-                        while k <= se:
-                            z = _ZIGZAG[k]
-                            if block[z] != 0:
-                                if br.read_bit() and (block[z] & p1) == 0:
-                                    block[z] += p1 if block[z] >= 0 else m1
-                            else:
-                                if r == 0:
-                                    if newval:
-                                        block[z] = newval
-                                        placed = True
-                                    k += 1
-                                    break
-                                r -= 1
-                            k += 1
-                        if not placed:
-                            raise ValueError(
-                                "JPEG AC refinement ran past the spectral band"
-                            )
-                if eobrun > 0:
-                    # EOB band: refine remaining nonzero-history coefficients
-                    while k <= se:
-                        z = _ZIGZAG[k]
-                        if block[z] != 0:
-                            if br.read_bit() and (block[z] & p1) == 0:
-                                block[z] += p1 if block[z] >= 0 else m1
-                        k += 1
-                    eobrun -= 1
-
-    # the scan's entropy data ends here: either the reader already hit the
-    # next marker, or padding bits/bytes separate us from it
-    if br.seen_marker is not None:
-        return br.pos - 2
-    p = br.pos
-    while p + 1 < len(b):
-        if b[p] == 0xFF and b[p + 1] != 0x00:
-            return p
-        p += 1
-    raise ValueError("JPEG progressive scan not followed by a marker")
-
-
-def _decode_progressive_scan_arith(
-    b, pos, seg, frame, dac_dc, dac_ac, restart_interval, coef,
-    differential=False,
-):
-    """One progressive ARITHMETIC (SOF10/SOF14) scan per T.81 G.2: the same
-    scan taxonomy as the Huffman path (_decode_progressive_scan) with the
-    QM coder drawing every decision — DC first scans run the F.1.4.4.1.1
-    DC model on the Al-shifted differences, DC refinement codes one
-    FIXED-bin decision per block, AC first scans are the sequential AC
-    model over [Ss, Se] with values stored << Al, and AC refinement uses
-    the kex/EOB-decision walk (jpeg_arith.decode_ac_refine). Statistics
-    areas, predictions and contexts are per-scan (each scan is its own
-    entropy segment with its own INITDEC). Returns the byte offset of the
-    next marker's 0xFF."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    height, width, comps, _prec = frame
-    ncomp_scan, ss, se, ah, al, scan_comps = _parse_scan_header(seg, comps)
-    _hmax, _vmax, mcux, mcuy, dims = _frame_geometry(frame)
-
-    dec = ja.ArithDecoder(b, pos)
-    dc_stats = {
-        td: ja.DCStats(*dac_dc.get(td, (0, 1))) for _, td, _ in scan_comps
-    }
-    ac_stats = {ta: ja.ACStats(dac_ac.get(ta, 5)) for _, _, ta in scan_comps}
-
-    if ss == 0:  # DC scan (Se must be 0 per spec)
-        if se != 0:
-            raise ValueError("JPEG progressive DC scan with Se != 0")
-        preds = {ci: 0 for ci, _td, _ta in scan_comps}
-        contexts = {ci: 0 for ci, _td, _ta in scan_comps}
-        fixed = bytearray([ja.FIXED_BIN_STATE])  # DC refinement bin (G.2)
-
-        def reset_segment():
-            for st in dc_stats.values():
-                st.reset()
-            for st in ac_stats.values():
-                st.reset()
-            preds.update({ci: 0 for ci, _td, _ta in scan_comps})
-            contexts.update({ci: 0 for ci, _td, _ta in scan_comps})
-
-        def dc_unit(ci: int, td: int, by: int, bx: int) -> None:
-            if ah == 0:  # first DC scan: arithmetic diff in Al-shifted units
-                diff, contexts[ci] = ja.decode_dc_diff(
-                    dec, dc_stats[td], contexts[ci]
-                )
-                if differential:
-                    coef[ci][by, bx, 0, 0] = diff << al  # PRED = 0
-                else:
-                    preds[ci] += diff
-                    coef[ci][by, bx, 0, 0] = preds[ci] << al
-            else:  # DC refinement: one fixed-bin decision per block (G.2)
-                if dec.decode(fixed, 0):
-                    coef[ci][by, bx, 0, 0] |= 1 << al
-
-        if ncomp_scan > 1:
-            unit = 0
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        dec.restart()
-                        reset_segment()
-                    for ci, td, _ta in scan_comps:
-                        _cid, hs, vs, _tq = comps[ci]
-                        for v in range(vs):
-                            for h2 in range(hs):
-                                dc_unit(ci, td, my * vs + v, mx * hs + h2)
-                    unit += 1
-        else:
-            ci, td, _ta = scan_comps[0]
-            bh_c, bw_c = dims[ci]
-            unit = 0
-            for by in range(bh_c):
-                for bx in range(bw_c):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        dec.restart()
-                        reset_segment()
-                    dc_unit(ci, td, by, bx)
-                    unit += 1
-    else:  # AC scan: exactly one component
-        if ncomp_scan != 1:
-            raise ValueError("JPEG progressive AC scan must be single-component")
-        ci, _td, ta = scan_comps[0]
-        st = ac_stats[ta]
-        bh_c, bw_c = dims[ci]
-        for blk in range(bh_c * bw_c):
-            if restart_interval and blk and blk % restart_interval == 0:
+    ncomp_scan, _ss, _se, _ah, _al, scan_comps = _parse_scan_header(seg, comps)
+    if ncomp_scan != len(comps):
+        raise ValueError("JPEG non-interleaved multi-scan unsupported")
+    if len(comps) not in (1, 3):
+        raise ValueError(f"JPEG with {len(comps)} components unsupported")
+    _hmax, _vmax, mcux, mcuy, _dims = _frame_geometry(frame)
+    if width <= 0 or height <= 0:
+        raise ValueError("JPEG frame has empty dimensions")
+    for _, _, _, tq in comps:
+        if tq not in qt:
+            raise ValueError(f"JPEG references missing quant table {tq}")
+    dec = coder(b, pos, tables, scan_comps)
+    planes = [
+        np.zeros((mcuy * vs * 8, mcux * hs * 8), dtype=np.float64)
+        for _, hs, vs, _ in comps
+    ]
+    preds = [0] * len(comps)
+    mcu = 0
+    for my in range(mcuy):
+        for mx in range(mcux):
+            if restart_interval and mcu and mcu % restart_interval == 0:
                 dec.restart()
-                st.reset()
-            by, bx = blk // bw_c, blk % bw_c
-            block = coef[ci][by, bx]
-            if ah == 0:
-                ja.decode_ac_block(dec, st, block, _ZIGZAG, ss, se, al)
-            else:
-                ja.decode_ac_refine(dec, st, block, _ZIGZAG, ss, se, al)
+                preds = [0] * len(comps)
+            for ci, (_cid, hs, vs, tq) in enumerate(comps):
+                for v in range(vs):
+                    for h2 in range(hs):
+                        coeffs = np.zeros((8, 8), dtype=np.float64)
+                        diff = dec.block(ci, coeffs)
+                        if differential:
+                            coeffs[0, 0] = diff
+                        else:
+                            preds[ci] += diff
+                            coeffs[0, 0] = preds[ci]
+                        block = _DCT_M.T @ (coeffs * qt[tq]) @ _DCT_M
+                        by, bx = my * vs + v, mx * hs + h2
+                        planes[ci][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = block
+            mcu += 1
+    return planes, dec.end()
 
-    if dec.marker is not None:
-        return dec.pos - 2
-    p = dec.pos
-    while p + 1 < len(b):
-        if b[p] == 0xFF and b[p + 1] != 0x00:
-            return p
-        p += 1
-    raise ValueError("JPEG progressive scan not followed by a marker")
+
+def _scan_units(comps, scan_comps, mcux, mcuy, dims):
+    """A progressive scan's data units grouped by MCU (T.81 A.2), as
+    (component index, block row, block col): an interleaved MCU holds each
+    component's hs x vs block cluster, edge padding blocks included; a
+    single-component MCU is one block of the component's TRUE grid, in
+    raster order."""
+    if len(scan_comps) > 1:
+        for my in range(mcuy):
+            for mx in range(mcux):
+                yield [
+                    (ci, my * vs + v, mx * hs + h2)
+                    for ci, _td, _ta in scan_comps
+                    for _cid, hs, vs, _tq in (comps[ci],)
+                    for v in range(vs)
+                    for h2 in range(hs)
+                ]
+    else:
+        ci = scan_comps[0][0]
+        bh, bw = dims[ci]
+        for by in range(bh):
+            for bx in range(bw):
+                yield [(ci, by, bx)]
+
+
+def _progressive_scan(
+    b, pos, seg, frame, coder, tables, restart_interval, coef, differential=False,
+):
+    """Progressive scan walk (SOF2/10, differential SOF6/14, T.81 G.2),
+    accumulating into `coef`: DC first (Al-shifted differences; PRED is
+    zero in a differential frame) or DC refinement (one bit per block),
+    interleaved or single-component; AC first or refinement over the band
+    [Ss, Se], single-component only (G.1.1.1.1). Restart counts MCUs and
+    resets the entropy decoder and the DC predictions. Returns the byte
+    offset of the marker that ended the scan."""
+    comps = frame[2]
+    ncomp_scan, ss, se, ah, al, scan_comps = _parse_scan_header(seg, comps)
+    if not ss <= se <= 63:  # B.2.3: the band must sit inside 0..63 — a
+        # corrupted Se would otherwise index past the zig-zag table
+        raise ValueError(f"JPEG spectral band [{ss}, {se}] invalid")
+    _hmax, _vmax, mcux, mcuy, dims = _frame_geometry(frame)
+    if ss == 0 and se != 0:
+        raise ValueError("JPEG progressive DC scan with Se != 0")
+    if ss and ncomp_scan != 1:
+        raise ValueError("JPEG progressive AC scan must be single-component")
+    dec = coder(b, pos, tables, scan_comps, dc=ss == 0 and ah == 0, ac=ss > 0)
+    preds = {ci: 0 for ci, _td, _ta in scan_comps}
+    if ss:
+        band = dec.ac_first if ah == 0 else dec.ac_refine
+
+        def step(ci, block):
+            band(ci, block, ss, se, al)
+
+    elif ah == 0:
+
+        def step(ci, block):
+            diff = dec.dc_diff(ci)
+            if differential:
+                block[0, 0] = diff << al  # PRED = 0
+            else:
+                preds[ci] += diff
+                block[0, 0] = preds[ci] << al
+
+    else:
+
+        def step(ci, block):
+            if dec.dc_bit():
+                block[0, 0] |= 1 << al
+
+    for unit, blocks in enumerate(_scan_units(comps, scan_comps, mcux, mcuy, dims)):
+        if restart_interval and unit and unit % restart_interval == 0:
+            dec.restart()
+            preds = dict.fromkeys(preds, 0)
+        for ci, by, bx in blocks:
+            step(ci, coef[ci][by, bx])
+    return dec.end()
+
+
+def _lossless_planes(
+    b, pos, seg, frame, coder, tables, restart_interval, differential=False,
+):
+    """LOSSLESS scan walk (SOF3/11, differential SOF7/15) per T.81 Annex H:
+    no DCT, no quant — each sample is a coded difference from one of the
+    seven spatial predictors selected by Ss, reconstructed modulo 65536,
+    with the point transform Al=Pt shifting the coded domain down.
+    Prediction edges (H.1.2.1): the very first sample of the scan AND of
+    each restart interval predicts 2^(P-1-Pt); the rest of the interval's
+    FIRST LINE uses the one-dimensional predictor (Ra, the left neighbor)
+    regardless of Ss; the first sample of every other line predicts from
+    ABOVE. Components decode interleaved in MCU order; only 1x1 sampling
+    is supported (the overwhelmingly common lossless shape — T.81 allows
+    subsampled lossless MCUs, refused rather than mis-decoded).
+
+    Returns (planes, pt, end_pos) with planes in the CODED domain (before
+    the point-transform shift back up). ``differential=True`` (inside a
+    hierarchical sequence) requires predictor selection 0 — the coded
+    values are reference differences with NO spatial prediction (T.81
+    B.2.3 reserves Ss=0 for exactly this)."""
+    height, width, comps, prec = frame
+    ncomp_scan, predictor, _se, _ah, pt, scan_comps = _parse_scan_header(seg, comps)
+    if ncomp_scan != len(comps):
+        raise ValueError("JPEG non-interleaved multi-scan unsupported")
+    for _, hs, vs, _ in comps:
+        if hs != 1 or vs != 1:
+            raise ValueError(
+                "lossless JPEG with subsampled components unsupported"
+            )
+    if differential:
+        if predictor != 0:
+            raise ValueError(
+                "JPEG differential lossless scan must use predictor "
+                f"selection 0, got {predictor}"
+            )
+    elif not 1 <= predictor <= 7:
+        raise ValueError(f"JPEG lossless predictor {predictor} invalid")
+    if width <= 0 or height <= 0:
+        raise ValueError("JPEG frame has empty dimensions")
+    # DC tables only: Ta is 0 in a lossless scan
+    dec = coder(b, pos, tables, scan_comps, ac=False, lossless=(height, width))
+    default_pred = 1 << (prec - 1 - pt)
+    planes = [np.zeros((height, width), dtype=np.int64) for _ in comps]
+    mcu = 0
+    fresh = True  # first sample of the scan / of a restart interval
+    first_line = 0  # row where the current restart interval began
+    for y in range(height):
+        for x in range(width):
+            if restart_interval and mcu and mcu % restart_interval == 0:
+                dec.restart()
+                fresh = True
+                first_line = y
+            for ci, p in enumerate(planes):
+                if differential:
+                    # hierarchical differential frame: values are coded
+                    # reference differences, no spatial prediction
+                    px = 0
+                elif fresh:
+                    # H.1.2.1: prediction initialized to 2^(P-1-Pt) at scan
+                    # start and at the beginning of each restart interval
+                    px = default_pred
+                elif y == first_line:
+                    # H.1.2.1: the one-dimensional predictor (Ra) is used
+                    # for the FIRST LINE of the scan AND of every restart
+                    # interval — not just the first sample (conforming
+                    # encoders like the DNG/Cornell codec restart this
+                    # way, so a first-sample-only reset mis-decodes them)
+                    px = int(p[y, x - 1])
+                elif x == 0:
+                    px = int(p[y - 1, 0])  # first column: from above
+                else:
+                    a = int(p[y, x - 1])
+                    bb = int(p[y - 1, x])
+                    c = int(p[y - 1, x - 1])
+                    if predictor == 1:
+                        px = a
+                    elif predictor == 2:
+                        px = bb
+                    elif predictor == 3:
+                        px = c
+                    elif predictor == 4:
+                        px = a + bb - c
+                    elif predictor == 5:
+                        px = a + ((bb - c) >> 1)
+                    elif predictor == 6:
+                        px = bb + ((a - c) >> 1)
+                    else:
+                        px = (a + bb) >> 1
+                # modulo 65536 (H.1.2.1)
+                p[y, x] = (px + dec.lossless_diff(ci, y, x)) & 0xFFFF
+            fresh = False
+            mcu += 1
+    return planes, pt, dec.end()
 
 
 def _upsample_to_frame(plane, hs, vs, hmax, vmax, width, height):
@@ -868,12 +1020,11 @@ def _upsample_to_frame(plane, hs, vs, hmax, vmax, width, height):
 
 
 def _finish_planes(planes, frame):
-    """Shared reconstruction tail for every decode path (baseline Huffman,
-    progressive, arithmetic): crop each MCU-padded component plane to its
-    true resolution (T.81 A.1.1), level-shift, upsample to frame
-    resolution, BT.601 color-convert 3-component scans (chroma centered at
-    half = 2^(P-1), the 12-bit generalization of 128), clip, and return
-    the (width, height, mean/maxval) contract."""
+    """Output tail of a single DCT frame (sequential or progressive, either
+    coder): crop each MCU-padded component plane to its true resolution
+    (T.81 A.1.1), level-shift, upsample to frame resolution, BT.601
+    color-convert 3-component scans (chroma centered at half = 2^(P-1),
+    the 12-bit generalization of 128), clip, and return the samples."""
     height, width, comps, prec = frame
     hmax = max(hs for _, hs, _, _ in comps)
     vmax = max(vs for _, _, vs, _ in comps)
@@ -884,14 +1035,14 @@ def _finish_planes(planes, frame):
         ch = -(-height * vs // vmax)
         p = p[:ch, :cw] + half
         out.append(_upsample_to_frame(p, hs, vs, hmax, vmax, width, height))
-    return _color_and_contract(out, frame)
+    return _color_and_clip(out, frame)
 
 
-def _color_and_contract(out, frame):
+def _color_and_clip(out, frame):
     """Shared output tail over frame-resolution ABSOLUTE-sample planes:
     BT.601 color conversion for 3-component scans (chroma centered at
-    half = 2^(P-1)), clip, and the (width, height, mean/maxval) contract."""
-    height, width, comps, prec = frame
+    half = 2^(P-1)), then the samples rounded and clipped to [0, 2^P-1]."""
+    prec = frame[3]
     half, vmaxval = float(1 << (prec - 1)), float((1 << prec) - 1)
     if len(out) == 3:
         y, cb, cr = out
@@ -901,9 +1052,7 @@ def _color_and_contract(out, frame):
         samples = np.stack([r, g, bch], axis=-1)
     else:
         samples = out[0]
-    samples = np.clip(np.rint(samples), 0, vmaxval)
-    _maybe_capture(samples)
-    return width, height, float(samples.mean()) / vmaxval
+    return np.clip(np.rint(samples), 0, vmaxval)
 
 
 def _exp_expand(ref, eh: int, ev: int):
@@ -947,7 +1096,7 @@ def _hier_merge(refs, frame, planes, differential, pending_exp, level_shift):
             if level_shift:
                 # Non-differential DCT frame: the reference IS the frame's
                 # decoded output, and T.81 output samples clamp to
-                # [0, 2^P-1] (the single-frame path's _color_and_contract
+                # [0, 2^P-1] (the single-frame path's _color_and_clip
                 # clip) — IDCT ringing on a lossy base frame (e.g. a -2
                 # pre-shift sample) must clamp to 0, not wrap to 65534 and
                 # later clip to 255. Modulo-2^16 arithmetic (J.1) applies
@@ -974,7 +1123,7 @@ def _hier_merge(refs, frame, planes, differential, pending_exp, level_shift):
 def _finish_hier(refs, hier):
     """Assemble the hierarchical output at the DHP resolution: clip each
     final reference component to [0, 2^P-1] and run the shared
-    upsample/color/contract tail."""
+    upsample/color/clip tail."""
     height, width, comps, prec = hier
     hmax = max(hs for _, hs, _, _ in comps)
     vmax = max(vs for _, _, vs, _ in comps)
@@ -1000,7 +1149,7 @@ def _finish_hier(refs, hier):
                 hs, vs, hmax, vmax, width, height,
             )
         )
-    return _color_and_contract(out, hier)
+    return _color_and_clip(out, hier)
 
 
 def _reconstruct_progressive_planes(frame, qt, coef):
@@ -1021,16 +1170,13 @@ def _reconstruct_progressive_planes(frame, qt, coef):
     return planes
 
 
-def _reconstruct_progressive(frame, qt, coef):
-    """Dequantize + IDCT the accumulated progressive coefficients (EOI
-    reached) — same math and subsampling tail as the baseline path."""
-    return _finish_planes(_reconstruct_progressive_planes(frame, qt, coef), frame)
-
-
 def _find_next_marker(b: bytes, pos: int) -> int:
-    """Position of the next real marker at/after ``pos``: 0xFF followed by
-    a code that is neither 0x00 (stuffed data byte) nor another fill 0xFF;
-    RSTn markers are skipped (they belong to the entropy stream).
+    """Offset where a scan's entropy-coded data ends: the first 0xFF at or
+    after ``pos`` that is not a stuffed data byte (0xFF 0x00). Fill bytes
+    and a stray RSTn found there are left to the marker walk, which skips
+    them. A real marker (any code but 0x00, a fill 0xFF or RSTn) must
+    follow at or after that offset: a scan the stream never terminates
+    raises.
 
     LIMITATION (byte-stuffing-only): this scan assumes the entropy coder
     byte-stuffed every data 0xFF as 0xFF 0x00, which T.81 B.1.1.5
@@ -1039,497 +1185,20 @@ def _find_next_marker(b: bytes, pos: int) -> int:
     stream may instead carry 0xFF followed by 0x01..0x7F as entropy data
     (T.81 arithmetic bit-stuffing only forbids 0xFF 0x80..0xFF), and this
     scan would misread that as a scan-terminating marker — cutting a
-    hierarchical arithmetic scan short. The arith *_planes callers rely on
-    this function for scan-boundary detection and inherit the limitation;
-    it is consistent with the decoder-wide ArithDecoder convention."""
+    hierarchical arithmetic scan short. Both entropy decoders report their
+    scan's end through this function, so the arithmetic one inherits the
+    limitation; it is consistent with the decoder-wide ArithDecoder
+    convention."""
+    end = None
     while pos + 1 < len(b):
-        if b[pos] == 0xFF and b[pos + 1] not in (0x00, 0xFF):
-            if 0xD0 <= b[pos + 1] <= 0xD7:
-                pos += 2
-                continue
-            return pos
+        code = b[pos + 1]
+        if b[pos] == 0xFF and code != 0x00:
+            if end is None:
+                end = pos
+            if code != 0xFF and not 0xD0 <= code <= 0xD7:
+                return end
         pos += 1
     raise ValueError("JPEG entropy stream ended without a terminating marker")
-
-
-def _decode_scan(b, pos, seg, frame, qt, huff_dc, huff_ac, restart_interval):
-    planes, _end = _decode_scan_planes(
-        b, pos, seg, frame, qt, huff_dc, huff_ac, restart_interval
-    )
-    return _finish_planes(planes, frame)
-
-
-def _decode_scan_planes(
-    b, pos, seg, frame, qt, huff_dc, huff_ac, restart_interval,
-    differential=False,
-):
-    """Sequential-DCT scan body shared by the one-shot decode path and the
-    hierarchical controller: returns (planes, end_pos) where planes are the
-    MCU-padded per-component sample arrays BEFORE level shift (differential
-    frames never get one — T.81 J.1) and end_pos is the byte offset of the
-    marker that terminated the scan. ``differential=True`` decodes each DC
-    value directly (F.1.1.5.1: the DC prediction is always zero in
-    differential frames)."""
-    height, width, comps, prec = frame
-    ncomp_scan = seg[0]
-    if ncomp_scan != len(comps):
-        raise ValueError("JPEG non-interleaved multi-scan unsupported")
-    if len(comps) not in (1, 3):
-        raise ValueError(f"JPEG with {len(comps)} components unsupported")
-    # sampling factors (T.81 A.1.1): the MCU is Hmax*8 x Vmax*8 pixels and
-    # component i contributes hs*vs blocks per MCU. ANY factors in 1..4
-    # decode — integer ratios (4:4:4, 4:2:2, 4:2:0, 4:1:1) AND fractional
-    # ratios (e.g. 3x1 luma against 2x1 chroma = 3/2): upsampling is the
-    # nearest-sample gather x -> floor(x*hs/hmax), which degenerates to
-    # pixel replication exactly when the ratio is an integer (T.81 leaves
-    # the upsampling filter to the decoder).
-    hmax = max(hs for _, hs, _, _ in comps)
-    vmax = max(vs for _, _, vs, _ in comps)
-    for _, hs, vs, _ in comps:
-        if not (1 <= hs <= 4 and 1 <= vs <= 4):
-            raise ValueError(f"JPEG sampling factor {hs}x{vs} out of range")
-    # per-scan-component entropy table selectors, in scan order
-    selectors = {}
-    for i in range(ncomp_scan):
-        cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-        selectors[cs] = (tdta >> 4, tdta & 0x0F)
-    if width <= 0 or height <= 0:
-        raise ValueError("JPEG frame has empty dimensions")
-    mcux = (width + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-    planes = [
-        np.zeros((mcuy * vs * 8, mcux * hs * 8), dtype=np.float64)
-        for _, hs, vs, _ in comps
-    ]
-    for _, _, _, tq in comps:
-        if tq not in qt:
-            raise ValueError(f"JPEG references missing quant table {tq}")
-    br = _BitReader(b, pos)
-    preds = [0] * len(comps)
-    mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                br.restart()
-                preds = [0] * len(comps)
-            for ci, (cid, hs, vs, tq) in enumerate(comps):
-                if cid not in selectors:
-                    raise ValueError(f"JPEG scan omits frame component {cid}")
-                td, ta = selectors[cid]
-                if td not in huff_dc or ta not in huff_ac:
-                    raise ValueError("JPEG scan references missing Huffman table")
-                for v in range(vs):
-                    for h2 in range(hs):
-                        coeffs = np.zeros((8, 8), dtype=np.float64)
-                        s = huff_dc[td].decode(br)
-                        diff = _extend(br.receive(s), s)
-                        if differential:
-                            coeffs[0, 0] = diff  # PRED = 0 (F.1.1.5.1)
-                        else:
-                            preds[ci] += diff
-                            coeffs[0, 0] = preds[ci]
-                        k = 1
-                        while k < 64:
-                            rs = huff_ac[ta].decode(br)
-                            r, size = rs >> 4, rs & 0x0F
-                            if size == 0:
-                                if r == 15:  # ZRL: sixteen zeros
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("JPEG AC run past end of block")
-                            coeffs[_ZIGZAG[k]] = _extend(br.receive(size), size)
-                            k += 1
-                        block = _DCT_M.T @ (coeffs * qt[tq]) @ _DCT_M
-                        by, bx = my * vs + v, mx * hs + h2
-                        planes[ci][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = block
-            mcu += 1
-    if br.seen_marker is not None:
-        end = br.pos - 2
-    else:
-        end = _find_next_marker(b, br.pos)
-    return planes, end
-
-
-def _parse_scan_header(seg, comps):
-    """SOS scan-header fields shared by BOTH progressive scan decoders
-    (Huffman and arithmetic): per-component entropy-table selectors, the
-    spectral band [Ss, Se], the successive-approximation nibbles Ah/Al,
-    and the resolved (component index, Td, Ta) list — with the
-    unknown-component check, so malformed headers fail identically on
-    either entropy path."""
-    ncomp_scan = seg[0]
-    selectors = {}
-    for i in range(ncomp_scan):
-        cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-        selectors[cs] = (tdta >> 4, tdta & 0x0F)
-    ss, se = seg[1 + 2 * ncomp_scan], seg[2 + 2 * ncomp_scan]
-    if not ss <= se <= 63:  # B.2.3: the band must sit inside 0..63 — a
-        # corrupted Se would otherwise index past the zig-zag table
-        raise ValueError(f"JPEG spectral band [{ss}, {se}] invalid")
-    ahal = seg[3 + 2 * ncomp_scan]
-    ah, al = ahal >> 4, ahal & 0x0F
-    scan_comps = []  # (comp index, td, ta)
-    for ci, (cid, _hs, _vs, _tq) in enumerate(comps):
-        if cid in selectors:
-            scan_comps.append((ci, *selectors[cid]))
-    if len(scan_comps) != ncomp_scan:
-        raise ValueError("JPEG progressive scan names unknown component")
-    return ncomp_scan, ss, se, ah, al, scan_comps
-
-
-def _decode_scan_lossless(b, pos, seg, frame, huff_dc, restart_interval):
-    planes, pt, _end = _decode_scan_lossless_planes(
-        b, pos, seg, frame, huff_dc, restart_interval
-    )
-    height, width, comps, prec = frame
-    vmaxval = float((1 << prec) - 1)
-    samples = np.stack([(p << pt).astype(np.float64) for p in planes])
-    samples = np.clip(samples, 0, vmaxval)
-    _maybe_capture(samples)
-    return width, height, float(samples.mean()) / vmaxval
-
-
-def _decode_scan_lossless_planes(
-    b, pos, seg, frame, huff_dc, restart_interval, differential=False,
-):
-    """LOSSLESS (SOF3/SOF7) scan decode per T.81 Annex H: no DCT, no quant —
-    each sample is a Huffman-coded difference (DC-table categories 0..16)
-    from one of the seven spatial predictors selected by Ss, reconstructed
-    modulo 65536, with the point transform Al=Pt shifting the coded domain
-    down and the output back up. Prediction edges (H.1.2.1): the very
-    first sample of the scan AND of each restart interval predicts
-    2^(P-1-Pt); the rest of the interval's FIRST LINE uses the
-    one-dimensional predictor (Ra, the left neighbor) regardless of Ss;
-    the first sample of every other line predicts from ABOVE.
-    Components decode interleaved in MCU order; only 1x1 sampling is
-    supported (the overwhelmingly common lossless shape — T.81 allows
-    subsampled lossless MCUs, refused rather than mis-decoded).
-
-    Returns (planes, pt, end_pos) with planes in the CODED domain (before
-    the point-transform shift back up). ``differential=True`` (SOF7 inside
-    a hierarchical sequence) requires predictor selection 0 —
-    the coded values are reference differences with NO spatial
-    prediction (T.81 B.2.3 reserves Ss=0 for exactly this)."""
-    height, width, comps, prec = frame
-    ncomp_scan = seg[0]
-    if ncomp_scan != len(comps):
-        raise ValueError("JPEG non-interleaved multi-scan unsupported")
-    for _, hs, vs, _ in comps:
-        if hs != 1 or vs != 1:
-            raise ValueError(
-                "lossless JPEG with subsampled components unsupported"
-            )
-    selectors = {}
-    for i in range(ncomp_scan):
-        cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-        selectors[cs] = tdta >> 4  # DC table only; Ta must be 0 in lossless
-    predictor = seg[1 + 2 * ncomp_scan]  # Ss = predictor selector
-    pt = seg[3 + 2 * ncomp_scan] & 0x0F  # Al = point transform
-    if differential:
-        if predictor != 0:
-            raise ValueError(
-                "JPEG differential lossless scan must use predictor "
-                f"selection 0, got {predictor}"
-            )
-    elif not 1 <= predictor <= 7:
-        raise ValueError(f"JPEG lossless predictor {predictor} invalid")
-    if width <= 0 or height <= 0:
-        raise ValueError("JPEG frame has empty dimensions")
-    tables = []
-    for cid, _hs, _vs, _tq in comps:
-        if cid not in selectors:
-            raise ValueError(f"JPEG scan omits frame component {cid}")
-        td = selectors[cid]
-        if td not in huff_dc:
-            raise ValueError("JPEG scan references missing Huffman table")
-        tables.append(huff_dc[td])
-    default_pred = 1 << (prec - 1 - pt)
-    planes = [
-        np.zeros((height, width), dtype=np.int64) for _ in comps
-    ]
-    br = _BitReader(b, pos)
-    mcu = 0
-    fresh = True  # first sample of the scan / of a restart interval
-    first_line = 0  # row where the current restart interval began
-    for y in range(height):
-        for x in range(width):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                br.restart()
-                fresh = True
-                first_line = y
-            for ci, table in enumerate(tables):
-                p = planes[ci]
-                if differential:
-                    # hierarchical differential frame: values are coded
-                    # reference differences, no spatial prediction
-                    px = 0
-                elif fresh:
-                    # H.1.2.1: prediction initialized to 2^(P-1-Pt) at scan
-                    # start and at the beginning of each restart interval
-                    px = default_pred
-                elif y == first_line:
-                    # H.1.2.1: the one-dimensional predictor (Ra) is used
-                    # for the FIRST LINE of the scan AND of every restart
-                    # interval — not just the first sample (conforming
-                    # encoders like the DNG/Cornell codec restart this
-                    # way, so a first-sample-only reset mis-decodes them)
-                    px = int(p[y, x - 1])
-                elif x == 0:
-                    px = int(p[y - 1, 0])  # first column: from above
-                else:
-                    a = int(p[y, x - 1])
-                    bb = int(p[y - 1, x])
-                    c = int(p[y - 1, x - 1])
-                    if predictor == 1:
-                        px = a
-                    elif predictor == 2:
-                        px = bb
-                    elif predictor == 3:
-                        px = c
-                    elif predictor == 4:
-                        px = a + bb - c
-                    elif predictor == 5:
-                        px = a + ((bb - c) >> 1)
-                    elif predictor == 6:
-                        px = bb + ((a - c) >> 1)
-                    else:
-                        px = (a + bb) >> 1
-                s = table.decode(br)
-                if s == 16:  # H.1.2.2: category 16 codes diff 32768 directly
-                    diff = 32768
-                else:
-                    diff = _extend(br.receive(s), s)
-                p[y, x] = (px + diff) & 0xFFFF  # modulo 65536 (H.1.2.1)
-            fresh = False
-            mcu += 1
-    if br.seen_marker is not None:
-        end = br.pos - 2
-    else:
-        end = _find_next_marker(b, br.pos)
-    return planes, pt, end
-
-
-def _decode_scan_lossless_arith(b, pos, seg, frame, dac_dc, restart_interval):
-    planes, pt, _end = _decode_scan_lossless_arith_planes(
-        b, pos, seg, frame, dac_dc, restart_interval
-    )
-    height, width, comps, prec = frame
-    vmaxval = float((1 << prec) - 1)
-    samples = np.stack([(p << pt).astype(np.float64) for p in planes])
-    samples = np.clip(samples, 0, vmaxval)
-    _maybe_capture(samples)
-    return width, height, float(samples.mean()) / vmaxval
-
-
-def _decode_scan_lossless_arith_planes(
-    b, pos, seg, frame, dac_dc, restart_interval, differential=False,
-):
-    """LOSSLESS ARITHMETIC (SOF11/SOF15) scan decode — the Annex H sample walk
-    of _decode_scan_lossless (same seven predictors, edge rules, point
-    transform, modulo-65536 reconstruction, restart-interval prediction
-    reset) with the entropy layer swapped for the QM coder + the H.1.2.3
-    lossless statistical model (functions/jpeg_arith.py): each difference
-    conditions on the CLASSES of both neighboring differences Da (left)
-    and Db (above), zero-classed at scan/line edges and across restart
-    boundaries (a restart resets coder, statistics, predictions AND
-    conditioning — the fixture encoder mirrors the identical rule, and
-    the exact-roundtrip property pins the pair). The scan selector's Td
-    is the DC conditioning-table id (Tc=0 DAC entries carry (L, U))."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    height, width, comps, prec = frame
-    ncomp_scan = seg[0]
-    if ncomp_scan != len(comps):
-        raise ValueError("JPEG non-interleaved multi-scan unsupported")
-    for _, hs, vs, _ in comps:
-        if hs != 1 or vs != 1:
-            raise ValueError(
-                "lossless JPEG with subsampled components unsupported"
-            )
-    selectors = {}
-    for i in range(ncomp_scan):
-        cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-        selectors[cs] = tdta >> 4  # Td = DC conditioning table id
-    predictor = seg[1 + 2 * ncomp_scan]  # Ss = predictor selector
-    pt = seg[3 + 2 * ncomp_scan] & 0x0F  # Al = point transform
-    if differential:
-        if predictor != 0:
-            raise ValueError(
-                "JPEG differential lossless scan must use predictor "
-                f"selection 0, got {predictor}"
-            )
-    elif not 1 <= predictor <= 7:
-        raise ValueError(f"JPEG lossless predictor {predictor} invalid")
-    if width <= 0 or height <= 0:
-        raise ValueError("JPEG frame has empty dimensions")
-    tids = []
-    for cid, _hs, _vs, _tq in comps:
-        if cid not in selectors:
-            raise ValueError(f"JPEG scan omits frame component {cid}")
-        tids.append(selectors[cid])
-    stats = {td: ja.LosslessStats(*dac_dc.get(td, (0, 1))) for td in tids}
-    default_pred = 1 << (prec - 1 - pt)
-    planes = [np.zeros((height, width), dtype=np.int64) for _ in comps]
-    diffs = [np.zeros((height, width), dtype=np.int64) for _ in comps]
-    dec = ja.ArithDecoder(b, pos)
-    mcu = 0
-    start_mcu = 0  # first sample index of the current restart interval
-    fresh = True
-    first_line = 0
-    for y in range(height):
-        for x in range(width):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                dec.restart()
-                for st in stats.values():
-                    st.reset()
-                fresh = True
-                first_line = y
-                start_mcu = mcu
-            for ci, td in enumerate(tids):
-                p, d, st = planes[ci], diffs[ci], stats[td]
-                if differential:
-                    # hierarchical differential frame: no spatial
-                    # prediction; the H.1.2.3 conditioning on neighboring
-                    # DIFF classes below is unchanged (the coded values
-                    # ARE the differences it classifies)
-                    px = 0
-                elif fresh:
-                    px = default_pred
-                elif y == first_line:
-                    px = int(p[y, x - 1])
-                elif x == 0:
-                    px = int(p[y - 1, 0])
-                else:
-                    a = int(p[y, x - 1])
-                    bb = int(p[y - 1, x])
-                    c = int(p[y - 1, x - 1])
-                    if predictor == 1:
-                        px = a
-                    elif predictor == 2:
-                        px = bb
-                    elif predictor == 3:
-                        px = c
-                    elif predictor == 4:
-                        px = a + bb - c
-                    elif predictor == 5:
-                        px = a + ((bb - c) >> 1)
-                    elif predictor == 6:
-                        px = bb + ((a - c) >> 1)
-                    else:
-                        px = (a + bb) >> 1
-                cls_a = (
-                    st.classify5(int(d[y, x - 1]))
-                    if x > 0 and (y * width + x - 1) >= start_mcu
-                    else 0
-                )
-                cls_b = (
-                    st.classify5(int(d[y - 1, x]))
-                    if y > 0 and ((y - 1) * width + x) >= start_mcu
-                    else 0
-                )
-                diff = ja.decode_lossless_diff(dec, st, cls_a, cls_b)
-                d[y, x] = diff
-                p[y, x] = (px + diff) & 0xFFFF  # modulo 65536 (H.1.2.1)
-            fresh = False
-            mcu += 1
-    return planes, pt, _find_next_marker(b, pos)
-
-
-def _decode_scan_arith(b, pos, seg, frame, qt, dac_dc, dac_ac, restart_interval):
-    planes, _end = _decode_scan_arith_planes(
-        b, pos, seg, frame, qt, dac_dc, dac_ac, restart_interval
-    )
-    return _finish_planes(planes, frame)
-
-
-def _decode_scan_arith_planes(
-    b, pos, seg, frame, qt, dac_dc, dac_ac, restart_interval,
-    differential=False,
-):
-    """Sequential arithmetic (SOF9/SOF13) scan decode — the same
-    interleaved MCU walk as the Huffman path, with entropy decisions drawn
-    from the T.81 QM coder + the F.1.4.4.1 DC/AC statistical models
-    (functions/jpeg_arith.py). DAC conditioning defaults per F.1.4.4.1.4:
-    DC (L, U) = (0, 1), AC Kx = 5. RSTn resets the coder, every
-    statistics area, the DC predictions AND the DC contexts (E.2.4).
-    ``differential=True`` (hierarchical SOF13) decodes each DC
-    value directly — PRED is zero, while the conditioning context still
-    tracks the previously decoded value exactly as F.1.4.4.1 conditions
-    on the previous DIFF."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    height, width, comps, prec = frame
-    ncomp_scan = seg[0]
-    if ncomp_scan != len(comps):
-        raise ValueError("JPEG non-interleaved multi-scan unsupported")
-    if len(comps) not in (1, 3):
-        raise ValueError(f"JPEG with {len(comps)} components unsupported")
-    hmax = max(hs for _, hs, _, _ in comps)
-    vmax = max(vs for _, _, vs, _ in comps)
-    for _, hs, vs, _ in comps:
-        if not (1 <= hs <= 4 and 1 <= vs <= 4):
-            raise ValueError(f"JPEG sampling factor {hs}x{vs} out of range")
-    selectors = {}
-    for i in range(ncomp_scan):
-        cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-        selectors[cs] = (tdta >> 4, tdta & 0x0F)
-    if width <= 0 or height <= 0:
-        raise ValueError("JPEG frame has empty dimensions")
-    for _, _, _, tq in comps:
-        if tq not in qt:
-            raise ValueError(f"JPEG references missing quant table {tq}")
-    mcux = (width + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-    planes = [
-        np.zeros((mcuy * vs * 8, mcux * hs * 8), dtype=np.float64)
-        for _, hs, vs, _ in comps
-    ]
-    # statistics areas are per CONDITIONING TABLE id (shared by
-    # components selecting the same id, F.1.4.4.1.3)
-    dc_stats = {
-        td: ja.DCStats(*dac_dc.get(td, (0, 1)))
-        for td, _ in selectors.values()
-    }
-    ac_stats = {ta: ja.ACStats(dac_ac.get(ta, 5)) for _, ta in selectors.values()}
-
-    dec = ja.ArithDecoder(b, pos)
-    preds = [0] * len(comps)
-    contexts = [0] * len(comps)
-    mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                dec.restart()
-                for st in dc_stats.values():
-                    st.reset()
-                for st in ac_stats.values():
-                    st.reset()
-                preds = [0] * len(comps)
-                contexts = [0] * len(comps)
-            for ci, (cid, hs, vs, tq) in enumerate(comps):
-                if cid not in selectors:
-                    raise ValueError(f"JPEG scan omits frame component {cid}")
-                td, ta = selectors[cid]
-                for v in range(vs):
-                    for h2 in range(hs):
-                        coeffs = np.zeros((8, 8), dtype=np.float64)
-                        diff, contexts[ci] = ja.decode_dc_diff(
-                            dec, dc_stats[td], contexts[ci]
-                        )
-                        if differential:
-                            coeffs[0, 0] = diff  # PRED = 0 (F.1.1.5.1)
-                        else:
-                            preds[ci] += diff
-                            coeffs[0, 0] = preds[ci]
-                        ja.decode_ac_block(dec, ac_stats[ta], coeffs, _ZIGZAG)
-                        block = _DCT_M.T @ (coeffs * qt[tq]) @ _DCT_M
-                        by, bx = my * vs + v, mx * hs + h2
-                        planes[ci][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = block
-            mcu += 1
-    return planes, _find_next_marker(b, pos)
 
 
 # ---------------------------------------------------------------------------
@@ -1684,56 +1353,30 @@ def encode_jpeg_ycbcr_420_blocks(
     )
 
 
-# 12-bit fixture tables (SEPARATE from the 8-bit ones so existing fixture
-# streams are byte-stable): DC categories 0..12 at code length 4 — a
-# 12-bit DC sits in [-2048, 2047] and consecutive-block diffs reach
-# category 12; canonical codes 0000..1100, so code(s) == s still holds.
-_ENC12_DC_COUNTS = [0, 0, 0, 13] + [0] * 12
-_ENC12_DC_SYMBOLS = bytes(range(13))
-# DC quantizer 8 as a 16-bit (Pq=1) table entry stream
-_ENC12_QUANT_ZIGZAG = struct.pack(">64H", 8, *([16] * 63))
-
-
-def encode_jpeg_12bit_gray_blocks(
-    block_values, blocks_w: int, blocks_h: int
-) -> bytes:
-    """Spec-valid 12-bit EXTENDED SEQUENTIAL (SOF1) grayscale fixture:
-    constant 8x8 blocks of values 0..4095. Same exactness argument as the
-    8-bit fixtures — DC = 8*(v - 2048), quantizer 8 (declared via a
-    16-bit Pq=1 DQT), so the quantized DC is exactly v - 2048 and decode
-    reconstructs every sample; the mean contract normalizes by 4095."""
-    vals = [int(v) for v in block_values]
-    if len(vals) != blocks_w * blocks_h:
-        raise ValueError("block value count != blocks_w * blocks_h")
-    for v in vals:
-        if not 0 <= v <= 4095:
-            raise ValueError(f"block value {v} outside 0..4095")
-    w, h = 8 * blocks_w, 8 * blocks_h
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += (
-        b"\xff\xdb" + struct.pack(">H", 2 + 1 + 128)
-        + b"\x10" + _ENC12_QUANT_ZIGZAG  # Pq=1, Tq=0
-    )
-    out += b"\xff\xc1" + struct.pack(">HBHHB", 8 + 3, 12, h, w, 1)  # SOF1
-    out += bytes([1, 0x11, 0])
-    dht = bytes([0x00]) + bytes(_ENC12_DC_COUNTS) + _ENC12_DC_SYMBOLS
-    dht += bytes([0x10]) + bytes(_ENC_AC_COUNTS) + _ENC_AC_SYMBOLS
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
-    bw_ = _BitWriter()
-    pred = 0
-    for v in vals:
-        dc = v - 2048  # quantized DC: 8*(v-2048) / qDC=8, exact
-        diff = dc - pred
-        pred = dc
-        s = abs(diff).bit_length()
-        bw_.write(s, 4)
-        if s:
-            bw_.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        bw_.write(0b00, 2)  # EOB
-    out += bw_.flush()
-    out += b"\xff\xd9"  # EOI
+def _hier_scan(vals, restart_interval: int, fresh, code) -> bytes:
+    """Entropy-coded data of one single-component scan of a hierarchical
+    fixture frame, where an MCU is one block: ``code(state, v)`` codes one
+    block; every ``restart_interval`` blocks the coder ``state[0]`` is
+    flushed, RSTn follows, and ``fresh()`` starts new state (coder,
+    statistics, predictions), as T.81 E.2.4 resets them."""
+    out = bytearray()
+    state = fresh()
+    for k, v in enumerate(vals):
+        if restart_interval and k and k % restart_interval == 0:
+            out += state[0].flush()
+            out += bytes([0xFF, 0xD0 + ((k // restart_interval) - 1) % 8])
+            state = fresh()
+        code(state, v)
+    out += state[0].flush()
     return bytes(out)
+
+
+def _hier_frame_header(marker: int, bw: int, bh: int) -> bytes:
+    """SOF segment of a one-component 8-bit hierarchical fixture frame."""
+    return (
+        bytes([0xFF, marker]) + struct.pack(">HBHHB", 11, 8, 8 * bh, 8 * bw, 1)
+        + bytes([1, 0x11, 0])
+    )
 
 
 def _hier_seq_frame_bytes(
@@ -1747,207 +1390,51 @@ def _hier_seq_frame_bytes(
     pixel levels 0..255 with the usual DC prediction chain."""
     if len(vals) != blocks_w * blocks_h:
         raise ValueError("block value count != block grid")
-    out = bytearray()
-    out += bytes([0xFF, sof_marker])
-    out += struct.pack(">HBHHB", 11, 8, 8 * blocks_h, 8 * blocks_w, 1)
-    out += bytes([1, 0x11, 0])
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
-    w = _BitWriter()
-    pred = 0
-    for mcu, v in enumerate(vals):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            out += w.flush()
-            out += bytes([0xFF, 0xD0 + ((mcu // restart_interval) - 1) % 8])
-            w = _BitWriter()
-            pred = 0
+
+    def code(st, v):  # st = [writer, pred]
         if differential:
-            _write_dc_diff(w, int(v))
-            w.write(0b00, 2)  # EOB
+            _write_dc_diff(st[0], int(v))
+            st[0].write(0b00, 2)  # EOB
         else:
-            pred = _encode_dc_block(w, v, pred)
-    out += w.flush()
-    return bytes(out)
+            st[1] = _encode_dc_block(st[0], v, st[1])
 
-
-def encode_jpeg_hierarchical_gray(
-    base_values, blocks_w: int, blocks_h: int, stages, restart_interval: int = 0
-) -> bytes:
-    """Spec-valid HIERARCHICAL grayscale JPEG (T.81 Annex J): DHP header at
-    the final resolution, a non-differential SOF0 base frame of constant
-    ``blocks_w``x``blocks_h`` blocks, then per stage an optional EXP
-    doubling followed by an SOF5 differential frame whose constant blocks
-    ADD the stage's diff values. ``stages`` is a list of
-    (eh, ev, diff_values): eh/ev in {0, 1} double the width/height, and
-    diff_values is row-major over the stage's NEW block grid with each
-    entry the exact signed per-pixel difference (DC-only blocks with the
-    DC quantizer of 8 make every frame decode-exact, so the whole
-    hierarchical reconstruction is closed-form)."""
-    fw, fh = blocks_w, blocks_h
-    for eh, ev, _ in stages:
-        fw *= 2 if eh else 1
-        fh *= 2 if ev else 1
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + _ENC_QUANT_ZIGZAG
-    # DHP: frame-header syntax at the FINAL resolution (B.3.2)
-    out += b"\xff\xde" + struct.pack(">HBHHB", 11, 8, 8 * fh, 8 * fw, 1)
-    out += bytes([1, 0x11, 0])
-    dht = bytes([0x00]) + bytes(_ENC_DC_COUNTS) + _ENC_DC_SYMBOLS
-    dht += bytes([0x10]) + bytes(_ENC_AC_COUNTS) + _ENC_AC_SYMBOLS
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += _hier_seq_frame_bytes(
-        0xC0, base_values, blocks_w, blocks_h, restart_interval, False
+    return (
+        _hier_frame_header(sof_marker, blocks_w, blocks_h)
+        + _sos_segment([1], 0, 63, 0, 0)
+        + _hier_scan(vals, restart_interval, lambda: [_BitWriter(), 0], code)
     )
-    gw, gh = blocks_w, blocks_h
-    for eh, ev, diffs in stages:
-        if eh or ev:
-            out += b"\xff\xdf" + struct.pack(">HB", 3, (eh << 4) | ev)
-            gw *= 2 if eh else 1
-            gh *= 2 if ev else 1
-        out += _hier_seq_frame_bytes(0xC5, diffs, gw, gh, restart_interval, True)
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
 
 
-def _ll_hier_frame_bytes(
-    marker: int, plane, precision: int, predictor: int,
-    restart_interval: int, differential: bool,
+def _hier_prog_frame_bytes(
+    differential: bool, vals, bw: int, bh: int, restart_interval: int
 ) -> bytes:
-    """One single-component LOSSLESS frame (SOF3 non-differential with the
-    given predictor, or SOF7 differential with predictor selection 0) for
-    the hierarchical fixture encoder. Point transform fixed at 0: the
-    hierarchical reference merge is exercised at full precision."""
-    plane = np.asarray(plane, dtype=np.int64)
-    h, w = plane.shape
-    out = bytearray()
-    out += bytes([0xFF, marker]) + struct.pack(">HBHHB", 11, precision, h, w, 1)
-    out += bytes([1, 0x11, 0])
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1)
-    out += bytes([1, 0x00, 0 if differential else predictor, 0, 0])
-    default_pred = 1 << (precision - 1)
-    bw_ = _BitWriter()
-    mcu = 0
-    fresh = True
-    first_line = 0
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                out += bw_.flush()
-                out += bytes([0xFF, 0xD0 + ((mcu // restart_interval) - 1) % 8])
-                bw_ = _BitWriter()
-                fresh = True
-                first_line = y
-            if differential:
-                px = 0
-            elif fresh:
-                px = default_pred
-            elif y == first_line:
-                px = int(plane[y, x - 1])
-            elif x == 0:
-                px = int(plane[y - 1, 0])
-            else:
-                a = int(plane[y, x - 1])
-                bb = int(plane[y - 1, x])
-                c = int(plane[y - 1, x - 1])
-                if predictor == 1:
-                    px = a
-                elif predictor == 2:
-                    px = bb
-                elif predictor == 3:
-                    px = c
-                elif predictor == 4:
-                    px = a + bb - c
-                elif predictor == 5:
-                    px = a + ((bb - c) >> 1)
-                elif predictor == 6:
-                    px = bb + ((a - c) >> 1)
-                else:
-                    px = (a + bb) >> 1
-            diff = ((int(plane[y, x]) - px + 0x8000) & 0xFFFF) - 0x8000
-            if diff == -0x8000:  # category 16: coded with no extra bits
-                bw_.write(16, 5)
-            else:
-                s = abs(diff).bit_length()
-                bw_.write(s, 5)
-                if s:
-                    bw_.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-            fresh = False
-            mcu += 1
-    out += bw_.flush()
-    return bytes(out)
-
-
-def encode_jpeg_hierarchical_lossless(
-    base_plane, stages, predictor: int = 4, precision: int = 8,
-    restart_interval: int = 0,
-) -> bytes:
-    """Spec-valid HIERARCHICAL LOSSLESS grayscale JPEG (T.81 Annex J over
-    Annex H): DHP at the final resolution, an SOF3 base frame (any
-    predictor 1..7), then per stage an optional EXP doubling followed by
-    an SOF7 differential frame with predictor selection 0 whose PER-SAMPLE
-    signed diffs add to the expanded reference modulo 2^16 — lossless
-    frames need no DCT, so arbitrary (non-block-constant) differentials
-    stay exact. ``stages`` is a list of (eh, ev, diff_plane)."""
-    base_plane = np.asarray(base_plane, dtype=np.int64)
-    fh, fw = base_plane.shape
-    for eh, ev, _ in stages:
-        fw *= 2 if eh else 1
-        fh *= 2 if ev else 1
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xde" + struct.pack(">HBHHB", 11, precision, fh, fw, 1)
-    out += bytes([1, 0x11, 0])
-    dht = bytes([0x00]) + bytes(_ENC_LL_COUNTS) + _ENC_LL_SYMBOLS
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += _ll_hier_frame_bytes(
-        0xC3, base_plane, precision, predictor, restart_interval, False
-    )
-    for eh, ev, diffs in stages:
-        if eh or ev:
-            out += b"\xff\xdf" + struct.pack(">HB", 3, (eh << 4) | ev)
-        out += _ll_hier_frame_bytes(
-            0xC7, np.asarray(diffs, dtype=np.int64), precision, predictor,
-            restart_interval, True,
-        )
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _hier_prog_frame_bytes(differential: bool, vals, bw: int, bh: int) -> bytes:
     """One single-component PROGRESSIVE frame (SOF2 / differential SOF6)
     for the hierarchical fixture encoder: DC-first scan at Al=1, DC
     refinement scan, one all-EOB AC scan — the encode_jpeg_progressive_blocks
     scan plan, with PRED pinned to zero in the differential variant."""
-    marker = 0xC6 if differential else 0xC2
-    out = bytearray()
-    out += bytes([0xFF, marker]) + struct.pack(">HBHHB", 11, 8, 8 * bh, 8 * bw, 1)
-    out += bytes([1, 0x11, 0])
-    out += _sos_segment([1], 0, 0, 0, 1)
-    bw_ = _BitWriter()
-    pred = 0
-    for v in vals:
-        d = int(v) if differential else int(v) - 128
+    ds = [int(v) if differential else int(v) - 128 for v in vals]
+
+    def dc_first(st, d):  # st = [writer, pred]
         sh = d >> 1  # arithmetic shift
-        if differential:
-            _write_dc_diff(bw_, sh)
-        else:
-            _write_dc_diff(bw_, sh - pred)
-            pred = sh
-    out += bw_.flush()
-    out += _sos_segment([1], 0, 0, 1, 0)
-    bw_ = _BitWriter()
-    for v in vals:
-        d = int(v) if differential else int(v) - 128
-        bw_.write(d & 1, 1)
-    out += bw_.flush()
-    out += _sos_segment([1], 1, 63, 0, 0)
-    bw_ = _BitWriter()
-    for _ in vals:
-        bw_.write(0b00, 2)  # EOB0
-    out += bw_.flush()
-    return bytes(out)
+        _write_dc_diff(st[0], sh - st[1])
+        if not differential:
+            st[1] = sh
+
+    return (
+        _hier_frame_header(0xC6 if differential else 0xC2, bw, bh)
+        + _sos_segment([1], 0, 0, 0, 1)
+        + _hier_scan(ds, restart_interval, lambda: [_BitWriter(), 0], dc_first)
+        + _sos_segment([1], 0, 0, 1, 0)
+        + _hier_scan(
+            ds, restart_interval, lambda: [_BitWriter()],
+            lambda st, d: st[0].write(d & 1, 1),
+        )
+        + _sos_segment([1], 1, 63, 0, 0)
+        + _hier_scan(
+            ds, restart_interval, lambda: [_BitWriter()],
+            lambda st, d: st[0].write(0b00, 2),  # EOB0
+        )
+    )
 
 
 def _hier_arith_frame_bytes(
@@ -1955,76 +1442,60 @@ def _hier_arith_frame_bytes(
 ) -> bytes:
     """One single-component sequential ARITHMETIC frame (SOF9 /
     differential SOF13) for the hierarchical fixture encoder."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    marker = 0xCD if differential else 0xC9
-    out = bytearray()
-    out += bytes([0xFF, marker]) + struct.pack(">HBHHB", 11, 8, 8 * bh, 8 * bw, 1)
-    out += bytes([1, 0x11, 0])
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00, 0, 63, 0])
-    enc = ja.ArithEncoder()
-    dc_st, ac_st = ja.DCStats(), ja.ACStats()
-    pred = context = 0
     zero_ac = [0] * 64
-    for mcu, v in enumerate(vals):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            out += enc.flush()
-            out += bytes([0xFF, 0xD0 + ((mcu // restart_interval) - 1) % 8])
-            enc = ja.ArithEncoder()
-            dc_st.reset()
-            ac_st.reset()
-            pred = context = 0
-        d = int(v) if differential else int(v) - 128
-        if differential:
-            context = ja.encode_dc_diff(enc, dc_st, context, d)  # PRED = 0
-        else:
-            context = ja.encode_dc_diff(enc, dc_st, context, d - pred)
-            pred = d
-        ja.encode_ac_block(enc, ac_st, zero_ac)
-    out += enc.flush()
-    return bytes(out)
+
+    def code(st, d):  # st = [encoder, DC stats, AC stats, pred, context]
+        st[4] = ja.encode_dc_diff(st[0], st[1], st[4], d - st[3])
+        if not differential:  # PRED stays 0 in a differential frame
+            st[3] = d
+        ja.encode_ac_block(st[0], st[2], zero_ac)
+
+    return (
+        _hier_frame_header(0xCD if differential else 0xC9, bw, bh)
+        + _sos_segment([1], 0, 63, 0, 0)
+        + _hier_scan(
+            [int(v) if differential else int(v) - 128 for v in vals],
+            restart_interval,
+            lambda: [ja.ArithEncoder(), ja.DCStats(), ja.ACStats(), 0, 0],
+            code,
+        )
+    )
 
 
 def _hier_arith_prog_frame_bytes(
-    differential: bool, vals, bw: int, bh: int
+    differential: bool, vals, bw: int, bh: int, restart_interval: int
 ) -> bytes:
     """One single-component progressive ARITHMETIC frame (SOF10 /
     differential SOF14): the 3-scan plan of _hier_prog_frame_bytes with
     the QM coder drawing every decision."""
-    from hive_server_spark.functions import jpeg_arith as ja
-
-    marker = 0xCE if differential else 0xCA
-    out = bytearray()
-    out += bytes([0xFF, marker]) + struct.pack(">HBHHB", 11, 8, 8 * bh, 8 * bw, 1)
-    out += bytes([1, 0x11, 0])
-    out += _sos_segment([1], 0, 0, 0, 1)
-    enc = ja.ArithEncoder()
-    dc_st = ja.DCStats()
-    pred = context = 0
-    for v in vals:
-        d = int(v) if differential else int(v) - 128
-        sh = d >> 1
-        if differential:
-            context = ja.encode_dc_diff(enc, dc_st, context, sh)
-        else:
-            context = ja.encode_dc_diff(enc, dc_st, context, sh - pred)
-            pred = sh
-    out += enc.flush()
-    out += _sos_segment([1], 0, 0, 1, 0)
-    enc = ja.ArithEncoder()
+    ds = [int(v) if differential else int(v) - 128 for v in vals]
     fixed = bytearray([ja.FIXED_BIN_STATE])
-    for v in vals:
-        d = int(v) if differential else int(v) - 128
-        enc.encode(d & 1, fixed, 0)
-    out += enc.flush()
-    out += _sos_segment([1], 1, 63, 0, 0)
-    enc = ja.ArithEncoder()
-    ac_st = ja.ACStats()
     zero_ac = [0] * 64
-    for _ in vals:
-        ja.encode_ac_block(enc, ac_st, zero_ac)
-    out += enc.flush()
-    return bytes(out)
+
+    def dc_first(st, d):  # st = [encoder, DC stats, pred, context]
+        sh = d >> 1
+        st[3] = ja.encode_dc_diff(st[0], st[1], st[3], sh - st[2])
+        if not differential:
+            st[2] = sh
+
+    return (
+        _hier_frame_header(0xCE if differential else 0xCA, bw, bh)
+        + _sos_segment([1], 0, 0, 0, 1)
+        + _hier_scan(
+            ds, restart_interval,
+            lambda: [ja.ArithEncoder(), ja.DCStats(), 0, 0], dc_first,
+        )
+        + _sos_segment([1], 0, 0, 1, 0)
+        + _hier_scan(
+            ds, restart_interval, lambda: [ja.ArithEncoder()],
+            lambda st, d: st[0].encode(d & 1, fixed, 0),
+        )
+        + _sos_segment([1], 1, 63, 0, 0)
+        + _hier_scan(
+            ds, restart_interval, lambda: [ja.ArithEncoder(), ja.ACStats()],
+            lambda st, d: ja.encode_ac_block(st[0], st[1], zero_ac),
+        )
+    )
 
 
 def encode_jpeg_hierarchical_gray_process(
@@ -2034,9 +1505,13 @@ def encode_jpeg_hierarchical_gray_process(
     """Hierarchical grayscale pyramid where EVERY frame uses the chosen
     DCT process — 'seq' (SOF0 + differential SOF5, Huffman), 'prog'
     (SOF2 + SOF6, Huffman progressive), 'arith' (SOF9 + SOF13), or
-    'arith-prog' (SOF10 + SOF14). Same (eh, ev, diff_values) stage
-    contract as encode_jpeg_hierarchical_gray; restart_interval applies
-    to the sequential processes only."""
+    'arith-prog' (SOF10 + SOF14). The base frame holds constant
+    ``blocks_w``x``blocks_h`` blocks; ``stages`` is a list of (eh, ev,
+    diff_values): an optional EXP doubling (eh/ev in {0, 1}) followed by a
+    differential frame whose constant blocks ADD the stage's exact signed
+    per-pixel differences (row-major over the stage's block grid), so the
+    whole reconstruction is closed-form. Every scan restarts every
+    ``restart_interval`` blocks (0: none)."""
     fw, fh = blocks_w, blocks_h
     for eh, ev, _ in stages:
         fw *= 2 if eh else 1
@@ -2051,7 +1526,7 @@ def encode_jpeg_hierarchical_gray_process(
         out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
     else:  # arithmetic: default DAC conditioning, exercising the parse
         out += b"\xff\xcc" + struct.pack(">H", 6) + bytes([0x00, 0x10, 0x10, 5])
-    if restart_interval and process in ("seq", "arith"):
+    if restart_interval:
         out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
 
     def frame(differential, vals, gw, gh):
@@ -2061,13 +1536,17 @@ def encode_jpeg_hierarchical_gray_process(
                 marker, vals, gw, gh, restart_interval, differential
             )
         if process == "prog":
-            return _hier_prog_frame_bytes(differential, vals, gw, gh)
+            return _hier_prog_frame_bytes(
+                differential, vals, gw, gh, restart_interval
+            )
         if process == "arith":
             return _hier_arith_frame_bytes(
                 differential, vals, gw, gh, restart_interval
             )
         if process == "arith-prog":
-            return _hier_arith_prog_frame_bytes(differential, vals, gw, gh)
+            return _hier_arith_prog_frame_bytes(
+                differential, vals, gw, gh, restart_interval
+            )
         raise ValueError(f"unknown hierarchical process {process!r}")
 
     out += frame(False, base_values, blocks_w, blocks_h)
@@ -2217,112 +1696,3 @@ def _sos_segment(comp_ids, ss: int, se: int, ah: int, al: int) -> bytes:
         body += bytes([cid, 0x00])
     body += bytes([ss, se, (ah << 4) | al])
     return b"\xff\xda" + struct.pack(">H", 2 + len(body)) + bytes(body)
-
-
-# ---------------------------------------------------------------------------
-# lossless (SOF3) fixture encoder — arbitrary sample grids, EXACT
-# reconstruction by construction (no quantization anywhere in the mode),
-# so tests can drive random images through every predictor and precision.
-# ---------------------------------------------------------------------------
-
-# lossless DC-difference categories 0..16, all at code length 5
-# (canonical codes 0..16 of 5 bits; 0b11111 unused so no all-ones code)
-_ENC_LL_COUNTS = [0, 0, 0, 0, 17] + [0] * 11
-_ENC_LL_SYMBOLS = bytes(range(17))
-
-
-def encode_jpeg_lossless(
-    planes, predictor: int = 4, precision: int = 8, pt: int = 0,
-    restart_interval: int = 0,
-) -> bytes:
-    """Spec-valid LOSSLESS (SOF3) JPEG from 1 or 3 full-resolution sample
-    grids (list of (h, w) integer arrays in [0, 2^P - 1]): per-sample
-    Huffman-coded prediction differences, any predictor 1..7, precision
-    2..16, optional point transform Pt (coding v >> pt) and restart
-    interval (entropy resync + default first prediction). Mirrors
-    _decode_scan_lossless exactly — decode is bit-exact for pt=0."""
-    planes = [np.asarray(p, dtype=np.int64) for p in planes]
-    if len(planes) not in (1, 3):
-        raise ValueError("lossless fixture supports 1 or 3 components")
-    h, w = planes[0].shape
-    if any(p.shape != (h, w) for p in planes):
-        raise ValueError("all components must share the frame dims (1x1)")
-    if not 1 <= predictor <= 7:
-        raise ValueError(f"predictor {predictor} invalid")
-    if not 2 <= precision <= 16:
-        raise ValueError(f"precision {precision} invalid for lossless")
-    vmax = (1 << precision) - 1
-    for p in planes:
-        if p.min() < 0 or p.max() > vmax:
-            raise ValueError("sample outside precision range")
-    ncomp = len(planes)
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xc3" + struct.pack(
-        ">HBHHB", 8 + 3 * ncomp, precision, h, w, ncomp
-    )
-    for ci in range(ncomp):
-        out += bytes([ci + 1, 0x11, 0])  # 1x1 sampling, no quant table
-    dht = bytes([0x00]) + bytes(_ENC_LL_COUNTS) + _ENC_LL_SYMBOLS
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
-    for ci in range(ncomp):
-        out += bytes([ci + 1, 0x00])
-    out += bytes([predictor, 0, pt & 0x0F])
-
-    shifted = [p >> pt for p in planes]
-    default_pred = 1 << (precision - 1 - pt)
-    bw_ = _BitWriter()
-    mcu = 0
-    fresh = True
-    first_line = 0  # row where the current restart interval began (H.1.2.1)
-    for y in range(h):
-        for x in range(w):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                out += bw_.flush()
-                out += bytes([0xFF, 0xD0 + ((mcu // restart_interval) - 1) % 8])
-                bw_ = _BitWriter()
-                fresh = True
-                first_line = y
-            for p in shifted:
-                if fresh:
-                    px = default_pred
-                elif y == first_line:
-                    px = int(p[y, x - 1])  # interval's first line: Ra
-                elif x == 0:
-                    px = int(p[y - 1, 0])
-                else:
-                    a = int(p[y, x - 1])
-                    bb = int(p[y - 1, x])
-                    c = int(p[y - 1, x - 1])
-                    if predictor == 1:
-                        px = a
-                    elif predictor == 2:
-                        px = bb
-                    elif predictor == 3:
-                        px = c
-                    elif predictor == 4:
-                        px = a + bb - c
-                    elif predictor == 5:
-                        px = a + ((bb - c) >> 1)
-                    elif predictor == 6:
-                        px = bb + ((a - c) >> 1)
-                    else:
-                        px = (a + bb) >> 1
-                # signed residue of (sample - prediction) mod 65536
-                diff = ((int(p[y, x]) - px + 0x8000) & 0xFFFF) - 0x8000
-                if diff == -0x8000:  # category 16: coded with no extra bits
-                    bw_.write(16, 5)
-                else:
-                    s = abs(diff).bit_length()
-                    bw_.write(s, 5)
-                    if s:
-                        bw_.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-            fresh = False
-            mcu += 1
-    out += bw_.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-

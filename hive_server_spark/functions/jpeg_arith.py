@@ -66,8 +66,6 @@ __all__ = [
     "decode_lossless_diff",
     "encode_dc_diff",
     "encode_ac_block",
-    "encode_ac_refine",
-    "encode_lossless_diff",
 ]
 
 # T.81 Table D.3 — Qe values and probability estimation state machine.
@@ -602,56 +600,6 @@ def decode_ac_refine(
         k += 1
 
 
-def encode_ac_refine(
-    enc: ArithEncoder, st: ACStats, prev, target, zigzag, ss: int, se: int, al: int
-) -> None:
-    """Mirror of decode_ac_refine: codes the transition of one block from
-    ``prev`` (the coefficient state after earlier scans) to ``target``
-    (state after this scan; both indexed via ``zigzag``). Per successive
-    approximation, target may only add the 1<<al bit to existing values
-    (widening magnitude) or introduce new ±1<<al coefficients."""
-    bins = st.bins
-    p1, m1 = 1 << al, -1 << al
-    kex = 0
-    for k in range(se, 0, -1):
-        if prev[zigzag[k]]:
-            kex = k
-            break
-
-    def event(k: int) -> bool:
-        z = zigzag[k]
-        return target[z] != prev[z]
-
-    k = ss
-    while k <= se:
-        s0 = 3 * (k - 1)
-        if k > kex:
-            if not any(event(j) for j in range(k, se + 1)):
-                enc.encode(1, bins, s0)  # EOB
-                return
-            enc.encode(0, bins, s0)
-        while True:
-            z = zigzag[k]
-            if prev[z]:
-                bit = 1 if target[z] != prev[z] else 0
-                enc.encode(bit, bins, s0 + 2)
-                break
-            if target[z]:
-                if target[z] not in (p1, m1):
-                    raise ValueError(
-                        "refinement may only introduce +-1<<al coefficients"
-                    )
-                enc.encode(1, bins, s0 + 1)
-                enc.encode(1 if target[z] == m1 else 0, st.fixed, 0)
-                break
-            enc.encode(0, bins, s0 + 1)
-            s0 += 3
-            k += 1
-            if k > se:
-                raise ValueError("refinement encoder ran past the band")
-        k += 1
-
-
 def encode_ac_block(
     enc: ArithEncoder, st: ACStats, values: list[int], ss: int = 1, se: int = 63
 ) -> None:
@@ -778,36 +726,3 @@ def decode_lossless_diff(
             v |= m
     v += 1
     return -v if sign else v
-
-
-def encode_lossless_diff(
-    enc: ArithEncoder, st: LosslessStats, cls_a: int, cls_b: int, diff: int
-) -> None:
-    """Encode one lossless prediction difference — exact mirror of
-    decode_lossless_diff."""
-    bins = st.bins
-    s0 = 4 * (5 * cls_b + cls_a)
-    if diff == 0:
-        enc.encode(0, bins, s0)
-        return
-    enc.encode(1, bins, s0)
-    sign = 1 if diff < 0 else 0
-    enc.encode(sign, bins, s0 + 1)
-    sz = abs(diff) - 1
-    i = s0 + 2 + sign
-    if sz == 0:
-        enc.encode(0, bins, i)
-        msb = 0
-    else:
-        enc.encode(1, bins, i)
-        nbits = sz.bit_length()
-        i = _LL_X_LARGE if cls_b >= 3 else _LL_X_SMALL
-        for _ in range(nbits - 1):
-            enc.encode(1, bins, i)
-            i += 1
-        enc.encode(0, bins, i)
-        msb = 1 << (nbits - 1)
-    i += 14
-    m = msb
-    while m := m >> 1:
-        enc.encode(1 if sz & m else 0, bins, i)

@@ -325,10 +325,8 @@ def test_12bit_extended_sequential_roundtrip_exact():
     """12-bit SOF1 decode: Pq=1 16-bit quant table, level shift
     2048, clamp to 0..4095, mean normalized by 4095 — exact for the
     constant-block fixture, including DC diffs spanning category 12."""
-    from hive_server_spark.functions.jpeg import encode_jpeg_12bit_gray_blocks
-
     vals = [0, 4095, 2048, 1, 4094, 2047]  # extreme swings -> category 12
-    w, h, mean = decode_jpeg(encode_jpeg_12bit_gray_blocks(vals, 3, 2))
+    w, h, mean = decode_jpeg(jae.encode_jpeg_12bit_gray_blocks(vals, 3, 2))
     assert (w, h) == (24, 16)
     assert mean == pytest.approx(sum(vals) / len(vals) / 4095.0, abs=1e-12)
 
@@ -336,9 +334,7 @@ def test_12bit_extended_sequential_roundtrip_exact():
 def test_12bit_baseline_sof0_still_refused():
     """Precision 12 under SOF0 stays invalid (T.81: baseline is 8-bit) —
     the 12-bit path is the SOF1 extended-sequential one."""
-    from hive_server_spark.functions.jpeg import encode_jpeg_12bit_gray_blocks
-
-    p = bytearray(encode_jpeg_12bit_gray_blocks([100], 1, 1))
+    p = bytearray(jae.encode_jpeg_12bit_gray_blocks([100], 1, 1))
     idx = p.index(b"\xff\xc1")
     p[idx + 1] = 0xC0  # SOF1 -> SOF0 while keeping precision 12
     with pytest.raises(ValueError, match="baseline"):
@@ -365,19 +361,23 @@ def test_lossless_roundtrip_all_predictors_and_precisions():
             )
             for _ in range(ncomp)
         ]
-        payload = jpeg.encode_jpeg_lossless(
+        payload = jae.encode_jpeg_lossless(
             planes, predictor=pred, precision=prec, restart_interval=ri
         )
         gw, gh, mean = jpeg.decode_jpeg(payload)
         assert (gw, gh) == (w, h)
         assert mean == float(np.stack(planes).mean()) / vmax, trial
+        samples = jpeg.decode_jpeg_samples(payload)[2]
+        assert np.array_equal(samples, np.stack(planes)), trial
+        # both entry points run the one decode: the mean IS the samples' mean
+        assert mean == samples.mean() / vmax, trial
 
 
 def test_lossless_point_transform():
     """Pt > 0 codes v >> Pt and the decoder shifts back: output samples
     are the Pt-truncated values, exactly."""
     samples = np.arange(64).reshape(8, 8) * 4 + 3  # low bits nonzero
-    payload = jpeg.encode_jpeg_lossless([samples], precision=8, pt=2)
+    payload = jae.encode_jpeg_lossless([samples], precision=8, pt=2)
     _, _, mean = jpeg.decode_jpeg(payload)
     assert mean == float(((samples >> 2) << 2).mean()) / 255.0
 
@@ -387,17 +387,17 @@ def test_lossless_category_16_wraparound():
     NO extra magnitude bits (T.81 H.1.2.2) — only reachable at 16-bit
     precision."""
     samples = np.array([[0, 32768, 0, 32768]])
-    payload = jpeg.encode_jpeg_lossless([samples], predictor=1, precision=16)
+    payload = jae.encode_jpeg_lossless([samples], predictor=1, precision=16)
     _, _, mean = jpeg.decode_jpeg(payload)
     assert mean == float(samples.mean()) / 65535.0
 
 
 def test_lossless_rejects_subsampled_and_bad_predictor():
     with pytest.raises(ValueError, match="predictor"):
-        jpeg.encode_jpeg_lossless([np.zeros((2, 2), dtype=int)], predictor=0)
+        jae.encode_jpeg_lossless([np.zeros((2, 2), dtype=int)], predictor=0)
     # hand-build a subsampled SOF3 header: decoder must refuse
     payload = bytearray(
-        jpeg.encode_jpeg_lossless([np.zeros((2, 2), dtype=int)])
+        jae.encode_jpeg_lossless([np.zeros((2, 2), dtype=int)])
     )
     # SOF3 layout: FF C3 len(2) prec(1) H(2) W(2) Ncomp(1) cid hv tq
     idx = payload.find(b"\xff\xc3")
@@ -429,9 +429,9 @@ def test_decode_error_contract_under_mutation():
         jae.encode_jpeg_arith_gray_blocks([10, 200, 30, 99], 2, 2, 2),
         jpeg.encode_jpeg_progressive_blocks([[10, 200, 30, 99]], 2, 2),
         jae.encode_jpeg_arith_progressive_blocks([[10, 200, 30, 99]], 2, 2),
-        jpeg.encode_jpeg_lossless([[[1, 2], [3, 4]]], restart_interval=1),
+        jae.encode_jpeg_lossless([[[1, 2], [3, 4]]], restart_interval=1),
         jae.encode_jpeg_arith_lossless([[[1, 2], [3, 4]]], restart_interval=1),
-        jpeg.encode_jpeg_12bit_gray_blocks([1000, 3000], 2, 1),
+        jae.encode_jpeg_12bit_gray_blocks([1000, 3000], 2, 1),
     ]
     for seed in seeds:
         # every single-byte mutation at a few adversarial values

@@ -119,9 +119,14 @@ def test_cross_coder_gray_equality():
         bw, bh = rng.randrange(1, 6), rng.randrange(1, 6)
         vals = [rng.randrange(256) for _ in range(bw * bh)]
         ri = rng.choice([0, 0, 1, 2, 3])
-        h = jpeg.decode_jpeg(jpeg.encode_jpeg_gray_blocks(vals, bw, bh, ri))
-        a = jpeg.decode_jpeg(jae.encode_jpeg_arith_gray_blocks(vals, bw, bh, ri))
+        hp = jpeg.encode_jpeg_gray_blocks(vals, bw, bh, ri)
+        ap = jae.encode_jpeg_arith_gray_blocks(vals, bw, bh, ri)
+        h, a = jpeg.decode_jpeg(hp), jpeg.decode_jpeg(ap)
         assert h == a, (trial, bw, bh, ri)
+        samples = jpeg.decode_jpeg_samples(ap)[2]
+        assert np.array_equal(samples, jpeg.decode_jpeg_samples(hp)[2]), trial
+        # both entry points run the one decode: the mean IS the samples' mean
+        assert a[2] == samples.mean() / 255, trial
 
 
 def test_cross_coder_ycbcr_420_equality():
@@ -277,7 +282,7 @@ def test_cross_coder_12bit_equality():
     for trial in range(15):
         bw, bh = rng.randrange(1, 6), rng.randrange(1, 6)
         vals = [rng.randrange(4096) for _ in range(bw * bh)]
-        h = jpeg.decode_jpeg(jpeg.encode_jpeg_12bit_gray_blocks(vals, bw, bh))
+        h = jpeg.decode_jpeg(jae.encode_jpeg_12bit_gray_blocks(vals, bw, bh))
         a = jpeg.decode_jpeg(jae.encode_jpeg_arith_12bit_gray_blocks(vals, bw, bh))
         assert h == a, trial
 
@@ -380,7 +385,7 @@ def test_lossless_arith_matches_huffman_lossless():
                 [[rng.randrange(256) for _ in range(7)] for _ in range(9)]
             )
         ]
-        hp = jpeg.encode_jpeg_lossless(planes, predictor=pred)
+        hp = jae.encode_jpeg_lossless(planes, predictor=pred)
         ap = jae.encode_jpeg_arith_lossless(planes, predictor=pred)
         wh_h, hh_h, s_h = decode_jpeg_samples(hp)
         wh_a, hh_a, s_a = decode_jpeg_samples(ap)

@@ -15,7 +15,10 @@ from hive_server_spark.functions.jpeg import (
     _exp_expand,
     decode_jpeg,
     decode_jpeg_samples,
+)
+from tests.jpeg_arith_encoders import (
     encode_jpeg_hierarchical_gray,
+    encode_jpeg_hierarchical_lossless,
 )
 
 
@@ -202,8 +205,15 @@ def test_hierarchical_fuzz_never_misdecodes():
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("process", ["seq", "prog", "arith", "arith-prog"])
-def test_hierarchical_all_dct_processes_exact(process):
+@pytest.mark.parametrize(
+    "process, ri",
+    [
+        ("seq", 2), ("prog", 0), ("arith", 2), ("arith-prog", 0),
+        ("prog", 1), ("arith-prog", 1),
+    ],
+    ids=["seq", "prog", "arith", "arith-prog", "prog-rst1", "arith-prog-rst1"],
+)
+def test_hierarchical_all_dct_processes_exact(process, ri):
     from hive_server_spark.functions.jpeg import (
         encode_jpeg_hierarchical_gray_process,
     )
@@ -213,7 +223,6 @@ def test_hierarchical_all_dct_processes_exact(process):
         (1, 1, [3, -3, 7, -7, 11, -11, 1, -1]),
         (0, 0, [1, 0, -1, 2, 0, -2, 3, -3]),  # same-size refinement
     ]
-    ri = 2 if process in ("seq", "arith") else 0
     payload = encode_jpeg_hierarchical_gray_process(
         base, 2, 1, stages, process=process, restart_interval=ri
     )
@@ -222,14 +231,12 @@ def test_hierarchical_all_dct_processes_exact(process):
     assert np.array_equal(
         samples.astype(np.int64), _mirror(base, 2, 1, stages)
     )
+    # both entry points run the one decode: the mean IS the samples' mean
+    assert decode_jpeg(payload)[2] == samples.mean() / 255
 
 
 @pytest.mark.parametrize("precision", [8, 12, 16])
 def test_hierarchical_lossless_exact(precision):
-    from hive_server_spark.functions.jpeg import (
-        encode_jpeg_hierarchical_lossless,
-    )
-
     rng = np.random.default_rng(precision)
     maxval = (1 << precision) - 1
     base = rng.integers(0, maxval + 1, size=(5, 7))
@@ -275,10 +282,12 @@ def test_hierarchical_mixed_dct_base_lossless_refinement():
         _ENC_AC_SYMBOLS,
         _ENC_DC_COUNTS,
         _ENC_DC_SYMBOLS,
-        _ENC_LL_COUNTS,
-        _ENC_LL_SYMBOLS,
         _ENC_QUANT_ZIGZAG,
         _hier_seq_frame_bytes,
+    )
+    from tests.jpeg_arith_encoders import (
+        _ENC_LL_COUNTS,
+        _ENC_LL_SYMBOLS,
         _ll_hier_frame_bytes,
     )
 
@@ -306,10 +315,6 @@ def test_hierarchical_mixed_dct_base_lossless_refinement():
 
 
 def test_hierarchical_differential_lossless_requires_predictor_zero():
-    from hive_server_spark.functions.jpeg import (
-        encode_jpeg_hierarchical_lossless,
-    )
-
     payload = bytearray(
         encode_jpeg_hierarchical_lossless(
             np.full((2, 2), 50), [(0, 0, np.full((2, 2), 3))]
